@@ -49,13 +49,14 @@ object Bench {
         .route("/warm")(_ => (200, "{}"))
         .start()
       try {
-        val clients = (0 until graft.http.HttpClientFactory.ClientShards)
-          .map(i => graft.http.HttpClientFactory
-            .shared(graft.http.HttpClientFactory.ClientConfig(), i))
-        val req = java.net.http.HttpRequest
-          .newBuilder(java.net.URI.create(warmSrv.url("/warm"))).GET().build()
-        val handler = java.net.http.HttpResponse.BodyHandlers.ofString()
-        (0 until 200).foreach(i => clients(i % clients.size).send(req, handler))
+        import graft.http._
+        val exchanges = (0 until HttpClientFactory.ClientShards).map(i =>
+          new HttpExchange(
+            HttpClientFactory.shared(HttpClientFactory.ClientConfig(), i),
+            Nil, RequestCallback.NoOp, StatusPolicy(_ => true),
+            FixedDelayRetry(0, 0L), 30000L))
+        (0 until 200).foreach(i => HttpExchange.await(
+          exchanges(i % exchanges.size).send("GET", warmSrv.url("/warm"), None)))
       } finally warmSrv.stop()
     }
     // Force FULL evaluation of every output column: .count() lets Catalyst

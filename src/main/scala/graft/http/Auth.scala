@@ -129,3 +129,24 @@ final class OidcTokenManager(
     cachedExpiry = Instant.now().plus(expiresIn)
   }
 }
+
+/** Per-executor OIDC token manager registry (one manager per endpoint+request
+  * so the cached token is shared by all tasks on the executor).
+  */
+object OidcManagers {
+  private val instances =
+    new java.util.concurrent.ConcurrentHashMap[String, OidcTokenManager]()
+  def shared(
+      client: HttpClient,
+      tokenRequest: String,
+      endpoint: String,
+      expiryReductionMs: Long): OidcTokenManager =
+    instances.computeIfAbsent(
+      endpoint + "\u0000" + tokenRequest,
+      _ =>
+        new OidcTokenManager(
+          client,
+          tokenRequest,
+          endpoint,
+          Duration.ofMillis(expiryReductionMs)))
+}

@@ -45,13 +45,10 @@ object HttpClientFactory {
 
   /** Per-executor cached client for a config (JDK clients hold a connection
     * pool; one per distinct config per JVM keeps sockets bounded at scale).
-    */
-  def shared(cfg: ClientConfig): HttpClient = shared(cfg, 0)
-
-  /** Sharded variant: each JDK HttpClient multiplexes ALL its requests
-    * through a single selector thread, which caps one client at roughly
-    * 1-2k req/s regardless of caller concurrency. High-fanout operators
-    * spread tasks over a small client pool instead.
+    * Sharded: each JDK HttpClient multiplexes ALL its requests through a
+    * single selector thread, which caps one client at roughly 1-2k req/s
+    * regardless of caller concurrency, so high-fanout operators spread
+    * tasks over a small client pool.
     */
   val ClientShards = 8
 

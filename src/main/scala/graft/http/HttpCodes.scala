@@ -83,12 +83,6 @@ final case class SinkErrorClassifier(errorCodes: Set[Int], excluded: Set[Int]) {
 object SinkErrorClassifier {
   val DefaultErrorExpr = "4XX,5XX"
 
-  def apply(errorExpr: String, excludeExpr: String): SinkErrorClassifier = {
-    val errs =
-      if (errorExpr.trim.isEmpty) Set.empty[Int] else HttpCodes.parse(errorExpr)
-    val excl =
-      if (excludeExpr.trim.isEmpty) Set.empty[Int]
-      else HttpCodes.parse(excludeExpr)
-    SinkErrorClassifier(errs, excl)
-  }
+  def apply(errorExpr: String, excludeExpr: String): SinkErrorClassifier =
+    SinkErrorClassifier(HttpCodes.parse(errorExpr), HttpCodes.parse(excludeExpr))
 }

@@ -10,8 +10,12 @@ import org.apache.spark.sql.{ForeachWriter, Row}
   *
   * The row is expected to carry the rendered payload string at `payloadIdx`
   * (stage it with `to_json(struct(...))` in the stream's select — same
-  * render-in-Catalyst design as the batch sink). One HTTP client per
-  * partition-epoch, bounded in-flight via the shared submitter machinery.
+  * render-in-Catalyst design as the batch sink). Each partition-epoch is a
+  * single-mode [[SinkRuntime]] partition writer, so every sink option
+  * (headers, auth, `http.sink.request-callback`, `sink.requests.max-inflight`,
+  * idempotency keys) means what it means for the batch sink, except that
+  * `sink.requests.max-inflight` defaults to 1: one request at a time, in
+  * row order.
   */
 final class HttpForeachWriter(
     options: Map[String, String],
@@ -19,75 +23,19 @@ final class HttpForeachWriter(
     headerPreprocessors: Seq[HeaderPreprocessor] = Nil)
     extends ForeachWriter[Row] {
 
-  @transient private var client: java.net.http.HttpClient = _
-  @transient private var url: String = _
-  @transient private var method: String = _
-  @transient private var timeoutMs: Long = _
-  @transient private var classifier: SinkErrorClassifier = _
-  @transient private var headers: Seq[(String, String)] = _
-  @transient private var contentType: String = _
-  @transient private var keying: Option[(String, IdempotencyKeys.Keyer)] = None
+  private val runtime = SinkRuntime(
+    Map(HttpOptions.SinkMaxInflight -> "1") ++ options +
+      (HttpOptions.SinkRequestMode -> "single"),
+    headerPreprocessors)
+  @transient private var writer: SinkRuntime.PartitionWriter = _
 
   override def open(partitionId: Long, epochId: Long): Boolean = {
-    val o = HttpOptions(options)
-    keying = o.strOpt(HttpOptions.SinkIdempotencyHeader).map { h =>
-      (
-        h,
-        new IdempotencyKeys.Keyer(
-          o.str(HttpOptions.SinkIdempotencyNonce, ""),
-          epochId,
-          partitionId.toInt))
-    }
-    url = o.required(HttpOptions.Url)
-    method = o.str(HttpOptions.InsertMethod, "POST").toUpperCase
-    timeoutMs = o.durationMs(HttpOptions.SinkRequestTimeout, 30000L)
-    contentType = PayloadFormats(o.str(HttpOptions.Format, "json")).contentType
-    classifier = SinkErrorClassifier(
-      o.str(HttpOptions.SinkErrorCodes, SinkErrorClassifier.DefaultErrorExpr),
-      o.str(HttpOptions.SinkErrorCodesExclude, ""))
-    client = HttpClientFactory.shared(
-      HttpClientFactory.ClientConfig.fromOptions(o))
-    // same header chain as HttpSink/HttpLookup (HeaderPreprocessors.render):
-    // Basic-auth, then caller preprocessors, then OIDC bearer override
-    headers = HeaderPreprocessors.render(
-      o.withPrefix(HttpOptions.SinkHeaderPrefix).toSeq,
-      o.bool(HttpOptions.UseRawAuthHeader, default = false),
-      o.strOpt(HttpOptions.OidcTokenRequest).map { tokenReq =>
-        val mgr = OidcManagers.shared(
-          client,
-          tokenReq,
-          o.required(HttpOptions.OidcTokenEndpoint),
-          o.durationMs(HttpOptions.OidcExpiryReduction, 1000L))
-        () => mgr.authenticate()
-      },
-      headerPreprocessors)
+    writer = runtime.newPartitionWriter(epochId, partitionId.toInt)
     true
   }
 
-  override def process(row: Row): Unit = {
-    val b = java.net.http.HttpRequest
-      .newBuilder()
-      .uri(java.net.URI.create(url))
-      .timeout(java.time.Duration.ofMillis(timeoutMs))
-      .header("Content-Type", contentType)
-    headers.foreach { case (k, v) => b.header(k, v) }
-    // deterministic replay identity (see IdempotencyKeys): a replayed
-    // (epoch, partition) re-carries the identical key SET under any
-    // within-partition reorder — occurrence keying, not a sequence number
-    keying.foreach { case (h, keyer) =>
-      b.setHeader(h, keyer.keyFor(row.getString(payloadIdx)))
-    }
-    val req = b
-      .method(
-        method,
-        java.net.http.HttpRequest.BodyPublishers.ofString(row.getString(payloadIdx)))
-      .build()
-    val resp =
-      client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString())
-    if (classifier.isError(resp.statusCode()))
-      throw new HttpStatusCodeValidationFailedException(
-        s"HTTP streaming sink got error status ${resp.statusCode()} from $url")
-  }
+  override def process(row: Row): Unit = writer.add(row.getString(payloadIdx))
 
-  override def close(errorOrNull: Throwable): Unit = ()
+  override def close(errorOrNull: Throwable): Unit =
+    if (errorOrNull == null) writer.flush() else writer.abort()
 }

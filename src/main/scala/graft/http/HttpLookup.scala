@@ -1,9 +1,6 @@
 package graft.http
 
-import java.util.concurrent.{Executors, ThreadFactory}
-import scala.collection.mutable
-import scala.concurrent.duration.Duration
-import scala.concurrent.{Await, ExecutionContext, ExecutionContextExecutorService, Future}
+import java.util.concurrent.CompletableFuture
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
@@ -18,14 +15,15 @@ import org.apache.spark.sql.types._
   *
   *   1. the request URL/body are rendered *inside Catalyst* by the configured
   *      [[QueryCreator]] (whole-stage codegen; no per-row interpretation),
-  *   2. a narrow `mapPartitions` performs the HTTP I/O (per-executor client +
-  *      cache, bounded in-flight concurrency, retries, classification) — it
-  *      maps `String → String + metadata` and shuffles nothing,
+  *   2. a narrow `mapPartitions` performs the HTTP I/O through the shared
+  *      [[HttpExchange]] (per-executor client + cache, one ordered window
+  *      of async requests per task, retries, classification) — it maps
+  *      `String → String + metadata` and shuffles nothing,
   *   3. the JSON response is decoded by `from_json` (+ `explode_outer` for
   *      `result-type=array`) back in Catalyst.
   *
   * At 1000-executor scale this keeps pressure on the REST endpoint bounded by
-  * `executors × thread-pool size`, de-duplicates calls through the
+  * `tasks × thread-pool size` in flight, de-duplicates calls through the
   * per-executor cache, and leaves the plan fully pipelined (no shuffle, no
   * driver round-trips).
   *
@@ -57,70 +55,94 @@ object HttpLookup {
   /** Serializable per-task I/O config. */
   private final case class IoConfig(
       method: String,
-      successExpr: String,
-      retryExpr: String,
-      ignoredExpr: String,
+      endpoint: HttpEndpoint,
+      policy: StatusPolicy,
       retryPolicy: RetryPolicy,
       requestTimeoutMs: Long,
-      headers: Seq[(String, String)],
-      clientCfg: HttpClientFactory.ClientConfig,
+      contentType: Option[String],
       concurrency: Int,
       continueOnError: Boolean,
-      cacheId: String,
-      cacheOptions: Map[String, String],
-      cacheMissingKey: Boolean,
-      oidc: Option[(String, String, Long)], // tokenRequest, endpoint, expiryReductionMs
-      useRawAuthHeader: Boolean,
-      loggingLevel: String,
-      callbackName: String,
-      preprocessors: Seq[HeaderPreprocessor])
+      cacheMissingKey: Boolean) {
 
-  private def makeIoConfig(
+    /** Executor-side exchange, client shard = the task's partition. */
+    def exchange(): HttpExchange = endpoint.exchange(
+      policy,
+      retryPolicy,
+      requestTimeoutMs,
+      contentType,
+      shard = Option(org.apache.spark.TaskContext.get()).map(_.partitionId()).getOrElse(0))
+
+    def cacheable(oc: HttpOutcome): Boolean =
+      oc.state == CompletionState.Success ||
+        (cacheMissingKey && oc.state == CompletionState.IgnoreStatusCode)
+
+    /** The I/O op's output row: the input row ++ the outcome columns. */
+    def emit(row: Row, oc: HttpOutcome): Row = {
+      if (!continueOnError &&
+        (oc.state == CompletionState.HttpErrorStatus ||
+          oc.state == CompletionState.Exception))
+        throw new HttpStatusCodeValidationFailedException(
+          s"HTTP lookup failed (${oc.error}); set " +
+            s"'${HttpOptions.ContinueOnError}'='true' to continue with null " +
+            "enrichment columns")
+      Row.fromSeq(
+        row.toSeq ++ Seq(oc.status, oc.body, oc.headers, oc.state, oc.error))
+    }
+  }
+
+  /** The I/O op's output schema: its input ++ the outcome columns. */
+  private def withOutcome(in: StructType): StructType = StructType(
+    in.fields ++ Array(
+      StructField(RespStatus, IntegerType),
+      StructField(RespBody, StringType),
+      StructField(RespHeaders, MapType(StringType, ArrayType(StringType))),
+      StructField(RespState, StringType),
+      StructField(RespError, StringType)))
+
+  /** Render each probe row's request in Catalyst (url + body columns) and
+    * parse the per-task I/O config.
+    */
+  private def stage(
+      probe: DataFrame,
+      keyCols: Seq[String],
       o: HttpOptions,
-      options: Map[String, String],
-      requestFormat: PayloadFormat,
-      headerPreprocessors: Seq[HeaderPreprocessor]): IoConfig =
-    IoConfig(
-      method = o.str(HttpOptions.LookupMethod, "GET").toUpperCase,
-      successExpr = o.str(HttpOptions.SuccessCodes, "2XX"),
-      retryExpr = o.str(HttpOptions.RetryCodes, "500,503,504"),
-      ignoredExpr = o.str(HttpOptions.IgnoredCodes, ""),
+      headerPreprocessors: Seq[HeaderPreprocessor]): (DataFrame, IoConfig) = {
+    // reference `lookup-request.format` / `format` (both default json):
+    // request serialization and response deserialization resolve through the
+    // PayloadFormats registry (the SPI-discovery analog) — a CSV endpoint is
+    // 'format'='csv', a custom wire format is PayloadFormats.register(...)
+    val requestFormat =
+      PayloadFormats(o.str(HttpOptions.LookupRequestFormat, "json"))
+    val compiled = QueryCreator.fromOptions(o, requestFormat).compile(probe, keyCols)
+    val staged = probe
+      .withColumn(ReqUrl, compiled.url)
+      .withColumn(ReqBody, compiled.body.getOrElse(lit(null).cast(StringType)))
+    val method = o.str(HttpOptions.LookupMethod, "GET").toUpperCase
+    val endpoint = HttpEndpoint.lookup(o, headerPreprocessors)
+    (staged, IoConfig(
+      method = method,
+      endpoint = endpoint,
+      policy = StatusPolicy.lookup(o),
       retryPolicy = RetryPolicy.fromOptions(o),
       requestTimeoutMs = o.durationMs(HttpOptions.RequestTimeout, 30000L),
-      headers = {
-        val hs = o.withPrefix(HttpOptions.SourceHeaderPrefix).toSeq
-        val method = o.str(HttpOptions.LookupMethod, "GET").toUpperCase
-        // body-based lookups default to the request format's content type
-        // (reference: BodyBasedRequestFactory sets application/json for the
-        // bundled json format)
-        if (method != "GET" && !hs.exists(_._1.equalsIgnoreCase("Content-Type")))
-          hs :+ ("Content-Type" -> requestFormat.contentType)
-        else hs
-      },
-      clientCfg = HttpClientFactory.ClientConfig.fromOptions(o),
+      // body-based lookups default to the request format's content type
+      // (reference: BodyBasedRequestFactory sets application/json for the
+      // bundled json format)
+      contentType =
+        if (method != "GET" &&
+          !endpoint.headers.exists(_._1.equalsIgnoreCase("Content-Type")))
+          Some(requestFormat.contentType)
+        else None,
+      // one ordered window of in-flight exchanges per task; the reference's
+      // two async pool knobs both size it (see HttpOptions.ResponseThreadPool)
       concurrency =
         if (o.bool(HttpOptions.AsyncPolling, default = false)) {
-          // no separate response stage in the pipelined iterator: honor
-          // both reference pool knobs as one in-flight bound (see
-          // HttpOptions.ResponseThreadPool)
           val req = o.int(HttpOptions.RequestThreadPool, 8)
           math.max(req, o.int(HttpOptions.ResponseThreadPool, req))
         } else 1,
       continueOnError = o.bool(HttpOptions.ContinueOnError, default = false),
-      cacheId = options.toSeq.sorted.mkString("|"),
-      cacheOptions = options,
-      cacheMissingKey = o.bool(HttpOptions.CacheMissingKey, default = true),
-      oidc = o.strOpt(HttpOptions.OidcTokenRequest).map { tr =>
-        (
-          tr,
-          o.required(HttpOptions.OidcTokenEndpoint),
-          o.durationMs(HttpOptions.OidcExpiryReduction, 1000L))
-      },
-      useRawAuthHeader = o.bool(HttpOptions.UseRawAuthHeader, default = false),
-      loggingLevel = o.str(HttpOptions.LoggingLevel, "MIN"),
-      callbackName =
-        o.str(HttpOptions.SourceRequestCallback, "slf4j-lookup-logger"),
-      preprocessors = headerPreprocessors)
+      cacheMissingKey = o.bool(HttpOptions.CacheMissingKey, default = true)))
+  }
 
   def join(
       probe: DataFrame,
@@ -130,28 +152,7 @@ object HttpLookup {
       includeMetadata: Boolean = false,
       headerPreprocessors: Seq[HeaderPreprocessor] = Nil): DataFrame = {
     val o = HttpOptions(options)
-    // reference `lookup-request.format` / `format` (both default json):
-    // request serialization and response deserialization resolve through the
-    // PayloadFormats registry (the SPI-discovery analog) — a CSV endpoint is
-    // 'format'='csv', a custom wire format is PayloadFormats.register(...)
-    val requestFormat =
-      PayloadFormats(o.str(HttpOptions.LookupRequestFormat, "json"))
-    val responseFormat = PayloadFormats(o.str(HttpOptions.Format, "json"))
-    val creator = QueryCreator.fromOptions(o, requestFormat)
-    val compiled = creator.compile(probe, keyCols)
-
-    val io = makeIoConfig(o, options, requestFormat, headerPreprocessors)
-
-    // fail fast on the driver like the reference's factory discovery does
-    RequestCallback.named(
-      io.callbackName,
-      RequestCallback.Level.parse(io.loggingLevel))
-
-    val staged = probe
-      .withColumn(ReqUrl, compiled.url)
-      .withColumn(
-        ReqBody,
-        compiled.body.getOrElse(lit(null).cast(StringType)))
+    val (staged, io) = stage(probe, keyCols, o, headerPreprocessors)
 
     // dedup-keys: when probe keys repeat heavily (classic enrichment), call
     // the service once per DISTINCT rendered request and join the responses
@@ -175,22 +176,12 @@ object HttpLookup {
           .repartition(ioPartitions)
       else staged
 
-    val outSchema = StructType(
-      ioInput.schema.fields ++ Array(
-        StructField(RespStatus, IntegerType),
-        StructField(RespBody, StringType),
-        StructField(
-          RespHeaders,
-          MapType(StringType, ArrayType(StringType))),
-        StructField(RespState, StringType),
-        StructField(RespError, StringType)))
-
     val urlIdx = ioInput.schema.fieldIndex(ReqUrl)
     val bodyIdx = ioInput.schema.fieldIndex(ReqBody)
 
     val ioResults = ioInput.mapPartitions { iter =>
       executePartition(iter, io, urlIdx, bodyIdx)
-    }(Encoders.row(outSchema))
+    }(Encoders.row(withOutcome(ioInput.schema)))
 
     val ioDf =
       if (dedupKeys) {
@@ -206,7 +197,7 @@ object HttpLookup {
           .drop(ReqUrl + "_r", ReqBody + "_r")
       } else ioResults
 
-    decodeProject(ioDf, probe.columns.toSeq, responseSchema, responseFormat, o, includeMetadata)
+    decodeProject(ioDf, probe.columns.toSeq, responseSchema, o, includeMetadata)
   }
 
   /** Serializable state-store record for [[joinStateCached]]. */
@@ -252,39 +243,15 @@ object HttpLookup {
       probe.isStreaming,
       "joinStateCached needs a streaming probe; use join for batch inputs")
     val o = HttpOptions(options)
-    val requestFormat =
-      PayloadFormats(o.str(HttpOptions.LookupRequestFormat, "json"))
-    val responseFormat = PayloadFormats(o.str(HttpOptions.Format, "json"))
-    val creator = QueryCreator.fromOptions(o, requestFormat)
-    val compiled = creator.compile(probe, keyCols)
-    val io = makeIoConfig(o, options, requestFormat, headerPreprocessors)
-    RequestCallback.named(
-      io.callbackName,
-      RequestCallback.Level.parse(io.loggingLevel))
+    val (staged, io) = stage(probe, keyCols, o, headerPreprocessors)
     val ttlMs = o.durationMs(HttpOptions.CacheExpireAfterWrite, 600000L)
-
-    val staged = probe
-      .withColumn(ReqUrl, compiled.url)
-      .withColumn(
-        ReqBody,
-        compiled.body.getOrElse(lit(null).cast(StringType)))
-    val stagedSchema = staged.schema
-    val urlIdx = stagedSchema.fieldIndex(ReqUrl)
-    val bodyIdx = stagedSchema.fieldIndex(ReqBody)
-    val outSchema = StructType(
-      stagedSchema.fields ++ Array(
-        StructField(RespStatus, IntegerType),
-        StructField(RespBody, StringType),
-        StructField(
-          RespHeaders,
-          MapType(StringType, ArrayType(StringType))),
-        StructField(RespState, StringType),
-        StructField(RespError, StringType)))
+    val urlIdx = staged.schema.fieldIndex(ReqUrl)
+    val bodyIdx = staged.schema.fieldIndex(ReqBody)
 
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val keyEnc = Encoders.tuple(Encoders.STRING, Encoders.STRING)
     val stateEnc = Encoders.product[CachedLookup]
-    val outEnc = Encoders.row(outSchema)
+    val outEnc = Encoders.row(withOutcome(staged.schema))
 
     val grouped = staged.groupByKey { row =>
       (row.getString(urlIdx), Option(rowBody(row, bodyIdx)).getOrElse(""))
@@ -309,12 +276,9 @@ object HttpLookup {
             .getOrElse {
               val body = buffered.headOption
                 .map(r => rowBody(r, bodyIdx)).orNull
-              val outcome = lookupClientFor(io)
-                .execute(io.method, key._1, Option(body))
-              val cacheable = outcome.state == CompletionState.Success ||
-                (io.cacheMissingKey &&
-                  outcome.state == CompletionState.IgnoreStatusCode)
-              if (cacheable) {
+              val outcome = HttpExchange.await(
+                io.exchange().send(io.method, key._1, Option(body)))
+              if (io.cacheable(outcome)) {
                 state.update(CachedLookup(
                   Option(outcome.status).map(_.intValue),
                   outcome.body, outcome.headers, outcome.state,
@@ -330,27 +294,11 @@ object HttpLookup {
             }
           // keep the eviction clock armed whenever state exists
           if (state.exists) state.setTimeoutDuration(ttlMs)
-          val tail = Seq(oc.status, oc.body, oc.headers, oc.state, oc.error)
-          buffered.iterator.map { row =>
-            if (!io.continueOnError &&
-              (oc.state == CompletionState.HttpErrorStatus ||
-                oc.state == CompletionState.Exception))
-              throw new HttpStatusCodeValidationFailedException(
-                s"HTTP lookup failed (${oc.error}); set " +
-                  s"'${HttpOptions.ContinueOnError}'='true' to continue " +
-                  "with null enrichment columns")
-            Row.fromSeq(row.toSeq ++ tail)
-          }
+          buffered.iterator.map(io.emit(_, oc))
         }
     }(stateEnc, outEnc)
 
-    decodeProject(
-      ioDf.toDF(),
-      probe.columns.toSeq,
-      responseSchema,
-      responseFormat,
-      o,
-      includeMetadata)
+    decodeProject(ioDf.toDF(), probe.columns.toSeq, responseSchema, o, includeMetadata)
   }
 
   /** Back in Catalyst after the I/O op: decode + classify + project.
@@ -364,9 +312,9 @@ object HttpLookup {
       ioDf: DataFrame,
       probeColumns: Seq[String],
       responseSchema: StructType,
-      responseFormat: PayloadFormat,
       o: HttpOptions,
       includeMetadata: Boolean): DataFrame = {
+    val responseFormat = PayloadFormats(o.str(HttpOptions.Format, "json"))
     val Corrupt = "__graft_corrupt"
     val schemaWithCorrupt =
       StructType(responseSchema.fields :+ StructField(Corrupt, StringType))
@@ -530,142 +478,56 @@ object HttpLookup {
   // Per-partition I/O
   // ---------------------------------------------------------------------
 
-  /** Shared daemon pool for async lookup; concurrency is bounded per task by
-    * the pending-queue size, so a cached pool cannot run away.
+  /** One ordered window of up to `concurrency` exchanges per task (1
+    * without `asyncPolling`): cache hits enter it as completed futures,
+    * misses go straight to the wire, rows leave strictly in input order
+    * (the analog of the reference's AsyncHttpTableLookupFunction with
+    * ordered wait). Whatever is still in flight when the task ends is
+    * cancelled.
     */
-  private lazy val sharedPool: ExecutionContextExecutorService =
-    ExecutionContext.fromExecutorService(
-      Executors.newCachedThreadPool(new ThreadFactory {
-        private val n = new java.util.concurrent.atomic.AtomicInteger()
-        def newThread(r: Runnable): Thread = {
-          val t = new Thread(r, s"graft-http-lookup-${n.incrementAndGet()}")
-          t.setDaemon(true)
-          t
-        }
-      }))
-
-  /** Build the per-task lookup client (per-executor shared JDK client +
-    * rendered headers + classification/retry) — used by the mapPartitions
-    * I/O op and the state-store-cached streaming variant.
-    */
-  private def lookupClientFor(io: IoConfig): HttpLookupClient = {
-    val shard = Option(org.apache.spark.TaskContext.get())
-      .map(_.partitionId()).getOrElse(0)
-    val httpClient = HttpClientFactory.shared(io.clientCfg, shard)
-    new HttpLookupClient(
-      httpClient,
-      ResponseChecker(io.successExpr, io.retryExpr),
-      if (io.ignoredExpr.trim.isEmpty) Set.empty
-      else HttpCodes.parse(io.ignoredExpr),
-      io.retryPolicy,
-      io.requestTimeoutMs,
-      renderHeaders(io, httpClient),
-      RequestCallback.named(
-        io.callbackName,
-        RequestCallback.Level.parse(io.loggingLevel)))
-  }
-
   private def executePartition(
       iter: Iterator[Row],
       io: IoConfig,
       urlIdx: Int,
       bodyIdx: Int): Iterator[Row] = {
-    val client = lookupClientFor(io)
-    val cache = LookupCache.shared(io.cacheId, HttpOptions(io.cacheOptions))
+    val exchange = io.exchange()
+    HttpExchange.onTaskEnd(exchange.cancelAll())
+    // one cache per distinct lookup configuration
+    val o = io.endpoint.options
+    val cache = LookupCache.shared(o.options.toSeq.sorted.mkString("|"), o)
+    val window =
+      new java.util.ArrayDeque[(Row, CompletableFuture[HttpOutcome])](io.concurrency)
 
-    def call(url: String, body: String): HttpOutcome = {
+    def call(url: String, body: String): CompletableFuture[HttpOutcome] = {
       val key = url + "\u0000" + (if (body == null) "" else body)
       cache.flatMap(_.get(key)) match {
-        case Some(hit) => hit
+        case Some(hit) => CompletableFuture.completedFuture(hit)
         case None =>
-          val outcome = client.execute(io.method, url, Option(body))
-          val cacheable = outcome.state == CompletionState.Success ||
-            (io.cacheMissingKey && outcome.state == CompletionState.IgnoreStatusCode)
-          if (cacheable) cache.foreach(_.put(key, outcome))
-          outcome
+          val sent = exchange.send(io.method, url, Option(body))
+          cache.fold(sent)(c => sent.thenApply { oc =>
+            if (io.cacheable(oc)) c.put(key, oc)
+            oc
+          })
       }
     }
 
-    def emit(row: Row, oc: HttpOutcome): Row = {
-      if (!io.continueOnError &&
-        (oc.state == CompletionState.HttpErrorStatus ||
-          oc.state == CompletionState.Exception))
-        throw new HttpStatusCodeValidationFailedException(
-          s"HTTP lookup failed (${oc.error}); set " +
-            s"'${HttpOptions.ContinueOnError}'='true' to continue with null " +
-            "enrichment columns")
-      Row.fromSeq(
-        row.toSeq ++ Seq(oc.status, oc.body, oc.headers, oc.state, oc.error))
-    }
-
-    if (io.concurrency <= 1) {
-      iter.map { row =>
-        emit(row, call(row.getString(urlIdx), rowBody(row, bodyIdx)))
-      }
-    } else {
-      // Bounded-concurrency pipelined iterator: submit up to `concurrency`
-      // requests ahead, emit strictly in input order (the async analog of the
-      // reference's AsyncHttpTableLookupFunction with ordered wait).
-      implicit val ec: ExecutionContext = sharedPool
-      new Iterator[Row] {
-        private val pending = mutable.Queue.empty[(Row, Future[HttpOutcome])]
-        private def fill(): Unit =
-          while (pending.size < io.concurrency && iter.hasNext) {
-            val row = iter.next()
-            val url = row.getString(urlIdx)
-            val body = rowBody(row, bodyIdx)
-            pending.enqueue(row -> Future(call(url, body)))
-          }
-        def hasNext: Boolean = { fill(); pending.nonEmpty }
-        def next(): Row = {
-          fill()
-          val (row, fut) = pending.dequeue()
-          emit(row, Await.result(fut, Duration.Inf))
+    new Iterator[Row] {
+      private def fill(): Unit =
+        while (window.size < io.concurrency && iter.hasNext) {
+          val row = iter.next()
+          window.add(row -> call(row.getString(urlIdx), rowBody(row, bodyIdx)))
         }
+      def hasNext: Boolean = { fill(); !window.isEmpty }
+      def next(): Row = {
+        if (!hasNext) throw new NoSuchElementException
+        val (row, f) = window.poll()
+        io.emit(row, HttpExchange.await(f))
       }
     }
   }
 
   private def rowBody(row: Row, bodyIdx: Int): String =
     if (row.isNullAt(bodyIdx)) null else row.getString(bodyIdx)
-
-  /** Resolve static headers once per task through the shared composable
-    * chain ([[HeaderPreprocessors.render]]): Basic-auth transformation, then
-    * caller preprocessors, then the OIDC bearer override (token refreshed
-    * lazily via the per-executor manager).
-    */
-  private def renderHeaders(
-      io: IoConfig,
-      httpClient: java.net.http.HttpClient): Seq[(String, String)] =
-    HeaderPreprocessors.render(
-      io.headers,
-      io.useRawAuthHeader,
-      io.oidc.map { case (tokenReq, endpoint, reductionMs) =>
-        val mgr = OidcManagers.shared(httpClient, tokenReq, endpoint, reductionMs)
-        () => mgr.authenticate()
-      },
-      io.preprocessors)
-}
-
-/** Per-executor OIDC token manager registry (one manager per endpoint+request
-  * so the cached token is shared by all tasks on the executor).
-  */
-object OidcManagers {
-  private val instances =
-    new java.util.concurrent.ConcurrentHashMap[String, OidcTokenManager]()
-  def shared(
-      client: java.net.http.HttpClient,
-      tokenRequest: String,
-      endpoint: String,
-      expiryReductionMs: Long): OidcTokenManager =
-    instances.computeIfAbsent(
-      endpoint + "\u0000" + tokenRequest,
-      _ =>
-        new OidcTokenManager(
-          client,
-          tokenRequest,
-          endpoint,
-          java.time.Duration.ofMillis(expiryReductionMs)))
 }
 
 /** Reference: `HttpStatusCodeValidationFailedException.java`. */

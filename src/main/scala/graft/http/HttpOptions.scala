@@ -79,15 +79,19 @@ object HttpOptions {
   val ContinueOnError = "http.source.lookup.continue-on-error"
   val RequestTimeout = "http.source.lookup.request.timeout"
   val ConnectionTimeout = "http.source.lookup.connection.timeout"
+  /** Async lookup (`asyncPolling=true`) in-flight request bound per task:
+    * the size of the ordered window of async exchanges. No threads are
+    * created for it.
+    */
   val RequestThreadPool = "http.source.lookup.request.thread-pool.size"
 
   /** Reference parity (`table/http.md` option table): Flink's async lookup
     * splits request issuing and response processing into two pools. The
-    * Spark re-expression pipelines request + decode on one bounded worker
-    * set inside each partition, so there is no separate response stage —
-    * the effective in-flight bound honors BOTH knobs as
-    * `max(request-pool, response-pool)`, so a user sizing either one gets
-    * at least the parallelism they asked for.
+    * Spark re-expression has no pools: each task keeps one ordered window
+    * of async exchanges, so there is no separate response stage — the
+    * window size honors BOTH knobs as `max(request-pool, response-pool)`,
+    * so a user sizing either one gets at least the in-flight requests they
+    * asked for.
     */
   val ResponseThreadPool = "http.source.lookup.response.thread-pool.size"
   val UseRawAuthHeader = "http.source.lookup.use-raw-authorization-header"

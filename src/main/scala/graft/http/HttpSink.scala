@@ -1,6 +1,6 @@
 package graft.http
 
-import java.util.concurrent.Semaphore
+import java.util.concurrent.{CancellationException, Semaphore}
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -60,14 +60,11 @@ object HttpSink {
       val w = rt.newPartitionWriter(
         epochId,
         org.apache.spark.TaskContext.getPartitionId())
-      // abort() in finally: on task failure the recurring flush timer must
-      // be cancelled (it would otherwise outlive the task and double-send
-      // the buffered partial batch alongside Spark's retry); no-op after a
-      // successful flush()
-      try {
-        rows.foreach(r => w.add(r.getString(0)))
-        w.flush()
-      } finally w.abort()
+      // one writer per task: abort it (timer + in-flight requests) when the
+      // task ends; a no-op after a successful flush()
+      HttpExchange.onTaskEnd(w.abort())
+      rows.foreach(r => w.add(r.getString(0)))
+      w.flush()
     }
   }
 
@@ -89,23 +86,17 @@ object HttpSink {
     * bounded by writer thread-pool / max-inflight; errors surface on flush).
     */
   private[http] final class BatchSubmitter(
-      client: java.net.http.HttpClient,
+      exchange: HttpExchange,
       url: String,
       method: String,
-      classifier: SinkErrorClassifier,
-      timeoutMs: Long,
-      headers: Seq[(String, String)],
-      maxInflight: Int,
-      callback: RequestCallback = RequestCallback.NoOp,
-      contentType: String = "application/json") {
+      maxInflight: Int) {
     private val permits = new Semaphore(maxInflight)
     @volatile private var failure: Throwable = _
-    private val inflight =
-      java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.concurrent.CompletableFuture[_]]()
 
     def submit(body: String, extraHeaders: Seq[(String, String)] = Nil): Unit = {
-      checkFailure()
       permits.acquire()
+      // checked after the wait: a request that failed meanwhile stops this one
+      try checkFailure() catch { case t: Throwable => permits.release(); throw t }
       send(body, extraHeaders)
     }
 
@@ -122,45 +113,31 @@ object HttpSink {
         true
       }
 
-    private def send(body: String, extraHeaders: Seq[(String, String)]): Unit = {
-      val b = java.net.http.HttpRequest
-        .newBuilder()
-        .uri(java.net.URI.create(url))
-        .timeout(java.time.Duration.ofMillis(timeoutMs))
-        .header("Content-Type", contentType)
-      headers.foreach { case (k, v) => b.header(k, v) }
-      // setHeader: a per-request header (the idempotency key) REPLACES any
-      // same-named static sink header instead of doubling the header
-      extraHeaders.foreach { case (k, v) => b.setHeader(k, v) }
-      val req = b
-        .method(
-          method,
-          java.net.http.HttpRequest.BodyPublishers.ofString(body))
-        .build()
-      callback.onRequest(method, url, Some(body))
-      val fut = client
-        .sendAsync(req, java.net.http.HttpResponse.BodyHandlers.ofString())
-        .whenComplete { (resp, err) =>
+    // a permit is held until the response is classified, so holding all
+    // of them means nothing is in flight and every failure is recorded
+    private def send(body: String, extraHeaders: Seq[(String, String)]): Unit =
+      try
+        exchange.send(method, url, Some(body), extraHeaders).whenComplete { (oc, err) =>
           try {
             if (err != null) {
-              callback.onException(method, url, err)
-              failure = err
-            } else {
-              callback.onResponse(method, url, resp.statusCode())
-              if (classifier.isError(resp.statusCode()))
-                failure = new HttpStatusCodeValidationFailedException(
-                  s"HTTP sink got error status ${resp.statusCode()} from $url")
-            }
+              // a cancelled request belongs to a task that is already ending
+              if (!err.isInstanceOf[CancellationException]) failure = err
+            } else if (oc.state == CompletionState.Exception) failure = oc.cause
+            else if (oc.state != CompletionState.Success)
+              failure = new HttpStatusCodeValidationFailedException(
+                s"HTTP sink got error status ${oc.status} from $url")
           } finally permits.release()
         }
-      inflight.add(fut)
-      fut.whenComplete((_, _) => inflight.remove(fut))
-    }
+      catch { case t: Throwable => permits.release(); throw t }
 
     def awaitAll(): Unit = {
-      inflight.forEach(f => try f.join() catch { case _: Throwable => () })
+      permits.acquire(maxInflight)
+      permits.release(maxInflight)
       checkFailure()
     }
+
+    /** Abort every request still in flight (failure path). */
+    def cancelAll(): Unit = exchange.cancelAll()
 
     private def checkFailure(): Unit = {
       val f = failure
@@ -254,13 +231,7 @@ private[graft] final case class SinkRuntime(
     classifier: SinkErrorClassifier,
     timeoutMs: Long,
     maxInflight: Int,
-    headers: Seq[(String, String)],
-    useRawAuth: Boolean,
-    oidc: Option[(String, String, Long)],
-    clientCfg: HttpClientFactory.ClientConfig,
-    callbackName: String,
-    loggingLevel: String,
-    headerPreprocessors: Seq[HeaderPreprocessor],
+    endpoint: HttpEndpoint,
     idempotencyHeader: Option[String] = None,
     idempotencyNonce: String = "",
     idempotencySort: Boolean = false,
@@ -278,28 +249,17 @@ private[graft] final case class SinkRuntime(
   def newPartitionWriter(
       epochId: Long = 0L,
       partitionId: Int = 0): SinkRuntime.PartitionWriter = {
-    val httpClient = HttpClientFactory.shared(clientCfg)
-    val finalHeaders = HeaderPreprocessors.render(
-      headers,
-      useRawAuth,
-      oidc.map { case (tokenReq, endpoint, reductionMs) =>
-        val mgr =
-          OidcManagers.shared(httpClient, tokenReq, endpoint, reductionMs)
-        () => mgr.authenticate()
-      },
-      headerPreprocessors)
     val submitter = new HttpSink.BatchSubmitter(
-      httpClient,
+      // the sink only classifies: no ignored codes, no retries (a failed
+      // request fails the task and Spark's task retry re-sends)
+      endpoint.exchange(
+        StatusPolicy(code => !classifier.isError(code)),
+        FixedDelayRetry(0, 0L),
+        timeoutMs,
+        Some(format.contentType)),
       url,
       method,
-      classifier,
-      timeoutMs,
-      finalHeaders,
-      maxInflight,
-      RequestCallback.named(
-        callbackName,
-        RequestCallback.Level.parse(loggingLevel)),
-      contentType = format.contentType)
+      maxInflight)
     new SinkRuntime.PartitionWriter(
       submitter, batchSize, mode, format,
       idempotencyHeader.map(h =>
@@ -346,18 +306,7 @@ private[graft] object SinkRuntime {
         math.min(
           o.int(HttpOptions.SinkMaxInflight, 4),
           o.int(HttpOptions.SinkThreadPool, 4))),
-      headers = o.withPrefix(HttpOptions.SinkHeaderPrefix).toSeq,
-      useRawAuth = o.bool(HttpOptions.UseRawAuthHeader, default = false),
-      oidc = o.strOpt(HttpOptions.OidcTokenRequest).map { tr =>
-        (
-          tr,
-          o.required(HttpOptions.OidcTokenEndpoint),
-          o.durationMs(HttpOptions.OidcExpiryReduction, 1000L))
-      },
-      clientCfg = HttpClientFactory.ClientConfig.fromOptions(o),
-      callbackName = o.str(HttpOptions.SinkRequestCallback, "slf4j-logger"),
-      loggingLevel = o.str(HttpOptions.LoggingLevel, "MIN"),
-      headerPreprocessors = headerPreprocessors,
+      endpoint = HttpEndpoint.sink(o, headerPreprocessors),
       idempotencyHeader = o.strOpt(HttpOptions.SinkIdempotencyHeader),
       idempotencyNonce = o.str(HttpOptions.SinkIdempotencyNonce, ""),
       idempotencySort = o.bool(HttpOptions.SinkIdempotencySort, default = false),
@@ -430,21 +379,14 @@ private[graft] object SinkRuntime {
         if (batch.nonEmpty &&
           System.nanoTime() - oldestAddNanos >= flushTimeoutMs * 1000000L) {
           val body = frame(batch.toSeq)
-          val extra = keying match {
-            case Some((h, keyer)) => Seq(h -> keyer.keyFor(body))
-            case None => Nil
-          }
-          if (submitter.trySubmit(body, extra)) { batch.clear(); bytesInBatch = 0L }
+          if (submitter.trySubmit(body, keyed(body))) { batch.clear(); bytesInBatch = 0L }
         }
       } catch { case _: Throwable => () }
 
-    private def submit(body: String): Unit = {
-      val extra = keying match {
-        case Some((h, keyer)) => Seq(h -> keyer.keyFor(body))
-        case None => Nil
-      }
-      submitter.submit(body, extra)
-    }
+    private def submit(body: String): Unit = submitter.submit(body, keyed(body))
+
+    private def keyed(body: String): Seq[(String, String)] =
+      keying.map { case (h, keyer) => h -> keyer.keyFor(body) }.toSeq
 
     // UTF-8 length without materializing a byte[] copy per row (the
     // payload is only encoded once, at submit time)
@@ -499,12 +441,15 @@ private[graft] object SinkRuntime {
       * buffered partial batch — a failed task's rows will be re-sent by
       * Spark's retry, and an orphaned recurring timer would both leak the
       * schedule for the executor's lifetime and double-send those rows
-      * outside the idempotency-key replay guarantee. Idempotent; a no-op
-      * after a successful [[flush]].
+      * outside the idempotency-key replay guarantee — and abort the
+      * requests still in flight. Idempotent; a no-op after a successful
+      * [[flush]]. Each sink surface calls it on its own failure path: a
+      * per-writer task listener would pile up over a task's epochs.
       */
     def abort(): Unit = {
       timer.foreach(_.cancel(false))
       synchronized { batch.clear(); bytesInBatch = 0L }
+      submitter.cancelAll()
     }
 
     /** Batch bodies are framed by the format (JSON arrays `[e1,e2,…]` for

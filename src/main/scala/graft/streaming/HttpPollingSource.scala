@@ -12,7 +12,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.http.{BasicAuthHeaderValuePreprocessor, CompletionState, HttpClientFactory, HttpCodes, HttpLookupClient, HttpOptions, Json, RequestCallback, ResponseChecker, RetryPolicy}
+import graft.http.{CompletionState, HttpEndpoint, HttpExchange, HttpOptions, Json, RetryPolicy, StatusPolicy}
 
 /** Rate-polling streaming HTTP source: `spark.readStream
   * .format("graft-http-poll").option("url", …)`. Goes beyond the reference's
@@ -40,9 +40,11 @@ import graft.http.{BasicAuthHeaderValuePreprocessor, CompletionState, HttpClient
   *     polls) after the interval elapses, otherwise the engine sees no new
   *     data and skips the batch.
   *
-  * Reuses the lookup machinery: headers/auth/TLS via [[HttpClientFactory]],
-  * status classification + retry via [[HttpLookupClient]] (reference:
-  * `JavaNetHttpPollingClient.java` semantics).
+  * Reuses the lookup machinery: client/TLS, headers + auth and the named
+  * request callback via [[graft.http.HttpEndpoint]], status classification
+  * + retry via the shared [[graft.http.HttpExchange]] (reference:
+  * `JavaNetHttpPollingClient.java` semantics); each poll waits on its
+  * exchange with an interruptible get.
   *
   * Output schema: `poll_id BIGINT, item_index INT, status INT, body STRING,
   * poll_ts TIMESTAMP`.
@@ -112,26 +114,10 @@ private[streaming] class HttpPollingMicroBatchStream(opts: Map[String, String])
   private val splitArray = o.bool("split-array", default = true)
   private val minPollIntervalMs = o.durationMs("min-poll-interval", 0L)
 
-  @transient private lazy val client = {
-    val ignoredExpr = o.str(HttpOptions.IgnoredCodes, "")
-    val basic = BasicAuthHeaderValuePreprocessor(
-      o.bool(HttpOptions.UseRawAuthHeader, default = false))
-    val headers = o.withPrefix(HttpOptions.SourceHeaderPrefix).toSeq.map {
-      case (name, value) if name.equalsIgnoreCase("Authorization") =>
-        name -> basic.preprocess(value)
-      case kv => kv
-    }
-    new HttpLookupClient(
-      HttpClientFactory.shared(HttpClientFactory.ClientConfig.fromOptions(o)),
-      ResponseChecker(
-        o.str(HttpOptions.SuccessCodes, "2XX"),
-        o.str(HttpOptions.RetryCodes, "500,503,504")),
-      if (ignoredExpr.trim.isEmpty) Set.empty else HttpCodes.parse(ignoredExpr),
-      RetryPolicy.fromOptions(o),
-      o.durationMs(HttpOptions.RequestTimeout, 30000L),
-      headers,
-      RequestCallback.Slf4jLogger())
-  }
+  @transient private lazy val exchange = HttpEndpoint.lookup(o, Nil).exchange(
+    StatusPolicy.lookup(o),
+    RetryPolicy.fromOptions(o),
+    o.durationMs(HttpOptions.RequestTimeout, 30000L))
 
   // poll_id -> rows fetched by that poll, evicted on commit
   private val buffered =
@@ -188,7 +174,7 @@ private[streaming] class HttpPollingMicroBatchStream(opts: Map[String, String])
     val now = System.currentTimeMillis()
     if (now - lastPollAtMs >= minPollIntervalMs) {
       lastPollAtMs = now
-      val outcome = client.execute(method, url, body)
+      val outcome = HttpExchange.await(exchange.send(method, url, body))
       if (outcome.state == CompletionState.Success && outcome.body != null) {
         val rows = HttpPollingMicroBatchStream
           .toRows(polls + 1, outcome.status, outcome.body, now, splitArray)

@@ -245,9 +245,10 @@ private[streaming] class HttpSinkDataWriter(
     HttpSinkCommit
   }
 
-  // cancel the recurring flush timer on the failure path — an orphaned
-  // timer would outlive the task and double-send the buffered partial
-  // batch alongside Spark's retry; idempotent after a successful commit
+  // cancel the recurring flush timer and the in-flight requests on the
+  // failure path — an orphaned timer would outlive the task and double-send
+  // the buffered partial batch alongside Spark's retry; idempotent after a
+  // successful commit
   override def abort(): Unit = pw.abort()
 
   override def close(): Unit = pw.abort()

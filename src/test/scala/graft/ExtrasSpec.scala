@@ -174,6 +174,37 @@ class HttpForeachWriterSpec extends SparkSpec with BeforeAndAfterAll {
       } finally query.stop()
     } finally fail.stop()
   }
+
+  test("the named sink request callback sees one request per row") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
+    val requests = new java.util.concurrent.atomic.AtomicInteger()
+    graft.http.RequestCallback.register("foreach-counter", _ => new graft.http.RequestCallback {
+      def onRequest(m: String, u: String, b: Option[String]): Unit = { requests.incrementAndGet(); () }
+      def onResponse(m: String, u: String, s: Int): Unit = ()
+      def onException(m: String, u: String, e: Throwable): Unit = ()
+    })
+    val cb = StubServer().route("/cb")(_ => (200, "{}")).start()
+    try {
+      val input = MemoryStream[Long]
+      val query = input
+        .toDF()
+        .toDF("v")
+        .select(to_json(struct(col("v"))).as("payload"))
+        .writeStream
+        .foreach(new HttpForeachWriter(Map(
+          "url" -> cb.url("/cb"),
+          "http.sink.request-callback" -> "foreach-counter")))
+        .start()
+      try {
+        input.addData(1L, 2L, 3L)
+        query.processAllAvailable()
+        cb.requestCount shouldBe 3
+        requests.get() shouldBe 3
+      } finally query.stop()
+    } finally cb.stop()
+  }
 }
 
 class IvfSpec extends SparkSpec {

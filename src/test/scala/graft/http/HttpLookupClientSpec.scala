@@ -8,9 +8,10 @@ import org.scalatest.BeforeAndAfterAll
 
 import graft.http.testkit.StubServer
 
-/** Lookup client behavior against the stub server: classification, retries,
-  * ignored codes, exceptions (mirrors the reference's
-  * JavaNetHttpPollingClientConnectionTest / HttpClientWithRetryTest coverage).
+/** [[HttpExchange]] behavior against the stub server with the lookup status
+  * policy: classification, retries, ignored codes, exceptions (mirrors the
+  * reference's JavaNetHttpPollingClientConnectionTest /
+  * HttpClientWithRetryTest coverage).
   */
 class HttpLookupClientSpec
     extends AnyFunSuite
@@ -18,24 +19,33 @@ class HttpLookupClientSpec
     with BeforeAndAfterAll {
 
   private var server: StubServer = _
-  private val sleeps = scala.collection.mutable.ArrayBuffer.empty[Long]
+  private val delays = scala.collection.mutable.ArrayBuffer.empty[Long]
 
   private def client(
       maxRetries: Int = 3,
       success: String = "2XX",
       retryCodes: String = "500,503,504",
       ignored: String = "",
-      retryPolicy: RetryPolicy = null): HttpLookupClient = {
-    sleeps.clear()
-    new HttpLookupClient(
+      retryPolicy: RetryPolicy = null,
+      timeoutMs: Long = 5000L): HttpExchange = {
+    delays.clear()
+    new HttpExchange(
       HttpClient.newHttpClient(),
-      ResponseChecker(success, retryCodes),
-      if (ignored.isEmpty) Set.empty else HttpCodes.parse(ignored),
-      Option(retryPolicy).getOrElse(FixedDelayRetry(maxRetries, 10L)),
-      requestTimeoutMs = 5000L,
       headers = Seq("X-Test" -> "yes"),
       callback = RequestCallback.NoOp,
-      sleeper = ms => sleeps += ms)
+      StatusPolicy.lookup(HttpOptions(
+        HttpOptions.SuccessCodes -> success,
+        HttpOptions.RetryCodes -> retryCodes,
+        HttpOptions.IgnoredCodes -> ignored)),
+      Option(retryPolicy).getOrElse(FixedDelayRetry(maxRetries, 10L)),
+      timeoutMs = timeoutMs,
+      // record each retry delay and run the retry at once
+      delay = ms => { delays += ms; (r: Runnable) => r.run() })
+  }
+
+  private implicit class Execute(ex: HttpExchange) {
+    def execute(method: String, url: String, body: Option[String]): HttpOutcome =
+      HttpExchange.await(ex.send(method, url, body))
   }
 
   override def beforeAll(): Unit = {
@@ -43,6 +53,7 @@ class HttpLookupClientSpec
       .route("/ok") { _ => (200, """{"id": 1}""") }
       .route("/gone") { _ => (404, "nope") }
       .route("/boom") { _ => (400, "bad") }
+      .route("/slow") { _ => Thread.sleep(1000); (200, "{}") }
       .flakyRoute("/flaky2", failures = 2) { _ => (200, """{"id": 2}""") }
       .flakyRoute("/flaky9", failures = 9) { _ => (200, """{"id": 3}""") }
       .start()
@@ -71,21 +82,21 @@ class HttpLookupClientSpec
     val out = client().execute("GET", server.url("/boom"), None)
     out.state shouldBe CompletionState.HttpErrorStatus
     out.status shouldBe 400
-    sleeps shouldBe empty
+    delays shouldBe empty
   }
 
   test("retryable codes retried until success") {
     val out = client().execute("GET", server.url("/flaky2"), None)
     out.state shouldBe CompletionState.Success
     out.body shouldBe """{"id": 2}"""
-    sleeps should have size 2
+    delays should have size 2
   }
 
   test("retries exhausted -> HTTP_ERROR_STATUS") {
     val out = client(maxRetries = 3).execute("GET", server.url("/flaky9"), None)
     out.state shouldBe CompletionState.HttpErrorStatus
     out.status shouldBe 503
-    sleeps should have size 3
+    delays should have size 3
   }
 
   test("exponential backoff delays applied between retries") {
@@ -93,7 +104,7 @@ class HttpLookupClientSpec
       retryPolicy = ExponentialDelayRetry(3, 100L, 350L, 2.0))
       .execute("GET", server.url("/flaky9"), None)
     out.state shouldBe CompletionState.HttpErrorStatus
-    sleeps.toSeq shouldBe Seq(100L, 200L, 350L)
+    delays.toSeq shouldBe Seq(100L, 200L, 350L)
   }
 
   test("connection refused -> EXCEPTION after retries") {
@@ -101,7 +112,16 @@ class HttpLookupClientSpec
       client(maxRetries = 1).execute("GET", "http://127.0.0.1:1/none", None)
     out.state shouldBe CompletionState.Exception
     out.status shouldBe null
-    sleeps should have size 1
+    delays should have size 1
+  }
+
+  test("request timeout -> EXCEPTION carrying the unwrapped HttpTimeoutException") {
+    val out = client(maxRetries = 0, timeoutMs = 100L)
+      .execute("GET", server.url("/slow"), None)
+    out.state shouldBe CompletionState.Exception
+    out.status shouldBe null
+    out.cause shouldBe a[java.net.http.HttpTimeoutException]
+    out.error should startWith("HttpTimeoutException: ")
   }
 
   test("POST body is transmitted") {

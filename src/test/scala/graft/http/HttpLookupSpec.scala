@@ -132,6 +132,71 @@ class HttpLookupSpec extends SparkSpec with BeforeAndAfterAll {
     } finally srv.stop()
   }
 
+  test("async window emits rows in input order when earlier keys answer slower") {
+    // key k answers after (9 - k) x 40 ms: with 4 requests in flight the
+    // later keys complete first, so completion-order emission would reorder
+    val srv = StubServer()
+      .route("/slow-first") { req =>
+        val k = StubServer.queryMap(req.query)("id").toInt
+        Thread.sleep((9 - k) * 40L)
+        (200, s"""{"name":"n$k","balance":$k.0}""")
+      }
+      .start()
+    try {
+      import spark.implicits._
+      val input = (1 to 8).map(k => (100L + k, k.toString))
+      val out = HttpLookup
+        .join(
+          input.toDF("event", "id").coalesce(1),
+          Seq("id"),
+          userSchema,
+          Map(
+            "url" -> srv.url("/slow-first"),
+            "asyncPolling" -> "true",
+            "http.source.lookup.request.thread-pool.size" -> "4"))
+        .collect() // no orderBy: the output sequence itself is checked
+      out.map(_.getLong(0)).toSeq shouldBe input.map(_._1)
+      out.map(_.getAs[String]("name")).toSeq shouldBe (1 to 8).map(k => s"n$k")
+    } finally srv.stop()
+  }
+
+  test("a failing lookup task cancels the exchanges still in its window") {
+    // row 1 fails fast (400, continue-on-error off) while rows 2-4 sit on a
+    // route that would hold them for 30 s: the task must fail at once and
+    // its completion listener must cancel the three in-flight exchanges
+    val sent = new java.util.concurrent.atomic.AtomicInteger()
+    RequestCallback.register("window-cancel-counter", _ => new RequestCallback {
+      def onRequest(m: String, u: String, b: Option[String]): Unit = { sent.incrementAndGet(); () }
+      def onResponse(m: String, u: String, s: Int): Unit = ()
+      def onException(m: String, u: String, e: Throwable): Unit = ()
+    })
+    val srv = StubServer()
+      .route("/early-400") { req =>
+        if (StubServer.queryMap(req.query)("id") == "1") (400, "bad key")
+        else { Thread.sleep(30000); (200, """{"name":"late","balance":0.0}""") }
+      }
+      .start()
+    try {
+      import spark.implicits._
+      val before = HttpExchange.pending.get()
+      val started = System.nanoTime()
+      a[Throwable] should be thrownBy HttpLookup
+        .join(
+          Seq((1L, "1"), (2L, "2"), (3L, "3"), (4L, "4")).toDF("event", "id").coalesce(1),
+          Seq("id"),
+          userSchema,
+          Map(
+            "url" -> srv.url("/early-400"),
+            "asyncPolling" -> "true",
+            "http.source.lookup.request.thread-pool.size" -> "4",
+            "http.source.lookup.request-callback" -> "window-cancel-counter"))
+        .collect()
+      (System.nanoTime() - started) / 1000000L should be < 20000L
+      sent.get() shouldBe 4 // the whole window was on the wire
+      HttpExchange.pending.get() shouldBe before
+    } finally srv.stop()
+  }
+
   test("POST body lookup (keys as JSON body)") {
     val out = HttpLookup
       .join(

@@ -244,6 +244,27 @@ class HttpSinkSpec extends SparkSpec with BeforeAndAfterAll {
     replay() shouldBe first
   }
 
+  test("per-row ForeachWriter honours sink.requests.max-inflight") {
+    // the route only answers once 2 requests are on the wire together: a
+    // writer that ignores the option (one at a time) breaks the barrier
+    val barrier = new java.util.concurrent.CyclicBarrier(2)
+    val srv = StubServer()
+      .route("/pair") { _ =>
+        barrier.await(10, java.util.concurrent.TimeUnit.SECONDS)
+        (200, "{}")
+      }
+      .start()
+    try {
+      val w = new HttpForeachWriter(Map(
+        "url" -> srv.url("/pair"),
+        "sink.requests.max-inflight" -> "2"))
+      w.open(partitionId = 0L, epochId = 0L) shouldBe true
+      Seq("""{"a":1}""", """{"a":2}""").foreach(p => w.process(org.apache.spark.sql.Row(p)))
+      w.close(null)
+      srv.requestCount shouldBe 2
+    } finally srv.stop()
+  }
+
   test("single-mode idempotency key set is invariant under partition reorder") {
     import spark.implicits._
     // same multiset of rows — including a duplicate payload — in two

@@ -6,7 +6,7 @@ import java.nio.file.{Files, Path}
 import java.security.KeyStore
 import javax.net.ssl.{KeyManagerFactory, SSLContext}
 
-import com.sun.net.httpserver.{HttpExchange, HttpsConfigurator, HttpsServer}
+import com.sun.net.httpserver.{HttpsConfigurator, HttpsServer, HttpExchange => ServerExchange}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -55,7 +55,7 @@ class SslSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
     server.setHttpsConfigurator(new HttpsConfigurator(ctx))
     server.createContext(
       "/secure",
-      (ex: HttpExchange) => {
+      (ex: ServerExchange) => {
         val body = """{"ok": true}""".getBytes(StandardCharsets.UTF_8)
         ex.sendResponseHeaders(200, body.length)
         ex.getResponseBody.write(body)
@@ -112,7 +112,7 @@ class SslSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
     })
     mtlsServer.createContext(
       "/secure",
-      (ex: HttpExchange) => {
+      (ex: ServerExchange) => {
         val body = """{"mtls": true}""".getBytes(StandardCharsets.UTF_8)
         ex.sendResponseHeaders(200, body.length)
         ex.getResponseBody.write(body)
@@ -127,16 +127,20 @@ class SslSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
     if (mtlsServer != null) mtlsServer.stop(0)
   }
 
-  private def lookupClient(options: Map[String, String]): HttpLookupClient = {
+  private def lookupClient(options: Map[String, String]): graft.http.HttpExchange = {
     val o = HttpOptions(options)
-    new HttpLookupClient(
+    new graft.http.HttpExchange(
       HttpClientFactory.build(HttpClientFactory.ClientConfig.fromOptions(o)),
-      ResponseChecker("2XX", "503"),
-      Set.empty,
-      FixedDelayRetry(0, 1L),
-      5000L,
       Nil,
-      RequestCallback.NoOp)
+      RequestCallback.NoOp,
+      StatusPolicy.lookup(HttpOptions(HttpOptions.RetryCodes -> "503")),
+      FixedDelayRetry(0, 1L),
+      5000L)
+  }
+
+  private implicit class Execute(ex: graft.http.HttpExchange) {
+    def execute(method: String, url: String, body: Option[String]): HttpOutcome =
+      graft.http.HttpExchange.await(ex.send(method, url, body))
   }
 
   test("https with allowSelfSigned completes the lookup") {

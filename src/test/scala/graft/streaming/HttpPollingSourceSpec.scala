@@ -1,10 +1,12 @@
 package graft.streaming
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
+import graft.http.RequestCallback
 import graft.http.testkit.StubServer
 
 class HttpPollingSourceSpec extends SparkSpec {
@@ -60,6 +62,38 @@ class HttpPollingSourceSpec extends SparkSpec {
       val rows = spark.sql("SELECT body FROM poll_one").collect()
       rows.length shouldBe 1
       rows.head.getString(0) shouldBe "[1,2,3]"
+    } finally server.stop()
+  }
+
+  test("the named request callback sees one request per poll at the configured level") {
+    val requests = new java.util.concurrent.atomic.AtomicInteger()
+    val levels = new java.util.concurrent.ConcurrentLinkedQueue[RequestCallback.Level]()
+    RequestCallback.register("poll-counter", level => {
+      levels.add(level)
+      new RequestCallback {
+        def onRequest(m: String, u: String, b: Option[String]): Unit = { requests.incrementAndGet(); () }
+        def onResponse(m: String, u: String, s: Int): Unit = ()
+        def onException(m: String, u: String, e: Throwable): Unit = ()
+      }
+    })
+    val server = new StubServer().route("/cb")(_ => (200, """[{"id":1}]""")).start()
+    try {
+      val q = spark.readStream
+        .format("graft-http-poll")
+        .option("url", server.url("/cb"))
+        .option("http.source.lookup.request-callback", "poll-counter")
+        .option("http.logging.level", "REQ_RESP")
+        .load()
+        .writeStream
+        .format("memory")
+        .queryName("poll_cb")
+        .option("checkpointLocation", checkpoint())
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination(60000) shouldBe true
+      server.requestCount shouldBe 1
+      requests.get() shouldBe 1
+      levels.asScala.toSet shouldBe Set(RequestCallback.Level.ReqResp)
     } finally server.stop()
   }
 
