@@ -1,64 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // r16 (guide §2.2): let AQE re-coalesce the output partitioning of
-      // cached plans too — cached intermediates (the iterative gates'
-      // edge/node frames) otherwise pin the shuffle-partition CONSTANT
-      // into every downstream stage; with this on, their partitioning is
-      // sized by bytes (advisory size), i.e. scale-adaptively, at every
-      // scale. Gate results are partition-count-independent by
-      // construction (the driver already varies cpus and sf).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // r17: the JVM-wide whole-stage-codegen class cache defaults to 100
-      // entries; a driver cycling 265 distinct queries (each compiling
-      // several generated classes) evicts everything between iterations
-      // and re-runs Janino + JIT on every stage of every query, every
-      // time. Sized to hold the whole suite's working set. Not a
-      // local-mode tune: any long-lived multi-query driver (scheduled
-      // pipelines, a query server) wants the same at production scale —
-      // it changes compilation reuse, never results.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warmup (untimed): initialize parquet reader, shuffle, broadcast and
-    // whole-stage-codegen paths once so the first timed query doesn't absorb
-    // session-startup cost — standard JVM benchmark practice; per-query
-    // numbers then reflect steady-state execution.
-    locally {
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions._
-      val nation = spark.read.parquet(s"$sfDir/nation.parquet")
-      val region = spark.read.parquet(s"$sfDir/region.parquet")
-      nation.join(broadcast(region), col("n_regionkey") === col("r_regionkey"))
-        .groupBy(col("r_name")).agg(count(lit(1)))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("r_name")).orderBy(col("r_name"))))
-        .write.format("noop").mode("overwrite").save()
-      // warm the JDK HTTP stack (class loading + JIT of client/server
-      // machinery — measured ~1-2s on the first HTTP query otherwise);
-      // connections don't carry over (different port), classes and JIT do
-      val warmSrv = graft.http.testkit.StubServer.serveOnly()
-        .route("/warm")(_ => (200, "{}"))
-        .start()
-      try {
-        import graft.http._
-        val exchanges = (0 until HttpClientFactory.ClientShards).map(i =>
-          new HttpExchange(
-            HttpClientFactory.shared(HttpClientFactory.ClientConfig(), i),
-            Nil, RequestCallback.NoOp, StatusPolicy(_ => true),
-            FixedDelayRetry(0, 0L), 30000L))
-        (0 until 200).foreach(i => HttpExchange.await(
-          exchanges(i % exchanges.size).send("GET", warmSrv.url("/warm"), None)))
-      } finally warmSrv.stop()
-    }
+    val sfDir = GraftSession.sfDir
+    val spark = GraftSession.local(GraftSession.cpus)
+    GraftSession.warm(spark, sfDir)
     // Force FULL evaluation of every output column: .count() lets Catalyst
     // prune projections the count doesn't reference (timing the scan, not the
     // operator); the noop sink consumes every row and column.

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,30 +8,15 @@ object Verify {
     // optional third arg (local dev only): comma-separated query-name filter
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(',').toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // r16: AQE sizes cached-plan output partitions by bytes (see the
-      // Bench session note) — same conf here so Verify runs the same
-      // physical shapes the bench times.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // r17: hold the whole suite's generated-class working set (see the
-      // Bench session note) — the 100-entry default thrashes across 265
-      // distinct queries
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
     // SPARK_GRAFT_STATE_PROVIDER=rocksdb: replay the stateful streaming
     // gates on the RocksDB state store (the 100-TB-state provider) — the
     // driver-artifact proof that gate results are provider-independent
-    if (sys.env.get("SPARK_GRAFT_STATE_PROVIDER").exists(_.equalsIgnoreCase("rocksdb")))
-      builder.config(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val stateStore =
+      if (sys.env.get("SPARK_GRAFT_STATE_PROVIDER").exists(_.equalsIgnoreCase("rocksdb")))
+        Seq("spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      else Nil
+    val spark = GraftSession.local(GraftSession.cpus, stateStore: _*)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -228,7 +228,7 @@ object AnalyticsQueries {
           s.table("g_gate_customer_bucketed"),
           col("o_custkey") === col("c_custkey"))
         val exchanges = graft.tools.PlanShapeProbe
-          .shape(joined.queryExecution.executedPlan.toString)("exchange")
+          .shapeOf(joined.queryExecution.executedPlan)("exchange")
         require(
           exchanges == 0,
           s"bucketed join planned $exchanges exchanges — co-location broken")

@@ -428,45 +428,12 @@ object HttpQueries {
     StructField("c_acctbal", DoubleType),
     StructField("c_mktsegment", StringType)))
 
-  // Dedicated session carrying GraftExtensions (analyzer rules can only be
-  // attached at session build, and the driver's Verify/Bench session is
-  // extension-free): built once per JVM on the shared SparkContext, exactly
-  // like HttpLookupTableSpec does.
-  //
-  // The clear/getOrCreate/restore dance below briefly unsets the JVM-global
-  // default/active session; a concurrent query on the primary session in
-  // another driver thread during that window could observe no default
-  // session or bind to the extensions session. The Verify/Bench drivers run
-  // queries sequentially; locking the `classic.SparkSession` COMPANION —
-  // the monitor Spark's own Builder.getOrCreate takes around its
-  // default-session bookkeeping (verified against the 4.1.2 bytecode:
-  // monitorenter on `classic.SparkSession$.MODULE$`; `classOf` or the api
-  // companion would be different, useless monitors) — additionally
-  // excludes any concurrent builder, so the helper stays safe if a
-  // harness ever goes concurrent. A plain reader of `SparkSession.active`
-  // in that window is still unguarded — documented limitation of the
-  // build-time-extensions design.
+  // Dedicated session carrying GraftExtensions (the driver's Verify/Bench
+  // session is extension-free), built once per JVM on the shared
+  // SparkContext.
   private val extSessions = new ConcurrentHashMap[String, SparkSession]()
   private def extensionsSession(s: SparkSession): SparkSession =
-    extSessions.computeIfAbsent(
-      "x",
-      _ =>
-        org.apache.spark.sql.classic.SparkSession.synchronized {
-          SparkSession.clearActiveSession()
-          SparkSession.clearDefaultSession()
-          try {
-            SparkSession.builder()
-              .config(
-                "spark.sql.shuffle.partitions",
-                s.conf.get("spark.sql.shuffle.partitions"))
-              .config("spark.sql.session.timeZone", "UTC")
-              .withExtensions(new graft.plans.GraftExtensions)
-              .getOrCreate()
-          } finally {
-            SparkSession.setDefaultSession(s)
-            SparkSession.setActiveSession(s)
-          }
-        })
+    extSessions.computeIfAbsent("x", _ => graft.GraftSession.withExtensions(s))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ----- HTTP lookup join: orders enriched from the customer service -----

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: train the BPE merge table on a corpus and print it as a Scala
   * literal, for freezing into [[graft.ops.Bpe.Frozen]] (the frozen set is
   * what the gated query encodes with, and what the DuckDB oracle replays).
@@ -12,12 +10,7 @@ object BpeFreeze {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val numMerges = if (args.length > 1) args(1).toInt else 100
     val topWords = if (args.length > 2) args(2).toInt else 5000
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(8)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val merges = graft.ops.Bpe.train(docs, "text", numMerges, topWords)
     val ordered = merges.ranks.toSeq.sortBy(_._2).map(_._1)

@@ -1,26 +1,17 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev probe: counts plan-shape features (exchanges, join strategies) for
-  * named gates at sf0.001 — the numbers PlanGuardSpec pins.
+/** Counts plan-shape features (exchanges, join strategies) — the numbers
+  * PlanGuardSpec pins and `Probe shape` prints.
   */
 object PlanShapeProbe {
-  /** Exchanges are counted as DISTINCT operator lines (leading tree-art
-    * stripped): a `Par.cached` subtree prints its child plan verbatim at
-    * every InMemoryRelation occurrence — same plan object, same
-    * expression ids — but runs ONCE, so identical lines are one runtime
-    * exchange. Genuinely separate exchanges always carry distinct
-    * expression ids and survive the dedup.
-    *
-    * r16: an AdaptiveSparkPlan that has ALREADY EXECUTED (a cached
-    * subtree materialized by an in-gate audit) prints BOTH its final
-    * and initial plans; the initial section duplicates every operator
-    * under fresh expression ids, double-counting runtime exchanges in
-    * the text. [[shapeOf]] therefore counts from the plan TREE (the
-    * current AQE physical plan, each cache's plan once, reused
-    * exchanges not re-descended) and is what PlanGuardSpec pins; the
-    * string-based [[shape]] remains for ad-hoc text use.
+  /** Counts from the plan TREE: the current AQE physical plan, each
+    * cache's plan once, reused exchanges not re-descended. A `Par.cached`
+    * subtree sits under every InMemoryRelation occurrence — same plan
+    * object — but runs ONCE, so it is walked once. r16: the plan TEXT is
+    * no substitute: an AdaptiveSparkPlan that has ALREADY EXECUTED (a
+    * cached subtree materialized by an in-gate audit) prints BOTH its
+    * final and initial plans, the initial section duplicating every
+    * operator under fresh expression ids.
     */
   def shapeOf(root: org.apache.spark.sql.execution.SparkPlan): Map[String, Int] = {
     import org.apache.spark.sql.execution._
@@ -50,7 +41,7 @@ object PlanShapeProbe {
           s.outputPartitioning match {
             case _: HashPartitioning | _: RangePartitioning |
                 SinglePartition => true
-            case _ => false // round-robin fan exchanges, as in [[shape]]
+            case _ => false // round-robin fan exchanges
           }
         case _ => false
       },
@@ -62,51 +53,5 @@ object PlanShapeProbe {
         case s: SortExec => s.global
         case _ => false
       })
-  }
-
-  def shape(plan: String): Map[String, Int] = {
-    Map(
-      // 'Single' capitalized: Spark prints "Exchange SinglePartition" —
-      // a lowercase alternative silently missed every global-agg /
-      // coalesce(1)-style exchange (r14 review fix)
-      "exchange" -> "(?m)^.*Exchange (hash|range|Single)[^\\n]*".r
-        .findAllIn(plan)
-        .map(_.dropWhile(c => !c.isLetter))
-        .toSet
-        .size,
-      "bnlj" -> "BroadcastNestedLoopJoin".r.findAllIn(plan).size,
-      "cartesian" -> "CartesianProduct".r.findAllIn(plan).size,
-      "smj" -> "SortMergeJoin".r.findAllIn(plan).size,
-      "bhj" -> "BroadcastHashJoin".r.findAllIn(plan).size,
-      "sort_global" -> "(?m)^.*Sort \\[.*\\], true".r.findAllIn(plan).size)
-  }
-
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("plan-shape-probe")
-      .config("spark.sql.shuffle.partitions", 8)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val dir = "/root/testdata/sf0.001"
-    args.foreach { name =>
-      try {
-        val df = graft.SparkEntry.queries(name)(spark, dir)
-        if (sys.env.contains("PLAN_DEBUG"))
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(s"/tmp/planshape_$name.txt"),
-            df.queryExecution.executedPlan.toString)
-        val s = shapeOf(df.queryExecution.executedPlan)
-        println(
-          s"SHAPE $name exchanges=${s("exchange")} bnlj=${s("bnlj")} " +
-            s"cartesian=${s("cartesian")} smj=${s("smj")} bhj=${s("bhj")} " +
-            s"globalSort=${s("sort_global")}")
-      } catch {
-        case e: Throwable => println(s"SHAPE $name ERROR ${e.getMessage}")
-      }
-    }
-    spark.stop()
-    sys.exit(0)
   }
 }

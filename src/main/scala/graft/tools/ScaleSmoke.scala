@@ -1,9 +1,6 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale smoke for the three headline dedup pipelines: run them on a corpus
@@ -28,49 +25,9 @@ object ScaleSmoke {
     // optional second arg (local dev): only run steps whose name contains
     // one of the comma-separated substrings
     val onlySub = args.drop(1).headOption.map(_.split(',').toSeq)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // r16: match the Bench/Verify sessions (cached plans re-coalesced
-      // by AQE) so the smoke exercises the shapes the driver runs
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // r17: see the Bench session note — many distinct steps thrash the
-      // 100-entry generated-class cache
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val shuffleWrite = new AtomicLong()
-    val shuffleRecords = new AtomicLong()
-    val spillBytes = new AtomicLong()
-    // per-task shuffle-read high-water mark: the skew signal — a reduce
-    // task that must read a hot key's full fan-in shows up HERE even when
-    // totals look linear (the q_skew_salted_join spec pattern)
-    val maxTaskReadRecords = new AtomicLong()
-    // r17 (r16 advice): per-STAGE task-read maxima, so one-time wide
-    // stages (the cached-edge build) can carry their own bound without
-    // loosening the tighter per-iteration bound for every other stage
-    val stageMaxRead =
-      new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        Option(t.taskMetrics).foreach { m =>
-          shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          shuffleRecords.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-          spillBytes.addAndGet(m.diskBytesSpilled)
-          maxTaskReadRecords.getAndUpdate(v =>
-            math.max(v, m.shuffleReadMetrics.recordsRead))
-          stageMaxRead.merge(
-            t.stageId,
-            Long.box(m.shuffleReadMetrics.recordsRead),
-            (a, b) => Long.box(math.max(a, b)))
-        }
-    })
+    val (sfDir, cpus) = (graft.GraftSession.sfDir, graft.GraftSession.cpus)
+    val spark = graft.GraftSession.local(cpus)
+    val stats = graft.RunStats.install(spark)
 
     def fan(name: String, df: DataFrame): DataFrame = {
       // distinct ids per copy; every other column identical
@@ -104,19 +61,6 @@ object ScaleSmoke {
         invariant: DataFrame => Seq[String] = _ => Nil)
     var failed = false
 
-    // listener bus is async: wait until the counters stop moving
-    def drain(): Unit = {
-      var last = -1L
-      var stable = 0
-      var waited = 0
-      while (stable < 5 && waited < 300) {
-        Thread.sleep(100)
-        waited += 1
-        val cur = shuffleWrite.get + shuffleRecords.get
-        if (cur == last) stable += 1 else { stable = 0; last = cur }
-      }
-    }
-
     def measure(step: Step): Unit = {
       if (onlySub.exists(fs => !fs.exists(step.name.contains))) return
       // counters reset BEFORE the build: iterative pipelines (cluster label
@@ -124,22 +68,20 @@ object ScaleSmoke {
       // build + noop-write together are the pipeline's true shuffle bill.
       // The noop write fully evaluates every output column (count() would
       // prune the string payloads off the shuffles). The metric SNAPSHOT is
-      // taken immediately after the drain — the trailing row count and the
+      // taken right after the write — the trailing row count and the
       // invariant checks re-execute (parts of) mostly-uncached pipelines,
       // so anything they shuffle must stay OUT of the ceiling comparison.
       try {
         graft.ops.Par.releaseCaches() // previous step's caches
-        shuffleWrite.set(0); shuffleRecords.set(0); spillBytes.set(0)
-        maxTaskReadRecords.set(0)
-        stageMaxRead.clear()
+        stats.reset()
         val t0 = System.nanoTime()
         val df = step.run()
         df.write.format("noop").mode("overwrite").save()
         val secs = (System.nanoTime() - t0) / 1e9
-        drain()
-        val gb = shuffleWrite.get / 1e9
-        val recs = shuffleRecords.get
-        val spillGb = spillBytes.get / 1e9
+        val run = stats.snapshot()
+        val gb = run.shuffleWriteBytes / 1e9
+        val recs = run.shuffleWriteRecords
+        val spillGb = run.spillBytes / 1e9
         val rows = df.count()
         val violations = step.invariant(df)
         val ok = gb <= step.ceilingGB && violations.isEmpty
@@ -2216,8 +2158,14 @@ object ScaleSmoke {
           // build's slack.
           val perPart = n / cpus.toLong.max(1L)
           val (buildBound, iterBound) = (6L * perPart, 4L * perPart)
-          import scala.jdk.CollectionConverters._
-          val byStage = stageMaxRead.asScala.values.map(_.toLong).toSeq
+          val perStage = stats.snapshot().perStage
+          // the table a brush against either bound is attributed with
+          perStage.toSeq.sortBy(_._1).foreach { case (id, st) =>
+            if (st.maxTaskReadRecords > 0)
+              println(f"[smoke]   stage $id%4d maxTaskRead=" +
+                f"${st.maxTaskReadRecords}%9d  ${st.name.take(100)}")
+          }
+          val byStage = perStage.values.map(_.maxTaskReadRecords).toSeq
             .sorted(Ordering[Long].reverse)
           val widest = byStage.headOption.getOrElse(0L)
           val restMax = byStage.drop(1).headOption.getOrElse(0L)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: train the unigram-LM vocabulary on a corpus and print it as a
   * Scala literal, for freezing into [[graft.ops.Unigram.Frozen]] (the
   * frozen vocab is what the gated queries encode with, and what the DuckDB
@@ -12,12 +10,7 @@ object UnigramFreeze {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val vocabSize =
       if (args.length > 1) args(1).toInt else graft.ops.Unigram.FrozenVocabSize
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(8)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val vocab = graft.ops.Unigram.train(docs, "text", vocabSize)
     def esc(s: String) = s.flatMap {

@@ -88,4 +88,18 @@ class GateContractSpec extends SparkSpec {
       (missing -- documentedRowsOnly) shouldBe empty
     }
   }
+
+  test("no gate or oracle name is defined in two suites") {
+    // SparkEntry joins the suites' maps with `++`: a name defined twice
+    // silently keeps only the last suite's entry
+    import graft.queries._
+    val suites = Seq(
+      AnalyticsQueries.queries -> AnalyticsQueries.oracles,
+      ExtendedQueries.queries -> ExtendedQueries.oracles,
+      MoreQueries.queries -> MoreQueries.oracles,
+      PipelineQueries.queries -> PipelineQueries.oracles,
+      HttpQueries.queries -> HttpQueries.oracles)
+    suites.map(_._1.size).sum shouldBe SparkEntry.queries.size
+    suites.map(_._2.size).sum shouldBe SparkEntry.oracleSql.size
+  }
 }

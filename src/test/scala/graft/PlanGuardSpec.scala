@@ -12,8 +12,10 @@ import graft.tools.PlanShapeProbe
   * BroadcastNestedLoopJoin, a cartesian product, a global sort) fails CI
   * instead of only showing up as a bench regression.
   *
-  * Bounds are the values measured at pin time (sf0.001, shuffle
-  * partitions 8): exchanges/BNLJ are UPPER bounds (an optimizer
+  * Bounds are measured values, checked at sf0.001 on SparkSpec's session
+  * (`GraftSession.local(4)`: 4 shuffle partitions, cached-plan output
+  * re-coalescing on; `graft.tools.Probe shape` prints the counts from
+  * that same session): exchanges/BNLJ are UPPER bounds (an optimizer
   * improvement may remove one; a degradation that adds one fails),
   * cartesian products and global sorts are flatly banned. BNLJ
   * allowances are the audited bounded-broadcast sites only (X6): the

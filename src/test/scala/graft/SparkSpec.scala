@@ -14,20 +14,6 @@ trait SparkSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // r16: match the Bench/Verify sessions (cached plans re-coalesced
-      // by AQE) so plan guards pin the shapes the driver actually runs
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // the exact session `graft.tools.Probe shape` prints plan shapes from
+  lazy val session: SparkSession = GraftSession.local(4)
 }

@@ -34,21 +34,7 @@ class HttpLookupTableSpec extends SparkSpec with BeforeAndAfterAll {
       .start()
     // share the JVM-wide SparkContext; build a second session carrying the
     // extensions (getOrCreate would return the shared session otherwise)
-    val base = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    // spark.sql.extensions is a STATIC conf read from the SparkContext at
-    // first-session creation; with a shared test context the public
-    // builder.withExtensions seam is the way to attach them
-    xspark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    SparkSession.setDefaultSession(base)
-    SparkSession.setActiveSession(base)
+    xspark = graft.GraftSession.withExtensions(spark)
   }
 
   override def afterAll(): Unit = {
