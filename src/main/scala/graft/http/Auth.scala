@@ -29,15 +29,6 @@ final case class BasicAuthHeaderValuePreprocessor(useRawAuthHeader: Boolean = fa
         rawValue.getBytes(StandardCharsets.UTF_8))
 }
 
-/** OIDC bearer header: `Bearer <token from token manager>` (reference:
-  * `preprocessor/OIDCAuthHeaderValuePreprocessor.java`). The raw configured
-  * Authorization value is replaced by the bearer token.
-  */
-final class OidcAuthHeaderValuePreprocessor(tokenSupplier: () => String)
-    extends HeaderValuePreprocessor {
-  def preprocess(rawValue: String): String = "Bearer " + tokenSupplier()
-}
-
 /** A value preprocessor bound to one header name (reference:
   * `preprocessor/HeaderPreprocessor.java`).
   */

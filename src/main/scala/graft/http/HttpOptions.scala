@@ -256,4 +256,23 @@ object HttpOptions {
     * columns on non-matches.
     */
   val EmitMatchColumn = "http.source.lookup.emit-match-column"
+
+  /** Polling source (`graft-http-poll`): the request body every poll
+    * sends, with whatever `lookup-method` is set (typically POST); unset
+    * sends no body.
+    */
+  val PollBody = "body"
+
+  /** Polling source: split a JSON-array response into one row per element
+    * (default `true`), each re-serialized as JSON; `false` emits the whole
+    * body as one row.
+    */
+  val PollSplitArray = "split-array"
+
+  /** Polling source throttle: `latestOffset` polls (and advances) only once
+    * this interval has elapsed since the previous poll; inside it the
+    * engine sees no new data and sends no request. Default 0 (poll on
+    * every trigger).
+    */
+  val PollMinInterval = "min-poll-interval"
 }

@@ -18,12 +18,9 @@ import org.apache.spark.sql.functions._
   */
 object Decontaminate {
 
-  /** Hashed distinct n-gram set of a text column (60-bit md5 hashes; same
-    * construction as the dedup family so DuckDB oracles replay it).
-    */
-  private def gramSet(text: Column, n: Int): Column =
-    array_distinct(
-      transform(TextFunctions.shingleSet(text, n), s => TextFunctions.hash61(s)))
+  // a document's grams are the near-dup family's hashed shingle set, so
+  // the DuckDB oracles replay one construction
+  import Dedup.hashedShingleSet
 
   /** Per-document overlap against the benchmark: `(idCol, n_shared_ngrams,
     * n_doc_ngrams, contaminated_frac)` for every corpus document sharing at
@@ -52,17 +49,17 @@ object Decontaminate {
       n: Int = 3,
       broadcastBenchmark: Boolean = true): DataFrame = {
     val benchGrams = benchmark
-      .select(explode(gramSet(benchTextCol, n)).as("g"))
+      .select(explode(hashedShingleSet(benchTextCol, n)).as("g"))
       .distinct()
     val bench = if (broadcastBenchmark) broadcast(benchGrams) else benchGrams
-    // Per-doc grams are distinct (gramSet), bench grams are distinct, so the
+    // Per-doc grams are distinct (a set), bench grams are distinct, so the
     // post-join count(1) per doc IS the distinct shared-gram count — no
     // second distinct pass needed. The gram set is aliased in its own
     // projection below the size/explode one: CollapseProject keeps a
     // non-cheap alias referenced twice un-inlined, so the shingle+hash pass
     // runs once per row.
     Par.fan(corpus)
-      .select(col(idCol), gramSet(textCol, n).as("__graft_grams"))
+      .select(col(idCol), hashedShingleSet(textCol, n).as("__graft_grams"))
       .select(
         col(idCol),
         size(col("__graft_grams")).cast("long").as("n_doc_ngrams"),
@@ -106,16 +103,18 @@ object Decontaminate {
       n: Int = 3,
       broadcastReference: Boolean = true): DataFrame = {
     val refGrams = reference
-      .select(explode(gramSet(refTextCol, n)).as("g"))
+      .select(explode(hashedShingleSet(refTextCol, n)).as("g"))
       .distinct()
     val ref = if (broadcastReference) broadcast(refGrams) else refGrams
     val seen = Par.fan(corpus)
-      .select(col(idCol), explode(gramSet(textCol, n)).as("g"))
+      .select(col(idCol), explode(hashedShingleSet(textCol, n)).as("g"))
       .join(ref, Seq("g"))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("__seen"))
     Par.fan(corpus)
-      .select(col(idCol), size(gramSet(textCol, n)).cast("long").as("n_doc_ngrams"))
+      .select(
+        col(idCol),
+        size(hashedShingleSet(textCol, n)).cast("long").as("n_doc_ngrams"))
       .join(seen, Seq(idCol), "left")
       .select(
         col(idCol),
@@ -185,15 +184,15 @@ object Decontaminate {
       broadcastBenchmark: Boolean = true): DataFrame = {
     val benchGrams = benchmark.select(
       col(benchIdCol).as("__bid"),
-      explode(gramSet(benchTextCol, n)).as("g"))
+      explode(hashedShingleSet(benchTextCol, n)).as("g"))
     val benchSizes = benchmark.select(
       col(benchIdCol).as("__bid"),
-      size(gramSet(benchTextCol, n)).cast("long").as("n_item_ngrams"))
+      size(hashedShingleSet(benchTextCol, n)).cast("long").as("n_item_ngrams"))
     val bg = if (broadcastBenchmark) broadcast(benchGrams) else benchGrams
     Par.fan(corpus)
       .select(
         col(corpusIdCol).as("__cid"),
-        explode(gramSet(corpusTextCol, n)).as("g"))
+        explode(hashedShingleSet(corpusTextCol, n)).as("g"))
       .join(bg, Seq("g"))
       .groupBy(col("__bid"))
       .agg(

@@ -156,9 +156,6 @@ object Dedup {
       n: Int = 3,
       bands: Int = 4,
       threshold: Double = 0.5): DataFrame = {
-    val k = MinhashA.length
-    require(k % bands == 0, "bands must divide k")
-    val rows = k / bands
     // EXACT-COLLAPSE prefilter (r8, same trick as [[nearDupSurvivors]]):
     // both sides shrink to ONE representative per distinct content keyed
     // by the content hash itself — exact copies share their content's
@@ -173,27 +170,15 @@ object Dedup {
         .select(md5(col(text)).as("__fp"), col(text))
         .groupBy(col("__fp"))
         .agg(first(col(text)).as(text))
-    val repsN = collapse(df, textCol)
-    val repsS = collapse(seen, seenTextCol)
-    val (shN, bandedN) = shinglesAndBands(repsN, "__fp", textCol, n, bands, rows)
-    val (shS, bandedS) =
-      shinglesAndBands(repsS, "__fp", seenTextCol, n, bands, rows)
-    val candidates = bandedN
-      .join(
-        bandedS.select(col("band"), col("band_key"), col("id").as("id_b")),
-        Seq("band", "band_key"))
-      .select(col("id").as("id_a"), col("id_b"))
-      .distinct()
-    val shA = shN
-      .join(candidates.select(col("id_a").as("id")), Seq("id"), "left_semi")
-    val shB = shS
-      .join(candidates.select(col("id_b").as("id")), Seq("id"), "left_semi")
-    val verified = candidates
-      .join(shA.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(shB.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-    val matched = jaccardVerify(verified, threshold)
-      .select(col("id_a").as("__graft_near_seen_fp"))
-      .distinct()
+    val (shN, bandedN) =
+      shinglesAndBands(collapse(df, textCol), "__fp", textCol, n, bands)
+    val (shS, bandedS) = shinglesAndBands(
+      collapse(seen, seenTextCol), "__fp", seenTextCol, n, bands)
+    val candidates = bandCandidates(bandedN, bandedS, selfJoin = false)
+    val matched =
+      jaccardVerify(withShingles(candidates, shN, shS, narrow = true), threshold)
+        .select(col("id_a").as("__graft_near_seen_fp"))
+        .distinct()
     df.withColumn("__graft_fp", md5(col(textCol)))
       .join(
         matched,
@@ -394,7 +379,9 @@ object Dedup {
     *
     * `blockCols` bound the pair space (classic blocking); the join shuffles
     * on the block key only. Output: (id_a, id_b, jaccard) with id_a < id_b
-    * and jaccard ≥ `threshold`.
+    * and jaccard ≥ `threshold`. Documents with an empty shingle set (fewer
+    * than `n` words, or null) are dropped before the block self-join: two of
+    * them in one block would score 0/0.
     */
   def ngramJaccardPairs(
       df: DataFrame,
@@ -403,46 +390,78 @@ object Dedup {
       blockCols: Seq[String],
       n: Int = 3,
       threshold: Double = 0.5): DataFrame = {
-    // Hashed shingle sets: Jaccard over 60-bit shingle hashes instead of
-    // shingle strings — the pairwise intersect works on longs (an order of
-    // magnitude cheaper than string sets) and the persisted/shuffled arrays
-    // shrink ~3x. The oracle hashes identically, so collisions (if any) are
-    // seen by both engines. Persisted: without it Catalyst inlines the whole
-    // pipeline into the self-join output and recomputes it per PAIR
-    // (observed 17s -> ~2s at sf0.1).
-    val withSh = Par.cached(Par.fan(df).select(
-      (col(idCol).as("id") +: blockCols.map(col)) :+
-        array_distinct(
-          transform(
-            TextFunctions.shingleSet(col(textCol), n),
-            s => TextFunctions.hash61(s))).as("sh"): _*))
-    val a = withSh.select(
-      col("id").as("id_a") +: col("sh").as("sh_a") +: blockCols.map(col): _*)
-    val b = withSh.select(
-      col("id").as("id_b") +: col("sh").as("sh_b") +: blockCols.map(col): _*)
-    val joined = a.join(b, blockCols).filter(col("id_a") < col("id_b"))
+    // Persisted: without it Catalyst inlines the whole pipeline into the
+    // self-join output and recomputes it per PAIR (observed 17s -> ~2s at
+    // sf0.1). The empty-set filter reads the cache: below it, Catalyst
+    // would push the filter (and a second shingle+hash pass) under the fan.
+    val withSh =
+      Par.cached(shingleFrame(Par.fan(df), idCol, textCol, n, blockCols))
+        .filter(size(col("sh")) > 0)
+    def side(s: String) = withSh.select(
+      col("id").as("id" + s) +: col("sh").as("sh" + s) +: blockCols.map(col): _*)
+    val joined =
+      side("_a").join(side("_b"), blockCols).filter(col("id_a") < col("id_b"))
     jaccardVerify(joined, threshold)
   }
 
-  /** Exact-Jaccard scoring of candidate pairs carrying hashed shingle arrays
-    * (`sh_a`, `sh_b`): emits (id_a, id_b, jaccard ≥ threshold).
-    *
-    * The intersect is evaluated at most twice per pair (once in the filter,
-    * once in the output project — Catalyst collapses the intermediate
-    * project). That is cheaper than the shuffle barrier it replaces: a
-    * repartition would move every candidate pair across the wire just to
-    * avoid one extra map-side array intersect; this formulation stays
-    * map-side at any scale.
+  /** Hashed shingle set of a text column: the distinct 60-bit
+    * [[TextFunctions.hash61]] of its distinct word `n`-gram shingles (or
+    * `n`-CHARACTER shingles when `chars`) — the one definition of "a
+    * document" the near-dup family and [[Decontaminate]] share. Jaccard
+    * over hashed shingles instead of shingle strings: the pairwise
+    * intersect works on longs (an order of magnitude cheaper than string
+    * sets) and the persisted/shuffled arrays shrink ~3x. The DuckDB oracles
+    * hash identically (`hashedShinglesSql`), so collisions (if any) are
+    * seen by both engines.
     */
+  private[ops] def hashedShingleSet(
+      text: Column,
+      n: Int,
+      chars: Boolean = false): Column =
+    array_distinct(
+      transform(
+        if (chars) TextFunctions.charShingleSet(text, n)
+        else TextFunctions.shingleSet(text, n),
+        s => TextFunctions.hash61(s)))
+
+  /** `(id, keep…, sh)`: each row's id, the `keep` columns, and its
+    * [[hashedShingleSet]]. Callers decide where to fan, cache and drop
+    * empty sets.
+    */
+  private def shingleFrame(
+      df: DataFrame,
+      idCol: String,
+      textCol: String,
+      n: Int,
+      keep: Seq[String] = Nil,
+      chars: Boolean = false): DataFrame =
+    df.select((col(idCol).as("id") +: keep.map(col)) :+
+      hashedShingleSet(col(textCol), n, chars).as("sh"): _*)
+
   /** One corpus's hashed shingle sets (`(id, sh)`, cached — the signature
     * pass and the verification join both read them) and its banded
-    * signature keys (`(id, band, band_key)`).
+    * signature keys (`(id, band, band_key)`, see [[bandedOf]]).
+    */
+  private def shinglesAndBands(
+      df: DataFrame,
+      idCol: String,
+      textCol: String,
+      n: Int,
+      bands: Int,
+      chars: Boolean = false): (DataFrame, DataFrame) = {
+    val sh = Par.cached(
+      shingleFrame(Par.fan(df), idCol, textCol, n, chars = chars))
+    (sh, bandedOf(sh, bands))
+  }
+
+  /** Banded LSH keys `(id, band, band_key)` of an (id, hashed-shingle-array)
+    * frame: `bands` bands of `k / bands` signature rows each.
     *
     * Per-row codegen'd signature (MinhashSigF: one pass over the hashed
     * shingles) and band keys in the SAME narrow stage — the signature never
     * leaves its row, so there is no explode, no signature shuffle, and no
     * second cache. The ONLY shuffle that moves documents is the caller's
-    * band-bucket join.
+    * band-bucket join ([[bandCandidates]]).
     *
     * Empty shingle sets (text shorter than n words, or null) are dropped
     * BEFORE banding: they all share the sentinel signature [P,...,P], so
@@ -451,27 +470,10 @@ object Dedup {
     * intersect). On real corpora short docs are common; the filter keeps
     * the band-bucket shuffle bounded. Output is unchanged.
     */
-  private def shinglesAndBands(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int,
-      bands: Int,
-      rows: Int): (DataFrame, DataFrame) = {
-    val sh = Par.cached(Par.fan(df).select(
-      col(idCol).as("id"),
-      array_distinct(
-        transform(
-          TextFunctions.shingleSet(col(textCol), n),
-          s => TextFunctions.hash61(s))).as("sh")))
-    (sh, bandedOf(sh, bands, rows))
-  }
-
-  /** Banded LSH keys of a cached (id, hashed-shingle-array) frame — the
-    * signature + banding stages shared by the word- and char-shingle
-    * entry points.
-    */
-  private def bandedOf(sh: DataFrame, bands: Int, rows: Int): DataFrame = {
+  private def bandedOf(sh: DataFrame, bands: Int): DataFrame = {
+    val k = MinhashA.length
+    require(k % bands == 0, "bands must divide k")
+    val rows = k / bands
     val sig = sh
       .filter(size(col("sh")) > 0)
       .select(col("id"), minhashSignature(col("sh")).as("sig"))
@@ -485,6 +487,107 @@ object Dedup {
               element_at(col("sig"), b * rows + j + 1).cast(StringType)): _*)
         }: _*)).as(Seq("band", "band_key")))
   }
+
+  /** Band-bucket candidate join of two [[bandedOf]] frames: distinct
+    * `(id_a, id_b)` for every pair sharing a (band index, band key) bucket.
+    * Only band keys move, and candidate pairs are bounded by bucket
+    * co-occupancy (buckets are tiny for non-duplicate data). A `selfJoin`
+    * keeps each unordered pair once, as id_a < id_b.
+    */
+  private def bandCandidates(
+      a: DataFrame,
+      b: DataFrame,
+      selfJoin: Boolean): DataFrame = {
+    val joined = a.join(
+      b.select(col("band"), col("band_key"), col("id").as("id_b")),
+      Seq("band", "band_key"))
+    (if (selfJoin) joined.filter(col("id") < col("id_b")) else joined)
+      .select(col("id").as("id_a"), col("id_b"))
+      .distinct()
+  }
+
+  /** Candidate pairs `(id_a, id_b)` joined to their shingle arrays `sh_a`
+    * (from `shA`) and `sh_b` (from `shB`), plus each side's MinHash
+    * signature `sig_a`/`sig_b` when `sig`.
+    *
+    * `narrow`: only ids that appear in some candidate pair need their
+    * shingle arrays again — the left-semi joins (no distinct needed on a
+    * semi join's right side) drop the rest of the corpus before any shingle
+    * array moves; on non-duplicate-heavy data that is almost all of it.
+    */
+  private def withShingles(
+      candidates: DataFrame,
+      shA: DataFrame,
+      shB: DataFrame,
+      narrow: Boolean,
+      sig: Boolean = false): DataFrame = {
+    def side(s: String, sh: DataFrame) = {
+      val kept = if (!narrow) sh else sh.join(
+        candidates.select(col("id" + s).as("id")), Seq("id"), "left_semi")
+      kept.select(Seq(col("id").as("id" + s), col("sh").as("sh" + s)) ++
+        (if (sig) Seq(minhashSignature(col("sh")).as("sig" + s)) else Nil): _*)
+    }
+    candidates.join(side("_a", shA), "id_a").join(side("_b", shB), "id_b")
+  }
+
+  /** Exact-Jaccard scoring of candidate pairs carrying hashed shingle arrays
+    * (`sh_a`, `sh_b`): emits (id_a, id_b, jaccard ≥ threshold).
+    *
+    * The intersect is evaluated at most twice per pair (once in the filter,
+    * once in the output project — Catalyst collapses the intermediate
+    * project). That is cheaper than the shuffle barrier it replaces: a
+    * repartition would move every candidate pair across the wire just to
+    * avoid one extra map-side array intersect; this formulation stays
+    * map-side at any scale.
+    */
+  private def jaccardVerify(pairs: DataFrame, threshold: Double): DataFrame = {
+    val i = size(array_intersect(col("sh_a"), col("sh_b")))
+    val ss = size(col("sh_a")) + size(col("sh_b"))
+    val jaccard = i.cast(DoubleType) / (ss - i).cast(DoubleType)
+    pairs
+      .select(col("id_a"), col("id_b"), jaccard.as("jaccard"))
+      .filter(col("jaccard") >= threshold)
+  }
+
+  /** Rarest-first shingle order of a non-empty (id, sh) frame:
+    * `(id, len, ord)` with `ord` the doc's shingles sorted by (corpus
+    * document frequency asc, hash asc) — the deterministic total order the
+    * prefix filters of [[prefixJaccardPairs]] and [[containmentPairs]] rank
+    * by. The frequency join back to the exploded stream is skew-safe
+    * ([[SkewJoin.hotTailEquiJoin]]: the hottest shingles carry the most
+    * stream mass and would otherwise pile on one partition).
+    */
+  private def rarestFirst(sh: DataFrame, hotK: Int): DataFrame = {
+    val toks = sh.select(
+      col("id"), size(col("sh")).as("len"), explode(col("sh")).as("tok"))
+    val freq = toks.groupBy(col("tok")).agg(count(lit(1)).as("df"))
+    val withFreq = SkewJoin.hotTailEquiJoin(
+      toks, freq, "tok", Seq(col("df").desc, col("tok")), hotK)
+    // struct sort = (df asc, tok asc)
+    withFreq
+      .groupBy(col("id"), col("len"))
+      .agg(sort_array(collect_list(struct(col("df"), col("tok")))).as("ord"))
+  }
+
+  /** One row per (doc, ranked shingle) of a [[rarestFirst]] frame:
+    * `(id<s>, len<s>, pos<s>, tok)`, `pos` the 1-based rank in the full
+    * sorted doc; only the first `plen` ranks when given (the prefix).
+    */
+  private def ranked(
+      ordered: DataFrame,
+      s: String,
+      plen: Option[Column]): DataFrame =
+    ordered
+      .select(
+        col("id"),
+        col("len"),
+        posexplode(plen.fold(col("ord"))(slice(col("ord"), lit(1), _)))
+          .as(Seq("pos0", "st")))
+      .select(
+        col("id").as("id" + s),
+        col("len").as("len" + s),
+        (col("pos0") + 1).as("pos" + s),
+        col("st.tok").as("tok"))
 
   /** Per-document banded LSH keys: `(id, band, band_key)` — one row per
     * (document, band); documents whose shingle set is empty (text shorter
@@ -500,17 +603,8 @@ object Dedup {
       idCol: String,
       textCol: String,
       n: Int = 3,
-      bands: Int = 4): DataFrame = {
-    val k = MinhashA.length
-    require(k % bands == 0, "bands must divide k")
-    val sh = df.select(
-      col(idCol).as("id"),
-      array_distinct(
-        transform(
-          TextFunctions.shingleSet(col(textCol), n),
-          s => TextFunctions.hash61(s))).as("sh"))
-    bandedOf(sh, bands, k / bands)
-  }
+      bands: Int = 4): DataFrame =
+    bandedOf(shingleFrame(df, idCol, textCol, n), bands)
 
   /** Streaming LSH dedup registry: the band-bucket state a dedup-on-ingest
     * service maintains. Each arriving document registers its band keys;
@@ -535,15 +629,6 @@ object Dedup {
     lshBandKeys(stream, idCol, textCol, n, bands)
       .groupBy(col("band"), col("band_key"))
       .agg(min(col("id")).as("min_id"), count(lit(1)).as("n_docs"))
-
-  private def jaccardVerify(pairs: DataFrame, threshold: Double): DataFrame = {
-    val i = size(array_intersect(col("sh_a"), col("sh_b")))
-    val ss = size(col("sh_a")) + size(col("sh_b"))
-    val jaccard = i.cast(DoubleType) / (ss - i).cast(DoubleType)
-    pairs
-      .select(col("id_a"), col("id_b"), jaccard.as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-  }
 
   /** Fixed MinHash permutation parameters (seeded once, hardcoded so the SQL
     * oracle can replicate them): h_i(x) = (A(i)*x + B(i)) mod P.
@@ -604,41 +689,20 @@ object Dedup {
       n: Int = 3,
       bands: Int = 4,
       threshold: Double = 0.5): DataFrame = {
-    val k = MinhashA.length
-    require(k % bands == 0, "bands must divide k")
-    val rows = k / bands
-
-    val (sh, banded) = shinglesAndBands(df, idCol, textCol, n, bands, rows)
+    val (sh, banded) = shinglesAndBands(df, idCol, textCol, n, bands)
     minhashPairsOf(sh, banded, threshold)
   }
 
   /** Candidate generation + semi-narrowed exact-Jaccard verify over a
     * cached shingle frame and its banded keys (shared by the word- and
-    * char-shingle entry points).
+    * char-shingle entry points and [[lshRecallReport]]).
     */
   private def minhashPairsOf(
       sh: DataFrame,
       banded: DataFrame,
       threshold: Double): DataFrame = {
-    val candidates = banded
-      .join(
-        banded.select(col("band"), col("band_key"), col("id").as("id_b")),
-        Seq("band", "band_key"))
-      .filter(col("id") < col("id_b"))
-      .select(col("id").as("id_a"), col("id_b"))
-      .distinct()
-
-    // Verify join, narrowed first: only ids that appear in some candidate
-    // pair need their shingle arrays again — the left-semi joins (no
-    // distinct needed on a semi join's right side) drop the rest of the
-    // corpus before any shingle array moves; on non-duplicate-heavy data
-    // that is almost all of it.
-    val shA = sh.join(candidates.select(col("id_a").as("id")), Seq("id"), "left_semi")
-    val shB = sh.join(candidates.select(col("id_b").as("id")), Seq("id"), "left_semi")
-    val verified = candidates
-      .join(shA.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(shB.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-    jaccardVerify(verified, threshold)
+    val candidates = bandCandidates(banded, banded, selfJoin = true)
+    jaccardVerify(withShingles(candidates, sh, sh, narrow = true), threshold)
   }
 
   /** Estimator-accuracy audit of the MinHash signature itself: for every
@@ -664,25 +728,9 @@ object Dedup {
       textCol: String,
       n: Int = 3,
       bands: Int = 4): DataFrame = {
-    val k = MinhashA.length
-    require(k % bands == 0, "bands must divide k")
-    val (sh, banded) = shinglesAndBands(df, idCol, textCol, n, bands, k / bands)
-    val candidates = banded
-      .join(
-        banded.select(col("band"), col("band_key"), col("id").as("id_b")),
-        Seq("band", "band_key"))
-      .filter(col("id") < col("id_b"))
-      .select(col("id").as("id_a"), col("id_b"))
-      .distinct()
-    def side(idName: String, suffix: String) = sh
-      .join(candidates.select(col(idName).as("id")), Seq("id"), "left_semi")
-      .select(
-        col("id").as(idName),
-        col("sh").as("sh" + suffix),
-        minhashSignature(col("sh")).as("sig" + suffix))
-    val joined = candidates
-      .join(side("id_a", "_a"), "id_a")
-      .join(side("id_b", "_b"), "id_b")
+    val (sh, banded) = shinglesAndBands(df, idCol, textCol, n, bands)
+    val candidates = bandCandidates(banded, banded, selfJoin = true)
+    val joined = withShingles(candidates, sh, sh, narrow = true, sig = true)
     val agree = size(filter(
       zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y),
       b => b)).cast(LongType)
@@ -692,7 +740,8 @@ object Dedup {
       col("id_a"),
       col("id_b"),
       agree.as("sig_agree"),
-      Sampling.divFloor(agree * lit(1000000L), lit(k.toLong)).as("est_ppm"),
+      Sampling.divFloor(
+        agree * lit(1000000L), lit(MinhashA.length.toLong)).as("est_ppm"),
       Sampling.divFloor(inter * lit(1000000L), union).as("exact_ppm"))
   }
 
@@ -717,15 +766,9 @@ object Dedup {
       n: Int = 5,
       bands: Int = 4,
       threshold: Double = 0.5): DataFrame = {
-    val k = MinhashA.length
-    require(k % bands == 0, "bands must divide k")
-    val sh = Par.cached(Par.fan(df).select(
-      col(idCol).as("id"),
-      array_distinct(
-        transform(
-          TextFunctions.charShingleSet(col(textCol), n),
-          s => TextFunctions.hash61(s))).as("sh")))
-    minhashPairsOf(sh, bandedOf(sh, bands, k / bands), threshold)
+    val (sh, banded) =
+      shinglesAndBands(df, idCol, textCol, n, bands, chars = true)
+    minhashPairsOf(sh, banded, threshold)
   }
 
   /** EXACT similarity join by prefix filtering (the AllPairs / PPJoin
@@ -783,13 +826,7 @@ object Dedup {
       threshold: Double = 0.5,
       hotK: Int = 1024): DataFrame = {
     val sh = Par.cached(
-      Par.fan(df).select(
-        col(idCol).as("id"),
-        array_distinct(
-          transform(
-            TextFunctions.shingleSet(col(textCol), n),
-            s => TextFunctions.hash61(s))).as("sh"))
-        .filter(size(col("sh")) > 0))
+      shingleFrame(Par.fan(df), idCol, textCol, n).filter(size(col("sh")) > 0))
     prefixJaccardPairsOf(sh, threshold, hotK)
   }
 
@@ -803,40 +840,14 @@ object Dedup {
       threshold: Double,
       hotK: Int): DataFrame = {
     require(threshold > 0 && threshold <= 1, "threshold must be in (0, 1]")
-    val toks = sh.select(
-      col("id"), size(col("sh")).as("len"), explode(col("sh")).as("tok"))
-    val freq = toks.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    val withFreq = SkewJoin.hotTailEquiJoin(
-      toks, freq, "tok", Seq(col("df").desc, col("tok")), hotK)
-
-    // per-doc rarest-first order; struct sort = (df asc, tok asc)
-    val ordered = withFreq
-      .groupBy(col("id"), col("len"))
-      .agg(sort_array(collect_list(struct(col("df"), col("tok")))).as("ord"))
+    val ordered = rarestFirst(sh, hotK)
     val plen = (col("len") - ceil(col("len") * threshold - lit(1e-9)) + 1)
       .cast(IntegerType)
-    val prefix = ordered
-      .select(
-        col("id"),
-        col("len"),
-        posexplode(slice(col("ord"), lit(1), plen)).as(Seq("pos0", "st")))
-      .select(
-        col("id"),
-        col("len"),
-        (col("pos0") + 1).as("pos"), // 1-based rank in the full sorted doc
-        col("st.tok").as("tok"))
-
-    val a = prefix.select(
-      col("id").as("id_a"), col("len").as("len_a"),
-      col("pos").as("pos_a"), col("tok"))
-    val b = prefix.select(
-      col("id").as("id_b"), col("len").as("len_b"),
-      col("pos").as("pos_b"), col("tok"))
     val minOverlap = ceil(
       (col("len_a") + col("len_b")) * (threshold / (1.0d + threshold)) -
         lit(1e-9))
-    val candidates = a
-      .join(b, "tok")
+    val candidates = ranked(ordered, "_a", Some(plen))
+      .join(ranked(ordered, "_b", Some(plen)), "tok")
       .filter(col("id_a") < col("id_b"))
       .filter(col("len_b") >= col("len_a") * threshold - lit(1e-9))
       .filter(col("len_a") >= col("len_b") * threshold - lit(1e-9))
@@ -846,38 +857,9 @@ object Dedup {
           col("len_b") - col("pos_b")) >= minOverlap)
       .select(col("id_a"), col("id_b"))
       .distinct()
-
-    val verified = candidates
-      .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-    jaccardVerify(verified, threshold)
+    jaccardVerify(withShingles(candidates, sh, sh, narrow = false), threshold)
   }
 
-  /** Exact n-gram CONTAINMENT similarity join — the directional companion
-    * of [[prefixJaccardPairs]]: emit (id_a → id_b) when
-    * `|S(A) ∩ S(B)| / |S(A)| ≥ t`, i.e. most of A's shingles appear in B.
-    * Jaccard misses doc-in-doc duplication by construction (a page quoted
-    * inside a 100× larger page has jaccard ≈ |A|/|B| ≈ 0.01 at containment
-    * 1.0); this is the operator that catches excerpts, quotations, and
-    * wrapped boilerplate around stolen bodies. Directional: an exact-dup
-    * pair appears in both directions.
-    *
-    * Same lossless candidate machinery, adapted to the asymmetric bound:
-    * overlap must reach `α(A) = ⌈t·|A|⌉` (exact integers:
-    * `⌈x·t_ppm/10⁶⌉`), so A needs only its `|A| − α + 1` globally RAREST
-    * shingles indexed (prefix filter for overlap joins), while B must be
-    * indexed in FULL — containment admits no length-ratio pruning on B
-    * beyond `|B| ≥ α`. Both sides keep the canonical (df asc, tok asc)
-    * rank so the positional upper bound
-    * `1 + min(|A|−pos_a, |B|−pos_b) ≥ α` is valid. The verify-back
-    * recomputes the exact intersection. The B-side index is linear in
-    * corpus shingles, and a candidate's cost is bounded by the df of A's
-    * rare prefix shingles — with the standard exact-collapse prefilter
-    * (P1) in front, duplicated content indexes once.
-    *
-    * Output: (id_a, id_b, inter, len_a, containment_ppm) — all exact
-    * integers, `containment_ppm = ⌊inter·10⁶/len_a⌋`.
-    */
   /** Pair-recall audit of a candidate-pair stage against an exact truth
     * set: one row `(n_true, n_found, n_hit, n_missed, recall_ppm)` with
     * `recall_ppm = ⌊n_hit·10⁶/n_true⌋` (10⁶ when the truth set is empty —
@@ -933,19 +915,37 @@ object Dedup {
     // pipelines, instead of letting each re-shingle the corpus and hold
     // its own cache. Values are unchanged: both sides read the same
     // expressions they built internally before.
-    val k = MinhashA.length
-    require(k % bands == 0, "bands must divide k")
-    val sh = Par.cached(Par.fan(df).select(
-      col(idCol).as("id"),
-      array_distinct(
-        transform(
-          TextFunctions.shingleSet(col(textCol), n),
-          s => TextFunctions.hash61(s))).as("sh")))
+    val (sh, banded) = shinglesAndBands(df, idCol, textCol, n, bands)
     pairRecallReport(
       prefixJaccardPairsOf(sh.filter(size(col("sh")) > 0), threshold, 1024),
-      minhashPairsOf(sh, bandedOf(sh, bands, k / bands), threshold))
+      minhashPairsOf(sh, banded, threshold))
   }
 
+  /** Exact n-gram CONTAINMENT similarity join — the directional companion
+    * of [[prefixJaccardPairs]]: emit (id_a → id_b) when
+    * `|S(A) ∩ S(B)| / |S(A)| ≥ t`, i.e. most of A's shingles appear in B.
+    * Jaccard misses doc-in-doc duplication by construction (a page quoted
+    * inside a 100× larger page has jaccard ≈ |A|/|B| ≈ 0.01 at containment
+    * 1.0); this is the operator that catches excerpts, quotations, and
+    * wrapped boilerplate around stolen bodies. Directional: an exact-dup
+    * pair appears in both directions.
+    *
+    * Same lossless candidate machinery, adapted to the asymmetric bound:
+    * overlap must reach `α(A) = ⌈t·|A|⌉` (exact integers:
+    * `⌈x·t_ppm/10⁶⌉`), so A needs only its `|A| − α + 1` globally RAREST
+    * shingles indexed (prefix filter for overlap joins), while B must be
+    * indexed in FULL — containment admits no length-ratio pruning on B
+    * beyond `|B| ≥ α`. Both sides keep the canonical (df asc, tok asc)
+    * rank so the positional upper bound
+    * `1 + min(|A|−pos_a, |B|−pos_b) ≥ α` is valid. The verify-back
+    * recomputes the exact intersection. The B-side index is linear in
+    * corpus shingles, and a candidate's cost is bounded by the df of A's
+    * rare prefix shingles — with the standard exact-collapse prefilter
+    * (P1) in front, duplicated content indexes once.
+    *
+    * Output: (id_a, id_b, inter, len_a, containment_ppm) — all exact
+    * integers, `containment_ppm = ⌊inter·10⁶/len_a⌋`.
+    */
   def containmentPairs(
       df: DataFrame,
       idCol: String,
@@ -957,54 +957,17 @@ object Dedup {
       thresholdPpm > 0 && thresholdPpm <= 1000000L,
       "thresholdPpm must be in (0, 1e6]")
     val sh = Par.cached(
-      Par.fan(df).select(
-        col(idCol).as("id"),
-        array_distinct(
-          transform(
-            TextFunctions.shingleSet(col(textCol), n),
-            s => TextFunctions.hash61(s))).as("sh"))
-        .filter(size(col("sh")) > 0))
-    val toks = sh.select(
-      col("id"), size(col("sh")).as("len"), explode(col("sh")).as("tok"))
-    val freq = toks.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    val withFreq = SkewJoin.hotTailEquiJoin(
-      toks, freq, "tok", Seq(col("df").desc, col("tok")), hotK)
-    val ordered = Par.cached(withFreq
-      .groupBy(col("id"), col("len"))
-      .agg(sort_array(collect_list(struct(col("df"), col("tok")))).as("ord")))
+      shingleFrame(Par.fan(df), idCol, textCol, n).filter(size(col("sh")) > 0))
+    val ordered = Par.cached(rarestFirst(sh, hotK))
 
     // α = ⌈len · t_ppm / 10⁶⌉ as exact integers
     def alpha(len: Column): Column =
       RangeJoin.floorDiv(len.cast(LongType) * thresholdPpm + 999999L, 1000000L)
 
     // A side: the len − α + 1 rarest shingles; B side: all, with rank
-    val aPrefix = ordered
-      .select(
-        col("id"),
-        col("len"),
-        posexplode(slice(
-          col("ord"),
-          lit(1),
-          (col("len") - alpha(col("len")) + 1).cast(IntegerType)))
-          .as(Seq("pos0", "st")))
-      .select(
-        col("id").as("id_a"),
-        col("len").as("len_a"),
-        (col("pos0") + 1).as("pos_a"),
-        col("st.tok").as("tok"))
-    val bAll = ordered
-      .select(
-        col("id").as("id_b"),
-        col("len").as("len_b"),
-        posexplode(col("ord")).as(Seq("pos0", "st")))
-      .select(
-        col("id_b"),
-        col("len_b"),
-        (col("pos0") + 1).as("pos_b"),
-        col("st.tok").as("tok"))
-
-    val candidates = aPrefix
-      .join(bAll, "tok")
+    val aLen = (col("len") - alpha(col("len")) + 1).cast(IntegerType)
+    val candidates = ranked(ordered, "_a", Some(aLen))
+      .join(ranked(ordered, "_b", None), "tok")
       .filter(col("id_a") =!= col("id_b"))
       .filter(col("len_b") >= alpha(col("len_a")))
       .filter(
@@ -1015,9 +978,7 @@ object Dedup {
       .distinct()
 
     val inter = size(array_intersect(col("sh_a"), col("sh_b"))).cast(LongType)
-    candidates
-      .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
+    withShingles(candidates, sh, sh, narrow = false)
       .select(
         col("id_a"),
         col("id_b"),
@@ -1106,20 +1067,6 @@ object Dedup {
     labels.select(col("n").as("doc_id"), col("lbl").as("cluster_id"))
   }
 
-  /** One-call near-dup removal: pairs → [[nearDupClusters]] → anti-join,
-    * keeping each cluster's representative (its min id — the propagated
-    * label) and every unclustered document.
-    *
-    * {{{
-    * val pairs = Dedup.minhashLshPairs(docs, "doc_id", col("text"))
-    * val deduped = Dedup.keepOnePerCluster(docs, "doc_id", pairs)
-    * }}}
-    *
-    * Scale posture: the anti-join's build side is the clustered
-    * NON-representatives — duplicate volume, not corpus volume. AQE
-    * broadcasts it when small; on dup-heavy corpora it is a doc-id shuffle
-    * whose build side is still only the duplicates.
-    */
   /** One-call near-dup dedup — minhash pairs → transitive closure →
     * keep-min — with an EXACT-COLLAPSE prefilter that makes it safe for
     * corpora with extreme copy counts: 100 identical copies of a page
@@ -1180,6 +1127,20 @@ object Dedup {
     survivors.unionByName(short)
   }
 
+  /** One-call near-dup removal: pairs → [[nearDupClusters]] → anti-join,
+    * keeping each cluster's representative (its min id — the propagated
+    * label) and every unclustered document.
+    *
+    * {{{
+    * val pairs = Dedup.minhashLshPairs(docs, "doc_id", col("text"))
+    * val deduped = Dedup.keepOnePerCluster(docs, "doc_id", pairs)
+    * }}}
+    *
+    * Scale posture: the anti-join's build side is the clustered
+    * NON-representatives — duplicate volume, not corpus volume. AQE
+    * broadcasts it when small; on dup-heavy corpora it is a doc-id shuffle
+    * whose build side is still only the duplicates.
+    */
   def keepOnePerCluster(
       df: DataFrame,
       idCol: String,

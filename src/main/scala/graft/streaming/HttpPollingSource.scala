@@ -110,9 +110,9 @@ private[streaming] class HttpPollingMicroBatchStream(opts: Map[String, String])
   private val o = HttpOptions(opts.toSeq: _*)
   private val url = o.required(HttpOptions.Url)
   private val method = o.str(HttpOptions.LookupMethod, "GET").toUpperCase
-  private val body = o.strOpt("body")
-  private val splitArray = o.bool("split-array", default = true)
-  private val minPollIntervalMs = o.durationMs("min-poll-interval", 0L)
+  private val body = o.strOpt(HttpOptions.PollBody)
+  private val splitArray = o.bool(HttpOptions.PollSplitArray, default = true)
+  private val minPollIntervalMs = o.durationMs(HttpOptions.PollMinInterval, 0L)
 
   @transient private lazy val exchange = HttpEndpoint.lookup(o, Nil).exchange(
     StatusPolicy.lookup(o),

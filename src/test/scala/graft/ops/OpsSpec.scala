@@ -238,6 +238,22 @@ class DedupSpec extends SparkSpec {
     pairs.exists { case (a, b) => a == 3L || b == 3L } shouldBe false
   }
 
+  test("ngram jaccard: two docs shorter than n in one block do not fail the job") {
+    // both short docs have empty shingle sets: scored as a pair they were
+    // 0/0, a DIVIDE_BY_ZERO under ANSI mode
+    val d = Seq(
+      (1L, "alpha beta gamma delta", "en"),
+      (2L, "alpha beta gamma delta", "en"),
+      (3L, "hi", "en"),
+      (4L, "yo", "en")).toDF("doc_id", "text", "lang")
+    Dedup
+      .ngramJaccardPairs(d, "doc_id", "text", Seq("lang"), 3, 0.5)
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .toSeq shouldBe Seq((1L, 2L, 1.0))
+    Par.releaseCaches()
+  }
+
   test("minhash LSH drops empty-shingle docs before banding, same output") {
     // Docs shorter than n words (or null) all share the sentinel signature;
     // banding them would bucket every such doc together (O(m²) candidates).
@@ -274,6 +290,45 @@ class DedupSpec extends SparkSpec {
     // found with high probability (fixed seed -> deterministic here)
     lsh should contain((1L, 4L))
     lsh shouldBe exact
+  }
+
+  test("char-shingle minhash LSH: exact scores >= t, every identical pair found") {
+    val texts = Seq(
+      1L -> "https://example.com/articles/2024/spark-near-duplicate-detection",
+      2L -> "https://example.com/articles/2024/spark-near-duplicate-detection",
+      3L -> "https://example.com/articles/2024/spark-near-duplicate-detection?ref=1",
+      4L -> "https://another.org/blog/a-completely-different-topic-entirely",
+      5L -> "loremipsumdolorsitametconsecteturadipiscingelit",
+      6L -> "loremipsumdolorsitametconsecteturadipiscingelit",
+      7L -> "loremipsumdolorsitametconsecteturadipiscingelitsed",
+      8L -> "abc", // shorter than n: no shingles, never paired
+      9L -> "abc")
+    val (n, t) = (5, 0.5)
+    def shingles(s: String) = s.sliding(n).toSet.filter(_.length == n)
+    val byId = texts.toMap
+    def naive(a: Long, b: Long) = {
+      val (sa, sb) = (shingles(byId(a)), shingles(byId(b)))
+      (sa & sb).size.toDouble / (sa | sb).size
+    }
+    val got = Dedup
+      .minhashLshPairsChars(texts.toDF("doc_id", "text"), "doc_id", "text", n, 4, t)
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getAs[Double]("jaccard"))
+      .toMap
+    got.foreach { case ((a, b), j) =>
+      a should be < b
+      j shouldBe naive(a, b)
+      j should be >= t
+    }
+    // identical signatures collide in every band
+    val identical = for {
+      (a, ta) <- texts; (b, tb) <- texts
+      if a < b && ta == tb && shingles(ta).nonEmpty
+    } yield (a, b)
+    identical shouldBe Seq((1L, 2L), (5L, 6L))
+    identical.foreach(p => got.keySet should contain(p))
+    got.keySet.exists { case (a, b) => a >= 8L || b >= 8L } shouldBe false
+    Par.releaseCaches()
   }
 
   test("pairRecallReport counts hits/misses and floors the ppm") {

@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
-import graft.http.RequestCallback
+import graft.http.{HttpOptions, RequestCallback}
 import graft.http.testkit.StubServer
 
 class HttpPollingSourceSpec extends SparkSpec {
@@ -50,7 +50,7 @@ class HttpPollingSourceSpec extends SparkSpec {
       val df = spark.readStream
         .format("graft-http-poll")
         .option("url", server.url("/one"))
-        .option("split-array", "false")
+        .option(HttpOptions.PollSplitArray, "false")
         .load()
       val q = df.writeStream
         .format("memory")
@@ -62,6 +62,49 @@ class HttpPollingSourceSpec extends SparkSpec {
       val rows = spark.sql("SELECT body FROM poll_one").collect()
       rows.length shouldBe 1
       rows.head.getString(0) shouldBe "[1,2,3]"
+    } finally server.stop()
+  }
+
+  test("a POST poll sends the body option as its request body") {
+    val server = new StubServer()
+      .route("/search")(_ => (200, """[{"id":7}]"""))
+      .start()
+    try {
+      val q = spark.readStream
+        .format("graft-http-poll")
+        .option(HttpOptions.Url, server.url("/search"))
+        .option(HttpOptions.LookupMethod, "POST")
+        .option(HttpOptions.PollBody, """{"since":42}""")
+        .load()
+        .writeStream
+        .format("memory")
+        .queryName("poll_post")
+        .option("checkpointLocation", checkpoint())
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination(60000) shouldBe true
+      server.requests.map(r => (r.method, r.body)) shouldBe
+        List(("POST", """{"since":42}"""))
+      spark.sql("SELECT body FROM poll_post").collect().map(_.getString(0)) shouldBe
+        Array("""{"id":7}""")
+    } finally server.stop()
+  }
+
+  test("a second latestOffset inside min-poll-interval sends no request") {
+    val server = new StubServer().route("/tick")(_ => (200, "[1]")).start()
+    try {
+      val throttled = new HttpPollingMicroBatchStream(Map(
+        HttpOptions.Url -> server.url("/tick"),
+        HttpOptions.PollMinInterval -> "1h"))
+      throttled.latestOffset() shouldBe PollOffset(1L)
+      throttled.latestOffset() shouldBe PollOffset(1L)
+      server.requestCount shouldBe 1
+      // without the throttle every call polls
+      val eager = new HttpPollingMicroBatchStream(
+        Map(HttpOptions.Url -> server.url("/tick")))
+      eager.latestOffset() shouldBe PollOffset(1L)
+      eager.latestOffset() shouldBe PollOffset(2L)
+      server.requestCount shouldBe 3
     } finally server.stop()
   }
 
