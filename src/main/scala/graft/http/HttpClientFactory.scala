@@ -2,16 +2,12 @@ package graft.http
 
 import java.net.{Authenticator, InetSocketAddress, PasswordAuthentication, ProxySelector}
 import java.net.http.HttpClient
-import java.security.SecureRandom
-import java.security.cert.X509Certificate
 import java.time.Duration
-import javax.net.ssl.{SSLContext, X509TrustManager}
 
 /** JDK `java.net.http.HttpClient` factory (reference:
-  * `utils/JavaNetHttpClientFactory.java`, `utils/ProxyConfig.java`,
-  * `security/SelfSignedTrustManager.java`): connect timeout, HTTP version,
-  * optional authenticated proxy, optional trust-everything SSL context for
-  * `allowSelfSigned`. One client per executor per config — clients are
+  * `utils/JavaNetHttpClientFactory.java`, `utils/ProxyConfig.java`):
+  * connect timeout, HTTP version, optional authenticated proxy, and the
+  * [[Ssl]] context. One client per executor per config — clients are
   * thread-safe and pooled by the JDK.
   */
 object HttpClientFactory {
@@ -23,7 +19,6 @@ object HttpClientFactory {
       proxyPort: Option[Int] = None,
       proxyUsername: Option[String] = None,
       proxyPassword: Option[String] = None,
-      allowSelfSigned: Boolean = false,
       ssl: Ssl.SslConfig = Ssl.SslConfig())
       extends Serializable
 
@@ -36,7 +31,6 @@ object HttpClientFactory {
       proxyPort = o.strOpt(HttpOptions.ProxyPort).map(_.toInt),
       proxyUsername = o.strOpt(HttpOptions.ProxyUsername),
       proxyPassword = o.strOpt(HttpOptions.ProxyPassword),
-      allowSelfSigned = o.bool(HttpOptions.AllowSelfSigned, default = false),
       ssl = Ssl.SslConfig.fromOptions(o))
   }
 
@@ -79,19 +73,5 @@ object HttpClientFactory {
     }
     Ssl.contextFor(cfg.ssl).foreach(b.sslContext)
     b.build()
-  }
-
-  /** Trust-everything context for `http.security.cert.server.allowSelfSigned`
-    * (non-production use, mirroring the reference's SelfSignedTrustManager).
-    */
-  def trustAllContext(): SSLContext = {
-    val tm = new X509TrustManager {
-      override def checkClientTrusted(c: Array[X509Certificate], a: String): Unit = ()
-      override def checkServerTrusted(c: Array[X509Certificate], a: String): Unit = ()
-      override def getAcceptedIssuers: Array[X509Certificate] = Array.empty
-    }
-    val ctx = SSLContext.getInstance("TLS")
-    ctx.init(null, Array(tm), new SecureRandom())
-    ctx
   }
 }

@@ -49,7 +49,7 @@ object HttpLookup {
   val MetaHeadersMap = "http_headers_map"
   val MetaCompletionState = "http_completion_state"
 
-  /** Emitted only under [[HttpOptions.EmitMatchColumn]] (internal). */
+  /** Emitted only by the internal `emitMatchColumn` [[join]]. */
   val MatchedColumn = "__graft_matched"
 
   /** Serializable per-task I/O config. */
@@ -150,7 +150,23 @@ object HttpLookup {
       responseSchema: StructType,
       options: Map[String, String],
       includeMetadata: Boolean = false,
-      headerPreprocessors: Seq[HeaderPreprocessor] = Nil): DataFrame = {
+      headerPreprocessors: Seq[HeaderPreprocessor] = Nil): DataFrame =
+    join(probe, keyCols, responseSchema, options, includeMetadata,
+      headerPreprocessors, emitMatchColumn = false)
+
+  /** [[join]], plus — under `emitMatchColumn`, for the SQL LEFT-join
+    * rewrite — a boolean [[MatchedColumn]] marking rows whose lookup
+    * produced an actual enrichment struct, so the rewrite can null the
+    * echoed key columns on non-matches.
+    */
+  private[graft] def join(
+      probe: DataFrame,
+      keyCols: Seq[String],
+      responseSchema: StructType,
+      options: Map[String, String],
+      includeMetadata: Boolean,
+      headerPreprocessors: Seq[HeaderPreprocessor],
+      emitMatchColumn: Boolean): DataFrame = {
     val o = HttpOptions(options)
     val (staged, io) = stage(probe, keyCols, o, headerPreprocessors)
 
@@ -197,7 +213,8 @@ object HttpLookup {
           .drop(ReqUrl + "_r", ReqBody + "_r")
       } else ioResults
 
-    decodeProject(ioDf, probe.columns.toSeq, responseSchema, o, includeMetadata)
+    decodeProject(
+      ioDf, probe.columns.toSeq, responseSchema, o, includeMetadata, emitMatchColumn)
   }
 
   /** Serializable state-store record for [[joinStateCached]]. */
@@ -298,7 +315,9 @@ object HttpLookup {
         }
     }(stateEnc, outEnc)
 
-    decodeProject(ioDf.toDF(), probe.columns.toSeq, responseSchema, o, includeMetadata)
+    decodeProject(
+      ioDf.toDF(), probe.columns.toSeq, responseSchema, o, includeMetadata,
+      emitMatchColumn = false)
   }
 
   /** Back in Catalyst after the I/O op: decode + classify + project.
@@ -313,7 +332,8 @@ object HttpLookup {
       probeColumns: Seq[String],
       responseSchema: StructType,
       o: HttpOptions,
-      includeMetadata: Boolean): DataFrame = {
+      includeMetadata: Boolean,
+      emitMatchColumn: Boolean): DataFrame = {
     val responseFormat = PayloadFormats(o.str(HttpOptions.Format, "json"))
     val Corrupt = "__graft_corrupt"
     val schemaWithCorrupt =
@@ -466,7 +486,7 @@ object HttpLookup {
     // internal marker for SQL LEFT-join rewrites: did the lookup produce an
     // actual enrichment struct (vs a kept-but-unmatched probe row)?
     val matchCols =
-      if (o.bool(HttpOptions.EmitMatchColumn, default = false))
+      if (emitMatchColumn)
         Seq((col(RespState) === CompletionState.Success &&
           col(RespParsed).isNotNull).as(MatchedColumn))
       else Seq.empty[Column]

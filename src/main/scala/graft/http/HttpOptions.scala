@@ -250,13 +250,6 @@ object HttpOptions {
     */
   val LookupJoinType = "http.source.lookup.join-type"
 
-  /** Internal (used by the SQL join rewrite): emit a boolean
-    * `__graft_matched` column marking rows whose lookup produced an actual
-    * enrichment struct, so LEFT-join rewrites can null the echoed key
-    * columns on non-matches.
-    */
-  val EmitMatchColumn = "http.source.lookup.emit-match-column"
-
   /** Polling source (`graft-http-poll`): the request body every poll
     * sends, with whatever `lookup-method` is set (typically POST); unset
     * sends no body.

@@ -9,12 +9,13 @@ import org.apache.spark.sql.functions._
   * (`sink/HttpSinkInternal.java`, `sink/httpclient/BatchRequestSubmitter.java`,
   * `table/sink/HttpDynamicSink.java`).
   *
-  * Rows are serialized to JSON *in Catalyst* (`to_json`, codegen) before the
-  * I/O layer ever sees them; each partition then submits payloads to the
-  * endpoint either in `batch` mode (JSON-array bodies of
-  * `http.sink.request.batch.size` elements, default 500 — reference docs
-  * "Batch submission mode") or `single` mode (one request per row), with
-  * bounded in-flight concurrency (`sink.requests.max-inflight` /
+  * Rows are rendered *in Catalyst* by the configured [[PayloadFormat]]
+  * (`format`, default `json` → `to_json`, codegen) before the I/O layer
+  * ever sees them; each partition then submits payloads to the endpoint
+  * either in `batch` mode (bodies of `http.sink.request.batch.size`
+  * records framed by the format, default 500 — reference docs "Batch
+  * submission mode") or `single` mode (one request per row), with bounded
+  * in-flight concurrency (`sink.requests.max-inflight` /
   * `http.sink.writer.thread-pool.size`).
   *
   * Failure semantics: a response classified as error (default `4XX,5XX`,
@@ -25,18 +26,18 @@ import org.apache.spark.sql.functions._
   *
   * For Structured Streaming use [[HttpSink.foreachBatchWriter]] with
   * `writeStream.foreachBatch` (append mode, at-least-once), mirroring the
-  * reference's streaming sink.
+  * reference's streaming sink. Every sink surface — this object,
+  * [[HttpForeachWriter]] and the DSv2 `graft-http-sink` table — parses one
+  * [[SinkRuntime]] per write and sends through its partition writer.
   */
 object HttpSink {
 
-  final case class SinkReport(requests: Long, records: Long)
-      extends Serializable
-
   /** Write `df` to the configured endpoint. `payload` defaults to the
-    * whole-row JSON object (`to_json(struct(*))`), matching the reference's
-    * json format element converter (`table/SerializationSchemaElementConverter
-    * .java`); pass a custom Column for custom wire formats
-    * (the DataStream-API `ElementConverter` analog).
+    * whole-row record rendered by the configured format
+    * (`format.encode(struct(*))`), matching the reference's format element
+    * converter (`table/SerializationSchemaElementConverter.java`); pass a
+    * custom Column for custom wire formats (the DataStream-API
+    * `ElementConverter` analog).
     */
   def write(
       df: DataFrame,
@@ -80,73 +81,6 @@ object HttpSink {
       headerPreprocessors: Seq[HeaderPreprocessor] = Nil): (DataFrame, Long) => Unit =
     (batchDf, batchId) =>
       write(batchDf, options, payload, headerPreprocessors, epochId = batchId)
-
-  /** Bounded-in-flight async submitter for one partition (reference:
-    * `sink/httpclient/BatchRequestSubmitter.java` semantics: async submit,
-    * bounded by writer thread-pool / max-inflight; errors surface on flush).
-    */
-  private[http] final class BatchSubmitter(
-      exchange: HttpExchange,
-      url: String,
-      method: String,
-      maxInflight: Int) {
-    private val permits = new Semaphore(maxInflight)
-    @volatile private var failure: Throwable = _
-
-    def submit(body: String, extraHeaders: Seq[(String, String)] = Nil): Unit = {
-      permits.acquire()
-      // checked after the wait: a request that failed meanwhile stops this one
-      try checkFailure() catch { case t: Throwable => permits.release(); throw t }
-      send(body, extraHeaders)
-    }
-
-    /** Non-blocking submit for the shared flush-timer thread: sends only
-      * if an in-flight permit is free RIGHT NOW and no async failure is
-      * recorded (a recorded failure is the task thread's to throw, at its
-      * next blocking call). Returns whether the body was submitted.
-      */
-    def trySubmit(
-        body: String,
-        extraHeaders: Seq[(String, String)] = Nil): Boolean =
-      failure == null && permits.tryAcquire() && {
-        send(body, extraHeaders)
-        true
-      }
-
-    // a permit is held until the response is classified, so holding all
-    // of them means nothing is in flight and every failure is recorded
-    private def send(body: String, extraHeaders: Seq[(String, String)]): Unit =
-      try
-        exchange.send(method, url, Some(body), extraHeaders).whenComplete { (oc, err) =>
-          try {
-            if (err != null) {
-              // a cancelled request belongs to a task that is already ending
-              if (!err.isInstanceOf[CancellationException]) failure = err
-            } else if (oc.state == CompletionState.Exception) failure = oc.cause
-            else if (oc.state != CompletionState.Success)
-              failure = new HttpStatusCodeValidationFailedException(
-                s"HTTP sink got error status ${oc.status} from $url")
-          } finally permits.release()
-        }
-      catch { case t: Throwable => permits.release(); throw t }
-
-    def awaitAll(): Unit = {
-      permits.acquire(maxInflight)
-      permits.release(maxInflight)
-      checkFailure()
-    }
-
-    /** Abort every request still in flight (failure path). */
-    def cancelAll(): Unit = exchange.cancelAll()
-
-    private def checkFailure(): Unit = {
-      val f = failure
-      if (f != null) f match {
-        case e: RuntimeException => throw e
-        case e => throw new RuntimeException(e)
-      }
-    }
-  }
 }
 
 /** Deterministic request identity for replay deduplication.
@@ -218,9 +152,11 @@ private[graft] object IdempotencyKeys {
 }
 
 /** Fully-parsed sink configuration, shared by every sink surface (the Scala
-  * `HttpSink.write`, `foreachBatch`, and the DSv2 `graft-http-sink` table):
-  * parse once on the driver, ship to executors, build one
-  * [[SinkRuntime.newPartitionWriter partition writer]] per task.
+  * `HttpSink.write`, `foreachBatch`, [[HttpForeachWriter]] and the DSv2
+  * `graft-http-sink` table): built once per write, on the driver, by
+  * [[SinkRuntime.apply]] — the only place sink defaults live — shipped to
+  * executors, which open one [[SinkRuntime.newPartitionWriter partition
+  * writer]] per task.
   */
 private[graft] final case class SinkRuntime(
     url: String,
@@ -232,40 +168,21 @@ private[graft] final case class SinkRuntime(
     timeoutMs: Long,
     maxInflight: Int,
     endpoint: HttpEndpoint,
-    idempotencyHeader: Option[String] = None,
-    idempotencyNonce: String = "",
-    idempotencySort: Boolean = false,
-    flushTimeoutMs: Long = 0L,
-    stage1MaxRows: Int = 500,
-    flushBufferBytes: Long = 5L * 1024 * 1024)
-    extends Serializable {
+    idempotencyHeader: Option[String],
+    idempotencyNonce: String,
+    idempotencySort: Boolean,
+    flushTimeoutMs: Long,
+    stage1MaxRows: Int,
+    flushBufferBytes: Long) {
 
-  /** Executor-side: a buffering writer over a bounded-in-flight submitter.
-    * `add` payload strings; `flush` submits the tail batch and surfaces any
-    * async failure (failing the task → Spark retry → at-least-once).
-    * `epochId`/`partitionId` seed deterministic [[IdempotencyKeys]] when
-    * `http.sink.idempotency.header` is configured.
+  /** Executor-side writer for one task. `epochId`/`partitionId` seed
+    * deterministic [[IdempotencyKeys]] when `http.sink.idempotency.header`
+    * is configured.
     */
   def newPartitionWriter(
       epochId: Long = 0L,
-      partitionId: Int = 0): SinkRuntime.PartitionWriter = {
-    val submitter = new HttpSink.BatchSubmitter(
-      // the sink only classifies: no ignored codes, no retries (a failed
-      // request fails the task and Spark's task retry re-sends)
-      endpoint.exchange(
-        StatusPolicy(code => !classifier.isError(code)),
-        FixedDelayRetry(0, 0L),
-        timeoutMs,
-        Some(format.contentType)),
-      url,
-      method,
-      maxInflight)
-    new SinkRuntime.PartitionWriter(
-      submitter, batchSize, mode, format,
-      idempotencyHeader.map(h =>
-        (h, new IdempotencyKeys.Keyer(idempotencyNonce, epochId, partitionId))),
-      flushTimeoutMs, stage1MaxRows, flushBufferBytes)
-  }
+      partitionId: Int = 0): SinkRuntime.PartitionWriter =
+    new SinkRuntime.PartitionWriter(this, epochId, partitionId)
 }
 
 private[graft] object SinkRuntime {
@@ -340,15 +257,38 @@ private[graft] object SinkRuntime {
       t
     })
 
+  /** One task's sink writer (reference: `sink/httpclient/
+    * BatchRequestSubmitter.java` — async submit, bounded in-flight, errors
+    * surface on flush). It buffers payload strings into requests, sends
+    * them through its own [[HttpExchange]] with at most `maxInflight` on
+    * the wire, and records the first async failure: `add` rethrows it at
+    * the next send, `flush` submits the tail batch, waits for every
+    * response and rethrows it (failing the task → Spark retry →
+    * at-least-once).
+    *
+    * The writer's monitor guards the buffer and the idempotency keyer and
+    * is held only for non-blocking work: the task thread waits for an
+    * in-flight permit outside it, so a saturated writer never stalls the
+    * shared flush-timer thread.
+    */
   private[graft] final class PartitionWriter(
-      submitter: HttpSink.BatchSubmitter,
-      batchSize: Int,
-      mode: String,
-      format: PayloadFormat,
-      keying: Option[(String, IdempotencyKeys.Keyer)] = None,
-      flushTimeoutMs: Long = 0L,
-      stage1MaxRows: Int = 500,
-      flushBufferBytes: Long = 5L * 1024 * 1024) {
+      rt: SinkRuntime,
+      epochId: Long,
+      partitionId: Int) {
+    import rt.{batchSize, flushBufferBytes, flushTimeoutMs, stage1MaxRows}
+
+    // the sink only classifies: no ignored codes, no retries (a failed
+    // request fails the task and Spark's task retry re-sends)
+    private val exchange = rt.endpoint.exchange(
+      StatusPolicy(code => !rt.classifier.isError(code)),
+      FixedDelayRetry(0, 0L),
+      rt.timeoutMs,
+      Some(rt.format.contentType))
+    private val permits = new Semaphore(rt.maxInflight)
+    @volatile private var failure: Throwable = _
+    private val keying = rt.idempotencyHeader.map(h =>
+      (h, new IdempotencyKeys.Keyer(rt.idempotencyNonce, epochId, partitionId)))
+
     private val batch = new scala.collection.mutable.ArrayBuffer[String](batchSize)
     private var oldestAddNanos = 0L
     private var bytesInBatch = 0L
@@ -368,25 +308,22 @@ private[graft] object SinkRuntime {
       else None
 
     // Runs on the SHARED scheduler thread: must neither block (one
-    // saturated submitter would stall every writer's timed flush in the
-    // JVM) nor throw (ScheduledExecutorService silently suppresses all
-    // later runs of a task that threw). Submission is attempted
-    // non-blocking; no permit → skip this tick, retry next. A recorded
-    // async failure is left for the task thread to surface at the next
-    // add()/flush() checkFailure.
+    // saturated writer would stall every writer's timed flush in the JVM)
+    // nor throw (ScheduledExecutorService silently suppresses all later
+    // runs of a task that threw). No free permit → skip this tick, retry
+    // next; a recorded failure is left for the task thread to surface.
     private def timedFlush(): Unit =
-      try synchronized {
-        if (batch.nonEmpty &&
-          System.nanoTime() - oldestAddNanos >= flushTimeoutMs * 1000000L) {
-          val body = frame(batch.toSeq)
-          if (submitter.trySubmit(body, keyed(body))) { batch.clear(); bytesInBatch = 0L }
-        }
-      } catch { case _: Throwable => () }
-
-    private def submit(body: String): Unit = submitter.submit(body, keyed(body))
-
-    private def keyed(body: String): Seq[(String, String)] =
-      keying.map { case (h, keyer) => h -> keyer.keyFor(body) }.toSeq
+      if (failure == null && permits.tryAcquire()) {
+        var sent = false
+        try synchronized {
+          if (batch.nonEmpty &&
+            System.nanoTime() - oldestAddNanos >= flushTimeoutMs * 1000000L) {
+            send(takeBody())
+            sent = true
+          }
+        } catch { case t: Throwable => fail(t) }
+        finally if (!sent) permits.release()
+      }
 
     // UTF-8 length without materializing a byte[] copy per row (the
     // payload is only encoded once, at submit time)
@@ -404,37 +341,35 @@ private[graft] object SinkRuntime {
       n
     }
 
-    def add(payload: String): Unit = synchronized {
-      if (batch.isEmpty) oldestAddNanos = System.nanoTime()
-      batch += payload
-      bytesInBatch += utf8Length(payload)
-      rowsSinceStage1 += 1
-      // three flush triggers, mirroring the reference's two-stage
-      // batching: stage-2 request full; stage-1 runtime-flush boundary
-      // every `sink.batch.max-size` rows (truncates the partial request,
-      // exactly as Flink's buffered flush would); byte threshold
-      // `sink.flush-buffer.size` over the buffered UTF-8 payload
-      val stage2Full = batch.size >= batchSize
-      val stage1Boundary = stage1MaxRows > 0 && rowsSinceStage1 >= stage1MaxRows
-      val bytesFull = flushBufferBytes > 0 && bytesInBatch >= flushBufferBytes
-      if (stage2Full || stage1Boundary || bytesFull) {
-        submit(frame(batch.toSeq))
-        batch.clear()
-        bytesInBatch = 0L
+    def add(payload: String): Unit = {
+      val body = synchronized {
+        if (batch.isEmpty) oldestAddNanos = System.nanoTime()
+        batch += payload
+        bytesInBatch += utf8Length(payload)
+        rowsSinceStage1 += 1
+        // three flush triggers, mirroring the reference's two-stage
+        // batching: stage-2 request full; stage-1 runtime-flush boundary
+        // every `sink.batch.max-size` rows (truncates the partial request,
+        // exactly as Flink's buffered flush would); byte threshold
+        // `sink.flush-buffer.size` over the buffered UTF-8 payload
+        val stage2Full = batch.size >= batchSize
+        val stage1Boundary = stage1MaxRows > 0 && rowsSinceStage1 >= stage1MaxRows
+        val bytesFull = flushBufferBytes > 0 && bytesInBatch >= flushBufferBytes
         if (stage1Boundary) rowsSinceStage1 = 0
+        if (stage2Full || stage1Boundary || bytesFull) takeBody() else null
       }
+      if (body != null) submit(body)
     }
 
     def flush(): Unit = {
       timer.foreach(_.cancel(false))
-      synchronized {
-        if (batch.nonEmpty) {
-          submit(frame(batch.toSeq))
-          batch.clear()
-          bytesInBatch = 0L
-        }
-      }
-      submitter.awaitAll()
+      val tail = synchronized(if (batch.nonEmpty) takeBody() else null)
+      if (tail != null) submit(tail)
+      // a permit is held until its response is classified, so holding all
+      // of them means nothing is in flight and every failure is recorded
+      permits.acquire(rt.maxInflight)
+      permits.release(rt.maxInflight)
+      checkFailure()
     }
 
     /** Failure-path cleanup: cancel the flush timer WITHOUT submitting the
@@ -449,14 +384,60 @@ private[graft] object SinkRuntime {
     def abort(): Unit = {
       timer.foreach(_.cancel(false))
       synchronized { batch.clear(); bytesInBatch = 0L }
-      submitter.cancelAll()
+      exchange.cancelAll()
     }
 
-    /** Batch bodies are framed by the format (JSON arrays `[e1,e2,…]` for
+    /** Frame and clear the buffered batch (caller holds the monitor).
+      * Batch bodies are framed by the format (JSON arrays `[e1,e2,…]` for
       * json, one record per line for csv); single mode sends the payload
       * as-is (reference docs "Request submission").
       */
-    private def frame(b: Seq[String]): String =
-      if (mode == "single") b.head else format.frameBatch(b)
+    private def takeBody(): String = {
+      val body =
+        if (rt.mode == "single") batch.head else rt.format.frameBatch(batch.toSeq)
+      batch.clear()
+      bytesInBatch = 0L
+      body
+    }
+
+    // task thread: wait for a permit outside the monitor; a failure
+    // recorded meanwhile stops this request
+    private def submit(body: String): Unit = {
+      permits.acquire()
+      try { checkFailure(); synchronized(send(body)) }
+      catch { case t: Throwable => permits.release(); throw t }
+    }
+
+    // Caller holds a permit and the monitor (the keyer is not
+    // thread-safe), so a key is drawn only for a body that is sent. Once
+    // this returns, the permit is the response callback's to release; if
+    // it throws, the caller's.
+    private def send(body: String): Unit =
+      exchange.send(
+        rt.method,
+        rt.url,
+        Some(body),
+        keying.map { case (h, keyer) => h -> keyer.keyFor(body) }.toSeq)
+        .whenComplete { (oc, err) =>
+          try {
+            if (err != null) {
+              // a cancelled request belongs to a task that is already ending
+              if (!err.isInstanceOf[CancellationException]) fail(err)
+            } else if (oc.state == CompletionState.Exception) fail(oc.cause)
+            else if (oc.state != CompletionState.Success)
+              fail(new HttpStatusCodeValidationFailedException(
+                s"HTTP sink got error status ${oc.status} from ${rt.url}"))
+          } finally permits.release()
+        }
+
+    private def fail(t: Throwable): Unit = if (failure == null) failure = t
+
+    private def checkFailure(): Unit = {
+      val f = failure
+      if (f != null) f match {
+        case e: RuntimeException => throw e
+        case e => throw new RuntimeException(e)
+      }
+    }
   }
 }

@@ -66,9 +66,6 @@ object Ssl {
     */
   def contextFor(cfg: SslConfig): Option[SSLContext] = {
     if (!cfg.isConfigured) return None
-    if (cfg.allowSelfSigned && cfg.serverCertPaths.isEmpty &&
-      cfg.clientCertPath.isEmpty && cfg.keyStorePath.isEmpty)
-      return Some(HttpClientFactory.trustAllContext())
 
     if (cfg.clientCertPath.isDefined != cfg.clientKeyPath.isDefined)
       throw new HttpConfigException(
@@ -114,14 +111,8 @@ object Ssl {
     }
 
     val trustManagers =
-      if (cfg.allowSelfSigned) {
-        val tm = new X509TrustManager {
-          override def checkClientTrusted(c: Array[X509Certificate], a: String): Unit = ()
-          override def checkServerTrusted(c: Array[X509Certificate], a: String): Unit = ()
-          override def getAcceptedIssuers: Array[X509Certificate] = Array.empty
-        }
-        Array[javax.net.ssl.TrustManager](tm)
-      } else if (cfg.serverCertPaths.nonEmpty || cfg.keyStorePath.isDefined) {
+      if (cfg.allowSelfSigned) Array[javax.net.ssl.TrustManager](TrustAll)
+      else if (cfg.serverCertPaths.nonEmpty || cfg.keyStorePath.isDefined) {
         val tmf =
           TrustManagerFactory.getInstance(TrustManagerFactory.getDefaultAlgorithm)
         tmf.init(ks)
@@ -139,6 +130,15 @@ object Ssl {
     val ctx = SSLContext.getInstance("TLS")
     ctx.init(keyManagers, trustManagers, new SecureRandom())
     Some(ctx)
+  }
+
+  /** Trust-everything manager for `http.security.cert.server.allowSelfSigned`
+    * (non-production use, mirroring the reference's SelfSignedTrustManager).
+    */
+  private object TrustAll extends X509TrustManager {
+    override def checkClientTrusted(c: Array[X509Certificate], a: String): Unit = ()
+    override def checkServerTrusted(c: Array[X509Certificate], a: String): Unit = ()
+    override def getAcceptedIssuers: Array[X509Certificate] = Array.empty
   }
 
   /** Load X.509 certificate(s) from a PEM or DER file. */

@@ -173,12 +173,12 @@ case class HttpLookupJoinRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
     val options =
       if (leftOuter)
-        table.options +
-          (graft.http.HttpOptions.LookupJoinType -> "left") +
-          (graft.http.HttpOptions.EmitMatchColumn -> "true")
+        table.options + (graft.http.HttpOptions.LookupJoinType -> "left")
       else table.options
-    var enriched =
-      HttpLookup.join(probe, keyNames.toSeq, table.schema(), options)
+    var enriched = HttpLookup.join(
+      probe, keyNames.toSeq, table.schema(), options,
+      includeMetadata = false, headerPreprocessors = Nil,
+      emitMatchColumn = leftOuter)
     if (leftOuter) {
       // SQL outer-join semantics: the lookup side's ECHOED key columns must
       // be null on non-matching rows (the render column naturally carries

@@ -2,13 +2,16 @@ package graft.streaming
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, CreateNamedStruct, Literal, SafeProjection, StructsToCsv, StructsToJson}
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, Expression, RuntimeReplaceable, SafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder, Transform}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
+import org.apache.spark.sql.functions.{col, struct}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -27,18 +30,16 @@ import graft.http.{HttpConfigException, SinkRuntime}
   * INSERT INTO t SELECT …;
   * }}}
   *
-  * Rows are rendered executor-side by the same Catalyst expressions the
-  * Scala API plans (`StructsToJson` / `StructsToCsv` over the write schema)
-  * and submitted through the shared [[graft.http.SinkRuntime]]
-  * bounded-in-flight partition writer — identical batching, status
-  * classification, auth and retry-by-task semantics on every surface.
-  * Delivery is at-least-once (failed tasks retry and re-post their
-  * partition), matching the reference's AsyncSink posture.
-  *
-  * Custom registered [[graft.http.PayloadFormat]]s encode through Column
-  * trees that need full plan analysis; the DSv2 writer supports the bundled
-  * `json`/`csv` formats and points custom-format users at
-  * `HttpSink.write(df, …)`.
+  * The driver parses one [[graft.http.SinkRuntime]] per write and builds
+  * the row renderer from the configured [[graft.http.PayloadFormat]]'s
+  * `encode` over the wire columns — the expression `HttpSink.write` plans,
+  * so bundled (`json`, `csv`) and registered formats render byte-identical
+  * bodies, timestamps in the session time zone. Executors evaluate the
+  * bound renderer per row and submit through the shared bounded-in-flight
+  * partition writer — identical batching, status classification, auth and
+  * retry-by-task semantics on every surface. Delivery is at-least-once
+  * (failed tasks retry and re-post their partition), matching the
+  * reference's AsyncSink posture.
   */
 class HttpSinkDataSource extends TableProvider
     with org.apache.spark.sql.sources.DataSourceRegister {
@@ -91,20 +92,22 @@ private[streaming] class HttpSinkTable(
         throw new HttpConfigException(
           s"graft-http-sink: written query has ${qSchema.length} columns " +
             s"but the table declares ${schema0.length}")
-    // fail fast on the driver for bad config / unsupported format
-    HttpSinkDataWriterFactory.validate(wireSchema, options)
-    val sortForIdempotency = graft.http.HttpOptions(options)
-      .bool(graft.http.HttpOptions.SinkIdempotencySort, default = false)
+    // parsed once, on the driver: bad config fails fast here, and the
+    // writers get the parsed runtime and the bound renderer
+    val rt = SinkRuntime(options, Nil)
+    if (wireSchema.isEmpty)
+      throw new HttpConfigException(
+        "graft-http-sink: written query must have at least one column")
+    val render = renderer(rt, wireSchema)
     new WriteBuilder {
       override def build(): Write =
-        if (sortForIdempotency)
+        if (rt.idempotencySort)
           // idempotency.sort on the DSv2 surface: declare a required
           // ordering over every written column so Spark PLANS the
           // intra-partition sort — writer input order (hence batch framing
           // and idempotency keys) becomes replay-stable even when the
           // inserted query ends in a shuffle (see graft.http.IdempotencyKeys)
-          new HttpSinkWrite(wireSchema, options)
-            with RequiresDistributionAndOrdering {
+          new HttpSinkWrite(rt, render) with RequiresDistributionAndOrdering {
             override def requiredDistribution(): Distribution =
               Distributions.unspecified()
             override def requiredNumPartitions(): Int = 0
@@ -116,41 +119,54 @@ private[streaming] class HttpSinkTable(
                   Expressions.column(quoteIfNeeded(n)),
                   SortDirection.ASCENDING))
           }
-        else new HttpSinkWrite(wireSchema, options)
+        else new HttpSinkWrite(rt, render)
     }
   }
 
-  // minimal identifier quoting for Expressions.column's multi-part parser
+  /** The payload expression `HttpSink.write` plans —
+    * `rt.format.encode(struct(<wire columns>))` cast to string — analyzed
+    * over an empty relation of the wire schema (which resolves the session
+    * time zone) and bound to the written row's ordinals. RuntimeReplaceable
+    * nodes (`to_json` in Spark 4) cannot eval directly, so they are
+    * substituted the way the optimizer's ReplaceExpressions rule would.
+    */
+  private def renderer(rt: SinkRuntime, wire: StructType): Expression = {
+    val spark = SparkSession.active
+    val rel = spark.createDataFrame(java.util.Collections.emptyList[Row](), wire)
+    val record = struct(wire.fieldNames.toSeq.map(n => col(quoteIfNeeded(n))): _*)
+    val Project(Seq(payload), child) =
+      rel.select(rt.format.encode(record).cast("string")).queryExecution.analyzed
+    def runtimeReady(e: Expression): Expression = e.transformUp {
+      case r: RuntimeReplaceable => runtimeReady(r.replacement)
+    }
+    BindReferences.bindReference(runtimeReady(payload.children.head), child.output)
+  }
+
+  // minimal identifier quoting for the multi-part name parsers of
+  // Expressions.column and col
   private def quoteIfNeeded(name: String): String =
     if (name.matches("[a-zA-Z_][a-zA-Z0-9_]*")) name
     else "`" + name.replace("`", "``") + "`"
 }
 
-private[streaming] class HttpSinkWrite(
-    schema: StructType,
-    options: Map[String, String]) extends Write {
-  override def toBatch: BatchWrite = new HttpSinkBatchWrite(schema, options)
-  override def toStreaming: StreamingWrite =
-    new HttpSinkStreamingWrite(schema, options)
-}
-
-private[streaming] class HttpSinkBatchWrite(
-    schema: StructType,
-    options: Map[String, String]) extends BatchWrite {
+/** The one write for batch and streaming: the writers post during
+  * `write()`, task retry provides at-least-once, so commit and abort have
+  * nothing to do.
+  */
+private[streaming] class HttpSinkWrite(rt: SinkRuntime, render: Expression)
+    extends Write with BatchWrite with StreamingWrite {
+  override def toBatch: BatchWrite = this
+  override def toStreaming: StreamingWrite = this
+  // both parents default to true; Scala needs the tie broken explicitly
+  override def useCommitCoordinator(): Boolean = true
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory =
-    new HttpSinkDataWriterFactory(schema, options)
-  // writers post during write(); task retry provides at-least-once
-  override def commit(messages: Array[WriterCommitMessage]): Unit = ()
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-private[streaming] class HttpSinkStreamingWrite(
-    schema: StructType,
-    options: Map[String, String]) extends StreamingWrite {
+    new HttpSinkDataWriterFactory(rt, render)
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    new HttpSinkDataWriterFactory(schema, options)
+    new HttpSinkDataWriterFactory(rt, render)
+  override def commit(messages: Array[WriterCommitMessage]): Unit = ()
+  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
   override def commit(
       epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = ()
@@ -159,86 +175,36 @@ private[streaming] class HttpSinkStreamingWrite(
       messages: Array[WriterCommitMessage]): Unit = ()
 }
 
-private[streaming] object HttpSinkDataWriterFactory {
-  /** Driver-side validation: parse options and reject formats the DSv2
-    * writer cannot render without plan analysis.
-    */
-  def validate(schema: StructType, options: Map[String, String]): Unit = {
-    val rt = SinkRuntime(options, Nil)
-    rt.format.name match {
-      case "json" | "csv" => ()
-      case other =>
-        throw new HttpConfigException(
-          s"graft-http-sink supports the bundled json/csv formats; " +
-            s"custom format '$other' renders through Column expressions — " +
-            "use HttpSink.write(df, options) instead")
-    }
-    if (schema.isEmpty)
-      throw new HttpConfigException(
-        "graft-http-sink: written query must have at least one column")
-  }
-}
-
 private[streaming] class HttpSinkDataWriterFactory(
-    schema: StructType,
-    options: Map[String, String])
+    rt: SinkRuntime,
+    render: Expression)
     extends DataWriterFactory with StreamingDataWriterFactory {
 
   override def createWriter(
       partitionId: Int,
-      taskId: Long): DataWriter[InternalRow] = make(0L, partitionId)
+      taskId: Long): DataWriter[InternalRow] =
+    new HttpSinkDataWriter(rt, render, 0L, partitionId)
 
   override def createWriter(
       partitionId: Int,
       taskId: Long,
-      epochId: Long): DataWriter[InternalRow] = make(epochId, partitionId)
-
-  private def make(epochId: Long, partitionId: Int): DataWriter[InternalRow] =
-    new HttpSinkDataWriter(schema, options, epochId, partitionId)
+      epochId: Long): DataWriter[InternalRow] =
+    new HttpSinkDataWriter(rt, render, epochId, partitionId)
 }
 
 private[streaming] object HttpSinkCommit extends WriterCommitMessage
 
 private[streaming] class HttpSinkDataWriter(
-    schema: StructType,
-    options: Map[String, String],
-    epochId: Long = 0L,
-    partitionId: Int = 0) extends DataWriter[InternalRow] {
+    rt: SinkRuntime,
+    render: Expression,
+    epochId: Long,
+    partitionId: Int) extends DataWriter[InternalRow] {
 
-  private val rt = SinkRuntime(options, Nil)
   private val pw = rt.newPartitionWriter(epochId, partitionId)
-
-  // The same rendering the Scala API plans with to_json/to_csv, as a bound
-  // (pre-resolved) expression over the write schema — evaluated per row in
-  // the writer, no analyzer pass needed. UTC pins timestamp rendering.
-  private val render = {
-    val structExpr = CreateNamedStruct(
-      schema.fields.toIndexedSeq.zipWithIndex.flatMap { case (f, i) =>
-        Seq(
-          Literal(f.name),
-          BoundReference(i, f.dataType, f.nullable))
-      })
-    val payloadExpr = rt.format.name match {
-      case "json" => StructsToJson(Map.empty, structExpr, Option("UTC"))
-      case "csv" => StructsToCsv(Map.empty, structExpr, Option("UTC"))
-      case other => // validated driver-side; defensive
-        throw new HttpConfigException(s"unsupported DSv2 sink format '$other'")
-    }
-    // RuntimeReplaceable (StructsToJson in Spark 4) cannot eval directly —
-    // substitute replacements the way the optimizer's ReplaceExpressions
-    // rule would before building the projection
-    def runtimeReady(
-        e: org.apache.spark.sql.catalyst.expressions.Expression)
-        : org.apache.spark.sql.catalyst.expressions.Expression =
-      e.transformUp {
-        case r: org.apache.spark.sql.catalyst.expressions.RuntimeReplaceable =>
-          runtimeReady(r.replacement)
-      }
-    SafeProjection.create(Seq(runtimeReady(payloadExpr)))
-  }
+  private val project = SafeProjection.create(Seq(render))
 
   override def write(row: InternalRow): Unit =
-    pw.add(render(row).getUTF8String(0).toString)
+    pw.add(project(row).getUTF8String(0).toString)
 
   override def commit(): WriterCommitMessage = {
     pw.flush()

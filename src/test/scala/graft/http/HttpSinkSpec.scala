@@ -359,4 +359,54 @@ class HttpSinkSpec extends SparkSpec with BeforeAndAfterAll {
     vals should have size 1 // replaced, not appended
     vals.head should not be "static-value"
   }
+
+  test("a writer blocked on its in-flight bound does not stall other writers' timed flushes") {
+    // the flush timer is ONE thread per JVM: writer A, saturated at
+    // max-inflight=1 by an endpoint that holds requests ~3 s and blocked in
+    // add(), must not hold up writer B's timed partial-batch flush
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val srv = StubServer()
+      .route("/slow") { _ =>
+        release.await(3, java.util.concurrent.TimeUnit.SECONDS)
+        (200, "{}")
+      }
+      .route("/fast") { _ => (200, "{}") }
+      .start()
+    def writer(path: String, extra: (String, String)*) = SinkRuntime(
+      Map(
+        "url" -> srv.url(path),
+        "http.sink.request.batch.size" -> "2",
+        "sink.flush-buffer.timeout" -> "50 ms") ++ extra,
+      Nil).newPartitionWriter()
+    def arrived(path: String) = srv.requests.count(_.path == path)
+    val a = writer("/slow", "sink.requests.max-inflight" -> "1")
+    val b = writer("/fast", "http.sink.request.batch.size" -> "100")
+    val adder = new Thread(() => (1 to 4).foreach(i => a.add(s"""{"a":$i}""")))
+    adder.setDaemon(true)
+    try {
+      adder.start()
+      // A's first batch is held on the wire; its second waits for the
+      // permit, and A's own timer ticks meanwhile
+      val deadline = System.nanoTime() + 5000000000L
+      while (arrived("/slow") == 0 && System.nanoTime() < deadline) Thread.sleep(10)
+      Thread.sleep(200)
+      arrived("/slow") shouldBe 1
+      adder.isAlive shouldBe true
+
+      val t0 = System.nanoTime()
+      b.add("""{"b":1}""")
+      while (arrived("/fast") == 0 && System.nanoTime() - t0 < 5000000000L)
+        Thread.sleep(5)
+      val waitedMs = (System.nanoTime() - t0) / 1000000L
+      arrived("/fast") shouldBe 1
+      waitedMs should be < 1000L
+      b.flush()
+    } finally {
+      release.countDown()
+      adder.join(10000)
+      a.abort()
+      b.abort()
+      srv.stop()
+    }
+  }
 }

@@ -448,7 +448,8 @@ class OptionPinSpec extends SparkSpec with BeforeAndAfterAll {
   }
 
   // ---------------------------------------------------------------------
-  // http.source.lookup.emit-match-column (internal, set by the SQL rewrite)
+  // the internal match marker (a private join parameter the SQL LEFT-join
+  // rewrite sets; not a user option)
   // ---------------------------------------------------------------------
 
   test("emit-match-column marks matched vs kept-unmatched LEFT rows") {
@@ -470,8 +471,10 @@ class OptionPinSpec extends SparkSpec with BeforeAndAfterAll {
           Map(
             "url" -> server.url("/u2"),
             "http.source.lookup.join-type" -> "left",
-            "http.source.lookup.emit-match-column" -> "true",
-            "http.source.lookup.ignored-response-codes" -> "404"))
+            "http.source.lookup.ignored-response-codes" -> "404"),
+          includeMetadata = false,
+          headerPreprocessors = Nil,
+          emitMatchColumn = true)
         .orderBy("event")
         .collect()
       out.map(_.getAs[Boolean](HttpLookup.MatchedColumn)).toSeq shouldBe

@@ -141,14 +141,43 @@ class HttpSinkDataSourceSpec extends SparkSpec with BeforeAndAfterAll {
     run(rows.reverse) shouldBe ((bodies, keys))
   }
 
-  test("custom formats are rejected with a pointer at the Scala API") {
-    // a REGISTERED custom format: resolvable, but its encode is a Column
-    // tree needing analysis, which the DSv2 writer can't run
+  test("HttpSink.write and the graft-http-sink table send identical bodies") {
+    // one renderer for every surface: the table's rows go through the same
+    // PayloadFormat.encode expression HttpSink.write plans
+    import spark.implicits._
+    val rows = (1 to 23).map { i =>
+      (i.toLong, s"n,$i", i * 0.1, java.sql.Date.valueOf(s"2024-01-${i % 28 + 1}"),
+        java.sql.Timestamp.valueOf(f"2024-03-01 10:$i%02d:05.25"))
+    }.toDF("id", "name", "score", "day", "ts").coalesce(1)
+    for (format <- Seq("json", "csv")) {
+      val options = Map(
+        "url" -> server.url("/ok"),
+        "format" -> format,
+        "http.sink.request.batch.size" -> "5")
+      def bodies(write: => Unit): List[String] = {
+        server.clear()
+        write
+        server.requests.filter(_.path == "/ok").map(_.body).sorted
+      }
+      val viaScala = bodies(graft.http.HttpSink.write(rows, options))
+      val viaTable = bodies(
+        rows.write.format("graft-http-sink").options(options).mode("append").save())
+      withClue(s"format $format: ") {
+        viaScala should have size 5
+        viaTable shouldBe viaScala
+      }
+    }
+  }
+
+  test("a registered custom format renders through the table") {
     graft.http.PayloadFormats.register(new graft.http.PayloadFormat {
       def name = "dsv2test"
       def contentType = "text/plain"
       def encode(record: org.apache.spark.sql.Column) =
-        org.apache.spark.sql.functions.to_json(record)
+        org.apache.spark.sql.functions.concat(
+          org.apache.spark.sql.functions.lit("<"),
+          org.apache.spark.sql.functions.to_json(record),
+          org.apache.spark.sql.functions.lit(">"))
       def decode(
           body: org.apache.spark.sql.Column,
           schema: org.apache.spark.sql.types.StructType,
@@ -160,15 +189,19 @@ class HttpSinkDataSourceSpec extends SparkSpec with BeforeAndAfterAll {
           corruptField: String) = None
       def frameBatch(payloads: Seq[String]) = payloads.mkString("\n")
     })
-    val e = intercept[HttpConfigException] {
-      df(1).write
-        .format("graft-http-sink")
-        .option("url", server.url("/ok"))
-        .option("format", "dsv2test")
-        .mode("append")
-        .save()
-    }
-    e.getMessage should include("HttpSink.write")
+    server.clear()
+    df(2).write
+      .format("graft-http-sink")
+      .option("url", server.url("/ok"))
+      .option("format", "dsv2test")
+      .mode("append")
+      .save()
+    val reqs = server.requests.filter(_.path == "/ok")
+    reqs.map(_.body) shouldBe List(
+      """<{"id":1,"name":"name1"}>""" + "\n" + """<{"id":2,"name":"name2"}>""")
+    reqs.head.headers
+      .getOrElse("Content-type", reqs.head.headers.getOrElse("Content-Type", Nil))
+      .headOption.getOrElse("") should startWith("text/plain")
 
     val unknown = intercept[HttpConfigException] {
       df(1).write
@@ -179,5 +212,14 @@ class HttpSinkDataSourceSpec extends SparkSpec with BeforeAndAfterAll {
         .save()
     }
     unknown.getMessage should include("Unknown payload format")
+
+    val noColumns = intercept[HttpConfigException] {
+      df(1).select().write
+        .format("graft-http-sink")
+        .option("url", server.url("/ok"))
+        .mode("append")
+        .save()
+    }
+    noColumns.getMessage should include("at least one column")
   }
 }

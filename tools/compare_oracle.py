@@ -19,6 +19,9 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 # Rows+schema gates: float-sum reassociation (k-means training, PCA
 # eigenvectors) keeps values out of hash gating BY DESIGN; their oracles
 # replay the pipeline shape (row count + columns) with placeholder values.
+# They print ROWS-ONLY, not PASS, and count apart from the hash-exact
+# passes so the summary matches the driver's hash-exact count; a matching
+# shape still does not fail the run.
 ROWS_ONLY = {"s_ivf_topk", "s_pca_ann"}
 
 
@@ -43,7 +46,7 @@ def main():
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.loads((out_dir / "oracle_sql.json").read_text())
-    n_pass = n_fail = 0
+    n_pass = n_rows_only = n_fail = 0
     for name in sorted(p.name for p in out_dir.iterdir() if p.is_dir()):
         try:
             got = con.sql(
@@ -69,8 +72,8 @@ def main():
             continue
         if name in ROWS_ONLY:
             if len(got_rows) == len(exp_rows):
-                print(f"PASS {name} (rows+schema only, {len(got_rows)} rows)")
-                n_pass += 1
+                print(f"ROWS-ONLY {name} ({len(got_rows)} rows)")
+                n_rows_only += 1
             else:
                 print(f"FAIL {name}: rows spark={len(got_rows)} "
                       f"oracle={len(exp_rows)}")
@@ -89,7 +92,7 @@ def main():
                 print(f"  spark-only: {x[:200]}")
             for x in only_e:
                 print(f"  oracle-only: {x[:200]}")
-    print(f"\n{n_pass} pass, {n_fail} fail")
+    print(f"\n{n_pass} pass, {n_rows_only} rows-only, {n_fail} fail")
     return 1 if n_fail else 0
 
 

@@ -46,9 +46,8 @@ def from_local(out_dir, sf_dir):
         [sys.executable, "tools/compare_oracle.py", out_dir, sf_dir],
         capture_output=True, text=True)
     lines = res.stdout.splitlines()
-    full = [l for l in lines if l.startswith("PASS") and "rows+schema" not in l]
-    rows_only = [l.split()[1] for l in lines
-                 if l.startswith("PASS") and "rows+schema" in l]
+    full = [l for l in lines if l.startswith("PASS")]
+    rows_only = [l.split()[1] for l in lines if l.startswith("ROWS-ONLY")]
     fails = [l for l in lines if l.startswith("FAIL")]
     skips = [l for l in lines if l.startswith("SKIP")]
     total = len(full) + len(rows_only) + len(fails) + len(skips)
