@@ -89,8 +89,7 @@ object Bench {
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_LOCAL.json"), line + "\n")
     spark.stop()
-    // the JDK HttpServer behind the stub-backed queries keeps a non-daemon
-    // HTTP-Dispatcher thread alive; exit explicitly
+    // exit explicitly: a lingering non-daemon thread must not hang the run
     sys.exit(0)
   }
 }

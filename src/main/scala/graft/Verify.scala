@@ -52,8 +52,7 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
-    // the JDK HttpServer behind the stub-backed queries keeps a non-daemon
-    // HTTP-Dispatcher thread alive; exit explicitly
+    // exit explicitly: a lingering non-daemon thread must not hang the run
     sys.exit(0)
   }
 }

@@ -49,40 +49,3 @@ object HttpCodes {
   */
 class HttpConfigException(msg: String, cause: Throwable = null)
     extends RuntimeException(msg, cause)
-
-/** Success/retry classification for the lookup source (reference:
-  * `status/HttpResponseChecker.java:30-77`): success set must be non-empty and
-  * disjoint from the retry (temporal-error) set.
-  */
-final case class ResponseChecker(successCodes: Set[Int], retryCodes: Set[Int]) {
-  if (successCodes.isEmpty)
-    throw new HttpConfigException("Success code list cannot be empty")
-  private val overlap = successCodes.intersect(retryCodes)
-  if (overlap.nonEmpty)
-    throw new HttpConfigException(
-      s"Http codes $overlap cannot be used as both success and retry codes")
-
-  def isSuccessful(code: Int): Boolean = successCodes.contains(code)
-  def isRetryable(code: Int): Boolean = retryCodes.contains(code)
-}
-
-object ResponseChecker {
-  def apply(successExpr: String, retryExpr: String): ResponseChecker =
-    ResponseChecker(HttpCodes.parse(successExpr), HttpCodes.parse(retryExpr))
-}
-
-/** Sink-side error classifier (reference:
-  * `status/ComposeHttpStatusCodeChecker.java`): a code is an error when it is
-  * in the error list (default `4XX,5XX`) and not in the exclude list.
-  */
-final case class SinkErrorClassifier(errorCodes: Set[Int], excluded: Set[Int]) {
-  def isError(code: Int): Boolean =
-    errorCodes.contains(code) && !excluded.contains(code)
-}
-
-object SinkErrorClassifier {
-  val DefaultErrorExpr = "4XX,5XX"
-
-  def apply(errorExpr: String, excludeExpr: String): SinkErrorClassifier =
-    SinkErrorClassifier(HttpCodes.parse(errorExpr), HttpCodes.parse(excludeExpr))
-}

@@ -43,17 +43,35 @@ final case class StatusPolicy(
 
 object StatusPolicy {
 
-  /** Lookup source: [[ResponseChecker]] success/retry sets plus the
-    * ignored-response codes (reference: `status/HttpResponseChecker.java`).
+  /** Lookup source (reference: `status/HttpResponseChecker.java:30-77`):
+    * the success set must be non-empty and disjoint from the retry
+    * (temporal-error) set; ignored-response codes are no-match answers.
     */
   def lookup(o: HttpOptions): StatusPolicy = {
-    val checker = ResponseChecker(
-      o.str(HttpOptions.SuccessCodes, "2XX"),
-      o.str(HttpOptions.RetryCodes, "500,503,504"))
+    val success = HttpCodes.parse(o.str(HttpOptions.SuccessCodes, "2XX"))
+    val retry = HttpCodes.parse(o.str(HttpOptions.RetryCodes, "500,503,504"))
+    if (success.isEmpty)
+      throw new HttpConfigException("Success code list cannot be empty")
+    val overlap = success.intersect(retry)
+    if (overlap.nonEmpty)
+      throw new HttpConfigException(
+        s"Http codes $overlap cannot be used as both success and retry codes")
     StatusPolicy(
-      checker.successCodes,
+      success,
       HttpCodes.parse(o.str(HttpOptions.IgnoredCodes, "")),
-      checker.retryCodes)
+      retry)
+  }
+
+  /** Sinks (reference: `status/ComposeHttpStatusCodeChecker.java`): a code
+    * is an error when it is in `http.sink.error.code` (default `4XX,5XX`)
+    * and not in its `.exclude` list; every other code succeeds. The sink
+    * neither ignores nor retries (a failed request fails the task and
+    * Spark's task retry re-sends).
+    */
+  def sink(o: HttpOptions): StatusPolicy = {
+    val errors = HttpCodes.parse(o.str(HttpOptions.SinkErrorCodes, "4XX,5XX")) --
+      HttpCodes.parse(o.str(HttpOptions.SinkErrorCodesExclude, ""))
+    StatusPolicy(code => !errors.contains(code))
   }
 }
 

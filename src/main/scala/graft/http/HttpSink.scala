@@ -164,7 +164,7 @@ private[graft] final case class SinkRuntime(
     method: String,
     mode: String,
     batchSize: Int,
-    classifier: SinkErrorClassifier,
+    policy: StatusPolicy,
     timeoutMs: Long,
     maxInflight: Int,
     endpoint: HttpEndpoint,
@@ -214,9 +214,7 @@ private[graft] object SinkRuntime {
       method = method,
       mode = mode,
       batchSize = batchSize,
-      classifier = SinkErrorClassifier(
-        o.str(HttpOptions.SinkErrorCodes, SinkErrorClassifier.DefaultErrorExpr),
-        o.str(HttpOptions.SinkErrorCodesExclude, "")),
+      policy = StatusPolicy.sink(o),
       timeoutMs = o.durationMs(HttpOptions.SinkRequestTimeout, 30000L),
       maxInflight = math.max(
         1,
@@ -277,10 +275,8 @@ private[graft] object SinkRuntime {
       partitionId: Int) {
     import rt.{batchSize, flushBufferBytes, flushTimeoutMs, stage1MaxRows}
 
-    // the sink only classifies: no ignored codes, no retries (a failed
-    // request fails the task and Spark's task retry re-sends)
     private val exchange = rt.endpoint.exchange(
-      StatusPolicy(code => !rt.classifier.isError(code)),
+      rt.policy,
       FixedDelayRetry(0, 0L),
       rt.timeoutMs,
       Some(rt.format.contentType))

@@ -1,209 +1,79 @@
 package graft.http.testkit
 
-import java.io.{BufferedInputStream, BufferedOutputStream, InputStream}
-import java.net.{InetSocketAddress, ServerSocket, Socket}
+import java.net.{HttpURLConnection, Proxy, URI}
 import java.nio.charset.StandardCharsets
 import java.util.Base64
-import java.util.concurrent.{ConcurrentLinkedQueue, Executors}
-import scala.jdk.CollectionConverters._
+
+import graft.http.testkit.StubServer.Reply
 
 /** Minimal in-process HTTP forward proxy for e2e proxy specs (the container
   * has no proxy daemon; the reference covers `utils/ProxyConfig` only with
   * unit tests — this gives the Spark client factory a real 127.0.0.1 proxy
   * to traverse).
   *
-  * Supports plain-HTTP proxying (absolute-form request target per RFC 7230
-  * §5.3.2) with optional Basic proxy auth (407 + `Proxy-Authenticate`
-  * challenge, as the JDK client's `Authenticator` expects). No CONNECT
-  * tunneling — lookup/sink specs are plain HTTP.
+  * One [[StubServer]] route that matches absolute-form `http://` request
+  * targets (RFC 7230 §5.3.2), with optional Basic proxy auth (407 +
+  * `Proxy-Authenticate` challenge, as the JDK client's `Authenticator`
+  * expects). It forwards each authorized request to the origin and answers
+  * with the origin's status and body plus `Via: 1.1 graft-proxy`. No
+  * CONNECT tunneling — lookup/sink specs are plain HTTP.
   */
 final class ProxyServer(requireUser: Option[(String, String)] = None) {
 
   final case class Proxied(method: String, target: String, authorized: Boolean)
-
-  private val proxied = new ConcurrentLinkedQueue[Proxied]()
-
-  private val socket = new ServerSocket()
-  socket.setReuseAddress(true)
-  socket.bind(new InetSocketAddress("127.0.0.1", 0), 256)
-
-  private val pool = Executors.newCachedThreadPool((r: Runnable) => {
-    val t = new Thread(r, "graft-stub-proxy")
-    t.setDaemon(true)
-    t
-  })
-  @volatile private var running = false
-  private val acceptor = new Thread(
-    () =>
-      while (running) {
-        try {
-          val s = socket.accept()
-          s.setTcpNoDelay(true)
-          pool.execute(() => serve(s))
-        } catch { case _: Throwable => () }
-      },
-    "graft-stub-proxy-acceptor")
-  acceptor.setDaemon(true)
-
-  def port: Int = socket.getLocalPort
-  def host: String = "127.0.0.1"
-
-  def requests: List[Proxied] = proxied.asScala.toList
-  def requestCount: Int = proxied.size()
-
-  def start(): this.type = { running = true; acceptor.start(); this }
-  def stop(): Unit = {
-    running = false
-    try socket.close()
-    catch { case _: Throwable => () }
-    pool.shutdownNow()
-  }
 
   private val expectedAuth = requireUser.map { case (u, p) =>
     "Basic " + Base64.getEncoder
       .encodeToString(s"$u:$p".getBytes(StandardCharsets.UTF_8))
   }
 
-  private def serve(client: Socket): Unit = {
+  private val stub = StubServer().respond("http://") { req =>
+    if (!authorized(req))
+      Reply(407, "", Seq("Proxy-Authenticate" -> "Basic realm=\"graft\""))
+    else forward(req)
+  }
+
+  def port: Int = stub.port
+  def host: String = "127.0.0.1"
+
+  def requests: List[Proxied] =
+    stub.requests.map(r => Proxied(r.method, target(r), authorized(r)))
+  def requestCount: Int = stub.requestCount
+
+  def start(): this.type = { stub.start(); this }
+  def stop(): Unit = stub.stop()
+
+  private def target(req: StubServer#Recorded): String =
+    if (req.query.isEmpty) req.path else s"${req.path}?${req.query}"
+
+  private def authorized(req: StubServer#Recorded): Boolean =
+    expectedAuth.forall(e => req.headers.get("Proxy-authorization").exists(_.contains(e)))
+
+  // StubServer's normalized (First-upper-rest-lower) header keys
+  private val hopByHop = Set("Proxy-authorization", "Proxy-connection", "Connection")
+
+  /** One direct upstream request; hop-by-hop and proxy headers stay here. */
+  private def forward(req: StubServer#Recorded): Reply = {
+    val c = URI.create(target(req)).toURL
+      .openConnection(Proxy.NO_PROXY).asInstanceOf[HttpURLConnection]
     try {
-      val in = new BufferedInputStream(client.getInputStream)
-      val out = new BufferedOutputStream(client.getOutputStream)
-      var keepAlive = true
-      while (keepAlive) {
-        readRequest(in) match {
-          case None => keepAlive = false
-          case Some((requestLine, headers, body)) =>
-            val parts = requestLine.split(" ")
-            val method = parts(0)
-            val target = parts(1)
-            val authHeader = headers.collectFirst {
-              case (k, v) if k.equalsIgnoreCase("Proxy-Authorization") => v
-            }
-            val ok = expectedAuth.forall(e => authHeader.contains(e))
-            proxied.add(Proxied(method, target, ok))
-            if (!ok) {
-              val challenge =
-                "HTTP/1.1 407 Proxy Authentication Required\r\n" +
-                  "Proxy-Authenticate: Basic realm=\"graft\"\r\n" +
-                  "Content-Length: 0\r\n\r\n"
-              out.write(challenge.getBytes(StandardCharsets.ISO_8859_1))
-              out.flush()
-            } else if (!target.startsWith("http://")) {
-              val resp = "HTTP/1.1 400 Bad Request\r\nContent-Length: 0\r\n\r\n"
-              out.write(resp.getBytes(StandardCharsets.ISO_8859_1))
-              out.flush()
-              keepAlive = false
-            } else {
-              forward(out, method, target, headers, body)
-            }
-        }
+      c.setInstanceFollowRedirects(false)
+      c.setRequestMethod(req.method)
+      for {
+        (k, vs) <- req.headers
+        if !hopByHop(k)
+        v <- vs
+      } c.addRequestProperty(k, v)
+      if (req.body.nonEmpty) {
+        c.setDoOutput(true)
+        c.getOutputStream.write(req.body.getBytes(StandardCharsets.UTF_8))
       }
-    } catch { case _: Throwable => () }
-    finally {
-      try client.close()
-      catch { case _: Throwable => () }
-    }
-  }
-
-  /** One-shot upstream request (Connection: close keeps the relay simple —
-    * fixture, not a production proxy).
-    */
-  private def forward(
-      out: BufferedOutputStream,
-      method: String,
-      target: String,
-      headers: Seq[(String, String)],
-      body: Array[Byte]): Unit = {
-    val uri = java.net.URI.create(target)
-    val upstreamPort = if (uri.getPort == -1) 80 else uri.getPort
-    val pathQuery =
-      uri.getRawPath + Option(uri.getRawQuery).map("?" + _).getOrElse("")
-    val upstream = new Socket(uri.getHost, upstreamPort)
-    try {
-      val uout = new BufferedOutputStream(upstream.getOutputStream)
-      val uin = new BufferedInputStream(upstream.getInputStream)
-      val head = new java.lang.StringBuilder(256)
-      head.append(method).append(' ').append(pathQuery).append(" HTTP/1.1\r\n")
-      headers.foreach { case (k, v) =>
-        val drop = k.equalsIgnoreCase("Proxy-Authorization") ||
-          k.equalsIgnoreCase("Proxy-Connection") ||
-          k.equalsIgnoreCase("Connection")
-        if (!drop) head.append(k).append(": ").append(v).append("\r\n")
-      }
-      head.append("Connection: close\r\n\r\n")
-      uout.write(head.toString.getBytes(StandardCharsets.ISO_8859_1))
-      if (body.nonEmpty) uout.write(body)
-      uout.flush()
-      // relay the full upstream response (close-delimited) back, re-framed
-      // with Content-Length so the client connection can stay keep-alive
-      val statusLine = readLine(uin)
-      if (statusLine == null) return
-      var respHeaders = List.empty[(String, String)]
-      var line = readLine(uin)
-      while (line != null && line.nonEmpty) {
-        line.split(":", 2) match {
-          case Array(k, v) => respHeaders :+= (k.trim -> v.trim)
-          case _ => ()
-        }
-        line = readLine(uin)
-      }
-      val contentLength = respHeaders.collectFirst {
-        case (k, v) if k.equalsIgnoreCase("Content-Length") => v.toInt
-      }
-      val respBody = contentLength match {
-        case Some(n) => uin.readNBytes(n)
-        case None => uin.readAllBytes()
-      }
-      val rhead = new java.lang.StringBuilder(256)
-      rhead.append(statusLine).append("\r\n")
-      respHeaders.foreach { case (k, v) =>
-        if (!k.equalsIgnoreCase("Content-Length") &&
-          !k.equalsIgnoreCase("Connection") &&
-          !k.equalsIgnoreCase("Transfer-Encoding"))
-          rhead.append(k).append(": ").append(v).append("\r\n")
-      }
-      rhead.append("Content-Length: ").append(respBody.length).append("\r\n")
-      rhead.append("Via: 1.1 graft-proxy\r\n\r\n")
-      out.write(rhead.toString.getBytes(StandardCharsets.ISO_8859_1))
-      out.write(respBody)
-      out.flush()
-    } finally {
-      try upstream.close()
-      catch { case _: Throwable => () }
-    }
-  }
-
-  private def readRequest(
-      in: InputStream): Option[(String, Seq[(String, String)], Array[Byte])] = {
-    val requestLine = readLine(in)
-    if (requestLine == null || requestLine.isEmpty) return None
-    var headers = Vector.empty[(String, String)]
-    var line = readLine(in)
-    while (line != null && line.nonEmpty) {
-      line.split(":", 2) match {
-        case Array(k, v) => headers :+= (k.trim -> v.trim)
-        case _ => ()
-      }
-      line = readLine(in)
-    }
-    if (line == null) return None
-    val contentLength = headers.collectFirst {
-      case (k, v) if k.equalsIgnoreCase("Content-Length") => v.toInt
-    }.getOrElse(0)
-    val body =
-      if (contentLength > 0) in.readNBytes(contentLength)
-      else Array.emptyByteArray
-    Some((requestLine, headers, body))
-  }
-
-  private def readLine(in: InputStream): String = {
-    var c = in.read()
-    if (c == -1) return null
-    val sb = new java.lang.StringBuilder(64)
-    while (c != -1 && c != '\n') {
-      if (c != '\r') sb.append(c.toChar)
-      c = in.read()
-    }
-    sb.toString
+      val status = c.getResponseCode
+      val in = if (status >= 400) c.getErrorStream else c.getInputStream
+      val body =
+        if (in == null) ""
+        else try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
+      Reply(status, body, Seq("Via" -> "1.1 graft-proxy"))
+    } finally c.disconnect()
   }
 }

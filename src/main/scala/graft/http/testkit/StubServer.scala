@@ -3,8 +3,9 @@ package graft.http.testkit
 import java.io.{BufferedInputStream, BufferedOutputStream, InputStream}
 import java.net.{InetSocketAddress, ServerSocket, Socket}
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.{ConcurrentLinkedQueue, Executors}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, Executors}
 import java.util.concurrent.atomic.AtomicInteger
+import javax.net.ssl.{SSLContext, SSLServerSocket}
 import scala.jdk.CollectionConverters._
 
 /** Local HTTP stub server — the zero-egress analog of the WireMock fixtures
@@ -12,10 +13,13 @@ import scala.jdk.CollectionConverters._
   * `JavaNetHttpPollingClientWithWireTest.java`,
   * `HttpLookupTableSourceITCaseTest.java`). Serves deterministic responses,
   * records every request, and supports fault injection (fail N times then
-  * succeed, fixed status, delays) for retry/classification specs.
+  * succeed, fixed status, delays) for retry/classification specs. It is the
+  * repository's one HTTP server: given `tls`, it serves HTTPS (and with
+  * `needClientAuth`, mTLS); [[ProxyServer]] is a route on it.
   *
   * Engine: hand-rolled blocking HTTP/1.1 with a dedicated accept thread and
-  * thread-per-connection keep-alive workers. The JDK `com.sun.net.httpserver`
+  * thread-per-connection keep-alive workers (named
+  * `graft-stub-server-<port>`). The JDK's built-in `HttpServer`
   * it replaces multiplexes accept + all connection readiness through ONE
   * dispatcher thread and caps idle keep-alive connections at
   * `sun.net.httpserver.maxIdleConnections` (default 200); under a few hundred
@@ -25,7 +29,12 @@ import scala.jdk.CollectionConverters._
   * slowdown. A fixture must never be the bottleneck of what it measures;
   * threads are cheap at test scale.
   */
-final class StubServer(recording: Boolean = true) {
+final class StubServer(
+    recording: Boolean = true,
+    tls: Option[SSLContext] = None,
+    needClientAuth: Boolean = false) {
+  import StubServer.Reply
+
   final case class Recorded(
       method: String,
       path: String,
@@ -34,15 +43,25 @@ final class StubServer(recording: Boolean = true) {
       headers: Map[String, List[String]])
 
   private val routes =
-    new java.util.concurrent.CopyOnWriteArrayList[(String, Recorded => (Int, String))]()
+    new java.util.concurrent.CopyOnWriteArrayList[(String, Recorded => Reply)]()
   private val recorded = new ConcurrentLinkedQueue[Recorded]()
 
-  private val socket = new ServerSocket()
+  private val socket: ServerSocket = tls match {
+    case Some(ctx) =>
+      val s = ctx.getServerSocketFactory.createServerSocket()
+        .asInstanceOf[SSLServerSocket]
+      s.setNeedClientAuth(needClientAuth)
+      s
+    case None => new ServerSocket()
+  }
   socket.setReuseAddress(true)
   socket.bind(new InetSocketAddress("127.0.0.1", 0), 8192)
 
+  // open connections, closed by stop(): a worker blocked in a socket read
+  // ignores interrupts, so only closing its socket ends it
+  private val connections = ConcurrentHashMap.newKeySet[Socket]()
   private val pool = Executors.newCachedThreadPool((r: Runnable) => {
-    val t = new Thread(r, "graft-stub-server")
+    val t = new Thread(r, s"graft-stub-server-$port")
     t.setDaemon(true) // never block JVM exit (Verify/Bench mains)
     t
   })
@@ -53,24 +72,34 @@ final class StubServer(recording: Boolean = true) {
         try {
           val s = socket.accept()
           s.setTcpNoDelay(true)
-          pool.execute(() => serve(s))
+          connections.add(s)
+          // a connection accepted while stop() ran is closed here
+          if (running) pool.execute(() => serve(s)) else s.close()
         } catch { case _: Throwable => () /* socket closed on stop() */ }
       },
     "graft-stub-acceptor")
   acceptor.setDaemon(true)
 
   def port: Int = socket.getLocalPort
-  def url(path: String): String = s"http://127.0.0.1:$port$path"
+  def url(path: String): String =
+    s"${if (tls.isDefined) "https" else "http"}://127.0.0.1:$port$path"
 
   def requests: List[Recorded] = recorded.asScala.toList
   def requestCount: Int = recorded.size()
   def clear(): Unit = recorded.clear()
 
   /** Route: handler maps a recorded request to (status, body). Longest
-    * registered path prefix wins (same semantics as
-    * `com.sun.net.httpserver.HttpServer.createContext`).
+    * registered path prefix wins (same semantics as the JDK
+    * `HttpServer.createContext`).
     */
-  def route(path: String)(handler: Recorded => (Int, String)): this.type = {
+  def route(path: String)(handler: Recorded => (Int, String)): this.type =
+    respond(path) { req =>
+      val (status, body) = handler(req)
+      Reply(status, body)
+    }
+
+  /** [[route]] whose handler also sets response headers. */
+  def respond(path: String)(handler: Recorded => Reply): this.type = {
     routes.add(path -> handler)
     this
   }
@@ -93,10 +122,17 @@ final class StubServer(recording: Boolean = true) {
     this
   }
 
+  /** Stops accepting and closes every open connection, which ends its
+    * worker thread.
+    */
   def stop(): Unit = {
     running = false
     try socket.close()
     catch { case _: Throwable => () }
+    connections.forEach { s =>
+      try s.close()
+      catch { case _: Throwable => () }
+    }
     pool.shutdownNow()
   }
 
@@ -112,22 +148,23 @@ final class StubServer(recording: Boolean = true) {
           case None => keepAlive = false
           case Some(req) =>
             if (recording) recorded.add(req)
-            val (status, body) = handlerFor(req.path) match {
+            val reply = handlerFor(req.path) match {
               case Some(h) =>
                 try h(req)
-                catch { case e: Throwable => (500, s"stub handler error: $e") }
-              case None => (404, """{"error":"no matching route"}""")
+                catch { case e: Throwable => Reply(500, s"stub handler error: $e") }
+              case None => Reply(404, """{"error":"no matching route"}""")
             }
             val close = req.headers
               .find(_._1.equalsIgnoreCase("Connection"))
               .flatMap(_._2.headOption)
               .exists(_.equalsIgnoreCase("close"))
-            writeResponse(out, status, body, close)
+            writeResponse(out, reply, close)
             if (close) keepAlive = false
         }
       }
     } catch { case _: Throwable => () } // broken pipe / reset: client went away
     finally {
+      connections.remove(s)
       try s.close()
       catch { case _: Throwable => () }
     }
@@ -184,7 +221,7 @@ final class StubServer(recording: Boolean = true) {
     if (k.isEmpty) k
     else k.substring(0, 1).toUpperCase + k.substring(1).toLowerCase
 
-  private def handlerFor(path: String): Option[Recorded => (Int, String)] =
+  private def handlerFor(path: String): Option[Recorded => Reply] =
     routes.asScala
       .filter { case (p, _) => path.startsWith(p) }
       .sortBy { case (p, _) => -p.length }
@@ -193,15 +230,17 @@ final class StubServer(recording: Boolean = true) {
 
   private def writeResponse(
       out: BufferedOutputStream,
-      status: Int,
-      body: String,
+      reply: Reply,
       close: Boolean): Unit = {
-    val bytes = body.getBytes(StandardCharsets.UTF_8)
+    val bytes = reply.body.getBytes(StandardCharsets.UTF_8)
     val head = new java.lang.StringBuilder(128)
-    head.append("HTTP/1.1 ").append(status).append(' ')
-      .append(StubServer.reason(status)).append("\r\n")
+    head.append("HTTP/1.1 ").append(reply.status).append(' ')
+      .append(StubServer.reason(reply.status)).append("\r\n")
       .append("Content-Type: application/json\r\n")
       .append("Content-Length: ").append(bytes.length).append("\r\n")
+    reply.headers.foreach { case (k, v) =>
+      head.append(k).append(": ").append(v).append("\r\n")
+    }
     if (close) head.append("Connection: close\r\n")
     head.append("\r\n")
     out.write(head.toString.getBytes(StandardCharsets.ISO_8859_1))
@@ -218,6 +257,12 @@ object StubServer {
     */
   def serveOnly(): StubServer = new StubServer(recording = false)
 
+  /** A route's answer: status, body and extra response headers. */
+  final case class Reply(
+      status: Int,
+      body: String,
+      headers: Seq[(String, String)] = Nil)
+
   /** Parse a query string into a name→value map (first value wins). */
   def queryMap(q: String): Map[String, String] =
     q.split("&").filter(_.nonEmpty).map { kv =>
@@ -232,7 +277,8 @@ object StubServer {
   private val reasons = Map(
     200 -> "OK", 201 -> "Created", 204 -> "No Content",
     400 -> "Bad Request", 401 -> "Unauthorized", 403 -> "Forbidden",
-    404 -> "Not Found", 429 -> "Too Many Requests",
+    404 -> "Not Found", 407 -> "Proxy Authentication Required",
+    429 -> "Too Many Requests",
     500 -> "Internal Server Error", 503 -> "Service Unavailable",
     504 -> "Gateway Timeout")
 

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.http.{HttpLookup, HttpSink}
-import graft.http.testkit.StubServer
+import graft.http.testkit.{SelfSignedCert, StubServer}
 
 /** Driver-gated HTTP connector queries.
   *
@@ -112,6 +112,20 @@ object HttpQueries {
       .map(r => r.getString(0) -> r.getString(1))
       .toMap
 
+  /** The customer answer every customer route shares: the row for `key`
+    * as a JSON object (200), else 404.
+    */
+  private def customerAnswer(
+      rows: Map[String, String],
+      key: Option[String]): (Int, String) =
+    key.flatMap(rows.get) match {
+      case Some(json) => (200, json)
+      case None => (404, """{"error":"not found"}""")
+    }
+
+  private def custkey(req: StubServer#Recorded): Option[String] =
+    StubServer.queryMap(req.query).get("c_custkey")
+
   /** Customer-lookup stub: GET /customer?c_custkey=N → the customer row as
     * a JSON object (404 for unknown keys).
     */
@@ -120,45 +134,30 @@ object HttpQueries {
       dir,
       _ => {
         val rows = customerRowsMap(spark, dir)
+        def answer(key: Option[String]) = customerAnswer(rows, key)
+        // the n-th attempt for key `k` in counter namespace `ns`
+        def attempt(ns: String, k: String) = flakyAttempts
+          .computeIfAbsent(ns + k, _ => new java.util.concurrent.atomic.AtomicInteger())
+          .incrementAndGet()
         val keyInBody = "\"c_custkey\"\\s*:\\s*\"?(-?\\d+)\"?".r
         val server = StubServer
           .serveOnly()
-          .route("/customer") { req =>
-            StubServer.queryMap(req.query).get("c_custkey").flatMap(rows.get) match {
-              case Some(json) => (200, json)
-              case None => (404, """{"error":"not found"}""")
-            }
-          }
+          .route("/customer")(req => answer(custkey(req)))
           // POST twin: the key arrives in a JSON body rendered from the
           // `http.request.body-template` creator instead of the query string
           .route("/customer-post") { req =>
-            keyInBody
-              .findFirstMatchIn(req.body)
-              .map(_.group(1))
-              .flatMap(rows.get) match {
-              case Some(json) => (200, json)
-              case None => (404, """{"error":"not found"}""")
-            }
+            answer(keyInBody.findFirstMatchIn(req.body).map(_.group(1)))
           }
           // Elasticsearch-lite twin: the key arrives as a Lucene-style
           // `q=c_custkey:"N"` query param (url-decoded by queryMap)
           .route("/customer-es") { req =>
             val q = StubServer.queryMap(req.query).getOrElse("q", "")
-            "c_custkey:\"(-?\\d+)\"".r
-              .findFirstMatchIn(q)
-              .map(_.group(1))
-              .flatMap(rows.get) match {
-              case Some(json) => (200, json)
-              case None => (404, """{"error":"not found"}""")
-            }
+            answer("c_custkey:\"(-?\\d+)\"".r.findFirstMatchIn(q).map(_.group(1)))
           }
           // renamed-param twin: the probe column c_custkey maps to the API
           // field `cust` via http.request.query-param-fields-with-key
           .route("/customer-renamed") { req =>
-            StubServer.queryMap(req.query).get("cust").flatMap(rows.get) match {
-              case Some(json) => (200, json)
-              case None => (404, """{"error":"not found"}""")
-            }
+            answer(StubServer.queryMap(req.query).get("cust"))
           }
           // auth-gated twin: requires the Basic header the preprocessor
           // builds from the raw `user:pass` option value
@@ -167,11 +166,7 @@ object HttpQueries {
               .encodeToString("svc:secret".getBytes("UTF-8"))
             if (!req.headers.get("Authorization").exists(_.contains(expected)))
               (401, """{"error":"unauthorized"}""")
-            else
-              StubServer.queryMap(req.query).get("c_custkey").flatMap(rows.get) match {
-                case Some(json) => (200, json)
-                case None => (404, """{"error":"not found"}""")
-              }
+            else answer(custkey(req))
           }
           // OIDC twins: a token endpoint issuing a fixed bearer token, and
           // a customer route that only answers that bearer
@@ -185,21 +180,14 @@ object HttpQueries {
                 .get("Authorization")
                 .exists(_.contains("Bearer graft-tok-1")))
               (401, """{"error":"unauthorized"}""")
-            else
-              StubServer.queryMap(req.query).get("c_custkey").flatMap(rows.get) match {
-                case Some(json) => (200, json)
-                case None => (404, """{"error":"not found"}""")
-              }
+            else answer(custkey(req))
           }
           // cache-assertion twin (L6): byte-identical to /customer but
           // counts every request that reaches the wire — the partial-cache
           // gate asserts FAR fewer wire calls than probe rows
           .route("/customer-cached") { req =>
             cachedRouteHits.incrementAndGet()
-            StubServer.queryMap(req.query).get("c_custkey").flatMap(rows.get) match {
-              case Some(json) => (200, json)
-              case None => (404, """{"error":"not found"}""")
-            }
+            answer(custkey(req))
           }
           // drifted-schema twin (L23 strict decode): the SAME customer
           // rows with c_mktsegment REMOVED from every payload — the
@@ -207,10 +195,10 @@ object HttpQueries {
           // PERMISSIVE-nulls the column; json.fail-on-missing-field must
           // fail the job on it.
           .route("/customer-drift") { req =>
-            StubServer.queryMap(req.query).get("c_custkey").flatMap(rows.get) match {
-              case Some(json) =>
+            answer(custkey(req)) match {
+              case (200, json) =>
                 (200, json.replaceAll(",?\"c_mktsegment\":\"[^\"]*\"", ""))
-              case None => (404, """{"error":"not found"}""")
+              case miss => miss
             }
           }
           // state-cache twin (L27): byte-identical to /customer but counts
@@ -218,23 +206,17 @@ object HttpQueries {
           // state suppresses re-fetches of already-seen keys
           .route("/customer-state") { req =>
             stateRouteHits.incrementAndGet()
-            StubServer.queryMap(req.query).get("c_custkey").flatMap(rows.get) match {
-              case Some(json) => (200, json)
-              case None => (404, """{"error":"not found"}""")
-            }
+            answer(custkey(req))
           }
           // timeout twin (L15): keys divisible by 100 respond only after
           // 1.5s — far past the gate's 250ms request timeout, so the
           // client must classify them EXCEPTION (the stub thread pool is
           // per-connection; a sleeping handler never blocks other keys)
           .route("/customer-slow") { req =>
-            val key = StubServer.queryMap(req.query).get("c_custkey")
+            val key = custkey(req)
             if (key.exists(k => k.toLongOption.exists(_ % 100 == 0)))
               Thread.sleep(1500)
-            key.flatMap(rows.get) match {
-              case Some(json) => (200, json)
-              case None => (404, """{"error":"not found"}""")
-            }
+            answer(key)
           }
           // custom-header twin (L12): answers ONLY requests carrying both
           // configured static headers — a dropped or misnamed header
@@ -244,11 +226,7 @@ object HttpQueries {
             val ok = req.headers.get("X-api-key").exists(_.contains("graft-k1")) &&
               req.headers.get("X-tenant").exists(_.contains("acme"))
             if (!ok) (403, """{"error":"missing headers"}""")
-            else
-              StubServer.queryMap(req.query).get("c_custkey").flatMap(rows.get) match {
-                case Some(json) => (200, json)
-                case None => (404, """{"error":"not found"}""")
-              }
+            else answer(custkey(req))
           }
           // async-concurrency twin (L2): byte-identical to /customer but
           // tracks how many requests are being served at once; the small
@@ -259,46 +237,25 @@ object HttpQueries {
             lookupInflightMax.accumulateAndGet(c, Math.max(_, _))
             try {
               Thread.sleep(3)
-              StubServer.queryMap(req.query).get("c_custkey").flatMap(rows.get) match {
-                case Some(json) => (200, json)
-                case None => (404, """{"error":"not found"}""")
-              }
+              answer(custkey(req))
             } finally lookupInflightCur.decrementAndGet()
           }
           // flaky twin: the FIRST attempt for every key fails 503; the
           // retry policy must recover (per-JVM counters — later bench
           // iterations see a warm stub, which only makes retries moot)
           .route("/customer-flaky") { req =>
-            StubServer.queryMap(req.query).get("c_custkey") match {
-              case None => (404, """{"error":"no key"}""")
-              case Some(k) =>
-                val n = flakyAttempts
-                  .computeIfAbsent(k, _ => new java.util.concurrent.atomic.AtomicInteger())
-                  .incrementAndGet()
-                if (n == 1) (503, """{"error":"warming up"}""")
-                else rows.get(k) match {
-                  case Some(json) => (200, json)
-                  case None => (404, """{"error":"not found"}""")
-                }
-            }
+            val key = custkey(req)
+            if (key.exists(attempt("", _) == 1)) (503, """{"error":"warming up"}""")
+            else answer(key)
           }
           // twice-failing twin (exponential-retry gate): the first TWO
           // attempts per key 503 — recovery requires attempt 3, i.e. a
           // retry schedule that actually advances through its backoff
           // sequence (distinct counter namespace from /customer-flaky)
           .route("/customer-flaky2") { req =>
-            StubServer.queryMap(req.query).get("c_custkey") match {
-              case None => (404, """{"error":"no key"}""")
-              case Some(k) =>
-                val n = flakyAttempts
-                  .computeIfAbsent("exp:" + k, _ => new java.util.concurrent.atomic.AtomicInteger())
-                  .incrementAndGet()
-                if (n <= 2) (503, """{"error":"warming up"}""")
-                else rows.get(k) match {
-                  case Some(json) => (200, json)
-                  case None => (404, """{"error":"not found"}""")
-                }
-            }
+            val key = custkey(req)
+            if (key.exists(attempt("exp:", _) <= 2)) (503, """{"error":"warming up"}""")
+            else answer(key)
           }
         server.start()
         server
@@ -324,71 +281,11 @@ object HttpQueries {
       dir,
       _ => {
         val rows = customerRowsMap(spark, dir)
-        val tmp = GateTemp.dir("graft-tls-gate")
-        val ksPath = tmp.resolve("server.p12")
-        val certPem = tmp.resolve("server.pem")
-        def run(cmd: String*): Unit = {
-          val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
-          val log = new String(p.getInputStream.readAllBytes, "UTF-8")
-          require(p.waitFor() == 0, s"keytool failed: ${cmd.mkString(" ")}\n$log")
-        }
-        run(
-          "keytool", "-genkeypair", "-alias", "server", "-keyalg", "RSA",
-          "-keysize", "2048", "-validity", "30",
-          "-dname", "CN=127.0.0.1", "-ext", "SAN=IP:127.0.0.1",
-          "-keystore", ksPath.toString, "-storetype", "PKCS12",
-          "-storepass", "changeit", "-keypass", "changeit")
-        run(
-          "keytool", "-exportcert", "-alias", "server", "-rfc",
-          "-keystore", ksPath.toString, "-storepass", "changeit",
-          "-file", certPem.toString)
-
-        val ks = java.security.KeyStore.getInstance("PKCS12")
-        val in = java.nio.file.Files.newInputStream(ksPath)
-        try ks.load(in, "changeit".toCharArray)
-        finally in.close()
-        val kmf = javax.net.ssl.KeyManagerFactory
-          .getInstance(javax.net.ssl.KeyManagerFactory.getDefaultAlgorithm)
-        kmf.init(ks, "changeit".toCharArray)
-        val ctx = javax.net.ssl.SSLContext.getInstance("TLS")
-        ctx.init(kmf.getKeyManagers, null, null)
-
-        val server = com.sun.net.httpserver.HttpsServer
-          .create(new java.net.InetSocketAddress("127.0.0.1", 0), 0)
-        server.setHttpsConfigurator(
-          new com.sun.net.httpserver.HttpsConfigurator(ctx))
-        // dedicated pool: the default (dispatcher-thread) executor
-        // serializes handler latency into accept latency
-        server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(
-          8,
-          (r: Runnable) => {
-            val t = new Thread(r, "graft-tls-stub")
-            t.setDaemon(true)
-            t
-          }))
-        server.createContext(
-          "/customer",
-          (ex: com.sun.net.httpserver.HttpExchange) => {
-            val q = Option(ex.getRequestURI.getRawQuery).getOrElse("")
-            val payload = StubServer
-              .queryMap(q)
-              .get("c_custkey")
-              .flatMap(rows.get)
-            val (status, body) = payload match {
-              case Some(json) => (200, json)
-              case None => (404, """{"error":"not found"}""")
-            }
-            val bytes = body.getBytes("UTF-8")
-            ex.getResponseHeaders.set("Content-Type", "application/json")
-            ex.sendResponseHeaders(status, bytes.length)
-            ex.getResponseBody.write(bytes)
-            ex.close()
-          })
-        server.start()
-        (
-          s"https://127.0.0.1:${server.getAddress.getPort}",
-          certPem.toString,
-          ksPath.toString)
+        val cert = SelfSignedCert.create(GateTemp.dir("graft-tls-gate"))
+        val server = new StubServer(recording = false, tls = Some(cert.serverContext()))
+          .route("/customer")(req => customerAnswer(rows, custkey(req)))
+          .start()
+        (server.url(""), cert.pem.toString, cert.keyStore.toString)
       })
 
   private def sinkServer(dir: String): StubServer =
@@ -428,6 +325,36 @@ object HttpQueries {
     StructField("c_acctbal", DoubleType),
     StructField("c_mktsegment", StringType)))
 
+  /** Options every customer-lookup gate starts from: GET, per-partition key
+    * dedup, 2XX success and 404 as the no-match answer. Total in-flight =
+    * partitions × threads; the JDK HTTP/1.1 client degrades SUPER-linearly
+    * past ~100 concurrent connections (measured: 15k loopback GETs cold —
+    * 64 in-flight 1.8s, 256 in-flight 6.3s, 512 in-flight 12-18s with
+    * multi-second p99 tails). Low-latency endpoints want few in-flight;
+    * raise only for high-latency remote services.
+    */
+  private val lookupBase = Map(
+    "lookup-method" -> "GET",
+    "http.source.lookup.request.thread-pool.size" -> "2",
+    "http.source.lookup.dedup-keys" -> "true",
+    "http.source.lookup.success-codes" -> "2XX",
+    "http.source.lookup.ignored-response-codes" -> "404")
+
+  /** [[lookupBase]] plus a partial cache that holds every customer. */
+  private val cachedLookup = lookupBase ++ Map(
+    "lookup.cache" -> "PARTIAL",
+    "lookup.partial-cache.max-rows" -> "200000")
+
+  /** The DSv2 lookup tables' options. */
+  private def tableLookup(url: String): Map[String, String] =
+    cachedLookup ++ Map("url" -> url, "asyncPolling" -> "true")
+
+  /** `opts` as quoted SQL option pairs, key and value joined by `sep`:
+    * `", "` for the TVF's arguments, `" "` for a table's OPTIONS clause.
+    */
+  private def sqlOptions(opts: Map[String, String], sep: String): String =
+    opts.toSeq.sorted.map { case (k, v) => s"'$k'$sep'$v'" }.mkString(",\n  ")
+
   // Dedicated session carrying GraftExtensions (the driver's Verify/Bench
   // session is extension-free), built once per JVM on the shared
   // SparkContext.
@@ -448,22 +375,9 @@ object HttpQueries {
         probe,
         keyCols = Seq("c_custkey"),
         responseSchema = customerResponseSchema,
-        options = Map(
+        options = cachedLookup ++ Map(
           "url" -> customerServiceUrl(s, dir),
-          "lookup-method" -> "GET",
-          "asyncPolling" -> "true",
-          // total in-flight = partitions × threads; the JDK HTTP/1.1 client
-          // degrades SUPER-linearly past ~100 concurrent connections
-          // (measured: 15k loopback GETs cold — 64 in-flight 1.8s,
-          // 256 in-flight 6.3s, 512 in-flight 12-18s with multi-second
-          // p99 tails). Low-latency endpoints want few in-flight; raise
-          // only for high-latency remote services.
-          "http.source.lookup.request.thread-pool.size" -> "2",
-          "http.source.lookup.dedup-keys" -> "true",
-          "lookup.cache" -> "PARTIAL",
-          "lookup.partial-cache.max-rows" -> "200000",
-          "http.source.lookup.success-codes" -> "2XX",
-          "http.source.lookup.ignored-response-codes" -> "404"))
+          "asyncPolling" -> "true"))
         .select(
           col("o_orderkey"),
           col("c_custkey"),
@@ -487,14 +401,9 @@ object HttpQueries {
         .parquet(s"$dir/orders.parquet")
         .filter(col("o_orderkey") % 31 === 0)
         .select(col("o_orderkey"), col("o_custkey").as("c_custkey"))
-      def opts(url: String) = Map(
+      def opts(url: String) = lookupBase ++ Map(
         "url" -> url,
-        "lookup-method" -> "GET",
-        "json.fail-on-missing-field" -> "true",
-        "http.source.lookup.request.thread-pool.size" -> "2",
-        "http.source.lookup.dedup-keys" -> "true",
-        "http.source.lookup.success-codes" -> "2XX",
-        "http.source.lookup.ignored-response-codes" -> "404")
+        "json.fail-on-missing-field" -> "true")
       val failed =
         try {
           // noop write: count() would prune the projection and the
@@ -548,16 +457,10 @@ object HttpQueries {
           probe,
           keyCols = Seq("c_custkey"),
           responseSchema = customerResponseSchema,
-          options = Map(
+          options = cachedLookup ++ Map(
             "url" -> lookupStub(s, dir).url("/customer-post"),
             "lookup-method" -> "POST",
-            "http.request.body-template" -> """{"c_custkey": {{c_custkey}}}""",
-            "http.source.lookup.request.thread-pool.size" -> "2",
-            "http.source.lookup.dedup-keys" -> "true",
-            "lookup.cache" -> "PARTIAL",
-            "lookup.partial-cache.max-rows" -> "200000",
-            "http.source.lookup.success-codes" -> "2XX",
-            "http.source.lookup.ignored-response-codes" -> "404"))
+            "http.request.body-template" -> """{"c_custkey": {{c_custkey}}}"""))
         .select(
           col("o_orderkey"),
           col("c_custkey"),
@@ -576,16 +479,9 @@ object HttpQueries {
           probe,
           keyCols = Seq("c_custkey"),
           responseSchema = customerResponseSchema,
-          options = Map(
+          options = cachedLookup ++ Map(
             "url" -> lookupStub(s, dir).url("/customer-es"),
-            "lookup-method" -> "GET",
-            "lookup-query-creator" -> "elasticsearch-lite",
-            "http.source.lookup.request.thread-pool.size" -> "2",
-            "http.source.lookup.dedup-keys" -> "true",
-            "lookup.cache" -> "PARTIAL",
-            "lookup.partial-cache.max-rows" -> "200000",
-            "http.source.lookup.success-codes" -> "2XX",
-            "http.source.lookup.ignored-response-codes" -> "404"))
+            "lookup-query-creator" -> "elasticsearch-lite"))
         .select(
           col("o_orderkey"),
           col("c_custkey"),
@@ -604,16 +500,9 @@ object HttpQueries {
           probe,
           keyCols = Seq("c_custkey"),
           responseSchema = customerResponseSchema,
-          options = Map(
+          options = cachedLookup ++ Map(
             "url" -> lookupStub(s, dir).url("/customer-renamed"),
-            "lookup-method" -> "GET",
-            "http.request.query-param-fields-with-key" -> "c_custkey:cust",
-            "http.source.lookup.request.thread-pool.size" -> "2",
-            "http.source.lookup.dedup-keys" -> "true",
-            "lookup.cache" -> "PARTIAL",
-            "lookup.partial-cache.max-rows" -> "200000",
-            "http.source.lookup.success-codes" -> "2XX",
-            "http.source.lookup.ignored-response-codes" -> "404"))
+            "http.request.query-param-fields-with-key" -> "c_custkey:cust"))
         .select(col("o_orderkey"), col("c_custkey"), col("c_name"))
     },
     "h_auth_lookup" -> { (s, dir) =>
@@ -626,17 +515,10 @@ object HttpQueries {
           probe,
           keyCols = Seq("c_custkey"),
           responseSchema = customerResponseSchema,
-          options = Map(
+          options = cachedLookup ++ Map(
             "url" -> lookupStub(s, dir).url("/customer-auth"),
-            "lookup-method" -> "GET",
             // raw user:pass — the Basic preprocessor base64s it
-            "http.source.lookup.header.Authorization" -> "svc:secret",
-            "http.source.lookup.request.thread-pool.size" -> "2",
-            "http.source.lookup.dedup-keys" -> "true",
-            "lookup.cache" -> "PARTIAL",
-            "lookup.partial-cache.max-rows" -> "200000",
-            "http.source.lookup.success-codes" -> "2XX",
-            "http.source.lookup.ignored-response-codes" -> "404"))
+            "http.source.lookup.header.Authorization" -> "svc:secret"))
         .select(col("o_orderkey"), col("c_custkey"), col("c_acctbal"))
     },
     "h_retry_lookup" -> { (s, dir) =>
@@ -649,21 +531,14 @@ object HttpQueries {
           probe,
           keyCols = Seq("c_custkey"),
           responseSchema = customerResponseSchema,
-          options = Map(
+          options = cachedLookup ++ Map(
             "url" -> lookupStub(s, dir).url("/customer-flaky"),
-            "lookup-method" -> "GET",
             "lookup.max-retries" -> "3",
             "http.source.lookup.retry-codes" -> "503",
             // 1ms delay: the gate exercises the retry PATH, not the wait
             // (default fixed-delay 1s x one-retry-per-key would serialize
             // ~900 seconds of sleep through a 2-thread pool)
-            "http.source.lookup.retry-strategy.fixed-delay.delay" -> "1ms",
-            "http.source.lookup.request.thread-pool.size" -> "2",
-            "http.source.lookup.dedup-keys" -> "true",
-            "lookup.cache" -> "PARTIAL",
-            "lookup.partial-cache.max-rows" -> "200000",
-            "http.source.lookup.success-codes" -> "2XX",
-            "http.source.lookup.ignored-response-codes" -> "404"))
+            "http.source.lookup.retry-strategy.fixed-delay.delay" -> "1ms"))
         .select(col("o_orderkey"), col("c_custkey"), col("c_nationkey"))
     },
 
@@ -683,21 +558,14 @@ object HttpQueries {
           probe,
           keyCols = Seq("c_custkey"),
           responseSchema = customerResponseSchema,
-          options = Map(
+          options = cachedLookup ++ Map(
             "url" -> lookupStub(s, dir).url("/customer-flaky2"),
-            "lookup-method" -> "GET",
             "lookup.max-retries" -> "3",
             "http.source.lookup.retry-codes" -> "503",
             "http.source.lookup.retry-strategy.type" -> "exponential-delay",
             "http.source.lookup.retry-strategy.exponential-delay.initial-backoff" -> "1ms",
             "http.source.lookup.retry-strategy.exponential-delay.max-backoff" -> "8ms",
-            "http.source.lookup.retry-strategy.exponential-delay.backoff-multiplier" -> "2.0",
-            "http.source.lookup.request.thread-pool.size" -> "2",
-            "http.source.lookup.dedup-keys" -> "true",
-            "lookup.cache" -> "PARTIAL",
-            "lookup.partial-cache.max-rows" -> "200000",
-            "http.source.lookup.success-codes" -> "2XX",
-            "http.source.lookup.ignored-response-codes" -> "404"))
+            "http.source.lookup.retry-strategy.exponential-delay.backoff-multiplier" -> "2.0"))
         .select(col("o_orderkey"), col("c_custkey"), col("c_acctbal"))
     },
 
@@ -713,18 +581,11 @@ object HttpQueries {
           probe,
           keyCols = Seq("c_custkey"),
           responseSchema = customerResponseSchema,
-          options = Map(
+          options = cachedLookup ++ Map(
             "url" -> stub.url("/customer-oidc"),
-            "lookup-method" -> "GET",
             "http.security.oidc.token.request" ->
               "grant_type=client_credentials&client_id=graft",
-            "http.security.oidc.token.endpoint.url" -> stub.url("/token"),
-            "http.source.lookup.request.thread-pool.size" -> "2",
-            "http.source.lookup.dedup-keys" -> "true",
-            "lookup.cache" -> "PARTIAL",
-            "lookup.partial-cache.max-rows" -> "200000",
-            "http.source.lookup.success-codes" -> "2XX",
-            "http.source.lookup.ignored-response-codes" -> "404"))
+            "http.security.oidc.token.endpoint.url" -> stub.url("/token")))
         .select(col("o_orderkey"), col("c_custkey"), col("c_name"))
     },
 
@@ -741,17 +602,10 @@ object HttpQueries {
           probe,
           keyCols = Seq("c_custkey"),
           responseSchema = customerResponseSchema,
-          options = Map(
+          options = cachedLookup ++ Map(
             "url" -> customerServiceUrl(s, dir),
-            "lookup-method" -> "GET",
             "http.source.lookup.proxy.host" -> proxy.host,
-            "http.source.lookup.proxy.port" -> proxy.port.toString,
-            "http.source.lookup.request.thread-pool.size" -> "2",
-            "http.source.lookup.dedup-keys" -> "true",
-            "lookup.cache" -> "PARTIAL",
-            "lookup.partial-cache.max-rows" -> "200000",
-            "http.source.lookup.success-codes" -> "2XX",
-            "http.source.lookup.ignored-response-codes" -> "404"))
+            "http.source.lookup.proxy.port" -> proxy.port.toString))
         .select(col("o_orderkey"), col("c_custkey"), col("c_mktsegment"))
       // a correct RESULT is not enough for this gate: a silently dropped
       // proxy config would connect straight to the stub and still match
@@ -784,17 +638,10 @@ object HttpQueries {
           probe,
           keyCols = Seq("c_custkey"),
           responseSchema = customerResponseSchema,
-          options = Map(
+          options = cachedLookup ++ Map(
             "url" -> s"$base/customer",
-            "lookup-method" -> "GET",
             "http.security.keystore.path" -> ksPath,
-            "http.security.keystore.password" -> "changeit",
-            "http.source.lookup.request.thread-pool.size" -> "2",
-            "http.source.lookup.dedup-keys" -> "true",
-            "lookup.cache" -> "PARTIAL",
-            "lookup.partial-cache.max-rows" -> "200000",
-            "http.source.lookup.success-codes" -> "2XX",
-            "http.source.lookup.ignored-response-codes" -> "404"))
+            "http.security.keystore.password" -> SelfSignedCert.Password))
         .select(
           col("o_orderkey"),
           col("c_custkey"),
@@ -814,18 +661,11 @@ object HttpQueries {
           probe,
           keyCols = Seq("c_custkey"),
           responseSchema = customerResponseSchema,
-          options = Map(
+          options = cachedLookup ++ Map(
             "url" -> s"$base/customer",
-            "lookup-method" -> "GET",
             // trust ONLY the stub's self-signed cert — not allowSelfSigned;
             // the handshake fails unless the PEM trust store is honored
-            "http.security.cert.server" -> certPem,
-            "http.source.lookup.request.thread-pool.size" -> "2",
-            "http.source.lookup.dedup-keys" -> "true",
-            "lookup.cache" -> "PARTIAL",
-            "lookup.partial-cache.max-rows" -> "200000",
-            "http.source.lookup.success-codes" -> "2XX",
-            "http.source.lookup.ignored-response-codes" -> "404"))
+            "http.security.cert.server" -> certPem))
         .select(
           col("o_orderkey"),
           col("c_custkey"),
@@ -846,15 +686,10 @@ object HttpQueries {
           probe,
           keyCols = Seq("c_custkey"),
           responseSchema = customerResponseSchema,
-          options = Map(
+          options = lookupBase ++ Map(
             "url" -> lookupStub(s, dir).url("/customer-headers"),
-            "lookup-method" -> "GET",
             "http.source.lookup.header.X-Api-Key" -> "graft-k1",
-            "http.source.lookup.header.X-Tenant" -> "acme",
-            "http.source.lookup.request.thread-pool.size" -> "2",
-            "http.source.lookup.dedup-keys" -> "true",
-            "http.source.lookup.success-codes" -> "2XX",
-            "http.source.lookup.ignored-response-codes" -> "404"))
+            "http.source.lookup.header.X-Tenant" -> "acme"))
         .select(
           col("o_orderkey"),
           col("c_custkey"),
@@ -880,13 +715,7 @@ object HttpQueries {
           probe,
           keyCols = Seq("c_custkey"),
           responseSchema = customerResponseSchema,
-          options = Map(
-            "url" -> customerServiceUrl(s, dir),
-            "lookup-method" -> "GET",
-            "http.source.lookup.request.thread-pool.size" -> "2",
-            "http.source.lookup.dedup-keys" -> "true",
-            "http.source.lookup.success-codes" -> "2XX",
-            "http.source.lookup.ignored-response-codes" -> "404"),
+          options = lookupBase + ("url" -> customerServiceUrl(s, dir)),
           includeMetadata = true)
         .select(
           col("o_orderkey"),
@@ -914,15 +743,11 @@ object HttpQueries {
           probe,
           keyCols = Seq("c_custkey"),
           responseSchema = customerResponseSchema,
-          options = Map(
+          options = lookupBase ++ Map(
             "url" -> lookupStub(s, dir).url("/customer-cached"),
-            "lookup-method" -> "GET",
-            "http.source.lookup.request.thread-pool.size" -> "2",
             "http.source.lookup.dedup-keys" -> "false",
             "lookup.cache" -> "PARTIAL",
-            "lookup.partial-cache.max-rows" -> "1000",
-            "http.source.lookup.success-codes" -> "2XX",
-            "http.source.lookup.ignored-response-codes" -> "404"))
+            "lookup.partial-cache.max-rows" -> "1000"))
         .select(col("o_orderkey"), col("c_custkey"), col("c_name"),
           col("c_mktsegment"))
       if (cacheAsserted.add(dir)) {
@@ -970,16 +795,12 @@ object HttpQueries {
           probe,
           keyCols = Seq("c_custkey"),
           responseSchema = customerResponseSchema,
-          options = Map(
+          options = lookupBase ++ Map(
             "url" -> lookupStub(s, dir).url("/customer-slow"),
-            "lookup-method" -> "GET",
             "http.source.lookup.request.timeout" -> "250",
             "lookup.max-retries" -> "0",
             "http.source.lookup.continue-on-error" -> "true",
-            "http.source.lookup.request.thread-pool.size" -> "4",
-            "http.source.lookup.dedup-keys" -> "true",
-            "http.source.lookup.success-codes" -> "2XX",
-            "http.source.lookup.ignored-response-codes" -> "404"),
+            "http.source.lookup.request.thread-pool.size" -> "4"),
           includeMetadata = true)
         .select(
           col("o_orderkey"),
@@ -1023,12 +844,10 @@ object HttpQueries {
               stream,
               keyCols = Seq("c_custkey"),
               responseSchema = customerResponseSchema,
-              options = Map(
+              // a streaming probe skips key dedup and the async window
+              options = lookupBase ++ Map(
                 "url" -> lookupStub(s, dir).url("/customer-state"),
-                "lookup-method" -> "GET",
-                "lookup.partial-cache.expire-after-write" -> "10 min",
-                "http.source.lookup.success-codes" -> "2XX",
-                "http.source.lookup.ignored-response-codes" -> "404"))
+                "lookup.partial-cache.expire-after-write" -> "10 min"))
             .select(
               col("o_orderkey"),
               col("c_custkey"),
@@ -1136,13 +955,7 @@ object HttpQueries {
            |  'orders_probe_tvf',
            |  'c_custkey',
            |  'c_name STRING, c_nationkey INT, c_acctbal DOUBLE, c_mktsegment STRING',
-           |  'url', '$url',
-           |  'http.source.lookup.request.thread-pool.size', '2',
-           |  'http.source.lookup.dedup-keys', 'true',
-           |  'lookup.cache', 'PARTIAL',
-           |  'lookup.partial-cache.max-rows', '200000',
-           |  'http.source.lookup.success-codes', '2XX',
-           |  'http.source.lookup.ignored-response-codes', '404')""".stripMargin)
+           |  ${sqlOptions(cachedLookup + ("url" -> url), ", ")})""".stripMargin)
     },
 
     // ----- DSv2 lookup TABLE: pure-SQL DDL + JOIN via HttpLookupJoinRule ---
@@ -1156,14 +969,7 @@ object HttpQueries {
            |  c_acctbal DOUBLE, c_mktsegment STRING)
            |USING `graft-http-lookup`
            |OPTIONS (
-           |  url '$url',
-           |  asyncPolling 'true',
-           |  `http.source.lookup.request.thread-pool.size` '2',
-           |  `http.source.lookup.dedup-keys` 'true',
-           |  `lookup.cache` 'PARTIAL',
-           |  `lookup.partial-cache.max-rows` '200000',
-           |  `http.source.lookup.success-codes` '2XX',
-           |  `http.source.lookup.ignored-response-codes` '404')""".stripMargin)
+           |  ${sqlOptions(tableLookup(url), " ")})""".stripMargin)
       x.read.parquet(s"$dir/orders.parquet")
         .createOrReplaceTempView("orders_probe")
       // WHERE on a lookup column rides through the join rewrite
@@ -1188,14 +994,7 @@ object HttpQueries {
            |  c_acctbal DOUBLE, c_mktsegment STRING)
            |USING `graft-http-lookup`
            |OPTIONS (
-           |  url '$url',
-           |  asyncPolling 'true',
-           |  `http.source.lookup.request.thread-pool.size` '2',
-           |  `http.source.lookup.dedup-keys` 'true',
-           |  `lookup.cache` 'PARTIAL',
-           |  `lookup.partial-cache.max-rows` '200000',
-           |  `http.source.lookup.success-codes` '2XX',
-           |  `http.source.lookup.ignored-response-codes` '404')""".stripMargin)
+           |  ${sqlOptions(tableLookup(url), " ")})""".stripMargin)
       x.read.parquet(s"$dir/orders.parquet")
         .withColumn(
           "probe_key",
@@ -1407,15 +1206,7 @@ object HttpQueries {
           probe,
           keyCols = Seq("c_custkey"),
           responseSchema = customerResponseSchema,
-          options = Map(
-            "url" -> customerServiceUrl(s, dir),
-            "lookup-method" -> "GET",
-            "http.source.lookup.request.thread-pool.size" -> "2",
-            "http.source.lookup.dedup-keys" -> "true",
-            "lookup.cache" -> "PARTIAL",
-            "lookup.partial-cache.max-rows" -> "200000",
-            "http.source.lookup.success-codes" -> "2XX",
-            "http.source.lookup.ignored-response-codes" -> "404"))
+          options = cachedLookup + ("url" -> customerServiceUrl(s, dir)))
         .select(
           col("event_id"),
           col("c_custkey"),
@@ -1448,16 +1239,12 @@ object HttpQueries {
           probe,
           keyCols = Seq("c_custkey"),
           responseSchema = customerResponseSchema,
-          options = Map(
+          options = lookupBase ++ Map(
             "url" -> lookupStub(s, dir).url("/customer-async"),
-            "lookup-method" -> "GET",
             "asyncPolling" -> "true",
-            "http.source.lookup.request.thread-pool.size" -> "2",
             // cache and key-dedup OFF: every probe row must hit the wire,
             // so the concurrency window is sustained and measurable
-            "http.source.lookup.dedup-keys" -> "false",
-            "http.source.lookup.success-codes" -> "2XX",
-            "http.source.lookup.ignored-response-codes" -> "404"))
+            "http.source.lookup.dedup-keys" -> "false"))
         .select(
           col("o_orderkey"),
           col("c_custkey"),

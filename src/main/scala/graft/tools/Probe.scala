@@ -54,8 +54,7 @@ object Probe {
       case _ => sys.error(usage)
     }
     spark.stop()
-    // the JDK HttpServer behind the stub-backed queries keeps a non-daemon
-    // HTTP-Dispatcher thread alive; exit explicitly
+    // exit explicitly: a lingering non-daemon thread must not hang the run
     sys.exit(0)
   }
 

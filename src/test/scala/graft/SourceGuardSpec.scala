@@ -7,10 +7,11 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
-/** Keeps the session configuration, the run-metrics listener and the
-  * hashed shingle set in one place each: every session comes from
-  * [[GraftSession]], every listener in the main sources is [[RunStats]],
-  * and every hashed shingle set is `Dedup.hashedShingleSet`.
+/** Keeps the session configuration, the run-metrics listener, the
+  * hashed shingle set and the HTTP server in one place each: every session
+  * comes from [[GraftSession]], every listener in the main sources is
+  * [[RunStats]], every hashed shingle set is `Dedup.hashedShingleSet`, and
+  * every HTTP fixture runs on `testkit.StubServer`.
   */
 class SourceGuardSpec extends AnyFunSuite with Matchers {
 
@@ -22,6 +23,9 @@ class SourceGuardSpec extends AnyFunSuite with Matchers {
     * result (no comma before the call, so it is transform's first argument).
     */
   private val hashedShingles = """transform\([^,]*?[sS]hingleSet\(""".r
+
+  private val jdkHttpServer = """com\.sun\.net\.httpserver""".r
+  private val listeningSocket = """new\s+ServerSocket\s*\(|SSLServerSocket""".r
 
   /** (file name, match count) of the Scala files under `root` (this spec
     * excluded) that `pattern` matches.
@@ -52,5 +56,13 @@ class SourceGuardSpec extends AnyFunSuite with Matchers {
     // Dedup.hashedShingleSet is the near-dup family's (and Decontaminate's)
     // one definition; the DuckDB oracles mirror it in hashedShinglesSql
     matchCounts("src/main/scala", hashedShingles) shouldBe Seq("Dedup.scala" -> 1)
+  }
+
+  test("StubServer is the only HTTP server") {
+    matching("src/main/scala", jdkHttpServer) shouldBe empty
+    matching("src/test/scala", jdkHttpServer) shouldBe empty
+    matching("src/main/scala", listeningSocket) shouldBe Seq("StubServer.scala")
+    // OptionPinSpec's saturated-backlog listener never answers: not a server
+    matching("src/test/scala", listeningSocket) shouldBe Seq("OptionPinSpec.scala")
   }
 }

@@ -43,21 +43,25 @@ class HttpCodesSpec extends AnyFunSuite with Matchers {
     HttpCodes.parse("200,,201,") shouldBe Set(200, 201)
   }
 
+  private def lookupPolicy(success: String, retry: String) =
+    StatusPolicy.lookup(HttpOptions(
+      HttpOptions.SuccessCodes -> success, HttpOptions.RetryCodes -> retry))
+
   test("response checker rejects empty success set and overlap") {
-    an[HttpConfigException] should be thrownBy ResponseChecker("", "500")
-    an[HttpConfigException] should be thrownBy ResponseChecker("2XX,500", "500")
-    val ok = ResponseChecker("2XX", "500,503,504")
-    ok.isSuccessful(204) shouldBe true
-    ok.isRetryable(503) shouldBe true
-    ok.isRetryable(501) shouldBe false
+    an[HttpConfigException] should be thrownBy lookupPolicy("", "500")
+    an[HttpConfigException] should be thrownBy lookupPolicy("2XX,500", "500")
+    val ok = lookupPolicy("2XX", "500,503,504")
+    ok.success(204) shouldBe true
+    ok.retryable(503) shouldBe true
+    ok.retryable(501) shouldBe false
   }
 
   test("sink classifier: default 4XX/5XX minus excludes") {
-    val c = SinkErrorClassifier(SinkErrorClassifier.DefaultErrorExpr, "404,503")
-    c.isError(400) shouldBe true
-    c.isError(404) shouldBe false
-    c.isError(503) shouldBe false
-    c.isError(500) shouldBe true
-    c.isError(302) shouldBe false
+    val c = StatusPolicy.sink(HttpOptions(HttpOptions.SinkErrorCodesExclude -> "404,503"))
+    c.success(400) shouldBe false
+    c.success(404) shouldBe true
+    c.success(503) shouldBe true
+    c.success(500) shouldBe false
+    c.success(302) shouldBe true
   }
 }

@@ -1,15 +1,12 @@
 package graft.http
 
-import java.net.InetSocketAddress
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path}
-import java.security.KeyStore
-import javax.net.ssl.{KeyManagerFactory, SSLContext}
 
-import com.sun.net.httpserver.{HttpsConfigurator, HttpsServer, HttpExchange => ServerExchange}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
+
+import graft.http.testkit.{SelfSignedCert, StubServer}
 
 /** End-to-end TLS: a real HTTPS server with a keytool-generated self-signed
   * certificate, exercised through the connector's client factory — both the
@@ -19,50 +16,19 @@ import org.scalatest.matchers.should.Matchers
 class SslSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
 
   private var dir: Path = _
-  private var server: HttpsServer = _
+  private var server: StubServer = _
   private var port: Int = 0
   private var certPem: Path = _
+  private var cert: SelfSignedCert = _
 
   override def beforeAll(): Unit = {
     dir = Files.createTempDirectory("graft-ssl")
-    val ksPath = dir.resolve("server.p12")
-    val keytool = new ProcessBuilder(
-      "keytool", "-genkeypair", "-alias", "server", "-keyalg", "RSA",
-      "-keysize", "2048", "-validity", "30",
-      "-dname", "CN=127.0.0.1", "-ext", "SAN=IP:127.0.0.1",
-      "-keystore", ksPath.toString, "-storetype", "PKCS12",
-      "-storepass", "changeit", "-keypass", "changeit")
-      .redirectErrorStream(true).start()
-    keytool.waitFor() shouldBe 0
-    // export the cert as PEM for the trust-store path test
-    certPem = dir.resolve("server.pem")
-    new ProcessBuilder(
-      "keytool", "-exportcert", "-alias", "server", "-rfc",
-      "-keystore", ksPath.toString, "-storepass", "changeit",
-      "-file", certPem.toString)
-      .redirectErrorStream(true).start().waitFor() shouldBe 0
-
-    val ks = KeyStore.getInstance("PKCS12")
-    val in = Files.newInputStream(ksPath)
-    try ks.load(in, "changeit".toCharArray)
-    finally in.close()
-    val kmf = KeyManagerFactory.getInstance(KeyManagerFactory.getDefaultAlgorithm)
-    kmf.init(ks, "changeit".toCharArray)
-    val ctx = SSLContext.getInstance("TLS")
-    ctx.init(kmf.getKeyManagers, null, null)
-
-    server = HttpsServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
-    server.setHttpsConfigurator(new HttpsConfigurator(ctx))
-    server.createContext(
-      "/secure",
-      (ex: ServerExchange) => {
-        val body = """{"ok": true}""".getBytes(StandardCharsets.UTF_8)
-        ex.sendResponseHeaders(200, body.length)
-        ex.getResponseBody.write(body)
-        ex.close()
-      })
-    server.start()
-    port = server.getAddress.getPort
+    cert = SelfSignedCert.create(dir)
+    certPem = cert.pem
+    server = new StubServer(tls = Some(cert.serverContext()))
+      .route("/secure")(_ => (200, """{"ok": true}"""))
+      .start()
+    port = server.port
   }
 
   // ----- mTLS fixture (r12): a second HTTPS server that REQUIRES a client
@@ -70,7 +36,7 @@ class SslSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
   // complete the handshake, and omitting it must fail. Client material is
   // an openssl self-signed pair (PKCS8 key via -nodes), trusted by the
   // server's context. -----
-  private var mtlsServer: HttpsServer = _
+  private var mtlsServer: StubServer = _
   private var mtlsPort = 0
   private var clientCertPem: Path = _
   private var clientKeyPem: Path = _
@@ -83,48 +49,17 @@ class SslSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
       "-keyout", clientKeyPem.toString, "-out", clientCertPem.toString,
       "-nodes", "-subj", "/CN=graft-client", "-days", "30")
       .redirectErrorStream(true).start().waitFor() shouldBe 0
-
-    val ks = KeyStore.getInstance("PKCS12")
-    val in = Files.newInputStream(dir.resolve("server.p12"))
-    try ks.load(in, "changeit".toCharArray)
-    finally in.close()
-    val kmf = KeyManagerFactory.getInstance(KeyManagerFactory.getDefaultAlgorithm)
-    kmf.init(ks, "changeit".toCharArray)
-    val trust = KeyStore.getInstance(KeyStore.getDefaultType)
-    trust.load(null, null)
-    Ssl.loadCertificates(clientCertPem.toString).zipWithIndex.foreach {
-      case (c, i) => trust.setCertificateEntry(s"client-$i", c)
-    }
-    val tmf = javax.net.ssl.TrustManagerFactory
-      .getInstance(javax.net.ssl.TrustManagerFactory.getDefaultAlgorithm)
-    tmf.init(trust)
-    val ctx = SSLContext.getInstance("TLS")
-    ctx.init(kmf.getKeyManagers, tmf.getTrustManagers, null)
-
-    mtlsServer = HttpsServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
-    mtlsServer.setHttpsConfigurator(new HttpsConfigurator(ctx) {
-      override def configure(
-          params: com.sun.net.httpserver.HttpsParameters): Unit = {
-        val ssl = ctx.getDefaultSSLParameters
-        ssl.setNeedClientAuth(true)
-        params.setSSLParameters(ssl)
-      }
-    })
-    mtlsServer.createContext(
-      "/secure",
-      (ex: ServerExchange) => {
-        val body = """{"mtls": true}""".getBytes(StandardCharsets.UTF_8)
-        ex.sendResponseHeaders(200, body.length)
-        ex.getResponseBody.write(body)
-        ex.close()
-      })
-    mtlsServer.start()
-    mtlsPort = mtlsServer.getAddress.getPort
+    mtlsServer = new StubServer(
+      tls = Some(cert.serverContext(trustClientPem = Some(clientCertPem))),
+      needClientAuth = true)
+      .route("/secure")(_ => (200, """{"mtls": true}"""))
+      .start()
+    mtlsPort = mtlsServer.port
   }
 
   override def afterAll(): Unit = {
-    if (server != null) server.stop(0)
-    if (mtlsServer != null) mtlsServer.stop(0)
+    if (server != null) server.stop()
+    if (mtlsServer != null) mtlsServer.stop()
   }
 
   private def lookupClient(options: Map[String, String]): graft.http.HttpExchange = {
