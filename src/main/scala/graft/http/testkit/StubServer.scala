@@ -42,6 +42,7 @@ final class StubServer(
       body: String,
       headers: Map[String, List[String]])
 
+  // longest prefix first; of equal length, first registered first
   private val routes =
     new java.util.concurrent.CopyOnWriteArrayList[(String, Recorded => Reply)]()
   private val recorded = new ConcurrentLinkedQueue[Recorded]()
@@ -99,10 +100,12 @@ final class StubServer(
     }
 
   /** [[route]] whose handler also sets response headers. */
-  def respond(path: String)(handler: Recorded => Reply): this.type = {
-    routes.add(path -> handler)
-    this
-  }
+  def respond(path: String)(handler: Recorded => Reply): this.type =
+    routes.synchronized {
+      val at = routes.asScala.indexWhere(_._1.length < path.length)
+      routes.add(if (at < 0) routes.size else at, path -> handler)
+      this
+    }
 
   /** Route that fails with `failStatus` for the first `failures` calls (per
     * route), then delegates — for retry specs.
@@ -222,11 +225,7 @@ final class StubServer(
     else k.substring(0, 1).toUpperCase + k.substring(1).toLowerCase
 
   private def handlerFor(path: String): Option[Recorded => Reply] =
-    routes.asScala
-      .filter { case (p, _) => path.startsWith(p) }
-      .sortBy { case (p, _) => -p.length }
-      .headOption
-      .map(_._2)
+    routes.asScala.find { case (p, _) => path.startsWith(p) }.map(_._2)
 
   private def writeResponse(
       out: BufferedOutputStream,

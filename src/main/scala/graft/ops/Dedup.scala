@@ -392,11 +392,8 @@ object Dedup {
       threshold: Double = 0.5): DataFrame = {
     // Persisted: without it Catalyst inlines the whole pipeline into the
     // self-join output and recomputes it per PAIR (observed 17s -> ~2s at
-    // sf0.1). The empty-set filter reads the cache: below it, Catalyst
-    // would push the filter (and a second shingle+hash pass) under the fan.
-    val withSh =
-      Par.cached(shingleFrame(Par.fan(df), idCol, textCol, n, blockCols))
-        .filter(size(col("sh")) > 0)
+    // sf0.1).
+    val withSh = nonEmpty(shingleFrame(Par.fan(df), idCol, textCol, n, blockCols))
     def side(s: String) = withSh.select(
       col("id").as("id" + s) +: col("sh").as("sh" + s) +: blockCols.map(col): _*)
     val joined =
@@ -438,9 +435,16 @@ object Dedup {
     df.select((col(idCol).as("id") +: keep.map(col)) :+
       hashedShingleSet(col(textCol), n, chars).as("sh"): _*)
 
-  /** One corpus's hashed shingle sets (`(id, sh)`, cached — the signature
-    * pass and the verification join both read them) and its banded
-    * signature keys (`(id, band, band_key)`, see [[bandedOf]]).
+  /** `sh` cached, then its empty shingle sets dropped. The filter reads the
+    * cache: below it, Catalyst would push the filter (and a second
+    * shingle+hash pass) under the fan.
+    */
+  private def nonEmpty(sh: DataFrame): DataFrame =
+    Par.cached(sh).filter(size(col("sh")) > 0)
+
+  /** One corpus's non-empty hashed shingle sets (`(id, sh)`, cached — the
+    * signature pass and the verification join both read them) and its
+    * banded signature keys (`(id, band, band_key)`, see [[bandedOf]]).
     */
   private def shinglesAndBands(
       df: DataFrame,
@@ -449,7 +453,7 @@ object Dedup {
       n: Int,
       bands: Int,
       chars: Boolean = false): (DataFrame, DataFrame) = {
-    val sh = Par.cached(
+    val sh = nonEmpty(
       shingleFrame(Par.fan(df), idCol, textCol, n, chars = chars))
     (sh, bandedOf(sh, bands))
   }
@@ -463,29 +467,29 @@ object Dedup {
     * second cache. The ONLY shuffle that moves documents is the caller's
     * band-bucket join ([[bandCandidates]]).
     *
-    * Empty shingle sets (text shorter than n words, or null) are dropped
-    * BEFORE banding: they all share the sentinel signature [P,...,P], so
-    * banding them would put every such doc in one bucket in every band —
-    * O(m²) candidate pairs that the Jaccard verify can never pass (0/0
-    * intersect). On real corpora short docs are common; the filter keeps
-    * the band-bucket shuffle bounded. Output is unchanged.
+    * Empty shingle sets (text shorter than n words, or null) get a null
+    * band array, which explodes to no rows: they all share the sentinel
+    * signature [P,...,P], so banding them would put every such doc in one
+    * bucket in every band — O(m²) candidates the verify can never pass.
+    * Not a `Filter`: over an uncached `sh`, Catalyst pushes one below the
+    * shingle projection with a second copy of the shingle+hash expression.
     */
   private def bandedOf(sh: DataFrame, bands: Int): DataFrame = {
     val k = MinhashA.length
     require(k % bands == 0, "bands must divide k")
     val rows = k / bands
-    val sig = sh
-      .filter(size(col("sh")) > 0)
-      .select(col("id"), minhashSignature(col("sh")).as("sig"))
+    val sig = sh.select(
+      col("id"),
+      when(size(col("sh")) > 0, minhashSignature(col("sh"))).as("sig"))
     sig.select(
       col("id"),
       posexplode(
-        array((0 until bands).map { b =>
+        when(col("sig").isNotNull, array((0 until bands).map { b =>
           concat_ws(
             "-",
             (0 until rows).map(j =>
               element_at(col("sig"), b * rows + j + 1).cast(StringType)): _*)
-        }: _*)).as(Seq("band", "band_key")))
+        }: _*))).as(Seq("band", "band_key")))
   }
 
   /** Band-bucket candidate join of two [[bandedOf]] frames: distinct
@@ -695,7 +699,7 @@ object Dedup {
 
   /** Candidate generation + semi-narrowed exact-Jaccard verify over a
     * cached shingle frame and its banded keys (shared by the word- and
-    * char-shingle entry points and [[lshRecallReport]]).
+    * char-shingle entry points).
     */
   private def minhashPairsOf(
       sh: DataFrame,
@@ -825,15 +829,13 @@ object Dedup {
       n: Int = 3,
       threshold: Double = 0.5,
       hotK: Int = 1024): DataFrame = {
-    val sh = Par.cached(
-      shingleFrame(Par.fan(df), idCol, textCol, n).filter(size(col("sh")) > 0))
-    prefixJaccardPairsOf(sh, threshold, hotK)
+    prefixJaccardPairsOf(nonEmpty(shingleFrame(Par.fan(df), idCol, textCol, n)),
+      threshold, hotK)
   }
 
   /** Core of [[prefixJaccardPairs]] over a prebuilt (cached) hashed-
     * shingle frame `(id, sh)` with empty shingle sets already dropped —
-    * shared with [[lshRecallReport]], which feeds the SAME cached frame
-    * to both its truth and LSH sides (r16).
+    * shared with [[lshRecallReport]], whose banding reads the same frame.
     */
   private def prefixJaccardPairsOf(
       sh: DataFrame,
@@ -867,21 +869,21 @@ object Dedup {
     * pair rows are collapsed before counting so malformed inputs cannot
     * inflate the hit count past the truth count.
     *
-    * Scale posture: two pair-sized `distinct`s, one pair-keyed join, and
-    * 1-row aggregates combined with a broadcast cross — the audit costs a
-    * constant number of passes over relations the caller already built.
+    * Scale posture: one pair-keyed aggregate over the union of both
+    * relations tags each pair with the sides it appears on (and collapses
+    * duplicate rows), then one 1-row aggregate counts the tags — no join,
+    * one pass over relations the caller already built.
     */
   def pairRecallReport(truth: DataFrame, found: DataFrame): DataFrame = {
-    val t = truth.select(col("id_a"), col("id_b")).distinct()
-    val f = Par.cached(found.select(col("id_a"), col("id_b")).distinct())
-    val hitAgg = t
-      .join(f.withColumn("__hit", lit(1L)), Seq("id_a", "id_b"), "left")
+    def tagged(df: DataFrame, t: Int) =
+      df.select(col("id_a"), col("id_b"), lit(t).as("t"), lit(1 - t).as("f"))
+    tagged(truth, 1).union(tagged(found, 0))
+      .groupBy(col("id_a"), col("id_b"))
+      .agg(max(col("t")).as("t"), max(col("f")).as("f"))
       .agg(
-        count(lit(1)).as("n_true"),
-        coalesce(sum(col("__hit")), lit(0L)).as("n_hit"))
-    val foundAgg = f.agg(count(lit(1)).as("n_found"))
-    hitAgg
-      .crossJoin(broadcast(foundAgg))
+        count(when(col("t") === 1, 1)).as("n_true"),
+        count(when(col("f") === 1, 1)).as("n_found"),
+        count(when(col("t") === 1 && col("f") === 1, 1)).as("n_hit"))
       .select(
         col("n_true"),
         col("n_found"),
@@ -896,11 +898,15 @@ object Dedup {
   /** Recall of the banded-MinHash near-dup pipeline ([[minhashLshPairs]])
     * against the LOSSLESS exact-Jaccard truth ([[prefixJaccardPairs]]) at
     * the same shingle size and threshold — the "is my band/row config good
-    * enough" audit a dedup run reports before trusting LSH at scale. LSH
-    * verifies candidates with exact Jaccard, so its pairs are a subset of
-    * the truth; what the audit measures is how many true pairs never
-    * collided in any band (the classic S-curve miss probability —
-    * `1 − (1 − j^rows)^bands` at jaccard j).
+    * enough" audit a dedup run reports before trusting LSH at scale. What
+    * it measures is how many true pairs never collided in any band (the
+    * classic S-curve miss probability — `1 − (1 − j^rows)^bands` at
+    * jaccard j).
+    *
+    * LSH verifies its band candidates with the truth side's exact Jaccard
+    * (same threshold, same shingle sets), and the prefix filter is
+    * lossless, so the LSH pairs are exactly the band candidates that are
+    * true pairs: `n_found = n_hit`, with no second verify join.
     */
   def lshRecallReport(
       df: DataFrame,
@@ -909,16 +915,11 @@ object Dedup {
       n: Int = 3,
       bands: Int = 4,
       threshold: Double = 0.5): DataFrame = {
-    // r16 (guide §1.2 "don't compute things twice"): truth and LSH sides
-    // consume the IDENTICAL hashed-shingle frame (same n, same hash61 of
-    // the same shingle set) — build and cache it ONCE and feed both
-    // pipelines, instead of letting each re-shingle the corpus and hold
-    // its own cache. Values are unchanged: both sides read the same
-    // expressions they built internally before.
     val (sh, banded) = shinglesAndBands(df, idCol, textCol, n, bands)
     pairRecallReport(
-      prefixJaccardPairsOf(sh.filter(size(col("sh")) > 0), threshold, 1024),
-      minhashPairsOf(sh, banded, threshold))
+      prefixJaccardPairsOf(sh, threshold, 1024),
+      bandCandidates(banded, banded, selfJoin = true))
+      .withColumn("n_found", col("n_hit"))
   }
 
   /** Exact n-gram CONTAINMENT similarity join — the directional companion
@@ -956,8 +957,7 @@ object Dedup {
     require(
       thresholdPpm > 0 && thresholdPpm <= 1000000L,
       "thresholdPpm must be in (0, 1e6]")
-    val sh = Par.cached(
-      shingleFrame(Par.fan(df), idCol, textCol, n).filter(size(col("sh")) > 0))
+    val sh = nonEmpty(shingleFrame(Par.fan(df), idCol, textCol, n))
     val ordered = Par.cached(rarestFirst(sh, hotK))
 
     // α = ⌈len · t_ppm / 10⁶⌉ as exact integers
@@ -986,12 +986,7 @@ object Dedup {
         size(col("sh_a")).cast(LongType).as("len_a"))
       .filter(col("inter") >= alpha(col("len_a")))
       .withColumn(
-        "containment_ppm",
-        org.apache.spark.sql.graft.ColumnShim.column(
-          org.apache.spark.sql.catalyst.expressions.IntegralDivide(
-            org.apache.spark.sql.graft.ColumnShim.expression(
-              col("inter") * 1000000L),
-            org.apache.spark.sql.graft.ColumnShim.expression(col("len_a")))))
+        "containment_ppm", Sampling.divFloor(col("inter") * 1000000L, col("len_a")))
   }
 
   /** Connected components over a near-dup pair graph: every document in a

@@ -1,7 +1,7 @@
 package graft.tools
 
-/** Counts plan-shape features (exchanges, join strategies) — the numbers
-  * PlanGuardSpec pins and `Probe shape` prints.
+/** Counts plan-shape features (exchanges, join strategies, `graft_hash61`
+  * call sites) — the numbers PlanGuardSpec pins and `Probe shape` prints.
   */
 object PlanShapeProbe {
   /** Counts from the plan TREE: the current AQE physical plan, each
@@ -52,6 +52,9 @@ object PlanShapeProbe {
       "sort_global" -> nodes.count {
         case s: SortExec => s.global
         case _ => false
-      })
+      },
+      "hash61" -> nodes.flatMap(_.expressions).map(_.collect {
+        case h: org.apache.spark.sql.graft.Hash61F => h
+      }.size).sum)
   }
 }

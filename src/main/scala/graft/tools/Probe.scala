@@ -146,7 +146,7 @@ object Probe {
         println(
           s"SHAPE $name exchanges=${s("exchange")} bnlj=${s("bnlj")} " +
             s"cartesian=${s("cartesian")} smj=${s("smj")} bhj=${s("bhj")} " +
-            s"globalSort=${s("sort_global")}")
+            s"globalSort=${s("sort_global")} hash61=${s("hash61")}")
       } catch {
         case e: Throwable => println(s"SHAPE $name ERROR ${e.getMessage}")
       }

@@ -183,7 +183,10 @@ class PlanGuardSpec extends AnyFunSuite with Matchers {
     // exchange carries (fp, metrics) tuples, then the lang regroup +
     // the countDistinct second phase
     ("p_crawl_e2e", 3, 0),
-    ("m_webm_meta", 0, 0))
+    ("m_webm_meta", 0, 0),
+    // truth and band candidates meet in one per-pair tag aggregate: no
+    // broadcast cross of 1-row aggregates, no second verify join
+    ("p_lsh_recall", 10, 0))
 
   test("headline [B] gates keep their audited plan shapes") {
     assume(

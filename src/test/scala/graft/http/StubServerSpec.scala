@@ -34,6 +34,24 @@ class StubServerSpec extends AnyFunSuite with Matchers {
     } finally { socket.close(); server.stop() }
   }
 
+  test("the longest matching prefix wins; of equal prefixes, the first registered") {
+    val server = StubServer.serveOnly()
+      .route("/")(_ => (200, "root"))
+      .route("/a")(_ => (200, "a"))
+      .route("/a/b")(_ => (200, "a/b"))
+      .route("/a/b")(_ => (200, "a/b again"))
+      .route("/a/c")(_ => (200, "a/c"))
+      .start()
+    val client = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
+    def body(path: String) = client.send(
+      HttpRequest.newBuilder(URI.create(server.url(path))).GET().build(),
+      HttpResponse.BodyHandlers.ofString()).body()
+    try {
+      Seq("/x", "/a", "/ab", "/a/b/c", "/a/c", "/a/d").map(body) shouldBe
+        Seq("root", "a", "a", "a/b", "a/c", "a")
+    } finally server.stop()
+  }
+
   test("stop() closes kept-alive connections and ends their worker threads") {
     @volatile var worker: Thread = null
     val server = StubServer().route("/t") { _ =>

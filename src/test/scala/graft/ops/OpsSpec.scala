@@ -381,6 +381,43 @@ class DedupSpec extends SparkSpec {
     r.getAs[Long]("recall_ppm") shouldBe 1000000L
   }
 
+  test("lshRecallReport: n_found is the verified LSH pair count, n_hit its true subset") {
+    // 8 bands x 2 rows collide generously; at 0.8 the near pairs 1-2 and
+    // 2-4 (jaccard 7/9) fail the exact verify, so the report's n_found
+    // cannot just be the candidate count
+    val (n, bands, t) = (3, 8, 0.8)
+    def pairs(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
+    val lsh = pairs(Dedup.minhashLshPairs(df, "doc_id", "text", n, bands, t))
+    val truth = pairs(Dedup.prefixJaccardPairs(df, "doc_id", "text", n, t))
+    val candidates =
+      Dedup.minhashEstimateReport(df, "doc_id", "text", n, bands).count()
+    lsh should not be empty
+    candidates should be > lsh.size.toLong
+    val r = Dedup.lshRecallReport(df, "doc_id", "text", n, bands, t).collect().head
+    r.getAs[Long]("n_found") shouldBe lsh.size.toLong
+    r.getAs[Long]("n_hit") shouldBe (lsh & truth).size.toLong
+    r.getAs[Long]("n_true") shouldBe truth.size.toLong
+    Par.releaseCaches()
+  }
+
+  test("each shingle set is hashed once: one graft_hash61 site per plan") {
+    def sites(d: org.apache.spark.sql.DataFrame) =
+      graft.tools.PlanShapeProbe.shapeOf(d.queryExecution.executedPlan)("hash61")
+    // off a range, not a local relation: the optimizer evaluates filters
+    // and projections over one at plan time, leaving no site to count
+    Par.releaseCaches()
+    val d = spark.range(1, docs.size + 1, 1, 1).select(
+      col("id").as("doc_id"),
+      element_at(typedLit(docs.map(_._2)), col("id").cast("int")).as("text"))
+    Seq(
+      sites(Dedup.prefixJaccardPairs(d, "doc_id", "text")),
+      sites(Dedup.containmentPairs(d, "doc_id", "text")),
+      sites(Dedup.lshRecallReport(d, "doc_id", "text")),
+      sites(Dedup.lshBandKeys(d, "doc_id", "text"))) shouldBe Seq(1, 1, 1, 1)
+    Par.releaseCaches()
+  }
+
   test("prefix-filter jaccard join is LOSSLESS vs the naive all-pairs join") {
     // naive truth: every unblocked pair with jaccard >= t, computed directly
     // from the hashed shingle sets (the oracle the prefix filter must match)
