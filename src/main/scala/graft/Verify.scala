@@ -6,8 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional third arg (local dev only): comma-separated query-name filter
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(',').toSet) else None
+    val (only, unknown) = select(SparkEntry.queries.keySet, args.lift(2))
     // SPARK_GRAFT_STATE_PROVIDER=rocksdb: replay the stateful streaming
     // gates on the RocksDB state store (the 100-TB-state provider) — the
     // driver-artifact proof that gate results are provider-independent
@@ -19,7 +18,7 @@ object Verify {
     val spark = GraftSession.local(GraftSession.cpus, stateStore: _*)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => only(name) }
       .foreach { case (name, fn) =>
       val t0 = System.nanoTime()
       try {
@@ -51,8 +50,22 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // a requested name that is no gate fails the run, so a mistyped name
+    // cannot pass a scripted check
+    unknown.foreach(name => println(s"[verify] $name UNKNOWN"))
     spark.stop()
     // exit explicitly: a lingering non-daemon thread must not hang the run
-    sys.exit(0)
+    sys.exit(if (unknown.isEmpty) 0 else 1)
   }
+
+  /** The gates a run covers (every gate without a filter) and the names
+    * in the comma-separated `filter` that are not gates, in request order.
+    */
+  def select(gates: Set[String], filter: Option[String]): (String => Boolean, Seq[String]) =
+    filter match {
+      case None => (_ => true, Nil)
+      case Some(list) =>
+        val names = list.split(',').toSeq.distinct
+        (names.toSet, names.filterNot(gates))
+    }
 }

@@ -3,6 +3,7 @@ package graft.http
 import java.io.IOException
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.nio.charset.StandardCharsets
 import java.time.Duration
 import java.util.concurrent.{CompletableFuture, CompletionException, ExecutionException, Executor, TimeUnit}
 import java.util.concurrent.atomic.AtomicLong
@@ -107,7 +108,36 @@ final class HttpExchange(
       method: String,
       url: String,
       body: Option[String],
-      extraHeaders: Seq[(String, String)] = Nil): CompletableFuture[HttpOutcome] = {
+      extraHeaders: Seq[(String, String)] = Nil): CompletableFuture[HttpOutcome] =
+    dispatch(
+      method,
+      url,
+      body.fold(HttpRequest.BodyPublishers.noBody())(HttpRequest.BodyPublishers.ofString),
+      () => body,
+      extraHeaders)
+
+  /** [[send]] for a body that is already UTF-8 bytes (the sink's batches):
+    * the bytes go to the wire as they are, and the [[RequestCallback]] gets
+    * their text, decoded at most once per request.
+    */
+  def sendBytes(
+      method: String,
+      url: String,
+      body: Array[Byte],
+      extraHeaders: Seq[(String, String)] = Nil): CompletableFuture[HttpOutcome] =
+    dispatch(
+      method,
+      url,
+      HttpRequest.BodyPublishers.ofByteArray(body),
+      () => Some(new String(body, StandardCharsets.UTF_8)),
+      extraHeaders)
+
+  private def dispatch(
+      method: String,
+      url: String,
+      publisher: HttpRequest.BodyPublisher,
+      bodyText: () => Option[String],
+      extraHeaders: Seq[(String, String)]): CompletableFuture[HttpOutcome] = {
     val b = HttpRequest
       .newBuilder()
       .uri(URI.create(url))
@@ -117,9 +147,7 @@ final class HttpExchange(
     // setHeader: a per-request header (the sink's idempotency key) REPLACES
     // any same-named static header instead of doubling it
     extraHeaders.foreach { case (k, v) => b.setHeader(k, v) }
-    val publisher = body.fold(HttpRequest.BodyPublishers.noBody())(
-      HttpRequest.BodyPublishers.ofString)
-    val call = new Call(b.method(method, publisher).build(), method, url, body)
+    val call = new Call(b.method(method, publisher).build(), method, url, bodyText)
     open.add(call.result)
     HttpExchange.pending.incrementAndGet()
     call.result.whenComplete { (_, _) =>
@@ -137,8 +165,9 @@ final class HttpExchange(
       req: HttpRequest,
       method: String,
       url: String,
-      body: Option[String]) {
+      bodyText: () => Option[String]) {
     val result = new CompletableFuture[HttpOutcome]()
+    private lazy val body = bodyText()
 
     def attempt(n: Int): Unit =
       try {

@@ -1,6 +1,7 @@
 package graft.http
 
 import org.apache.spark.sql.{ForeachWriter, Row}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Per-row streaming HTTP sink: `writeStream.foreach(new HttpForeachWriter
   * (options, colIdx))` — the streaming analog of the reference sink's
@@ -34,7 +35,8 @@ final class HttpForeachWriter(
     true
   }
 
-  override def process(row: Row): Unit = writer.add(row.getString(payloadIdx))
+  override def process(row: Row): Unit =
+    writer.add(UTF8String.fromString(row.getString(payloadIdx)))
 
   override def close(errorOrNull: Throwable): Unit =
     if (errorOrNull == null) writer.flush() else writer.abort()

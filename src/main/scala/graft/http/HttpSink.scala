@@ -1,17 +1,25 @@
 package graft.http
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.{CancellationException, Semaphore}
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 
 /** HTTP sink — the Spark-native re-expression of the reference's sink
   * (`sink/HttpSinkInternal.java`, `sink/httpclient/BatchRequestSubmitter.java`,
   * `table/sink/HttpDynamicSink.java`).
   *
   * Rows are rendered *in Catalyst* by the configured [[PayloadFormat]]
-  * (`format`, default `json` → `to_json`, codegen) before the I/O layer
-  * ever sees them; each partition then submits payloads to the endpoint
+  * (`format`, default `json` → the schema-specialized `JsonRecord`
+  * encoder, byte-identical to `to_json`, codegen) before the I/O layer
+  * ever sees them, and stay UTF-8 bytes from there to the wire: `write`
+  * runs over the plan's `InternalRow`s and hands each rendered
+  * `UTF8String` to the partition writer, which copies its bytes into
+  * one buffer per task. Each partition submits payloads to the endpoint
   * either in `batch` mode (bodies of `http.sink.request.batch.size`
   * records framed by the format, default 500 — reference docs "Batch
   * submission mode") or `single` mode (one request per row), with bounded
@@ -57,15 +65,21 @@ object HttpSink {
       if (rt.idempotencySort) rendered.sortWithinPartitions("payload")
       else rendered
 
-    staged.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-      val w = rt.newPartitionWriter(
-        epochId,
-        org.apache.spark.TaskContext.getPartitionId())
-      // one writer per task: abort it (timer + in-flight requests) when the
-      // task ends; a no-op after a successful flush()
-      HttpExchange.onTaskEnd(w.abort())
-      rows.foreach(r => w.add(r.getString(0)))
-      w.flush()
+    // the rendered payloads stay UTF8String from the encoder to the
+    // writer's byte buffer: no Row decode, no String; still one SQL
+    // execution, as foreachPartition would run
+    val qe = staged.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("HttpSink.write")) {
+      qe.toRdd.foreachPartition { rows =>
+        val w = rt.newPartitionWriter(
+          epochId,
+          org.apache.spark.TaskContext.getPartitionId())
+        // one writer per task: abort it (timer + in-flight requests) when
+        // the task ends; a no-op after a successful flush()
+        HttpExchange.onTaskEnd(w.abort())
+        rows.foreach(r => w.add(r.getUTF8String(0)))
+        w.flush()
+      }
     }
   }
 
@@ -124,9 +138,8 @@ object HttpSink {
   */
 private[graft] object IdempotencyKeys {
 
-  private[http] def bodyHex(body: String): String = {
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    val d = md.digest(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+  private[http] def bodyHex(body: Array[Byte]): String = {
+    val d = java.security.MessageDigest.getInstance("SHA-256").digest(body)
     d.take(8).map(b => f"$b%02x").mkString
   }
 
@@ -141,7 +154,7 @@ private[graft] object IdempotencyKeys {
     private val prefix = (if (nonce.isEmpty) "" else s"$nonce-") +
       s"$epochId-$partitionId-"
 
-    def keyFor(body: String): String = {
+    def keyFor(body: Array[Byte]): String = {
       val hex = bodyHex(body)
       val h = java.lang.Long.parseUnsignedLong(hex, 16)
       val occ = seen.getOrElse(h, 0)
@@ -156,7 +169,9 @@ private[graft] object IdempotencyKeys {
   * `graft-http-sink` table): built once per write, on the driver, by
   * [[SinkRuntime.apply]] — the only place sink defaults live — shipped to
   * executors, which open one [[SinkRuntime.newPartitionWriter partition
-  * writer]] per task.
+  * writer]] per task. Every surface hands the writer rendered payloads as
+  * `UTF8String`s; only [[HttpForeachWriter]], whose rows are external,
+  * converts from a String.
   */
 private[graft] final case class SinkRuntime(
     url: String,
@@ -257,12 +272,16 @@ private[graft] object SinkRuntime {
 
   /** One task's sink writer (reference: `sink/httpclient/
     * BatchRequestSubmitter.java` — async submit, bounded in-flight, errors
-    * surface on flush). It buffers payload strings into requests, sends
-    * them through its own [[HttpExchange]] with at most `maxInflight` on
-    * the wire, and records the first async failure: `add` rethrows it at
-    * the next send, `flush` submits the tail batch, waits for every
-    * response and rethrows it (failing the task → Spark retry →
-    * at-least-once).
+    * surface on flush). It copies each payload's UTF-8 bytes into one
+    * growable buffer, framed as it goes by the format's open, separator
+    * and close parts ([[PayloadFormat.framing]]); a taken batch is one
+    * exact-size byte array, which the idempotency key hashes and
+    * [[HttpExchange.sendBytes]] sends as it is. Requests go through the
+    * writer's own [[HttpExchange]] with at most `maxInflight` on the wire;
+    * the first async failure is recorded: `add` rethrows it at the next
+    * send, `flush` submits the tail batch, waits for every response and
+    * rethrows it (failing the task → Spark retry → at-least-once).
+    * `sink.flush-buffer.size` counts the payloads' UTF-8 bytes exactly.
     *
     * The writer's monitor guards the buffer and the idempotency keyer and
     * is held only for non-blocking work: the task thread waits for an
@@ -285,7 +304,16 @@ private[graft] object SinkRuntime {
     private val keying = rt.idempotencyHeader.map(h =>
       (h, new IdempotencyKeys.Keyer(rt.idempotencyNonce, epochId, partitionId)))
 
-    private val batch = new scala.collection.mutable.ArrayBuffer[String](batchSize)
+    // the batch being built, framed as it grows: `open`, payloads joined by
+    // `separator` (`close` is appended when it is taken); single mode sends
+    // the one payload as-is, unframed
+    private val framed = rt.mode != "single"
+    private val open = rt.format.framing.open.getBytes(UTF_8)
+    private val separator = rt.format.framing.separator.getBytes(UTF_8)
+    private val close = rt.format.framing.close.getBytes(UTF_8)
+    private var buf = new Array[Byte](4096)
+    private var len = 0
+    private var rowsInBatch = 0
     private var oldestAddNanos = 0L
     private var bytesInBatch = 0L
     private var rowsSinceStage1 = 0
@@ -312,7 +340,7 @@ private[graft] object SinkRuntime {
       if (failure == null && permits.tryAcquire()) {
         var sent = false
         try synchronized {
-          if (batch.nonEmpty &&
+          if (rowsInBatch > 0 &&
             System.nanoTime() - oldestAddNanos >= flushTimeoutMs * 1000000L) {
             send(takeBody())
             sent = true
@@ -321,34 +349,25 @@ private[graft] object SinkRuntime {
         finally if (!sent) permits.release()
       }
 
-    // UTF-8 length without materializing a byte[] copy per row (the
-    // payload is only encoded once, at submit time)
-    private def utf8Length(s: String): Long = {
-      var n = 0L
-      var i = 0
-      while (i < s.length) {
-        val c = s.charAt(i)
-        n += (if (c < 0x80) 1
-              else if (c < 0x800) 2
-              else if (Character.isHighSurrogate(c)) { i += 1; 4 }
-              else 3)
-        i += 1
-      }
-      n
-    }
-
-    def add(payload: String): Unit = {
+    def add(payload: UTF8String): Unit = {
       val body = synchronized {
-        if (batch.isEmpty) oldestAddNanos = System.nanoTime()
-        batch += payload
-        bytesInBatch += utf8Length(payload)
+        if (rowsInBatch == 0) {
+          oldestAddNanos = System.nanoTime()
+          if (framed) append(open)
+        } else append(separator)
+        val n = payload.numBytes
+        ensure(n)
+        payload.writeToMemory(buf, Platform.BYTE_ARRAY_OFFSET + len)
+        len += n
+        rowsInBatch += 1
+        bytesInBatch += n
         rowsSinceStage1 += 1
         // three flush triggers, mirroring the reference's two-stage
         // batching: stage-2 request full; stage-1 runtime-flush boundary
         // every `sink.batch.max-size` rows (truncates the partial request,
         // exactly as Flink's buffered flush would); byte threshold
-        // `sink.flush-buffer.size` over the buffered UTF-8 payload
-        val stage2Full = batch.size >= batchSize
+        // `sink.flush-buffer.size` over the buffered UTF-8 payload bytes
+        val stage2Full = rowsInBatch >= batchSize
         val stage1Boundary = stage1MaxRows > 0 && rowsSinceStage1 >= stage1MaxRows
         val bytesFull = flushBufferBytes > 0 && bytesInBatch >= flushBufferBytes
         if (stage1Boundary) rowsSinceStage1 = 0
@@ -359,7 +378,7 @@ private[graft] object SinkRuntime {
 
     def flush(): Unit = {
       timer.foreach(_.cancel(false))
-      val tail = synchronized(if (batch.nonEmpty) takeBody() else null)
+      val tail = synchronized(if (rowsInBatch > 0) takeBody() else null)
       if (tail != null) submit(tail)
       // a permit is held until its response is classified, so holding all
       // of them means nothing is in flight and every failure is recorded
@@ -379,26 +398,41 @@ private[graft] object SinkRuntime {
       */
     def abort(): Unit = {
       timer.foreach(_.cancel(false))
-      synchronized { batch.clear(); bytesInBatch = 0L }
+      synchronized { clear() }
       exchange.cancelAll()
     }
 
-    /** Frame and clear the buffered batch (caller holds the monitor).
-      * Batch bodies are framed by the format (JSON arrays `[e1,e2,…]` for
+    /** Close and clear the buffered batch (caller holds the monitor): a
+      * batch body is framed by the format (a JSON array `[e1,e2,…]` for
       * json, one record per line for csv); single mode sends the payload
       * as-is (reference docs "Request submission").
       */
-    private def takeBody(): String = {
-      val body =
-        if (rt.mode == "single") batch.head else rt.format.frameBatch(batch.toSeq)
-      batch.clear()
-      bytesInBatch = 0L
+    private def takeBody(): Array[Byte] = {
+      if (framed) append(close)
+      val body = java.util.Arrays.copyOf(buf, len)
+      clear()
       body
     }
 
+    private def clear(): Unit = {
+      len = 0
+      rowsInBatch = 0
+      bytesInBatch = 0L
+    }
+
+    private def append(bytes: Array[Byte]): Unit = {
+      ensure(bytes.length)
+      System.arraycopy(bytes, 0, buf, len, bytes.length)
+      len += bytes.length
+    }
+
+    private def ensure(n: Int): Unit =
+      if (len + n > buf.length)
+        buf = java.util.Arrays.copyOf(buf, math.max(buf.length * 2, len + n))
+
     // task thread: wait for a permit outside the monitor; a failure
     // recorded meanwhile stops this request
-    private def submit(body: String): Unit = {
+    private def submit(body: Array[Byte]): Unit = {
       permits.acquire()
       try { checkFailure(); synchronized(send(body)) }
       catch { case t: Throwable => permits.release(); throw t }
@@ -408,11 +442,11 @@ private[graft] object SinkRuntime {
     // thread-safe), so a key is drawn only for a body that is sent. Once
     // this returns, the permit is the response callback's to release; if
     // it throws, the caller's.
-    private def send(body: String): Unit =
-      exchange.send(
+    private def send(body: Array[Byte]): Unit =
+      exchange.sendBytes(
         rt.method,
         rt.url,
-        Some(body),
+        body,
         keying.map { case (h, keyer) => h -> keyer.keyFor(body) }.toSeq)
         .whenComplete { (oc, err) =>
           try {

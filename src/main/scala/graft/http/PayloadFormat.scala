@@ -4,6 +4,7 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{ColumnShim, JsonRecord}
 import org.apache.spark.sql.types._
 
 /** Pluggable payload (de)serialization for the HTTP lookup source and sink —
@@ -19,6 +20,11 @@ import org.apache.spark.sql.types._
   * request-body format from `lookup-request.format`; the sink resolves its
   * payload format from `format`. Anything registered via
   * [[PayloadFormats.register]] is resolvable by name.
+  *
+  * A registered format's contract with the sink: `encode` yields one
+  * string per record, and [[framing]] names the three parts a batch body
+  * is built from. The sink never sees anything else, so it frames every
+  * batch in bytes, without Strings.
   */
 trait PayloadFormat extends Serializable {
 
@@ -48,8 +54,17 @@ trait PayloadFormat extends Serializable {
       schema: StructType,
       corruptField: String): Option[Column]
 
-  /** Frame rendered payloads into one sink-batch request body. */
-  def frameBatch(payloads: Seq[String]): String
+  /** How a sink batch is framed: its body is the UTF-8 bytes of `open`,
+    * the rendered payloads joined by `separator`, then `close`. The sink's
+    * partition writer copies each payload's bytes into its buffer between
+    * these parts, so a registered format frames batches through these
+    * three strings alone.
+    */
+  def framing: BatchFraming
+
+  /** One sink-batch request body as a String, framed by [[framing]]. */
+  final def frameBatch(payloads: Seq[String]): String =
+    payloads.mkString(framing.open, framing.separator, framing.close)
 
   /** Column of the TOP-LEVEL key names present in one record body (null
     * when the body is undecodable), or None when the wire format cannot
@@ -69,7 +84,10 @@ case object JsonPayloadFormat extends PayloadFormat {
   def name = "json"
   def contentType = "application/json"
 
-  def encode(record: Column): Column = to_json(record)
+  // to_json's bytes from an encoder specialized to the record's schema
+  // (org.apache.spark.sql.graft.JsonRecord)
+  def encode(record: Column): Column =
+    ColumnShim.column(JsonRecord(ColumnShim.expression(record)))
 
   private def withCorrupt(schema: StructType, corruptField: String) =
     StructType(schema.fields :+ StructField(corruptField, StringType))
@@ -90,8 +108,7 @@ case object JsonPayloadFormat extends PayloadFormat {
         ArrayType(withCorrupt(schema, corruptField)),
         Map("columnNameOfCorruptRecord" -> corruptField)))
 
-  def frameBatch(payloads: Seq[String]): String =
-    payloads.mkString("[", ",", "]")
+  val framing = BatchFraming("[", ",", "]")
 
   // strict-decode support: a MapType re-parse keeps EVERY top-level key
   // (nested values render as their raw json), so `map_keys` enumerates the
@@ -144,8 +161,13 @@ case object CsvPayloadFormat extends PayloadFormat {
       schema: StructType,
       corruptField: String): Option[Column] = None
 
-  def frameBatch(payloads: Seq[String]): String = payloads.mkString("\n")
+  val framing = BatchFraming("", "\n", "")
 }
+
+/** The three parts a sink batch body is framed from (see
+  * [[PayloadFormat.framing]]).
+  */
+final case class BatchFraming(open: String, separator: String, close: String)
 
 object PayloadFormats {
   private val registry = TrieMap[String, PayloadFormat](

@@ -127,8 +127,9 @@ private[streaming] class HttpSinkTable(
     * `rt.format.encode(struct(<wire columns>))` cast to string — analyzed
     * over an empty relation of the wire schema (which resolves the session
     * time zone) and bound to the written row's ordinals. RuntimeReplaceable
-    * nodes (`to_json` in Spark 4) cannot eval directly, so they are
-    * substituted the way the optimizer's ReplaceExpressions rule would.
+    * nodes (the json format's `JsonRecord`, Spark 4's `to_json`) cannot
+    * eval directly, so they are substituted the way the optimizer's
+    * ReplaceExpressions rule would.
     */
   private def renderer(rt: SinkRuntime, wire: StructType): Expression = {
     val spark = SparkSession.active
@@ -204,7 +205,7 @@ private[streaming] class HttpSinkDataWriter(
   private val project = SafeProjection.create(Seq(render))
 
   override def write(row: InternalRow): Unit =
-    pw.add(project(row).getUTF8String(0).toString)
+    pw.add(project(row).getUTF8String(0))
 
   override def commit(): WriterCommitMessage = {
     pw.flush()

@@ -23,7 +23,12 @@ import graft.ops.Par
   *
   * `plan` prints `explain("formatted")` to stdout, or writes
   * `outDir/<name>_<tag>.txt` per gate. `shape` runs on `local(4)`, the
-  * session the specs use, whatever `SPARK_GRAFT_CPUS` says.
+  * session the specs use, whatever `SPARK_GRAFT_CPUS` says, and counts
+  * the named gates in the order given on that one session. A gate whose
+  * cached frames an earlier gate has materialized counts fewer exchanges
+  * than it does alone, so `shape` prints the counts `PlanGuardSpec`
+  * checks only when given the spec's whole pinned list in spec order
+  * (`p_prefix_jaccard` alone: 8 exchanges; in the spec: 6).
   */
 object Probe {
   def main(args: Array[String]): Unit = {

@@ -185,7 +185,7 @@ class FormatSpec extends SparkSpec with BeforeAndAfterAll {
         JsonPayloadFormat.decode(lower(body), schema, corruptField)
       def decodeArray(body: org.apache.spark.sql.Column, schema: StructType, corruptField: String) =
         None
-      def frameBatch(payloads: Seq[String]) = payloads.mkString("[", ",", "]")
+      val framing = BatchFraming("[", ",", "]")
     }
     PayloadFormats.register(UpperJson)
     PayloadFormats("upperjson").name shouldBe "upperjson"

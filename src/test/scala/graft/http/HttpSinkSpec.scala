@@ -212,6 +212,34 @@ class HttpSinkSpec extends SparkSpec with BeforeAndAfterAll {
     keysFor(8L) should not be first
   }
 
+  test("idempotency keys are pinned for fixed batch- and single-mode fixtures") {
+    import spark.implicits._
+    // multi-byte payloads (e-acute, CJK, an astral emoji) pin that the key
+    // hashes the UTF-8 bytes of the body; the single-mode duplicate pins
+    // the occurrence suffix
+    def keys(mode: String, rows: Seq[(Long, String)]): List[String] = {
+      server.clear()
+      HttpSink.write(
+        rows.toDF("id", "name").coalesce(1),
+        Map(
+          "url" -> server.url("/ok"),
+          "http.sink.writer.request.mode" -> mode,
+          "http.sink.request.batch.size" -> "4",
+          "http.sink.idempotency.header" -> "Idempotency-Key"),
+        epochId = 3L)
+      server.requests
+        .filter(_.path == "/ok")
+        .flatMap(_.headers.getOrElse("Idempotency-key", Nil))
+        .sorted
+    }
+    val batch = (1 to 10).map(i => (i.toLong, s"n\u00e9$i\u4e2d\ud83d\ude00"))
+    keys("batch", batch) shouldBe List(
+      "3-0-1d6ee65fd1fb0c7d-0", "3-0-4685e51b4affeeee-0", "3-0-7c1a273533224942-0")
+    val single = Seq((1L, "a"), (1L, "a"), (2L, "\u00e9\u4e2d\ud83d\ude00\t\"q\""))
+    keys("single", single) shouldBe List(
+      "3-0-7f0fc1050a42a0cb-0", "3-0-7f0fc1050a42a0cb-1", "3-0-d98791697335281f-0")
+  }
+
   test("idempotency keys off by default: no header emitted") {
     server.clear()
     HttpSink.write(df(3), Map("url" -> server.url("/ok")))
@@ -381,7 +409,8 @@ class HttpSinkSpec extends SparkSpec with BeforeAndAfterAll {
     def arrived(path: String) = srv.requests.count(_.path == path)
     val a = writer("/slow", "sink.requests.max-inflight" -> "1")
     val b = writer("/fast", "http.sink.request.batch.size" -> "100")
-    val adder = new Thread(() => (1 to 4).foreach(i => a.add(s"""{"a":$i}""")))
+    val adder = new Thread(() => (1 to 4).foreach(i =>
+      a.add(org.apache.spark.unsafe.types.UTF8String.fromString(s"""{"a":$i}"""))))
     adder.setDaemon(true)
     try {
       adder.start()
@@ -394,7 +423,7 @@ class HttpSinkSpec extends SparkSpec with BeforeAndAfterAll {
       adder.isAlive shouldBe true
 
       val t0 = System.nanoTime()
-      b.add("""{"b":1}""")
+      b.add(org.apache.spark.unsafe.types.UTF8String.fromString("""{"b":1}"""))
       while (arrived("/fast") == 0 && System.nanoTime() - t0 < 5000000000L)
         Thread.sleep(5)
       val waitedMs = (System.nanoTime() - t0) / 1000000L

@@ -256,6 +256,29 @@ class OptionPinSpec extends SparkSpec with BeforeAndAfterAll {
     } finally server.stop()
   }
 
+  test("sink.flush-buffer.size counts multi-byte payloads in exact UTF-8 bytes") {
+    import spark.implicits._
+    val server = StubServer().route("/utf8") { _ => (200, "ok") }.start()
+    try {
+      // each record {"v":"<e-acute><CJK><emoji>"} is 6 + 2 + 3 + 4 + 2 = 17
+      // UTF-8 bytes (12 UTF-16 chars): a 51-byte buffer fills at exactly 3
+      // rows, a 52-byte one at 4
+      val df = Seq.fill(9)("\u00e9\u4e2d\ud83d\ude00").toDF("v").repartition(1)
+      def sizesAt(threshold: Int): Seq[Int] = {
+        server.clear()
+        HttpSink.write(
+          df,
+          Map(
+            "url" -> server.url("/utf8"),
+            "http.sink.request.batch.size" -> "1000",
+            "sink.flush-buffer.size" -> threshold.toString))
+        batchSizes(server, "/utf8").sorted
+      }
+      sizesAt(51) shouldBe Seq(3, 3, 3)
+      sizesAt(52) shouldBe Seq(1, 4, 4)
+    } finally server.stop()
+  }
+
   test("sink.requests.max-buffered below the batch size is a config error") {
     import spark.implicits._
     val server = StubServer().route("/mb") { _ => (200, "ok") }.start()

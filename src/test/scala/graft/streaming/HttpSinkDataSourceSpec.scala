@@ -187,7 +187,7 @@ class HttpSinkDataSourceSpec extends SparkSpec with BeforeAndAfterAll {
           body: org.apache.spark.sql.Column,
           schema: org.apache.spark.sql.types.StructType,
           corruptField: String) = None
-      def frameBatch(payloads: Seq[String]) = payloads.mkString("\n")
+      val framing = graft.http.BatchFraming("", "\n", "")
     })
     server.clear()
     df(2).write
