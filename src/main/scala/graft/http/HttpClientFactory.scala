@@ -40,9 +40,11 @@ object HttpClientFactory {
   /** Per-executor cached client for a config (JDK clients hold a connection
     * pool; one per distinct config per JVM keeps sockets bounded at scale).
     * Sharded: each JDK HttpClient multiplexes ALL its requests through a
-    * single selector thread, which caps one client at roughly 1-2k req/s
-    * regardless of caller concurrency, so high-fanout operators spread
-    * tasks over a small client pool.
+    * single selector thread, so high-fanout operators spread tasks over a
+    * small client pool. The shard count predates the async exchange and
+    * has not been re-measured under it; the per-client ceiling it was
+    * sized for is unconfirmed (ROADMAP item 6 re-measures req/s against
+    * the shard count).
     */
   val ClientShards = 8
 

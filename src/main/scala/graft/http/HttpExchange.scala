@@ -118,7 +118,8 @@ final class HttpExchange(
 
   /** [[send]] for a body that is already UTF-8 bytes (the sink's batches):
     * the bytes go to the wire as they are, and the [[RequestCallback]] gets
-    * their text, decoded at most once per request.
+    * their text, decoded at most once per request and only for a callback
+    * that [[RequestCallback.wantsBody wants it]].
     */
   def sendBytes(
       method: String,
@@ -172,7 +173,7 @@ final class HttpExchange(
     def attempt(n: Int): Unit =
       try {
         if (!result.isDone) {
-          callback.onRequest(method, url, body)
+          callback.onRequest(method, url, if (callback.wantsBody) body else None)
           val wire = client.sendAsync(req, HttpResponse.BodyHandlers.ofString())
           result.whenComplete((_, _) => if (result.isCancelled) wire.cancel(true))
           wire.whenComplete((resp, err) =>
@@ -319,6 +320,11 @@ object HttpEndpoint {
   * of the HTTP client. Implementations must be thread-safe.
   */
 trait RequestCallback extends Serializable {
+
+  /** Whether [[onRequest]] reads the body. When false it gets `None`, and a
+    * byte body is never decoded to text for it.
+    */
+  def wantsBody: Boolean = true
   def onRequest(method: String, url: String, body: Option[String]): Unit
   def onResponse(method: String, url: String, status: Int): Unit
   def onException(method: String, url: String, e: Throwable): Unit
@@ -342,6 +348,7 @@ object RequestCallback {
   final case class Slf4jLogger(level: Level = Level.Min) extends RequestCallback {
     @transient private lazy val log =
       org.slf4j.LoggerFactory.getLogger("graft.http.HttpLogger")
+    override def wantsBody: Boolean = level != Level.Min && log.isDebugEnabled
     def onRequest(method: String, url: String, body: Option[String]): Unit =
       if (log.isDebugEnabled) level match {
         case Level.Min => log.debug(s"HTTP $method $url")
@@ -354,6 +361,7 @@ object RequestCallback {
   }
 
   val NoOp: RequestCallback = new RequestCallback {
+    override def wantsBody: Boolean = false
     def onRequest(method: String, url: String, body: Option[String]): Unit = ()
     def onResponse(method: String, url: String, status: Int): Unit = ()
     def onException(method: String, url: String, e: Throwable): Unit = ()

@@ -2,6 +2,7 @@ package graft.ops
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import javax.imageio.ImageIO
+import javax.imageio.stream.{MemoryCacheImageInputStream, MemoryCacheImageOutputStream}
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
@@ -27,18 +28,6 @@ import org.apache.spark.sql.types._
   * machinery.
   */
 object Multimodal {
-
-  // r17 (guide §1.2 per-task work): ImageIO's stream factories default to
-  // DISK-backed caches — createImageInputStream / createImageOutputStream
-  // (and ImageIO.read/write, which call them) spool every blob through a
-  // temp FILE even when the source is an in-memory byte array. With the
-  // media gates' small per-row fixtures that is one tmpfile create+write+
-  // delete per encode AND per decode — the dominant per-row cost, pure
-  // I/O churn with zero effect on the decoded bytes. Memory-backed cache
-  // streams produce bit-identical results (same codecs, same data path).
-  // JVM-wide and set on object load: every decoder entry point lives in
-  // this object, so the setting is established before any stream is made.
-  ImageIO.setUseCache(false)
 
   final case class MediaMeta(
       n_bytes: Long,
@@ -76,6 +65,21 @@ object Multimodal {
     }
   }
 
+  /** `ImageIO.read` over a memory-backed stream. Every ImageIO stream here
+    * is a `MemoryCache*` one: the `InputStream`/`OutputStream` overloads
+    * go through `ImageIO`'s stream factories, which by default spool each
+    * blob through a temp FILE (one create+write+delete per row). Building
+    * the stream per call keeps that off without flipping the JVM-global
+    * `ImageIO.setUseCache`. `read` closes the stream once a reader took
+    * it; with no reader it returns null and leaves the close to us.
+    */
+  private def readImage(bytes: Array[Byte]): java.awt.image.BufferedImage = {
+    val iis = new MemoryCacheImageInputStream(new ByteArrayInputStream(bytes))
+    val img = ImageIO.read(iis)
+    if (img == null) iis.close()
+    img
+  }
+
   /** Real JDK decode: dimensions from `ImageIO.read`; GIF frame count from
     * the format reader (the one JDK still format with multi-frame
     * support). Undecodable bytes that sniffed as an image classify as
@@ -85,7 +89,7 @@ object Multimodal {
   private def decodeImage(bytes: Array[Byte], fmt: String): MediaMeta = {
     try {
       if (fmt == "gif") {
-        val iis = ImageIO.createImageInputStream(new ByteArrayInputStream(bytes))
+        val iis = new MemoryCacheImageInputStream(new ByteArrayInputStream(bytes))
         try {
           val readers = ImageIO.getImageReaders(iis)
           if (!readers.hasNext) return MediaMeta(bytes.length.toLong, 0, 0, 0, "gif-corrupt")
@@ -98,7 +102,7 @@ object Multimodal {
           meta
         } finally iis.close()
       } else {
-        val img = ImageIO.read(new ByteArrayInputStream(bytes))
+        val img = readImage(bytes)
         if (img == null) MediaMeta(bytes.length.toLong, 0, 0, 0, s"$fmt-corrupt")
         else MediaMeta(bytes.length.toLong, img.getWidth, img.getHeight, 1, fmt)
       }
@@ -169,7 +173,7 @@ object Multimodal {
         val bytes = r.getAs[Array[Byte]](1)
         val fmt = sniffImageFormat(bytes)
         val img = fmt.flatMap { _ =>
-          try Option(ImageIO.read(new ByteArrayInputStream(bytes)))
+          try Option(readImage(bytes))
           catch { case _: Exception => None }
         }
         img match {
@@ -217,7 +221,8 @@ object Multimodal {
       y += 1
     }
     val bos = new ByteArrayOutputStream()
-    ImageIO.write(img, "png", bos)
+    val ios = new MemoryCacheImageOutputStream(bos)
+    try ImageIO.write(img, "png", ios) finally ios.close()
     bos.toByteArray
   }
 
@@ -272,7 +277,7 @@ object Multimodal {
       rows.map { r =>
         val n = math.max(1, r.getInt(1))
         val bos = new ByteArrayOutputStream()
-        val ios = ImageIO.createImageOutputStream(bos)
+        val ios = new MemoryCacheImageOutputStream(bos)
         writer.setOutput(ios)
         writer.prepareWriteSequence(null)
         var i = 0

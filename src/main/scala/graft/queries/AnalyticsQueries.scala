@@ -353,7 +353,7 @@ object AnalyticsQueries {
 
     // ----- STREAMING/batch parity through the batch oracle: the same
     // hourly aggregation as a Structured Streaming query (file source,
-    // Trigger.AvailableNow, complete mode into a memory sink) — the
+    // an AvailableNow drain, complete mode into a memory sink) — the
     // driver's DuckDB compare then gates streaming semantics itself.
     // countDistinct is unsupported on streams, so this twin carries the
     // count + exact-decimal sum columns only.
@@ -372,15 +372,7 @@ object AnalyticsQueries {
           count(lit(1)).as("n_events"),
           round(sum(col("value").cast(DecimalType(18, 6))), 4)
             .cast(DoubleType).as("sum_value"))
-      val sinkName = "q_stream_events_hourly_out"
-      val q = agg.writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(sinkName)
+      Streams.drain(agg, "q_stream_events_hourly_out", "complete")
     }},
 
     // ----- watermarked streaming dedup (NEW r10): the exactly-once event
@@ -404,15 +396,7 @@ object AnalyticsQueries {
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark("event_id")
         .drop("ts")
-      val sinkName = "q_stream_dedup_watermark_out"
-      val q = deduped.writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(sinkName)
+      Streams.drain(deduped, "q_stream_dedup_watermark_out", "append")
     }},
 
     // ----- checkpoint RESTART (NEW r11): exactly-once ACROSS a stop — the
@@ -438,8 +422,8 @@ object AnalyticsQueries {
       half.repartition(2).write.parquet(inDir)
       val stagedSchema = s.read.parquet(inDir).schema
 
-      def runOnce(): Unit = {
-        val q = s.readStream
+      def runOnce(): Unit = Streams.drain(
+        s.readStream
           .schema(stagedSchema)
           .parquet(inDir)
           .dropDuplicates("event_id")
@@ -447,11 +431,7 @@ object AnalyticsQueries {
           .format("parquet")
           .option("path", outDir)
           .option("checkpointLocation", ckptDir)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+          .outputMode("append"))
 
       runOnce() // run #1: sees only the half fixture, then terminates
       // r17 (guide §5): both expectation scalars in ONE aggregate pass
@@ -551,14 +531,11 @@ object AnalyticsQueries {
           col("user_id"),
           col("purchase_id"),
           unix_micros(col("s_ts")).as("s_ts_us"))
-      val q = joined.writeStream
+      Streams.drain(joined.writeStream
         .format("parquet")
         .option("path", outDir)
         .option("checkpointLocation", ckptDir)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .outputMode("append"))
       // sentinel removal HERE, not in the streaming plan (see above)
       s.read.parquet(outDir).filter(col("signup_id") > -1)
     }},
@@ -580,15 +557,7 @@ object AnalyticsQueries {
         .select(
           col("event_id"), col("user_id"), col("event_type"),
           col("c_name"), col("c_mktsegment"))
-      val sinkName = "q_stream_static_join_out"
-      val q = joined.writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(sinkName)
+      Streams.drain(joined, "q_stream_static_join_out", "append")
     },
 
     // ----- custom-state streaming sessionization (Q9b, NEW r12): the
@@ -612,22 +581,16 @@ object AnalyticsQueries {
         .as[graft.streaming.StreamingSessions.Event]
       val sessions = graft.streaming.StreamingSessions
         .sessionize(stream, gapMillis = 1800000L)
-      val sinkName = "q_stream_sessions_out"
-      val q = sessions
-        .toDF()
-        .select(
-          col("user_id"),
-          unix_millis(col("session_start")).as("start_ms"),
-          unix_millis(col("session_end")).as("end_ms"),
-          col("n_events"))
-        .writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(sinkName)
+      Streams.drain(
+        sessions
+          .toDF()
+          .select(
+            col("user_id"),
+            unix_millis(col("session_start")).as("start_ms"),
+            unix_millis(col("session_end")).as("end_ms"),
+            col("n_events")),
+        "q_stream_sessions_out",
+        "append")
     }},
 
     // ----- sessionization (gaps-and-islands, 30 min inactivity gap) -----
@@ -670,23 +633,17 @@ object AnalyticsQueries {
           col("event_id").cast(LongType).as("tie"),
           col("event_type").as("attr"))
         .as[graft.streaming.StreamingScd.Obs]
-      val sinkName = "q_stream_scd2_out"
-      val q = graft.streaming.StreamingScd.history(stream)
-        .toDF()
-        .select(
-          col("key").as("user_id"),
-          col("version"),
-          col("attr").as("event_type"),
-          col("eff_from_us").as("from_us"),
-          col("eff_to_us").as("to_us"))
-        .writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(sinkName)
+      Streams.drain(
+        graft.streaming.StreamingScd.history(stream)
+          .toDF()
+          .select(
+            col("key").as("user_id"),
+            col("version"),
+            col("attr").as("event_type"),
+            col("eff_from_us").as("from_us"),
+            col("eff_to_us").as("to_us")),
+        "q_stream_scd2_out",
+        "append")
     }},
 
     // ----- temporal (point-in-time) join (NEW r13): enrich facts with

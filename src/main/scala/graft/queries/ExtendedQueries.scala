@@ -120,15 +120,7 @@ object ExtendedQueries {
             col("ts") <= col("iv_ts") + expr("INTERVAL 2 HOURS") &&
             col("event_id") =!= col("signup_id"))
         .select(col("event_id"), col("signup_id"))
-      val sinkName = "q_stream_range_join_out"
-      val q = joined.writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(sinkName)
+      Streams.drain(joined, "q_stream_range_join_out", "append")
     }},
 
     // ----- ordered funnel (signup → view → purchase): per-user earliest

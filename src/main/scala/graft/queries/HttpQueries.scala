@@ -4,6 +4,7 @@ import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryProgress
 import org.apache.spark.sql.types._
 
 import graft.http.{HttpLookup, HttpSink}
@@ -833,10 +834,12 @@ object HttpQueries {
 
         // NOT AvailableNow: the state cache's processing-time eviction
         // timers keep AvailableNow servicing no-data batches until the TTL
-        // fires (measured: 1500+ empty batches). Poll the committed sink
-        // row count instead and stop once every input batch has committed
-        // — sink commit and state commit are the same batch transaction,
-        // so reaching the count means the cache state is durable too.
+        // fires (measured: 1500+ empty batches). Poll the query's progress
+        // instead and stop once every input row has committed: a progress
+        // event is emitted only AFTER its batch commits, and sink and state
+        // commit in the same batch transaction, so reaching the count means
+        // the cache state is durable too (the file sink reports no output
+        // rows; this stream is row-preserving, one output per input).
         def runOnce(expectedRows: Long): Unit = {
           val stream = s.readStream.schema(stagedSchema).parquet(inDir)
           val q = HttpLookup
@@ -865,29 +868,11 @@ object HttpQueries {
             .trigger(
               org.apache.spark.sql.streaming.Trigger.ProcessingTime(5000L))
             .start()
-          try {
-            val deadline = System.currentTimeMillis() + 120000L
-            var committed = -1L
-            while (committed < expectedRows &&
-              System.currentTimeMillis() < deadline) {
-              Thread.sleep(100)
-              if (q.exception.isDefined) throw q.exception.get
-              // r16: poll the query's own progress events instead of
-              // re-counting the sink parquet — the old poll ran a full
-              // Spark job (listing + scan) every 100 ms, ~30 throwaway
-              // jobs per run. A progress event is emitted only AFTER its
-              // batch commits (sink and state commit in the same batch
-              // transaction), so seeing every expected INPUT row in the
-              // progress log proves the same durability the parquet
-              // re-count did (the file sink reports no output rows; this
-              // stream is row-preserving, one output per input).
-              committed = q.recentProgress.map(_.numInputRows).sum
-            }
-            require(
-              committed >= expectedRows,
-              s"h_state_lookup: sink committed $committed rows, expected " +
-                s"$expectedRows within 120s")
-          } finally q.stop()
+          def committed(p: Array[StreamingQueryProgress]) = p.map(_.numInputRows).sum
+          Streams.until(q, 120000L)(
+            committed(_) >= expectedRows,
+            p => s"h_state_lookup: sink committed ${committed(p)} rows, " +
+              s"expected $expectedRows within 120s")
         }
 
         // r16: the four expectation scalars in ONE aggregate pass over the
@@ -1127,26 +1112,18 @@ object HttpQueries {
     "h_poll_source" -> { (s, dir) =>
       val server = pollStub(s, dir)
       val sinkName = s"h_poll_source_out_${System.nanoTime()}"
-      val q = s.readStream
+      val polled = s.readStream
         .format("graft-http-poll")
         .option("url", server.url("/nation-feed"))
         .load()
-        .writeStream
-        .format("memory")
-        .queryName(sinkName)
+      val q = Streams.memory(polled, sinkName, "append")
         .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(10L))
         .start()
-      try {
-        val deadline = System.currentTimeMillis() + 60000
-        var polls = 0L
-        while (polls < PollPages && System.currentTimeMillis() < deadline) {
-          Thread.sleep(25)
-          polls = s.table(sinkName).select(col("poll_id")).distinct().count()
-        }
-        require(
-          polls >= PollPages,
-          s"polling source produced $polls/$PollPages micro-batches in 60s")
-      } finally q.stop()
+      // one poll per micro-batch: batches with rows = polls in the sink
+      def polls(p: Array[StreamingQueryProgress]) = p.count(_.numInputRows > 0)
+      Streams.until(q, 60000L)(
+        polls(_) >= PollPages,
+        p => s"polling source produced ${polls(p)}/$PollPages micro-batches in 60s")
       val recSchema = StructType(Seq(
         StructField("n_nationkey", IntegerType),
         StructField("n_name", StringType),
@@ -1212,15 +1189,7 @@ object HttpQueries {
           col("c_custkey"),
           col("c_name"),
           col("c_mktsegment"))
-      val sinkName = "h_stream_lookup_out"
-      val q = enriched.writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(sinkName)
+      Streams.drain(enriched, "h_stream_lookup_out", "append")
     },
 
     // ----- async lookup concurrency (L2): the stub's in-flight tracker

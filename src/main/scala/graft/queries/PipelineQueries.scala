@@ -3775,15 +3775,7 @@ object PipelineQueries {
         .agg(
           min(col("doc_id")).as("doc_id_kept"),
           count(lit(1)).as("n_copies"))
-      val sinkName = "p_stream_exact_dedup_out"
-      val q = agg.writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(sinkName)
+      Streams.drain(agg, "p_stream_exact_dedup_out", "complete")
     }},
 
     // ----- streaming LSH near-dup dedup (NEW r13): the STREAM builds the
@@ -3799,16 +3791,10 @@ object PipelineQueries {
         val stream = s.readStream
           .schema(schema)
           .parquet(s"$dir/documents*.parquet")
-        val sinkName = "p_stream_lsh_registry_out"
-        val q = Dedup.streamingLshRegistry(stream, "doc_id", "text")
-          .writeStream
-          .format("memory")
-          .queryName(sinkName)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val registry = s.table(sinkName)
+        val registry = Streams.drain(
+          Dedup.streamingLshRegistry(stream, "doc_id", "text"),
+          "p_stream_lsh_registry_out",
+          "complete")
         Dedup.lshBandKeys(t(s, dir, "documents"), "doc_id", "text")
           .join(registry, Seq("band", "band_key"))
           .groupBy(col("id"))

@@ -519,20 +519,30 @@ class RequestCallbackRegistrySpec extends SparkSpec {
   test("named sink callback observes posted batches") {
     import spark.implicits._
     val seen = new java.util.concurrent.atomic.AtomicInteger()
-    RequestCallback.register("sink-recorder", _ => new RequestCallback {
-      def onRequest(m: String, u: String, b: Option[String]): Unit = ()
+    val bodies = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
+    val unread = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
+    final class Recorder(into: java.util.Queue[Option[String]], reads: Boolean)
+        extends RequestCallback {
+      override def wantsBody: Boolean = reads
+      def onRequest(m: String, u: String, b: Option[String]): Unit = { into.add(b); () }
       def onResponse(m: String, u: String, s: Int): Unit = { seen.incrementAndGet(); () }
       def onException(m: String, u: String, e: Throwable): Unit = ()
-    })
+    }
+    RequestCallback.register("sink-recorder", _ => new Recorder(bodies, reads = true))
+    RequestCallback.register("sink-skipper", _ => new Recorder(unread, reads = false))
     val server = new StubServer().route("/ingest")(_ => (200, "{}")).start()
     try {
-      HttpSink.write(
-        Seq(1, 2, 3).toDF("v").repartition(1),
-        Map(
-          "url" -> server.url("/ingest"),
-          "http.sink.request.batch.size" -> "2",
-          "http.sink.request-callback" -> "sink-recorder"))
-      seen.get() shouldBe 2 // two batches: [1,2] and [3]
+      for (name <- Seq("sink-recorder", "sink-skipper"))
+        HttpSink.write(
+          Seq(1, 2, 3).toDF("v").repartition(1),
+          Map(
+            "url" -> server.url("/ingest"),
+            "http.sink.request.batch.size" -> "2",
+            "http.sink.request-callback" -> name))
+      seen.get() shouldBe 4 // two batches per write: [1,2] and [3]
+      bodies.toArray.toSeq shouldBe Seq(Some("""[{"v":1},{"v":2}]"""), Some("""[{"v":3}]"""))
+      unread.toArray.toSeq shouldBe Seq(None, None)
+      RequestCallback.Slf4jLogger(RequestCallback.Level.Min).wantsBody shouldBe false
     } finally server.stop()
   }
 

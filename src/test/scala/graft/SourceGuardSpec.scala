@@ -8,10 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 /** Keeps the session configuration, the run-metrics listener, the
-  * hashed shingle set and the HTTP server in one place each: every session
-  * comes from [[GraftSession]], every listener in the main sources is
-  * [[RunStats]], every hashed shingle set is `Dedup.hashedShingleSet`, and
-  * every HTTP fixture runs on `testkit.StubServer`.
+  * hashed shingle set, the HTTP server and the streaming-gate runner in one
+  * place each: every session comes from [[GraftSession]], every listener in
+  * the main sources is [[RunStats]], every hashed shingle set is
+  * `Dedup.hashedShingleSet`, every HTTP fixture runs on
+  * `testkit.StubServer`, and every streaming gate runs through
+  * `queries.Streams`.
   */
 class SourceGuardSpec extends AnyFunSuite with Matchers {
 
@@ -26,6 +28,9 @@ class SourceGuardSpec extends AnyFunSuite with Matchers {
 
   private val jdkHttpServer = """com\.sun\.net\.httpserver""".r
   private val listeningSocket = """new\s+ServerSocket\s*\(|SSLServerSocket""".r
+
+  private val streamRun =
+    """format\(\s*"memory"\s*\)|awaitTermination|Trigger\s*\.\s*AvailableNow""".r
 
   /** (file name, match count) of the Scala files under `root` (this spec
     * excluded) that `pattern` matches.
@@ -64,5 +69,10 @@ class SourceGuardSpec extends AnyFunSuite with Matchers {
     matching("src/main/scala", listeningSocket) shouldBe Seq("StubServer.scala")
     // OptionPinSpec's saturated-backlog listener never answers: not a server
     matching("src/test/scala", listeningSocket) shouldBe Seq("OptionPinSpec.scala")
+  }
+
+  test("the streaming gates start, await and sink through Streams") {
+    // scoped to the gates: the polling source names AvailableNow in its docs
+    matching("src/main/scala/graft/queries", streamRun) shouldBe Seq("Streams.scala")
   }
 }

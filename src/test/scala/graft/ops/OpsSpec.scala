@@ -715,6 +715,15 @@ class MultimodalSpec extends SparkSpec {
     out.head.getAs[Long]("n_bytes") shouldBe bytes.length.toLong
   }
 
+  test("decoding leaves the JVM-global ImageIO cache setting alone") {
+    val before = javax.imageio.ImageIO.getUseCache
+    val df = Seq((1L, Multimodal.pngFixture(3, 2, 1, 2, 3))).toDF("id", "blob")
+    Multimodal.extractMeta(df, "id", "blob").collect().head
+      .getAs[String]("format") shouldBe "png"
+    javax.imageio.ImageIO.getUseCache shouldBe before
+    before shouldBe true // the JDK default: no graft code flipped it earlier
+  }
+
   test("imageStats channel sums match the gradient fixture's closed form") {
     // r0=250, w=11 exercises the %256 wraparound (250+10 = 260 wraps to 4)
     val (w, h, r0, g0, b0) = (11, 9, 250, 3, 77)
