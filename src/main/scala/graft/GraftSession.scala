@@ -114,13 +114,12 @@ object GraftSession {
       .start()
     try {
       import graft.http._
-      val exchanges = (0 until HttpClientFactory.ClientShards).map(i =>
-        new HttpExchange(
-          HttpClientFactory.shared(HttpClientFactory.ClientConfig(), i),
-          Nil, RequestCallback.NoOp, StatusPolicy(_ => true),
-          FixedDelayRetry(0, 0L), 30000L))
-      (0 until 200).foreach(i => HttpExchange.await(
-        exchanges(i % exchanges.size).send("GET", warmSrv.url("/warm"), None)))
+      val exchange = new HttpExchange(
+        HttpClientFactory.shared(HttpClientFactory.ClientConfig()),
+        Nil, RequestCallback.NoOp, StatusPolicy(_ => true),
+        FixedDelayRetry(0, 0L), 30000L)
+      (0 until 200).foreach(_ => HttpExchange.await(
+        exchange.send("GET", warmSrv.url("/warm"), None)))
     } finally warmSrv.stop()
   }
 }

@@ -7,7 +7,7 @@ import java.time.Duration
 /** JDK `java.net.http.HttpClient` factory (reference:
   * `utils/JavaNetHttpClientFactory.java`, `utils/ProxyConfig.java`):
   * connect timeout, HTTP version, optional authenticated proxy, and the
-  * [[Ssl]] context. One client per executor per config — clients are
+  * [[Ssl]] context. One client per JVM per config — clients are
   * thread-safe and pooled by the JDK.
   */
 object HttpClientFactory {
@@ -35,21 +35,18 @@ object HttpClientFactory {
   }
 
   private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(ClientConfig, Int), HttpClient]()
+    new java.util.concurrent.ConcurrentHashMap[ClientConfig, HttpClient]()
 
-  /** Per-executor cached client for a config (JDK clients hold a connection
-    * pool; one per distinct config per JVM keeps sockets bounded at scale).
-    * Sharded: each JDK HttpClient multiplexes ALL its requests through a
-    * single selector thread, so high-fanout operators spread tasks over a
-    * small client pool. The shard count predates the async exchange and
-    * has not been re-measured under it; the per-client ceiling it was
-    * sized for is unconfirmed (ROADMAP item 6 re-measures req/s against
-    * the shard count).
+  /** The JVM's one client for a config. A JDK client multiplexes every
+    * request through one selector thread and keeps its own connection
+    * pool, so one client per distinct config keeps threads and sockets
+    * flat however many tasks share it. One client is no slower than
+    * eight: `graft.tools.ConnStorm` warm against the loopback stub, 4-vCPU
+    * host, median of three runs per point, req/s at in-flight 4 / 16 / 64
+    * = 19.5k / 20.6k / 19.0k with 1 client, 15.1k / 17.7k / 17.3k with 8.
     */
-  val ClientShards = 8
-
-  def shared(cfg: ClientConfig, shard: Int): HttpClient =
-    cache.computeIfAbsent((cfg, shard % ClientShards), c => build(c._1))
+  def shared(cfg: ClientConfig): HttpClient =
+    cache.computeIfAbsent(cfg, build(_))
 
   def build(cfg: ClientConfig): HttpClient = {
     val b = HttpClient.newBuilder()

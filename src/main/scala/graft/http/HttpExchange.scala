@@ -266,17 +266,15 @@ final case class HttpEndpoint(
     callbackName,
     RequestCallback.Level.parse(options.str(HttpOptions.LoggingLevel, "MIN")))
 
-  /** Executor-side: the shared client for this config and `shard`, the
-    * headers rendered once (OIDC token via the per-executor manager).
+  /** Executor-side: the shared client for this config, the headers
+    * rendered once (OIDC token via the per-executor manager).
     */
   def exchange(
       policy: StatusPolicy,
       retry: RetryPolicy,
       timeoutMs: Long,
-      contentType: Option[String] = None,
-      shard: Int = 0): HttpExchange = {
-    val client =
-      HttpClientFactory.shared(HttpClientFactory.ClientConfig.fromOptions(options), shard)
+      contentType: Option[String] = None): HttpExchange = {
+    val client = HttpClientFactory.shared(HttpClientFactory.ClientConfig.fromOptions(options))
     val oidc = options.strOpt(HttpOptions.OidcTokenRequest).map { tokenReq =>
       val mgr = OidcManagers.shared(
         client,

@@ -64,13 +64,16 @@ object HttpLookup {
       continueOnError: Boolean,
       cacheMissingKey: Boolean) {
 
-    /** Executor-side exchange, client shard = the task's partition. */
-    def exchange(): HttpExchange = endpoint.exchange(
-      policy,
-      retryPolicy,
-      requestTimeoutMs,
-      contentType,
-      shard = Option(org.apache.spark.TaskContext.get()).map(_.partitionId()).getOrElse(0))
+    /** The task's exchange on the config's shared client, opened at first
+      * use and cancelled when the task ends. Each task deserializes its own
+      * copy of this config, so the exchange is per task, also where the
+      * state-cached lookup calls in once per key.
+      */
+    @transient lazy val exchange: HttpExchange = {
+      val ex = endpoint.exchange(policy, retryPolicy, requestTimeoutMs, contentType)
+      HttpExchange.onTaskEnd(ex.cancelAll())
+      ex
+    }
 
     def cacheable(oc: HttpOutcome): Boolean =
       oc.state == CompletionState.Success ||
@@ -183,13 +186,10 @@ object HttpLookup {
     // partition, which would serialize all the I/O onto a single task —
     // spread the requests explicitly: latency-bound work wants parallelism
     // by request count, not by data size.
-    val ioPartitions = o.int(
-      HttpOptions.LookupPartitions,
-      probe.sparkSession.sparkContext.defaultParallelism)
     val ioInput =
       if (dedupKeys)
         staged.select(col(ReqUrl), col(ReqBody)).distinct()
-          .repartition(ioPartitions)
+          .repartition(probe.sparkSession.sparkContext.defaultParallelism)
       else staged
 
     val urlIdx = ioInput.schema.fieldIndex(ReqUrl)
@@ -294,7 +294,7 @@ object HttpLookup {
               val body = buffered.headOption
                 .map(r => rowBody(r, bodyIdx)).orNull
               val outcome = HttpExchange.await(
-                io.exchange().send(io.method, key._1, Option(body)))
+                io.exchange.send(io.method, key._1, Option(body)))
               if (io.cacheable(outcome)) {
                 state.update(CachedLookup(
                   Option(outcome.status).map(_.intValue),
@@ -510,8 +510,7 @@ object HttpLookup {
       io: IoConfig,
       urlIdx: Int,
       bodyIdx: Int): Iterator[Row] = {
-    val exchange = io.exchange()
-    HttpExchange.onTaskEnd(exchange.cancelAll())
+    val exchange = io.exchange
     // one cache per distinct lookup configuration
     val o = io.endpoint.options
     val cache = LookupCache.shared(o.options.toSeq.sorted.mkString("|"), o)

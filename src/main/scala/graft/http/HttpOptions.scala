@@ -148,13 +148,6 @@ object HttpOptions {
     */
   val DedupKeys = "http.source.lookup.dedup-keys"
 
-  /** Task parallelism for the deduped I/O stage (default: the session's
-    * defaultParallelism). Latency-bound lookups want parallelism by
-    * request count, not by data size — AQE would coalesce the byte-tiny
-    * distinct-keys shuffle to one task otherwise.
-    */
-  val LookupPartitions = "http.source.lookup.partitions"
-
   /** PEM/DER trust material (comma-separated paths) added on top of the
     * keystore/defaults (reference: `HttpConnectorConfigConstants`
     * SERVER_TRUSTED_CERT / CLIENT_CERT / CLIENT_PRIVATE_KEY).

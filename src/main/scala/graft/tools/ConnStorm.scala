@@ -9,6 +9,9 @@ import graft.http.testkit.StubServer
 
 /** Pure-JDK microbenchmark: request throughput vs in-flight bound against the
   * stub server, no Spark involved. Isolates connection-ramp cost.
+  * `STORM_CLIENTS` (default 1, the one client per config graft runs) sets
+  * how many clients share the requests, `STORM_INFLIGHT` (default 512) the
+  * in-flight bound.
   */
 object ConnStorm {
   def main(args: Array[String]): Unit = {
@@ -18,7 +21,7 @@ object ConnStorm {
     val url = server.url("/ping")
 
     def storm(label: String, inflight: Int, total: Int): Unit = {
-      val nClients = sys.env.getOrElse("STORM_CLIENTS", "8").toInt
+      val nClients = sys.env.getOrElse("STORM_CLIENTS", "1").toInt
       val clients = (0 until nClients)
         .map(_ => HttpClientFactory.build(HttpClientFactory.ClientConfig()))
       val pool = Executors.newFixedThreadPool(inflight)

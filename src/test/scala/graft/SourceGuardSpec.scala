@@ -29,6 +29,8 @@ class SourceGuardSpec extends AnyFunSuite with Matchers {
   private val jdkHttpServer = """com\.sun\.net\.httpserver""".r
   private val listeningSocket = """new\s+ServerSocket\s*\(|SSLServerSocket""".r
 
+  private val jdkClient = """HttpClient\s*\.\s*(newBuilder|newHttpClient)\b""".r
+
   private val streamRun =
     """format\(\s*"memory"\s*\)|awaitTermination|Trigger\s*\.\s*AvailableNow""".r
 
@@ -69,6 +71,12 @@ class SourceGuardSpec extends AnyFunSuite with Matchers {
     matching("src/main/scala", listeningSocket) shouldBe Seq("StubServer.scala")
     // OptionPinSpec's saturated-backlog listener never answers: not a server
     matching("src/test/scala", listeningSocket) shouldBe Seq("OptionPinSpec.scala")
+  }
+
+  test("every JDK HttpClient is built by HttpClientFactory") {
+    // one client per config: a sharded or per-call client would add
+    // selector threads and connection pools behind the factory's back
+    matching("src/main/scala", jdkClient) shouldBe Seq("HttpClientFactory.scala")
   }
 
   test("the streaming gates start, await and sink through Streams") {

@@ -197,6 +197,28 @@ class HttpLookupSpec extends SparkSpec with BeforeAndAfterAll {
     } finally srv.stop()
   }
 
+  test("one JDK client per config: a 4-partition lookup starts one selector thread") {
+    import scala.jdk.CollectionConverters._
+    val selector = """HttpClient-\d+-SelectorManager""".r
+    def selectors(): Set[String] = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && selector.matches(t.getName)).map(_.getName).toSet
+    val before = selectors()
+    HttpLookup
+      .join(
+        probe.repartition(4),
+        Seq("id"),
+        userSchema,
+        Map(
+          "url" -> server.url("/user"),
+          // a connect timeout no other spec sets: a config with no client yet
+          "http.source.lookup.connection.timeout" -> "17 s",
+          "http.source.lookup.ignored-response-codes" -> "404"))
+      .count() shouldBe 3L
+    // names carry the client's id, so a client collected meanwhile cannot
+    // hide a new one
+    (selectors() -- before).size shouldBe 1
+  }
+
   test("POST body lookup (keys as JSON body)") {
     val out = HttpLookup
       .join(

@@ -414,8 +414,7 @@ class OptionPinSpec extends SparkSpec with BeforeAndAfterAll {
           userSchema,
           Map(
             "url" -> server.url("/u"),
-            "http.source.lookup.dedup-keys" -> "true",
-            "http.source.lookup.partitions" -> "2"))
+            "http.source.lookup.dedup-keys" -> "true"))
         .count() shouldBe 12L
       server.requests.count(_.path == "/u") shouldBe 2
     } finally server.stop()

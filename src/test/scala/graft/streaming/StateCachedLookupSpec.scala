@@ -11,7 +11,7 @@ import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
 
 import graft.SparkSpec
-import graft.http.HttpLookup
+import graft.http.{HeaderPreprocessor, HeaderValuePreprocessor, HttpLookup}
 import graft.http.testkit.StubServer
 
 /** [[HttpLookup.joinStateCached]]: the lookup cache lives in the streaming
@@ -279,6 +279,40 @@ class StateCachedLookupSpec extends SparkSpec with BeforeAndAfterAll {
     }
   }
 
+  test("one exchange per task: headers render per task, not per fetched key") {
+    implicit val sqlCtx = spark.sqlContext
+    val ckpt = Files.createTempDirectory("graft-state-lookup-tasks").toString
+    hits.set(0)
+    StateCachedLookupSpec.renders.set(0)
+
+    val input = MemoryStream[(Long, String)]
+    input.addData((1 to 20).map(i => (i.toLong, i.toString)): _*)
+    val sink = new ConcurrentHashMap[Long, String]()
+    val q = HttpLookup.joinStateCached(
+      input.toDF().toDF("event", "id"),
+      keyCols = Seq("id"),
+      responseSchema = responseSchema,
+      options = options("10 min") + ("http.source.lookup.header.X-Trace" -> "t"),
+      headerPreprocessors = Seq(
+        HeaderPreprocessor("X-Trace", StateCachedLookupSpec.CountingRender)))
+      .writeStream
+      .outputMode("append")
+      .option("checkpointLocation", ckpt)
+      .foreachBatch { (df: DataFrame, _: Long) =>
+        df.collect().foreach(r => sink.put(r.getLong(0), r.getString(2)))
+      }
+      .start()
+    try {
+      awaitEvents(q, sink, (1L to 20L): _*)
+      hits.get() shouldBe 20
+      // every fetch came in the first batch, whose state operator runs one
+      // task per shuffle partition; later batches fetch nothing
+      StateCachedLookupSpec.renders.get() should be >= 1
+      StateCachedLookupSpec.renders.get() should be <=
+        spark.conf.get("spark.sql.shuffle.partitions").toInt
+    } finally q.stop()
+  }
+
   test("expire-after-write forces a re-fetch once the entry is stale") {
     implicit val sqlCtx = spark.sqlContext
     val ckpt = Files.createTempDirectory("graft-state-lookup-ttl").toString
@@ -296,5 +330,18 @@ class StateCachedLookupSpec extends SparkSpec with BeforeAndAfterAll {
       awaitEvents(q, sink, 2L)
       hits.get() shouldBe 2
     } finally q.stop()
+  }
+}
+
+object StateCachedLookupSpec {
+
+  /** Header renders: the chain runs once per opened exchange. */
+  val renders = new AtomicInteger()
+
+  object CountingRender extends HeaderValuePreprocessor {
+    def preprocess(rawValue: String): String = {
+      renders.incrementAndGet()
+      rawValue
+    }
   }
 }

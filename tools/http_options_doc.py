@@ -88,22 +88,37 @@ def find_defaults(const, key):
     return "—"
 
 
+KEY_LITERAL = r'"((?:http\.|lookup|sink\.|url|format|insert-|asyncPolling)[^"]*)"'
+
+
 def gate_map():
-    """option key -> sorted gate names that set it in HttpQueries.scala."""
+    """option key -> sorted gate names that set it in HttpQueries.scala,
+    directly or through an object-level option helper the gate names
+    (`lookupBase`, `cachedLookup`, ...), followed transitively."""
     text = GATES.read_text()
-    blocks = {}
+    blocks, helpers = {}, {}
     current = None
     for line in text.splitlines():
         m = re.match(r'\s*"([a-z0-9_]+)" -> \{', line)
+        h = re.match(r'  (?:private(?:\[\w+\])? )?(?:lazy )?(?:val|def) (\w+)', line)
         if m:
-            current = m.group(1)
-            blocks[current] = []
-        elif current is not None:
-            blocks[current].append(line)
+            current = blocks.setdefault(m.group(1), [])
+        elif h:
+            current = helpers.setdefault(h.group(1), [])
+        if current is not None:
+            current.append(line)
+    helpers = {name: "\n".join(lines) for name, lines in helpers.items()}
+
+    def keys(body, seen):
+        found = set(re.findall(KEY_LITERAL, body))
+        for name, hbody in helpers.items():
+            if name not in seen and re.search(r"\b" + name + r"\b", body):
+                found |= keys(hbody, seen | {name})
+        return found
+
     bykey = {}
     for gate, lines in blocks.items():
-        body = "\n".join(lines)
-        for key in re.findall(r'"((?:http\.|lookup|sink\.|url|format|insert-|asyncPolling)[^"]*)"', body):
+        for key in keys("\n".join(lines), frozenset()):
             bykey.setdefault(key, set()).add(gate)
     return bykey
 
