@@ -114,10 +114,8 @@ object GraftSession {
       .start()
     try {
       import graft.http._
-      val exchange = new HttpExchange(
-        HttpClientFactory.shared(HttpClientFactory.ClientConfig()),
-        Nil, RequestCallback.NoOp, StatusPolicy(_ => true),
-        FixedDelayRetry(0, 0L), 30000L)
+      val exchange =
+        HttpEndpoint(StatusPolicy(_ => true), FixedDelayRetry(0, 0L), 30000L).exchange()
       (0 until 200).foreach(_ => HttpExchange.await(
         exchange.send("GET", warmSrv.url("/warm"), None)))
     } finally warmSrv.stop()

@@ -41,9 +41,9 @@ final case class HeaderPreprocessor(
   * `preprocessor/ComposeHeaderPreprocessor.java`): every preprocessor whose
   * header name matches is applied IN ORDER to that header's value. The
   * standard connector chain ([[HeaderPreprocessors.render]]) — Basic-auth
-  * transformation on `Authorization`, then the OIDC bearer override — is
-  * shared by the lookup source, the batch sink and the streaming
-  * ForeachWriter, and callers extend it by passing extra preprocessors.
+  * transformation on `Authorization`, then the caller's preprocessors — is
+  * shared by every HTTP surface through [[HttpEndpoint]], and callers
+  * extend it by passing extra preprocessors.
   */
 object HeaderPreprocessors {
 
@@ -58,26 +58,18 @@ object HeaderPreprocessors {
         .foldLeft(value)((acc, e) => e.preprocessor.preprocess(acc))
     }
 
-  /** The connector's standard chain: caller preprocessors compose AFTER the
-    * Basic-auth step; the OIDC bearer (when configured) then overrides any
-    * `Authorization` header entirely (docs: "Http headers" note).
+  /** The connector's standard static chain: caller preprocessors compose
+    * AFTER the Basic-auth step. An OIDC bearer, when configured, replaces
+    * any `Authorization` header per request ([[HttpExchange]]; docs: "Http
+    * headers" note).
     */
   def render(
       headers: Seq[(String, String)],
       useRawAuthHeader: Boolean,
-      oidcToken: Option[() => String],
-      extra: Seq[HeaderPreprocessor] = Nil): Seq[(String, String)] = {
-    val chain = HeaderPreprocessor(
+      extra: Seq[HeaderPreprocessor] = Nil): Seq[(String, String)] =
+    compose(HeaderPreprocessor(
       "Authorization",
-      BasicAuthHeaderValuePreprocessor(useRawAuthHeader)) +: extra
-    val processed = compose(chain)(headers)
-    oidcToken match {
-      case Some(token) =>
-        processed.filterNot(_._1.equalsIgnoreCase("Authorization")) :+
-          ("Authorization" -> ("Bearer " + token()))
-      case None => processed
-    }
-  }
+      BasicAuthHeaderValuePreprocessor(useRawAuthHeader)) +: extra)(headers)
 }
 
 /** OIDC access-token manager (reference: `auth/OidcAccessTokenManager.java:
@@ -121,23 +113,27 @@ final class OidcTokenManager(
   }
 }
 
+/** Parsed OIDC settings (`http.security.oidc.token.*`): the token request
+  * body, the token endpoint and the expiry reduction.
+  */
+final case class OidcConfig(
+    tokenRequest: String,
+    endpointUrl: String,
+    expiryReductionMs: Long)
+
 /** Per-executor OIDC token manager registry (one manager per endpoint+request
   * so the cached token is shared by all tasks on the executor).
   */
 object OidcManagers {
   private val instances =
     new java.util.concurrent.ConcurrentHashMap[String, OidcTokenManager]()
-  def shared(
-      client: HttpClient,
-      tokenRequest: String,
-      endpoint: String,
-      expiryReductionMs: Long): OidcTokenManager =
+  def shared(client: HttpClient, cfg: OidcConfig): OidcTokenManager =
     instances.computeIfAbsent(
-      endpoint + "\u0000" + tokenRequest,
+      cfg.endpointUrl + "\u0000" + cfg.tokenRequest,
       _ =>
         new OidcTokenManager(
           client,
-          tokenRequest,
-          endpoint,
-          Duration.ofMillis(expiryReductionMs)))
+          cfg.tokenRequest,
+          cfg.endpointUrl,
+          Duration.ofMillis(cfg.expiryReductionMs)))
 }

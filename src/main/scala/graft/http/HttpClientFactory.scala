@@ -26,7 +26,8 @@ object HttpClientFactory {
     def fromOptions(o: HttpOptions): ClientConfig = ClientConfig(
       connectTimeoutMs =
         o.strOpt(HttpOptions.ConnectionTimeout).map(HttpOptions.parseDurationMs),
-      httpVersion = o.strOpt(HttpOptions.HttpVersion),
+      // validated here, where the query is defined
+      httpVersion = o.strOpt(HttpOptions.HttpVersion).map { v => version(v); v },
       proxyHost = o.strOpt(HttpOptions.ProxyHost),
       proxyPort = o.strOpt(HttpOptions.ProxyPort).map(_.toInt),
       proxyUsername = o.strOpt(HttpOptions.ProxyUsername),
@@ -56,12 +57,7 @@ object HttpClientFactory {
     // sequential on loopback). The reference exposes the same escape hatch
     // (`http.source.lookup.http-version`) for 1.1-only endpoints; we just
     // flip the default — set HTTP_2 explicitly for h2 services.
-    cfg.httpVersion.getOrElse("HTTP_1_1") match {
-      case "HTTP_1_1" => b.version(HttpClient.Version.HTTP_1_1)
-      case "HTTP_2" => b.version(HttpClient.Version.HTTP_2)
-      case other =>
-        throw new HttpConfigException(s"Unknown http version '$other'")
-    }
+    b.version(version(cfg.httpVersion.getOrElse("HTTP_1_1")))
     for (host <- cfg.proxyHost; port <- cfg.proxyPort) {
       b.proxy(ProxySelector.of(new InetSocketAddress(host, port)))
       for (user <- cfg.proxyUsername; pass <- cfg.proxyPassword)
@@ -72,5 +68,11 @@ object HttpClientFactory {
     }
     Ssl.contextFor(cfg.ssl).foreach(b.sslContext)
     b.build()
+  }
+
+  private def version(name: String): HttpClient.Version = name match {
+    case "HTTP_1_1" => HttpClient.Version.HTTP_1_1
+    case "HTTP_2" => HttpClient.Version.HTTP_2
+    case other => throw new HttpConfigException(s"Unknown http version '$other'")
   }
 }

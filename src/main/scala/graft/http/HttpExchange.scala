@@ -80,8 +80,11 @@ object StatusPolicy {
   * and streaming sinks and the polling source (reference:
   * `retry/HttpClientWithRetry.java`,
   * `table/lookup/JavaNetHttpPollingClient.java`,
-  * `sink/httpclient/JavaNetSinkHttpClient.java`). [[send]] builds the
-  * request, fires the [[RequestCallback]], and returns a future outcome:
+  * `sink/httpclient/JavaNetSinkHttpClient.java`), opened from an
+  * [[HttpEndpoint]]. Its static header chain renders once per exchange; the
+  * OIDC bearer is asked for once per request, so a long-lived exchange
+  * follows the token's refresh. [[send]] builds the request, fires the
+  * [[RequestCallback]], and returns a future outcome:
   *   - success codes → SUCCESS (body kept)
   *   - ignored codes → IGNORE_STATUS_CODE (body dropped)
   *   - retry codes / IOException → retried per [[RetryPolicy]] after a
@@ -92,63 +95,44 @@ object StatusPolicy {
   * [[cancelAll]]) aborts the attempt on the wire and stops retries.
   */
 final class HttpExchange(
+    endpoint: HttpEndpoint,
     client: HttpClient,
-    headers: Seq[(String, String)],
-    callback: RequestCallback,
-    policy: StatusPolicy,
-    retry: RetryPolicy,
-    timeoutMs: Long,
-    contentType: Option[String] = None,
     delay: Long => Executor = HttpExchange.delayed) {
+  import endpoint.{contentType, policy, retry, timeoutMs}
+
+  private val callback = endpoint.callback
+  private val bearer = endpoint.oidc.map(OidcManagers.shared(client, _))
+  // the bearer replaces any static Authorization header
+  private val headers = HeaderPreprocessors
+    .render(endpoint.headers, endpoint.useRawAuthHeader, endpoint.preprocessors)
+    .filterNot(h => bearer.isDefined && h._1.equalsIgnoreCase("Authorization"))
 
   private val open = java.util.concurrent.ConcurrentHashMap
     .newKeySet[CompletableFuture[HttpOutcome]]()
 
+  /** Send one request. The body goes to the wire as the bytes given (text
+    * bodies are their UTF-8 encoding); the [[RequestCallback]] gets its
+    * text, decoded at most once per request and only for a callback that
+    * [[RequestCallback.wantsBody wants it]].
+    */
   def send(
       method: String,
       url: String,
-      body: Option[String],
-      extraHeaders: Seq[(String, String)] = Nil): CompletableFuture[HttpOutcome] =
-    dispatch(
-      method,
-      url,
-      body.fold(HttpRequest.BodyPublishers.noBody())(HttpRequest.BodyPublishers.ofString),
-      () => body,
-      extraHeaders)
-
-  /** [[send]] for a body that is already UTF-8 bytes (the sink's batches):
-    * the bytes go to the wire as they are, and the [[RequestCallback]] gets
-    * their text, decoded at most once per request and only for a callback
-    * that [[RequestCallback.wantsBody wants it]].
-    */
-  def sendBytes(
-      method: String,
-      url: String,
-      body: Array[Byte],
-      extraHeaders: Seq[(String, String)] = Nil): CompletableFuture[HttpOutcome] =
-    dispatch(
-      method,
-      url,
-      HttpRequest.BodyPublishers.ofByteArray(body),
-      () => Some(new String(body, StandardCharsets.UTF_8)),
-      extraHeaders)
-
-  private def dispatch(
-      method: String,
-      url: String,
-      publisher: HttpRequest.BodyPublisher,
-      bodyText: () => Option[String],
-      extraHeaders: Seq[(String, String)]): CompletableFuture[HttpOutcome] = {
+      body: Option[Array[Byte]],
+      extraHeaders: Seq[(String, String)] = Nil): CompletableFuture[HttpOutcome] = {
     val b = HttpRequest
       .newBuilder()
       .uri(URI.create(url))
       .timeout(Duration.ofMillis(timeoutMs))
     contentType.foreach(b.header("Content-Type", _))
     headers.foreach { case (k, v) => b.header(k, v) }
+    bearer.foreach(m => b.header("Authorization", "Bearer " + m.authenticate()))
     // setHeader: a per-request header (the sink's idempotency key) REPLACES
     // any same-named static header instead of doubling it
     extraHeaders.foreach { case (k, v) => b.setHeader(k, v) }
-    val call = new Call(b.method(method, publisher).build(), method, url, bodyText)
+    val publisher = body.fold(HttpRequest.BodyPublishers.noBody())(
+      HttpRequest.BodyPublishers.ofByteArray)
+    val call = new Call(b.method(method, publisher).build(), method, url, body)
     open.add(call.result)
     HttpExchange.pending.incrementAndGet()
     call.result.whenComplete { (_, _) =>
@@ -166,14 +150,14 @@ final class HttpExchange(
       req: HttpRequest,
       method: String,
       url: String,
-      bodyText: () => Option[String]) {
+      body: Option[Array[Byte]]) {
     val result = new CompletableFuture[HttpOutcome]()
-    private lazy val body = bodyText()
+    private lazy val bodyText = body.map(new String(_, StandardCharsets.UTF_8))
 
     def attempt(n: Int): Unit =
       try {
         if (!result.isDone) {
-          callback.onRequest(method, url, if (callback.wantsBody) body else None)
+          callback.onRequest(method, url, if (callback.wantsBody) bodyText else None)
           val wire = client.sendAsync(req, HttpResponse.BodyHandlers.ofString())
           result.whenComplete((_, _) => if (result.isCancelled) wire.cancel(true))
           wire.whenComplete((resp, err) =>
@@ -249,64 +233,77 @@ object HttpExchange {
     resp.headers().map().asScala.map { case (k, v) => k -> v.asScala.toSeq }.toMap
 }
 
-/** Options → the connection half shared by every HTTP surface: the JDK
-  * client, the header chain (Basic → caller preprocessors → OIDC bearer,
-  * [[HeaderPreprocessors.render]]) and the named [[RequestCallback]].
-  * Built where the query is defined (an unknown callback fails there),
-  * opened into an [[HttpExchange]] on the executor.
+/** The one parsed description of an HTTP exchange, shared by every surface
+  * as the reference's lookup source and sink share their request machinery:
+  * client config, static headers and preprocessors, OIDC settings, the
+  * named [[RequestCallback]], [[StatusPolicy]], [[RetryPolicy]], timeout and
+  * content type. The factories parse it where the query is defined, so a
+  * bad option or an unknown callback fails there; executors open it with
+  * [[exchange]], which reads no option.
   */
 final case class HttpEndpoint(
-    options: HttpOptions,
-    headers: Seq[(String, String)],
-    callbackName: String,
-    preprocessors: Seq[HeaderPreprocessor]) {
+    policy: StatusPolicy,
+    retry: RetryPolicy,
+    timeoutMs: Long,
+    callbackName: String = "no-op",
+    loggingLevel: RequestCallback.Level = RequestCallback.Level.Min,
+    headers: Seq[(String, String)] = Nil,
+    preprocessors: Seq[HeaderPreprocessor] = Nil,
+    useRawAuthHeader: Boolean = false,
+    oidc: Option[OidcConfig] = None,
+    client: HttpClientFactory.ClientConfig = HttpClientFactory.ClientConfig(),
+    contentType: Option[String] = None) {
   callback // fail fast where the endpoint is built, like factory discovery
 
-  def callback: RequestCallback = RequestCallback.named(
-    callbackName,
-    RequestCallback.Level.parse(options.str(HttpOptions.LoggingLevel, "MIN")))
+  def callback: RequestCallback = RequestCallback.named(callbackName, loggingLevel)
 
-  /** Executor-side: the shared client for this config, the headers
-    * rendered once (OIDC token via the per-executor manager).
+  /** Executor-side: a task's exchange on the JVM's shared client for this
+    * config.
     */
-  def exchange(
-      policy: StatusPolicy,
-      retry: RetryPolicy,
-      timeoutMs: Long,
-      contentType: Option[String] = None): HttpExchange = {
-    val client = HttpClientFactory.shared(HttpClientFactory.ClientConfig.fromOptions(options))
-    val oidc = options.strOpt(HttpOptions.OidcTokenRequest).map { tokenReq =>
-      val mgr = OidcManagers.shared(
-        client,
-        tokenReq,
-        options.required(HttpOptions.OidcTokenEndpoint),
-        options.durationMs(HttpOptions.OidcExpiryReduction, 1000L))
-      () => mgr.authenticate()
-    }
-    val rendered = HeaderPreprocessors.render(
-      headers,
-      options.bool(HttpOptions.UseRawAuthHeader, default = false),
-      oidc,
-      preprocessors)
-    new HttpExchange(client, rendered, callback, policy, retry, timeoutMs, contentType)
-  }
+  def exchange(): HttpExchange =
+    new HttpExchange(this, HttpClientFactory.shared(client))
 }
 
 object HttpEndpoint {
 
+  /** The lookup join's (every lookup surface's) and the polling source's
+    * endpoint, with no content type: the lookup join sets its own.
+    */
   def lookup(o: HttpOptions, preprocessors: Seq[HeaderPreprocessor]): HttpEndpoint =
-    HttpEndpoint(
-      o,
-      o.withPrefix(HttpOptions.SourceHeaderPrefix).toSeq,
+    parse(o, preprocessors, StatusPolicy.lookup(o), RetryPolicy.fromOptions(o),
+      o.durationMs(HttpOptions.RequestTimeout, 30000L),
       o.str(HttpOptions.SourceRequestCallback, "slf4j-lookup-logger"),
-      preprocessors)
+      o.withPrefix(HttpOptions.SourceHeaderPrefix).toSeq)
 
+  /** Every sink surface's endpoint, with no content type: the sink sets its
+    * format's. A sink request is never retried: a failed request fails the
+    * task, and Spark's task retry re-sends.
+    */
   def sink(o: HttpOptions, preprocessors: Seq[HeaderPreprocessor]): HttpEndpoint =
-    HttpEndpoint(
-      o,
-      o.withPrefix(HttpOptions.SinkHeaderPrefix).toSeq,
+    parse(o, preprocessors, StatusPolicy.sink(o), FixedDelayRetry(0, 0L),
+      o.durationMs(HttpOptions.SinkRequestTimeout, 30000L),
       o.str(HttpOptions.SinkRequestCallback, "slf4j-logger"),
-      preprocessors)
+      o.withPrefix(HttpOptions.SinkHeaderPrefix).toSeq)
+
+  private def parse(
+      o: HttpOptions,
+      preprocessors: Seq[HeaderPreprocessor],
+      policy: StatusPolicy,
+      retry: RetryPolicy,
+      timeoutMs: Long,
+      callbackName: String,
+      headers: Seq[(String, String)]): HttpEndpoint =
+    HttpEndpoint(policy, retry, timeoutMs, callbackName,
+      RequestCallback.Level.parse(o.str(HttpOptions.LoggingLevel, "MIN")),
+      headers,
+      preprocessors,
+      o.bool(HttpOptions.UseRawAuthHeader, default = false),
+      o.strOpt(HttpOptions.OidcTokenRequest).map(tokenRequest =>
+        OidcConfig(
+          tokenRequest,
+          o.required(HttpOptions.OidcTokenEndpoint),
+          o.durationMs(HttpOptions.OidcExpiryReduction, 1000L))),
+      HttpClientFactory.ClientConfig.fromOptions(o))
 }
 
 /** Request/response observability hook (reference:
@@ -315,12 +312,15 @@ object HttpEndpoint {
   * threads: a first attempt's `onRequest` on the thread that calls
   * [[HttpExchange.send]] (the task thread for lookups and sink writes), a
   * retry's on the delay executor; `onResponse`/`onException` on a thread
-  * of the HTTP client. Implementations must be thread-safe.
+  * of the HTTP client. Implementations must be thread-safe. Each exchange
+  * resolves its callback by name ([[RequestCallback.named]]) when it
+  * opens, on the executor.
   */
 trait RequestCallback extends Serializable {
 
-  /** Whether [[onRequest]] reads the body. When false it gets `None`, and a
-    * byte body is never decoded to text for it.
+  /** Whether [[onRequest]] reads the body. When true it gets the request
+    * body's text, decoded from the sent bytes at most once per request;
+    * when false it gets `None`, and nothing is decoded for it.
     */
   def wantsBody: Boolean = true
   def onRequest(method: String, url: String, body: Option[String]): Unit

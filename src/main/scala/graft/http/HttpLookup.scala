@@ -1,5 +1,6 @@
 package graft.http
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.CompletableFuture
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
@@ -52,14 +53,11 @@ object HttpLookup {
   /** Emitted only by the internal `emitMatchColumn` [[join]]. */
   val MatchedColumn = "__graft_matched"
 
-  /** Serializable per-task I/O config. */
+  /** Serializable per-task I/O config, parsed where the query is defined. */
   private final case class IoConfig(
       method: String,
       endpoint: HttpEndpoint,
-      policy: StatusPolicy,
-      retryPolicy: RetryPolicy,
-      requestTimeoutMs: Long,
-      contentType: Option[String],
+      cache: Option[LookupCache.Config],
       concurrency: Int,
       continueOnError: Boolean,
       cacheMissingKey: Boolean) {
@@ -70,10 +68,14 @@ object HttpLookup {
       * state-cached lookup calls in once per key.
       */
     @transient lazy val exchange: HttpExchange = {
-      val ex = endpoint.exchange(policy, retryPolicy, requestTimeoutMs, contentType)
+      val ex = endpoint.exchange()
       HttpExchange.onTaskEnd(ex.cancelAll())
       ex
     }
+
+    /** Send one rendered request; a `null` body sends none. */
+    def send(url: String, body: String): CompletableFuture[HttpOutcome] =
+      exchange.send(method, url, Option(body).map(_.getBytes(UTF_8)))
 
     def cacheable(oc: HttpOutcome): Boolean =
       oc.state == CompletionState.Success ||
@@ -124,18 +126,15 @@ object HttpLookup {
     val endpoint = HttpEndpoint.lookup(o, headerPreprocessors)
     (staged, IoConfig(
       method = method,
-      endpoint = endpoint,
-      policy = StatusPolicy.lookup(o),
-      retryPolicy = RetryPolicy.fromOptions(o),
-      requestTimeoutMs = o.durationMs(HttpOptions.RequestTimeout, 30000L),
       // body-based lookups default to the request format's content type
       // (reference: BodyBasedRequestFactory sets application/json for the
       // bundled json format)
-      contentType =
+      endpoint =
         if (method != "GET" &&
           !endpoint.headers.exists(_._1.equalsIgnoreCase("Content-Type")))
-          Some(requestFormat.contentType)
-        else None,
+          endpoint.copy(contentType = Some(requestFormat.contentType))
+        else endpoint,
+      cache = LookupCache.config(o),
       // one ordered window of in-flight exchanges per task; the reference's
       // two async pool knobs both size it (see HttpOptions.ResponseThreadPool)
       concurrency =
@@ -293,8 +292,7 @@ object HttpLookup {
             .getOrElse {
               val body = buffered.headOption
                 .map(r => rowBody(r, bodyIdx)).orNull
-              val outcome = HttpExchange.await(
-                io.exchange.send(io.method, key._1, Option(body)))
+              val outcome = HttpExchange.await(io.send(key._1, body))
               if (io.cacheable(outcome)) {
                 state.update(CachedLookup(
                   Option(outcome.status).map(_.intValue),
@@ -510,10 +508,7 @@ object HttpLookup {
       io: IoConfig,
       urlIdx: Int,
       bodyIdx: Int): Iterator[Row] = {
-    val exchange = io.exchange
-    // one cache per distinct lookup configuration
-    val o = io.endpoint.options
-    val cache = LookupCache.shared(o.options.toSeq.sorted.mkString("|"), o)
+    val cache = io.cache.map(LookupCache.shared)
     val window =
       new java.util.ArrayDeque[(Row, CompletableFuture[HttpOutcome])](io.concurrency)
 
@@ -522,7 +517,7 @@ object HttpLookup {
       cache.flatMap(_.get(key)) match {
         case Some(hit) => CompletableFuture.completedFuture(hit)
         case None =>
-          val sent = exchange.send(io.method, url, Option(body))
+          val sent = io.send(url, body)
           cache.fold(sent)(c => sent.thenApply { oc =>
             if (io.cacheable(oc)) c.put(key, oc)
             oc

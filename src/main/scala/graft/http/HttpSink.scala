@@ -179,8 +179,6 @@ private[graft] final case class SinkRuntime(
     method: String,
     mode: String,
     batchSize: Int,
-    policy: StatusPolicy,
-    timeoutMs: Long,
     maxInflight: Int,
     endpoint: HttpEndpoint,
     idempotencyHeader: Option[String],
@@ -229,14 +227,13 @@ private[graft] object SinkRuntime {
       method = method,
       mode = mode,
       batchSize = batchSize,
-      policy = StatusPolicy.sink(o),
-      timeoutMs = o.durationMs(HttpOptions.SinkRequestTimeout, 30000L),
       maxInflight = math.max(
         1,
         math.min(
           o.int(HttpOptions.SinkMaxInflight, 4),
           o.int(HttpOptions.SinkThreadPool, 4))),
-      endpoint = HttpEndpoint.sink(o, headerPreprocessors),
+      endpoint = HttpEndpoint.sink(o, headerPreprocessors)
+        .copy(contentType = Some(format.contentType)),
       idempotencyHeader = o.strOpt(HttpOptions.SinkIdempotencyHeader),
       idempotencyNonce = o.str(HttpOptions.SinkIdempotencyNonce, ""),
       idempotencySort = o.bool(HttpOptions.SinkIdempotencySort, default = false),
@@ -276,7 +273,7 @@ private[graft] object SinkRuntime {
     * growable buffer, framed as it goes by the format's open, separator
     * and close parts ([[PayloadFormat.framing]]); a taken batch is one
     * exact-size byte array, which the idempotency key hashes and
-    * [[HttpExchange.sendBytes]] sends as it is. Requests go through the
+    * [[HttpExchange.send]] sends as it is. Requests go through the
     * writer's own [[HttpExchange]] with at most `maxInflight` on the wire;
     * the first async failure is recorded: `add` rethrows it at the next
     * send, `flush` submits the tail batch, waits for every response and
@@ -294,11 +291,7 @@ private[graft] object SinkRuntime {
       partitionId: Int) {
     import rt.{batchSize, flushBufferBytes, flushTimeoutMs, stage1MaxRows}
 
-    private val exchange = rt.endpoint.exchange(
-      rt.policy,
-      FixedDelayRetry(0, 0L),
-      rt.timeoutMs,
-      Some(rt.format.contentType))
+    private val exchange = rt.endpoint.exchange()
     private val permits = new Semaphore(rt.maxInflight)
     @volatile private var failure: Throwable = _
     private val keying = rt.idempotencyHeader.map(h =>
@@ -443,10 +436,10 @@ private[graft] object SinkRuntime {
     // this returns, the permit is the response callback's to release; if
     // it throws, the caller's.
     private def send(body: Array[Byte]): Unit =
-      exchange.sendBytes(
+      exchange.send(
         rt.method,
         rt.url,
-        body,
+        Some(body),
         keying.map { case (h, keyer) => h -> keyer.keyFor(body) }.toSeq)
         .whenComplete { (oc, err) =>
           try {

@@ -53,23 +53,36 @@ object LookupCache {
   private val instances =
     new java.util.concurrent.ConcurrentHashMap[String, LookupCache[HttpOutcome]]()
 
-  /** JVM-wide (per-executor) cache instance for a lookup config identity. */
-  def shared(id: String, o: HttpOptions): Option[LookupCache[HttpOutcome]] =
+  /** A parsed `PARTIAL` cache; `id` (the whole lookup configuration) names
+    * its JVM-wide instance.
+    */
+  final case class Config(
+      id: String,
+      maxRows: Long,
+      expireAfterWriteMs: Option[Long],
+      expireAfterAccessMs: Option[Long])
+
+  /** The `lookup.cache` options, parsed where the query is defined: `None`
+    * for `NONE`, an unknown kind fails.
+    */
+  def config(o: HttpOptions): Option[Config] =
     o.str(HttpOptions.LookupCacheKind, "NONE").toUpperCase match {
       case "NONE" => None
       case "PARTIAL" =>
-        Some(instances.computeIfAbsent(
-          id,
-          _ =>
-            new LookupCache[HttpOutcome](
-              o.long(HttpOptions.CacheMaxRows, 1000L),
-              o.strOpt(HttpOptions.CacheExpireAfterWrite)
-                .map(HttpOptions.parseDurationMs),
-              o.strOpt(HttpOptions.CacheExpireAfterAccess)
-                .map(HttpOptions.parseDurationMs))))
+        Some(Config(
+          o.options.toSeq.sorted.mkString("|"),
+          o.long(HttpOptions.CacheMaxRows, 1000L),
+          o.strOpt(HttpOptions.CacheExpireAfterWrite).map(HttpOptions.parseDurationMs),
+          o.strOpt(HttpOptions.CacheExpireAfterAccess).map(HttpOptions.parseDurationMs)))
       case other =>
         throw new HttpConfigException(s"Unknown lookup.cache kind '$other'")
     }
+
+  /** JVM-wide (per-executor) cache instance for a config. */
+  def shared(c: Config): LookupCache[HttpOutcome] =
+    instances.computeIfAbsent(
+      c.id,
+      _ => new LookupCache[HttpOutcome](c.maxRows, c.expireAfterWriteMs, c.expireAfterAccessMs))
 
   /** Test hook. */
   private[graft] def clearAll(): Unit = instances.clear()

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 
@@ -12,7 +13,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.http.{CompletionState, HttpEndpoint, HttpExchange, HttpOptions, Json, RetryPolicy, StatusPolicy}
+import graft.http.{CompletionState, HttpEndpoint, HttpExchange, HttpOptions, Json}
 
 /** Rate-polling streaming HTTP source: `spark.readStream
   * .format("graft-http-poll").option("url", …)`. Goes beyond the reference's
@@ -40,11 +41,11 @@ import graft.http.{CompletionState, HttpEndpoint, HttpExchange, HttpOptions, Jso
   *     polls) after the interval elapses, otherwise the engine sees no new
   *     data and skips the batch.
   *
-  * Reuses the lookup machinery: client/TLS, headers + auth and the named
-  * request callback via [[graft.http.HttpEndpoint]], status classification
-  * + retry via the shared [[graft.http.HttpExchange]] (reference:
-  * `JavaNetHttpPollingClient.java` semantics); each poll waits on its
-  * exchange with an interruptible get.
+  * Reuses the lookup's [[graft.http.HttpEndpoint]] (client/TLS, headers +
+  * auth, request callback, status classification, retry; reference:
+  * `JavaNetHttpPollingClient.java` semantics), parsed with the stream and
+  * opened into one exchange that it keeps; each poll waits on its exchange
+  * with an interruptible get.
   *
   * Output schema: `poll_id BIGINT, item_index INT, status INT, body STRING,
   * poll_ts TIMESTAMP`.
@@ -110,14 +111,13 @@ private[streaming] class HttpPollingMicroBatchStream(opts: Map[String, String])
   private val o = HttpOptions(opts.toSeq: _*)
   private val url = o.required(HttpOptions.Url)
   private val method = o.str(HttpOptions.LookupMethod, "GET").toUpperCase
-  private val body = o.strOpt(HttpOptions.PollBody)
+  private val body = o.strOpt(HttpOptions.PollBody).map(_.getBytes(UTF_8))
   private val splitArray = o.bool(HttpOptions.PollSplitArray, default = true)
   private val minPollIntervalMs = o.durationMs(HttpOptions.PollMinInterval, 0L)
 
-  @transient private lazy val exchange = HttpEndpoint.lookup(o, Nil).exchange(
-    StatusPolicy.lookup(o),
-    RetryPolicy.fromOptions(o),
-    o.durationMs(HttpOptions.RequestTimeout, 30000L))
+  // no content type: a POST poll sends its body bare
+  private val endpoint = HttpEndpoint.lookup(o, Nil)
+  @transient private lazy val exchange = endpoint.exchange()
 
   // poll_id -> rows fetched by that poll, evicted on commit
   private val buffered =

@@ -8,11 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 /** Keeps the session configuration, the run-metrics listener, the
-  * hashed shingle set, the HTTP server and the streaming-gate runner in one
-  * place each: every session comes from [[GraftSession]], every listener in
-  * the main sources is [[RunStats]], every hashed shingle set is
-  * `Dedup.hashedShingleSet`, every HTTP fixture runs on
-  * `testkit.StubServer`, and every streaming gate runs through
+  * hashed shingle set, the HTTP server, the exchange-option parse and the
+  * streaming-gate runner in one place each: every session comes from
+  * [[GraftSession]], every listener in the main sources is [[RunStats]],
+  * every hashed shingle set is `Dedup.hashedShingleSet`, every HTTP fixture
+  * runs on `testkit.StubServer`, every exchange option is parsed by the
+  * `HttpEndpoint` factories, and every streaming gate runs through
   * `queries.Streams`.
   */
 class SourceGuardSpec extends AnyFunSuite with Matchers {
@@ -30,6 +31,11 @@ class SourceGuardSpec extends AnyFunSuite with Matchers {
   private val listeningSocket = """new\s+ServerSocket\s*\(|SSLServerSocket""".r
 
   private val jdkClient = """HttpClient\s*\.\s*(newBuilder|newHttpClient)\b""".r
+
+  private val exchangeParse =
+    """StatusPolicy\s*\.\s*(lookup|sink)\(|(RetryPolicy|ClientConfig)\s*\.\s*fromOptions\(""".r
+
+  private val stringBody = """BodyPublishers\s*\.\s*ofString\b""".r
 
   private val streamRun =
     """format\(\s*"memory"\s*\)|awaitTermination|Trigger\s*\.\s*AvailableNow""".r
@@ -77,6 +83,17 @@ class SourceGuardSpec extends AnyFunSuite with Matchers {
     // one client per config: a sharded or per-call client would add
     // selector threads and connection pools behind the factory's back
     matching("src/main/scala", jdkClient) shouldBe Seq("HttpClientFactory.scala")
+  }
+
+  test("exchange options are parsed only by the HttpEndpoint factories") {
+    // one parsed HttpEndpoint per surface: a second parse site would let a
+    // surface drift from the others or re-read options inside a task
+    matching("src/main/scala", exchangeParse) shouldBe Seq("HttpExchange.scala")
+  }
+
+  test("HTTP request bodies go out as bytes, except the OIDC token POST") {
+    // HttpExchange.send takes bytes: a String publisher means a second path
+    matching("src/main/scala/graft/http", stringBody) shouldBe Seq("Auth.scala")
   }
 
   test("the streaming gates start, await and sink through Streams") {

@@ -109,12 +109,11 @@ class LookupCacheSpec extends AnyFunSuite with Matchers {
   }
 
   test("shared registry honors lookup.cache option") {
-    LookupCache.shared("id1", HttpOptions()) shouldBe None
-    LookupCache.shared(
-      "id1",
-      HttpOptions("lookup.cache" -> "PARTIAL")) shouldBe defined
+    LookupCache.config(HttpOptions()) shouldBe None
+    LookupCache.config(HttpOptions("lookup.cache" -> "PARTIAL"))
+      .map(LookupCache.shared) shouldBe defined
     an[HttpConfigException] should be thrownBy
-      LookupCache.shared("id2", HttpOptions("lookup.cache" -> "WAT"))
+      LookupCache.config(HttpOptions("lookup.cache" -> "WAT"))
   }
 }
 

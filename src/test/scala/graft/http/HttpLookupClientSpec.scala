@@ -30,22 +30,22 @@ class HttpLookupClientSpec
       timeoutMs: Long = 5000L): HttpExchange = {
     delays.clear()
     new HttpExchange(
+      HttpEndpoint(
+        StatusPolicy.lookup(HttpOptions(
+          HttpOptions.SuccessCodes -> success,
+          HttpOptions.RetryCodes -> retryCodes,
+          HttpOptions.IgnoredCodes -> ignored)),
+        Option(retryPolicy).getOrElse(FixedDelayRetry(maxRetries, 10L)),
+        timeoutMs = timeoutMs,
+        headers = Seq("X-Test" -> "yes")),
       HttpClient.newHttpClient(),
-      headers = Seq("X-Test" -> "yes"),
-      callback = RequestCallback.NoOp,
-      StatusPolicy.lookup(HttpOptions(
-        HttpOptions.SuccessCodes -> success,
-        HttpOptions.RetryCodes -> retryCodes,
-        HttpOptions.IgnoredCodes -> ignored)),
-      Option(retryPolicy).getOrElse(FixedDelayRetry(maxRetries, 10L)),
-      timeoutMs = timeoutMs,
       // record each retry delay and run the retry at once
       delay = ms => { delays += ms; (r: Runnable) => r.run() })
   }
 
   private implicit class Execute(ex: HttpExchange) {
     def execute(method: String, url: String, body: Option[String]): HttpOutcome =
-      HttpExchange.await(ex.send(method, url, body))
+      HttpExchange.await(ex.send(method, url, body.map(_.getBytes("UTF-8"))))
   }
 
   override def beforeAll(): Unit = {

@@ -404,6 +404,28 @@ class HttpLookupSpec extends SparkSpec with BeforeAndAfterAll {
     req.body shouldBe """{"customer": "c1", "order": "o9", "n": 7, "tag": "fixed"}"""
   }
 
+  test("a POST lookup sends a non-ASCII rendered body as its UTF-8 text") {
+    server.clear()
+    import spark.implicits._
+    val cities = Seq("Z\u00fcrich", "\u6771\u4eac") // Zurich, Tokyo
+    HttpLookup
+      .join(
+        cities.toDF("city").repartition(1),
+        Seq("city"),
+        userSchema,
+        Map(
+          "url" -> server.url("/user-post"),
+          "lookup-method" -> "POST",
+          "lookup-query-creator" -> QueryCreator.GenericJsonUrl,
+          "http.request.body-template" -> """{"id": {{city}}}""",
+          "http.source.lookup.ignored-response-codes" -> "404"),
+        includeMetadata = true)
+      .collect()
+    val posted = server.requests.filter(_.path == "/user-post")
+    posted.map(_.body) shouldBe cities.map(c => s"""{"id": "$c"}""")
+    posted.map(_.headers("Content-type")).distinct shouldBe List(List("application/json"))
+  }
+
   test("elasticsearch-lite query creator renders lucene q param") {
     server.clear()
     import spark.implicits._

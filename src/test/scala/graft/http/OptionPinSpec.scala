@@ -377,6 +377,14 @@ class OptionPinSpec extends SparkSpec with BeforeAndAfterAll {
     } finally server.stop()
   }
 
+  test("an unknown lookup.cache kind or http-version fails in join, not in a task") {
+    Seq("lookup.cache" -> "WAT", "http.source.lookup.http-version" -> "HTTP_9")
+      .foreach { bad =>
+        an[HttpConfigException] should be thrownBy HttpLookup.join(
+          oneRowProbe, Seq("id"), userSchema, Map("url" -> "http://127.0.0.1:9/u", bad))
+      }
+  }
+
   test("http.logging.level validates on the driver (fail-fast on bad levels)") {
     val server = okUsers(StubServer(), "/u").start()
     try {
@@ -452,6 +460,30 @@ class OptionPinSpec extends SparkSpec with BeforeAndAfterAll {
       Thread.sleep(3000L)
       HttpLookup.join(oneRowProbe, Seq("id"), userSchema, opts).count()
       tokenHits() shouldBe 2
+    } finally server.stop()
+  }
+
+  test("oidc bearer refreshes inside one exchange: each send asks the manager") {
+    // a long-lived exchange (the polling source keeps one per stream) must
+    // not keep sending its first token after that token expires
+    val hits = new java.util.concurrent.atomic.AtomicInteger()
+    val server = StubServer()
+      .route("/token") { _ =>
+        val n = hits.incrementAndGet()
+        (200, s"""{"access_token": "tok$n", "expires_in": 1}""")
+      }
+    okUsers(server, "/u").start()
+    try {
+      val exchange = HttpEndpoint.lookup(
+        HttpOptions(
+          "http.security.oidc.token.request" -> "grant_type=per-request",
+          "http.security.oidc.token.endpoint.url" -> server.url("/token")),
+        Nil).exchange()
+      HttpExchange.await(exchange.send("GET", server.url("/u"), None))
+      Thread.sleep(1200L)
+      HttpExchange.await(exchange.send("GET", server.url("/u"), None))
+      server.requests.filter(_.path == "/u").map(_.headers("Authorization")) shouldBe
+        List(List("Bearer tok1"), List("Bearer tok2"))
     } finally server.stop()
   }
 

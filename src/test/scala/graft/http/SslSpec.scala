@@ -65,17 +65,16 @@ class SslSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
   private def lookupClient(options: Map[String, String]): graft.http.HttpExchange = {
     val o = HttpOptions(options)
     new graft.http.HttpExchange(
-      HttpClientFactory.build(HttpClientFactory.ClientConfig.fromOptions(o)),
-      Nil,
-      RequestCallback.NoOp,
-      StatusPolicy.lookup(HttpOptions(HttpOptions.RetryCodes -> "503")),
-      FixedDelayRetry(0, 1L),
-      5000L)
+      HttpEndpoint(
+        StatusPolicy.lookup(HttpOptions(HttpOptions.RetryCodes -> "503")),
+        FixedDelayRetry(0, 1L),
+        5000L),
+      HttpClientFactory.build(HttpClientFactory.ClientConfig.fromOptions(o)))
   }
 
   private implicit class Execute(ex: graft.http.HttpExchange) {
     def execute(method: String, url: String, body: Option[String]): HttpOutcome =
-      graft.http.HttpExchange.await(ex.send(method, url, body))
+      graft.http.HttpExchange.await(ex.send(method, url, body.map(_.getBytes("UTF-8"))))
   }
 
   test("https with allowSelfSigned completes the lookup") {

@@ -90,6 +90,19 @@ class HttpPollingSourceSpec extends SparkSpec {
     } finally server.stop()
   }
 
+  test("a POST poll sends a non-ASCII body option as its UTF-8 text, untyped") {
+    val server = new StubServer().route("/search")(_ => (200, "[]")).start()
+    try {
+      val body = "{\"city\":\"Z\u00fcrich \u6771\u4eac\"}" // Zurich Tokyo
+      new HttpPollingMicroBatchStream(Map(
+        HttpOptions.Url -> server.url("/search"),
+        HttpOptions.LookupMethod -> "POST",
+        HttpOptions.PollBody -> body)).latestOffset()
+      server.requests.map(r => (r.method, r.body)) shouldBe List(("POST", body))
+      server.requests.head.headers.get("Content-type") shouldBe None
+    } finally server.stop()
+  }
+
   test("a second latestOffset inside min-poll-interval sends no request") {
     val server = new StubServer().route("/tick")(_ => (200, "[1]")).start()
     try {
