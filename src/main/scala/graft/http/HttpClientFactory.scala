@@ -9,6 +9,22 @@ import java.time.Duration
   * connect timeout, HTTP version, optional authenticated proxy, and the
   * [[Ssl]] context. One client per JVM per config — clients are
   * thread-safe and pooled by the JDK.
+  *
+  * Dispatch: a client with `selectorDispatch` runs the JDK's internal tasks
+  * inline (`executor(r => r.run())`), so it starts no `HttpClient-N-Worker`
+  * pool and parses each response on its selector thread. No graft code runs
+  * there: on JDK 17 a `sendAsync` future completes on
+  * `ForkJoinPool.commonPool` whatever the client's executor, so the
+  * exchange's settle, callbacks and cache puts stay on the common pool.
+  * Lookup clients ([[HttpEndpoint.lookup]]) dispatch on the selector: small
+  * GET answers cost less there than a hop to a worker thread. Warm
+  * `graft.tools.ConnStorm`, 4-vCPU host, pool vs selector req/s at in-flight
+  * 4 / 16 / 64: 17.0k vs 31.1k, 21.1k vs 30.6k, 20.5k vs 26.7k. Sink
+  * clients keep the JDK pool, so the ~105 KB batch bodies of every task do
+  * not all pass through the one selector thread. With every client on its
+  * selector, `sink_batch` (4-vCPU hosts, 2 Spark cores) fell 15–25% in 5 of
+  * 6 pairs in one session (e.g. 1.69M → 1.29M rows/s) and moved by no more
+  * than its run-to-run spread over 9 pairs in another.
   */
 object HttpClientFactory {
 
@@ -19,7 +35,9 @@ object HttpClientFactory {
       proxyPort: Option[Int] = None,
       proxyUsername: Option[String] = None,
       proxyPassword: Option[String] = None,
-      ssl: Ssl.SslConfig = Ssl.SslConfig())
+      ssl: Ssl.SslConfig = Ssl.SslConfig(),
+      // not an option: set by the surface (lookup clients), see above
+      selectorDispatch: Boolean = false)
       extends Serializable
 
   object ClientConfig {
@@ -58,6 +76,7 @@ object HttpClientFactory {
     // (`http.source.lookup.http-version`) for 1.1-only endpoints; we just
     // flip the default — set HTTP_2 explicitly for h2 services.
     b.version(version(cfg.httpVersion.getOrElse("HTTP_1_1")))
+    if (cfg.selectorDispatch) b.executor((r: Runnable) => r.run())
     for (host <- cfg.proxyHost; port <- cfg.proxyPort) {
       b.proxy(ProxySelector.of(new InetSocketAddress(host, port)))
       for (user <- cfg.proxyUsername; pass <- cfg.proxyPassword)

@@ -257,6 +257,13 @@ final case class HttpEndpoint(
 
   def callback: RequestCallback = RequestCallback.named(callbackName, loggingLevel)
 
+  /** This endpoint sending `ct` as its Content-Type unless a Content-Type
+    * header is configured, so a request carries exactly one.
+    */
+  def withDefaultContentType(ct: String): HttpEndpoint =
+    if (headers.exists(_._1.equalsIgnoreCase("Content-Type"))) this
+    else copy(contentType = Some(ct))
+
   /** Executor-side: a task's exchange on the JVM's shared client for this
     * config.
     */
@@ -267,23 +274,27 @@ final case class HttpEndpoint(
 object HttpEndpoint {
 
   /** The lookup join's (every lookup surface's) and the polling source's
-    * endpoint, with no content type: the lookup join sets its own.
+    * endpoint, with no content type: the lookup join sets its own. Its
+    * client dispatches on its selector (see [[HttpClientFactory]]).
     */
   def lookup(o: HttpOptions, preprocessors: Seq[HeaderPreprocessor]): HttpEndpoint =
     parse(o, preprocessors, StatusPolicy.lookup(o), RetryPolicy.fromOptions(o),
       o.durationMs(HttpOptions.RequestTimeout, 30000L),
       o.str(HttpOptions.SourceRequestCallback, "slf4j-lookup-logger"),
-      o.withPrefix(HttpOptions.SourceHeaderPrefix).toSeq)
+      o.withPrefix(HttpOptions.SourceHeaderPrefix).toSeq,
+      HttpClientFactory.ClientConfig.fromOptions(o).copy(selectorDispatch = true))
 
   /** Every sink surface's endpoint, with no content type: the sink sets its
     * format's. A sink request is never retried: a failed request fails the
-    * task, and Spark's task retry re-sends.
+    * task, and Spark's task retry re-sends. Its client keeps the JDK's
+    * worker pool.
     */
   def sink(o: HttpOptions, preprocessors: Seq[HeaderPreprocessor]): HttpEndpoint =
     parse(o, preprocessors, StatusPolicy.sink(o), FixedDelayRetry(0, 0L),
       o.durationMs(HttpOptions.SinkRequestTimeout, 30000L),
       o.str(HttpOptions.SinkRequestCallback, "slf4j-logger"),
-      o.withPrefix(HttpOptions.SinkHeaderPrefix).toSeq)
+      o.withPrefix(HttpOptions.SinkHeaderPrefix).toSeq,
+      HttpClientFactory.ClientConfig.fromOptions(o))
 
   private def parse(
       o: HttpOptions,
@@ -292,7 +303,8 @@ object HttpEndpoint {
       retry: RetryPolicy,
       timeoutMs: Long,
       callbackName: String,
-      headers: Seq[(String, String)]): HttpEndpoint =
+      headers: Seq[(String, String)],
+      client: HttpClientFactory.ClientConfig): HttpEndpoint =
     HttpEndpoint(policy, retry, timeoutMs, callbackName,
       RequestCallback.Level.parse(o.str(HttpOptions.LoggingLevel, "MIN")),
       headers,
@@ -303,7 +315,7 @@ object HttpEndpoint {
           tokenRequest,
           o.required(HttpOptions.OidcTokenEndpoint),
           o.durationMs(HttpOptions.OidcExpiryReduction, 1000L))),
-      HttpClientFactory.ClientConfig.fromOptions(o))
+      client)
 }
 
 /** Request/response observability hook (reference:
@@ -311,10 +323,12 @@ object HttpEndpoint {
   * `HttpLogger` levels MIN/REQ_RESP/MAX). Hooks run on the exchange's
   * threads: a first attempt's `onRequest` on the thread that calls
   * [[HttpExchange.send]] (the task thread for lookups and sink writes), a
-  * retry's on the delay executor; `onResponse`/`onException` on a thread
-  * of the HTTP client. Implementations must be thread-safe. Each exchange
-  * resolves its callback by name ([[RequestCallback.named]]) when it
-  * opens, on the executor.
+  * retry's on the delay executor; `onResponse`/`onException` on the
+  * `ForkJoinPool.commonPool` thread that completes the JDK client's
+  * future (or on the sending thread, when that future has already
+  * completed), never on the client's selector. Implementations must be
+  * thread-safe. Each exchange resolves its callback by name
+  * ([[RequestCallback.named]]) when it opens, on the executor.
   */
 trait RequestCallback extends Serializable {
 

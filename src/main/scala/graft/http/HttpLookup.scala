@@ -130,13 +130,11 @@ object HttpLookup {
       // (reference: BodyBasedRequestFactory sets application/json for the
       // bundled json format)
       endpoint =
-        if (method != "GET" &&
-          !endpoint.headers.exists(_._1.equalsIgnoreCase("Content-Type")))
-          endpoint.copy(contentType = Some(requestFormat.contentType))
+        if (method != "GET") endpoint.withDefaultContentType(requestFormat.contentType)
         else endpoint,
       cache = LookupCache.config(o),
-      // one ordered window of in-flight exchanges per task; the reference's
-      // two async pool knobs both size it (see HttpOptions.ResponseThreadPool)
+      // wire requests in flight per task; the reference's two async pool
+      // knobs both size it (see HttpOptions.ResponseThreadPool)
       concurrency =
         if (o.bool(HttpOptions.AsyncPolling, default = false)) {
           val req = o.int(HttpOptions.RequestThreadPool, 8)
@@ -496,12 +494,20 @@ object HttpLookup {
   // Per-partition I/O
   // ---------------------------------------------------------------------
 
-  /** One ordered window of up to `concurrency` exchanges per task (1
-    * without `asyncPolling`): cache hits enter it as completed futures,
-    * misses go straight to the wire, rows leave strictly in input order
-    * (the analog of the reference's AsyncHttpTableLookupFunction with
-    * ordered wait). Whatever is still in flight when the task ends is
-    * cancelled.
+  /** A task's ordered window's row capacity, unless its request bound is
+    * larger: Flink's `table.exec.async-lookup.buffer-capacity` default.
+    */
+  private val BufferRows = 100
+
+  /** One ordered window per task, the analog of the reference's
+    * AsyncHttpTableLookupFunction with ordered wait: rows leave strictly in
+    * input order. It holds at most `concurrency` wire requests (1 without
+    * `asyncPolling`) and up to `max(concurrency, 100)` rows, so cache hits,
+    * which enter as completed futures, never take a request slot. A miss
+    * that finds every slot taken is held until a wire request leaves the
+    * window, and then looks the cache up again: a key whose request has
+    * completed meanwhile is not sent twice. Whatever is still in flight
+    * when the task ends is cancelled.
     */
   private def executePartition(
       iter: Iterator[Row],
@@ -509,32 +515,43 @@ object HttpLookup {
       urlIdx: Int,
       bodyIdx: Int): Iterator[Row] = {
     val cache = io.cache.map(LookupCache.shared)
+    val capacity = math.max(io.concurrency, BufferRows)
+    // (row, outcome, whether the outcome is a wire request's)
     val window =
-      new java.util.ArrayDeque[(Row, CompletableFuture[HttpOutcome])](io.concurrency)
-
-    def call(url: String, body: String): CompletableFuture[HttpOutcome] = {
-      val key = url + "\u0000" + (if (body == null) "" else body)
-      cache.flatMap(_.get(key)) match {
-        case Some(hit) => CompletableFuture.completedFuture(hit)
-        case None =>
-          val sent = io.send(url, body)
-          cache.fold(sent)(c => sent.thenApply { oc =>
-            if (io.cacheable(oc)) c.put(key, oc)
-            oc
-          })
-      }
-    }
+      new java.util.ArrayDeque[(Row, CompletableFuture[HttpOutcome], Boolean)](capacity)
 
     new Iterator[Row] {
-      private def fill(): Unit =
-        while (window.size < io.concurrency && iter.hasNext) {
-          val row = iter.next()
-          window.add(row -> call(row.getString(urlIdx), rowBody(row, bodyIdx)))
+      private var wire = 0 // wire requests in the window
+      private var held: Row = _ // a miss waiting for a request slot
+
+      private def fill(): Unit = {
+        var blocked = false
+        while (!blocked && window.size < capacity && (held != null || iter.hasNext)) {
+          val row = if (held != null) held else iter.next()
+          held = null
+          val (url, body) = (row.getString(urlIdx), rowBody(row, bodyIdx))
+          val key = url + "\u0000" + (if (body == null) "" else body)
+          cache.flatMap(_.get(key)) match {
+            case Some(hit) =>
+              window.add((row, CompletableFuture.completedFuture(hit), false))
+            case None if wire < io.concurrency =>
+              val sent = io.send(url, body)
+              window.add((row, cache.fold(sent)(c => sent.thenApply { oc =>
+                if (io.cacheable(oc)) c.put(key, oc)
+                oc
+              }), true))
+              wire += 1
+            case None =>
+              held = row
+              blocked = true
+          }
         }
+      }
       def hasNext: Boolean = { fill(); !window.isEmpty }
       def next(): Row = {
         if (!hasNext) throw new NoSuchElementException
-        val (row, f) = window.poll()
+        val (row, f, onWire) = window.poll()
+        if (onWire) wire -= 1
         io.emit(row, HttpExchange.await(f))
       }
     }

@@ -80,8 +80,10 @@ object HttpOptions {
   val RequestTimeout = "http.source.lookup.request.timeout"
   val ConnectionTimeout = "http.source.lookup.connection.timeout"
   /** Async lookup (`asyncPolling=true`) in-flight request bound per task:
-    * the size of the ordered window of async exchanges. No threads are
-    * created for it.
+    * the most wire requests a task's ordered window holds. The window also
+    * buffers up to 100 rows (Flink's `table.exec.async-lookup.buffer-capacity`
+    * default) waiting for their turn, cache hits among them, which take no
+    * request slot. No threads are created for it.
     */
   val RequestThreadPool = "http.source.lookup.request.thread-pool.size"
 
@@ -89,9 +91,10 @@ object HttpOptions {
     * splits request issuing and response processing into two pools. The
     * Spark re-expression has no pools: each task keeps one ordered window
     * of async exchanges, so there is no separate response stage — the
-    * window size honors BOTH knobs as `max(request-pool, response-pool)`,
-    * so a user sizing either one gets at least the in-flight requests they
-    * asked for.
+    * window's in-flight request bound honors BOTH knobs as
+    * `max(request-pool, response-pool)`, so a user sizing either one gets at
+    * least the in-flight requests they asked for; its row buffer stays at
+    * 100 rows (or the request bound, if larger).
     */
   val ResponseThreadPool = "http.source.lookup.response.thread-pool.size"
   val UseRawAuthHeader = "http.source.lookup.use-raw-authorization-header"

@@ -233,7 +233,7 @@ private[graft] object SinkRuntime {
           o.int(HttpOptions.SinkMaxInflight, 4),
           o.int(HttpOptions.SinkThreadPool, 4))),
       endpoint = HttpEndpoint.sink(o, headerPreprocessors)
-        .copy(contentType = Some(format.contentType)),
+        .withDefaultContentType(format.contentType),
       idempotencyHeader = o.strOpt(HttpOptions.SinkIdempotencyHeader),
       idempotencyNonce = o.str(HttpOptions.SinkIdempotencyNonce, ""),
       idempotencySort = o.bool(HttpOptions.SinkIdempotencySort, default = false),

@@ -219,6 +219,117 @@ class HttpLookupSpec extends SparkSpec with BeforeAndAfterAll {
     (selectors() -- before).size shouldBe 1
   }
 
+  test("cache hits take no request slot: a later miss goes out while an earlier one waits") {
+    // pool 2, PARTIAL cache warmed with h1..h3. Miss A's route waits on a
+    // latch that only miss B's arrival opens; the hits between them used to
+    // fill a 2-row window, so B was never sent while A was out
+    val bArrived = new java.util.concurrent.CountDownLatch(1)
+    val released = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val srv = StubServer()
+      .route("/read-ahead") { req =>
+        StubServer.queryMap(req.query)("id") match {
+          case "A" => released.set(bArrived.await(10, java.util.concurrent.TimeUnit.SECONDS))
+          case "B" => bArrived.countDown()
+          case _ => ()
+        }
+        (200, """{"name":"x","balance":1.0}""")
+      }
+      .start()
+    try {
+      import spark.implicits._
+      val opts = Map(
+        "url" -> srv.url("/read-ahead"),
+        "asyncPolling" -> "true",
+        "http.source.lookup.request.thread-pool.size" -> "2",
+        "lookup.cache" -> "PARTIAL")
+      def lookup(keys: Seq[String]) = HttpLookup
+        .join(
+          keys.zipWithIndex.map { case (k, i) => (i.toLong, k) }
+            .toDF("event", "id").coalesce(1),
+          Seq("id"),
+          userSchema,
+          opts)
+        .collect()
+      val hits = Seq("h1", "h2", "h3")
+      lookup(hits) should have length 3 // warms the cache
+      val out = lookup("A" +: hits :+ "B")
+      out.map(_.getLong(0)).toSeq shouldBe (0L to 4L)
+      released.get() shouldBe true
+      srv.requests.count(_.query == "id=h1") shouldBe 1
+    } finally srv.stop()
+  }
+
+  test("the window never has more wire requests out than the request pool") {
+    val now = new java.util.concurrent.atomic.AtomicInteger()
+    val peak = new java.util.concurrent.atomic.AtomicInteger()
+    val srv = StubServer()
+      .route("/bound") { req =>
+        peak.accumulateAndGet(now.incrementAndGet(), math.max)
+        try {
+          Thread.sleep(5)
+          val k = StubServer.queryMap(req.query)("id")
+          (200, s"""{"name":"n$k","balance":1.0}""")
+        } finally { now.decrementAndGet(); () }
+      }
+      .start()
+    try {
+      import spark.implicits._
+      // 600 rows over up to 150 keys in a seeded order: first sightings
+      // (misses) spread among repeats (hits)
+      val rnd = new scala.util.Random(7)
+      val input = (0 until 600).map(i => (i.toLong, rnd.nextInt(150).toString))
+      val out = HttpLookup
+        .join(
+          input.toDF("event", "id").coalesce(1),
+          Seq("id"),
+          userSchema,
+          Map(
+            "url" -> srv.url("/bound"),
+            "asyncPolling" -> "true",
+            "http.source.lookup.request.thread-pool.size" -> "3",
+            "lookup.cache" -> "PARTIAL"))
+        .collect()
+      out.map(_.getLong(0)).toSeq shouldBe input.map(_._1)
+      out.map(_.getAs[String]("name")).toSeq shouldBe input.map("n" + _._2)
+      peak.get() should (be > 1 and be <= 3)
+    } finally srv.stop()
+  }
+
+  test("a lookup client completes on its selector: no worker pool, no callback there") {
+    import scala.jdk.CollectionConverters._
+    val responders = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    RequestCallback.register("response-thread-recorder", _ => new RequestCallback {
+      override def wantsBody: Boolean = false
+      def onRequest(m: String, u: String, b: Option[String]): Unit = ()
+      def onResponse(m: String, u: String, s: Int): Unit = {
+        responders.add(Thread.currentThread.getName); ()
+      }
+      def onException(m: String, u: String, e: Throwable): Unit = ()
+    })
+    def live(): Set[String] = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && t.getName.startsWith("HttpClient-")).map(_.getName).toSet
+    val before = live()
+    HttpLookup
+      .join(
+        probe.repartition(4),
+        Seq("id"),
+        userSchema,
+        Map(
+          "url" -> server.url("/user"),
+          "asyncPolling" -> "true",
+          "http.source.lookup.request.thread-pool.size" -> "4",
+          // a connect timeout no other spec sets: a config with no client yet
+          "http.source.lookup.connection.timeout" -> "19 s",
+          "http.source.lookup.request-callback" -> "response-thread-recorder",
+          "http.source.lookup.ignored-response-codes" -> "404"))
+      .count() shouldBe 3L
+    val started = live() -- before
+    started.filter("""HttpClient-\d+-SelectorManager""".r.matches) should have size 1
+    started.filter("""HttpClient-\d+-Worker-\d+""".r.matches) shouldBe empty
+    responders should not be empty
+    responders.asScala.filter(_.endsWith("-SelectorManager")) shouldBe empty
+  }
+
   test("POST body lookup (keys as JSON body)") {
     val out = HttpLookup
       .join(

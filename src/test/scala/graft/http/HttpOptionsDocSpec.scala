@@ -9,7 +9,8 @@ import org.scalatest.matchers.should.Matchers
   * tools/http_options_doc.py): the committed table must stay in sync with
   * `HttpOptions.scala` — a new option key without a regenerated doc, a
   * dropped row, or a row whose "pinned by" column regressed to empty all
-  * fail here, so the option reference cannot silently rot.
+  * fail here, and so does any cell that differs from what the generator
+  * prints now, so the option reference cannot silently rot.
   */
 class HttpOptionsDocSpec extends AnyFunSuite with Matchers {
 
@@ -61,6 +62,26 @@ class HttpOptionsDocSpec extends AnyFunSuite with Matchers {
     val unpinned = docRows.collect { case (k, pin) if pin == "—" || pin.isEmpty => k }
     withClue("options with no gate or spec coverage: ") {
       unpinned shouldBe empty
+    }
+  }
+
+  test("docs/HTTP_OPTIONS.md is the generator's output, byte for byte") {
+    val generator = Paths.get("tools/http_options_doc.py")
+    assume(Files.exists(generator) && Files.exists(doc),
+      "run from the repo root (sbt test working dir)")
+    assume(
+      sys.env.getOrElse("PATH", "").split(java.io.File.pathSeparator)
+        .exists(d => Files.isExecutable(Paths.get(d, "python3"))),
+      "no python3 on PATH")
+    import scala.sys.process._
+    val out = new java.io.ByteArrayOutputStream()
+    (Seq("python3", generator.toString) #> out).! shouldBe 0
+    // compared as text for a readable diff
+    withClue("docs/HTTP_OPTIONS.md is stale (a pinned-by cell, default or " +
+        "doc sentence) — re-run " +
+        "`python3 tools/http_options_doc.py > docs/HTTP_OPTIONS.md`: ") {
+      new String(out.toByteArray, "UTF-8") shouldBe
+        new String(Files.readAllBytes(doc), "UTF-8")
     }
   }
 

@@ -388,6 +388,21 @@ class HttpSinkSpec extends SparkSpec with BeforeAndAfterAll {
     vals.head should not be "static-value"
   }
 
+  test("a configured Content-Type header is the one Content-Type a sink sends") {
+    server.clear()
+    HttpSink.write(
+      df(3),
+      Map(
+        "url" -> server.url("/ok"),
+        "http.sink.header.Content-Type" -> "application/x-ndjson"))
+    val reqs = server.requests.filter(_.path == "/ok")
+    reqs should not be empty
+    // not List(application/json, application/x-ndjson): the format's
+    // default yields to the configured header
+    reqs.map(_.headers("Content-type")).distinct shouldBe
+      List(List("application/x-ndjson"))
+  }
+
   test("a writer blocked on its in-flight bound does not stall other writers' timed flushes") {
     // the flush timer is ONE thread per JVM: writer A, saturated at
     // max-inflight=1 by an endpoint that holds requests ~3 s and blocked in
