@@ -114,13 +114,10 @@ object GraftSession {
       .start()
     try {
       import graft.http._
-      // both dispatches: the sinks' pool client and the lookups' selector one
-      for (selector <- Seq(false, true)) {
-        val exchange = HttpEndpoint(StatusPolicy(_ => true), FixedDelayRetry(0, 0L), 30000L,
-          client = HttpClientFactory.ClientConfig(selectorDispatch = selector)).exchange()
-        (0 until 200).foreach(_ => HttpExchange.await(
-          exchange.send("GET", warmSrv.url("/warm"), None)))
-      }
+      val exchange =
+        HttpEndpoint(StatusPolicy(_ => true), FixedDelayRetry(0, 0L), 30000L).exchange()
+      (0 until 200).foreach(_ => HttpExchange.await(
+        exchange.send("GET", warmSrv.url("/warm"), None)))
     } finally warmSrv.stop()
   }
 }

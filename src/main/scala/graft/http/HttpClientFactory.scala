@@ -10,21 +10,18 @@ import java.time.Duration
   * [[Ssl]] context. One client per JVM per config — clients are
   * thread-safe and pooled by the JDK.
   *
-  * Dispatch: a client with `selectorDispatch` runs the JDK's internal tasks
-  * inline (`executor(r => r.run())`), so it starts no `HttpClient-N-Worker`
-  * pool and parses each response on its selector thread. No graft code runs
-  * there: on JDK 17 a `sendAsync` future completes on
-  * `ForkJoinPool.commonPool` whatever the client's executor, so the
-  * exchange's settle, callbacks and cache puts stay on the common pool.
-  * Lookup clients ([[HttpEndpoint.lookup]]) dispatch on the selector: small
-  * GET answers cost less there than a hop to a worker thread. Warm
-  * `graft.tools.ConnStorm`, 4-vCPU host, pool vs selector req/s at in-flight
-  * 4 / 16 / 64: 17.0k vs 31.1k, 21.1k vs 30.6k, 20.5k vs 26.7k. Sink
-  * clients keep the JDK pool, so the ~105 KB batch bodies of every task do
-  * not all pass through the one selector thread. With every client on its
-  * selector, `sink_batch` (4-vCPU hosts, 2 Spark cores) fell 15–25% in 5 of
-  * 6 pairs in one session (e.g. 1.69M → 1.29M rows/s) and moved by no more
-  * than its run-to-run spread over 9 pairs in another.
+  * Dispatch: every client runs the JDK's internal tasks inline
+  * (`executor(r => r.run())`), so it starts no `HttpClient-N-Worker` pool
+  * and parses each response on its selector thread instead of handing it
+  * to a worker. No graft code runs there: on JDK 17 a `sendAsync` future
+  * completes on `ForkJoinPool.commonPool` whatever the client's executor,
+  * so the exchange's settle, callbacks and cache puts stay on the common
+  * pool. Warm `graft.tools.ConnStorm`, 4-vCPU host, JDK pool vs inline
+  * req/s at in-flight 4 / 16 / 64: 17.0k vs 31.1k, 21.1k vs 30.6k,
+  * 20.5k vs 26.7k. The sink's ~105 KB request bodies go through the one
+  * selector thread too: `sink_batch` (same host, 12 alternating pairs)
+  * ran at a median 1.70M rows/s inline vs 1.76M on the JDK pool, inside
+  * the pool's run-to-run spread (IQR 1.58M-1.86M).
   */
 object HttpClientFactory {
 
@@ -35,9 +32,7 @@ object HttpClientFactory {
       proxyPort: Option[Int] = None,
       proxyUsername: Option[String] = None,
       proxyPassword: Option[String] = None,
-      ssl: Ssl.SslConfig = Ssl.SslConfig(),
-      // not an option: set by the surface (lookup clients), see above
-      selectorDispatch: Boolean = false)
+      ssl: Ssl.SslConfig = Ssl.SslConfig())
       extends Serializable
 
   object ClientConfig {
@@ -76,7 +71,7 @@ object HttpClientFactory {
     // (`http.source.lookup.http-version`) for 1.1-only endpoints; we just
     // flip the default — set HTTP_2 explicitly for h2 services.
     b.version(version(cfg.httpVersion.getOrElse("HTTP_1_1")))
-    if (cfg.selectorDispatch) b.executor((r: Runnable) => r.run())
+    b.executor((r: Runnable) => r.run())
     for (host <- cfg.proxyHost; port <- cfg.proxyPort) {
       b.proxy(ProxySelector.of(new InetSocketAddress(host, port)))
       for (user <- cfg.proxyUsername; pass <- cfg.proxyPassword)

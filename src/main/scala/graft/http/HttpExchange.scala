@@ -274,27 +274,23 @@ final case class HttpEndpoint(
 object HttpEndpoint {
 
   /** The lookup join's (every lookup surface's) and the polling source's
-    * endpoint, with no content type: the lookup join sets its own. Its
-    * client dispatches on its selector (see [[HttpClientFactory]]).
+    * endpoint, with no content type: the lookup join sets its own.
     */
   def lookup(o: HttpOptions, preprocessors: Seq[HeaderPreprocessor]): HttpEndpoint =
     parse(o, preprocessors, StatusPolicy.lookup(o), RetryPolicy.fromOptions(o),
       o.durationMs(HttpOptions.RequestTimeout, 30000L),
       o.str(HttpOptions.SourceRequestCallback, "slf4j-lookup-logger"),
-      o.withPrefix(HttpOptions.SourceHeaderPrefix).toSeq,
-      HttpClientFactory.ClientConfig.fromOptions(o).copy(selectorDispatch = true))
+      o.withPrefix(HttpOptions.SourceHeaderPrefix).toSeq)
 
   /** Every sink surface's endpoint, with no content type: the sink sets its
     * format's. A sink request is never retried: a failed request fails the
-    * task, and Spark's task retry re-sends. Its client keeps the JDK's
-    * worker pool.
+    * task, and Spark's task retry re-sends.
     */
   def sink(o: HttpOptions, preprocessors: Seq[HeaderPreprocessor]): HttpEndpoint =
     parse(o, preprocessors, StatusPolicy.sink(o), FixedDelayRetry(0, 0L),
       o.durationMs(HttpOptions.SinkRequestTimeout, 30000L),
       o.str(HttpOptions.SinkRequestCallback, "slf4j-logger"),
-      o.withPrefix(HttpOptions.SinkHeaderPrefix).toSeq,
-      HttpClientFactory.ClientConfig.fromOptions(o))
+      o.withPrefix(HttpOptions.SinkHeaderPrefix).toSeq)
 
   private def parse(
       o: HttpOptions,
@@ -303,8 +299,7 @@ object HttpEndpoint {
       retry: RetryPolicy,
       timeoutMs: Long,
       callbackName: String,
-      headers: Seq[(String, String)],
-      client: HttpClientFactory.ClientConfig): HttpEndpoint =
+      headers: Seq[(String, String)]): HttpEndpoint =
     HttpEndpoint(policy, retry, timeoutMs, callbackName,
       RequestCallback.Level.parse(o.str(HttpOptions.LoggingLevel, "MIN")),
       headers,
@@ -315,7 +310,7 @@ object HttpEndpoint {
           tokenRequest,
           o.required(HttpOptions.OidcTokenEndpoint),
           o.durationMs(HttpOptions.OidcExpiryReduction, 1000L))),
-      client)
+      HttpClientFactory.ClientConfig.fromOptions(o))
 }
 
 /** Request/response observability hook (reference:

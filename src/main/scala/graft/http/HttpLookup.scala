@@ -503,11 +503,12 @@ object HttpLookup {
     * AsyncHttpTableLookupFunction with ordered wait: rows leave strictly in
     * input order. It holds at most `concurrency` wire requests (1 without
     * `asyncPolling`) and up to `max(concurrency, 100)` rows, so cache hits,
-    * which enter as completed futures, never take a request slot. A miss
-    * that finds every slot taken is held until a wire request leaves the
-    * window, and then looks the cache up again: a key whose request has
-    * completed meanwhile is not sent twice. Whatever is still in flight
-    * when the task ends is cancelled.
+    * which enter as completed futures, never take a request slot. With a
+    * cache, a miss on a key whose request is still in the window shares
+    * that request's outcome and takes no slot either, so a key is not sent
+    * twice by one task. A miss that finds every slot taken is held until a
+    * wire request leaves the window, and then looks the cache up again.
+    * Whatever is still in flight when the task ends is cancelled.
     */
   private def executePartition(
       iter: Iterator[Row],
@@ -516,9 +517,11 @@ object HttpLookup {
       bodyIdx: Int): Iterator[Row] = {
     val cache = io.cache.map(LookupCache.shared)
     val capacity = math.max(io.concurrency, BufferRows)
-    // (row, outcome, whether the outcome is a wire request's)
+    // (row, outcome, the key of the wire request it is, or null)
     val window =
-      new java.util.ArrayDeque[(Row, CompletableFuture[HttpOutcome], Boolean)](capacity)
+      new java.util.ArrayDeque[(Row, CompletableFuture[HttpOutcome], String)](capacity)
+    // with a cache: the window's wire requests by key
+    val inWindow = new java.util.HashMap[String, CompletableFuture[HttpOutcome]]()
 
     new Iterator[Row] {
       private var wire = 0 // wire requests in the window
@@ -531,15 +534,20 @@ object HttpLookup {
           held = null
           val (url, body) = (row.getString(urlIdx), rowBody(row, bodyIdx))
           val key = url + "\u0000" + (if (body == null) "" else body)
-          cache.flatMap(_.get(key)) match {
-            case Some(hit) =>
-              window.add((row, CompletableFuture.completedFuture(hit), false))
+          cache.flatMap(_.get(key)).map(CompletableFuture.completedFuture(_))
+            .orElse(Option(inWindow.get(key))) match {
+            case Some(f) => window.add((row, f, null))
             case None if wire < io.concurrency =>
               val sent = io.send(url, body)
-              window.add((row, cache.fold(sent)(c => sent.thenApply { oc =>
-                if (io.cacheable(oc)) c.put(key, oc)
-                oc
-              }), true))
+              val f = cache.fold(sent) { c =>
+                val put = sent.thenApply { oc =>
+                  if (io.cacheable(oc)) c.put(key, oc)
+                  oc
+                }
+                inWindow.put(key, put)
+                put
+              }
+              window.add((row, f, key))
               wire += 1
             case None =>
               held = row
@@ -550,8 +558,11 @@ object HttpLookup {
       def hasNext: Boolean = { fill(); !window.isEmpty }
       def next(): Row = {
         if (!hasNext) throw new NoSuchElementException
-        val (row, f, onWire) = window.poll()
-        if (onWire) wire -= 1
+        val (row, f, wireKey) = window.poll()
+        if (wireKey != null) {
+          wire -= 1
+          inWindow.remove(wireKey, f)
+        }
         io.emit(row, HttpExchange.await(f))
       }
     }

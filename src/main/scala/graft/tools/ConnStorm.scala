@@ -8,13 +8,10 @@ import graft.http.HttpClientFactory
 import graft.http.testkit.StubServer
 
 /** Pure-JDK microbenchmark: request throughput vs in-flight bound against the
-  * stub server, no Spark involved. Isolates connection-ramp cost. Each run
-  * storms both client dispatches in turn, cold and then warm: `pool` (the
-  * JDK's worker pool, the sink's clients) and `selector` (internal tasks
-  * inline on the selector, the lookup's clients), so one run is a
-  * same-session pair. `STORM_CLIENTS` (default 1, the one client per config
-  * graft runs) sets how many clients share the requests, `STORM_INFLIGHT`
-  * (default 512) the in-flight bound.
+  * stub server, no Spark involved. Isolates connection-ramp cost.
+  * `STORM_CLIENTS` (default 1, the one client per config graft runs) sets
+  * how many clients share the requests, `STORM_INFLIGHT` (default 512) the
+  * in-flight bound.
   */
 object ConnStorm {
   def main(args: Array[String]): Unit = {
@@ -23,10 +20,10 @@ object ConnStorm {
       .start()
     val url = server.url("/ping")
 
-    def storm(label: String, selector: Boolean, inflight: Int, total: Int): Unit = {
+    def storm(label: String, inflight: Int, total: Int): Unit = {
       val nClients = sys.env.getOrElse("STORM_CLIENTS", "1").toInt
-      val cfg = HttpClientFactory.ClientConfig(selectorDispatch = selector)
-      val clients = (0 until nClients).map(_ => HttpClientFactory.build(cfg))
+      val clients = (0 until nClients)
+        .map(_ => HttpClientFactory.build(HttpClientFactory.ClientConfig()))
       val pool = Executors.newFixedThreadPool(inflight)
       val sem = new Semaphore(inflight)
       val done = new CountDownLatch(total)
@@ -52,15 +49,14 @@ object ConnStorm {
       val dt = (System.nanoTime() - t0) / 1e9
       val ls = lat.toArray(new Array[java.lang.Long](0)).map(_.longValue / 1000000.0).sorted
       def pct(p: Double) = ls(((ls.length - 1) * p).toInt)
-      val dispatch = if (selector) "selector" else "pool"
-      println(f"[storm] $label $dispatch inflight=$inflight: $dt%.2f s (${total / dt}%.0f req/s) " +
+      println(f"[storm] $label inflight=$inflight: $dt%.2f s (${total / dt}%.0f req/s) " +
         f"p50=${pct(0.5)}%.1fms p90=${pct(0.9)}%.1fms p99=${pct(0.99)}%.1fms max=${ls.last}%.0fms")
       pool.shutdown()
     }
 
     val inflight = sys.env.getOrElse("STORM_INFLIGHT", "512").toInt
-    for (label <- Seq("cold", "warm"); selector <- Seq(false, true))
-      storm(label, selector, inflight, 15000)
+    storm("cold", inflight, 15000)
+    storm("warm", inflight, 15000)
     sys.exit(0)
   }
 }

@@ -292,6 +292,42 @@ class HttpLookupSpec extends SparkSpec with BeforeAndAfterAll {
       out.map(_.getLong(0)).toSeq shouldBe input.map(_._1)
       out.map(_.getAs[String]("name")).toSeq shouldBe input.map("n" + _._2)
       peak.get() should (be > 1 and be <= 3)
+      // a repeat is a cache hit or shares its key's request in the window
+      srv.requests.size shouldBe input.map(_._2).distinct.size
+    } finally srv.stop()
+  }
+
+  test("a repeat of a key whose request is in the window is not sent again") {
+    // pool 8, PARTIAL cache warmed with h1..h10; K's route takes 300 ms, so
+    // the second K enters the window while the first is still out
+    val srv = StubServer()
+      .route("/in-window") { req =>
+        val k = StubServer.queryMap(req.query)("id")
+        if (k == "K") Thread.sleep(300)
+        (200, s"""{"name":"n$k","balance":1.0}""")
+      }
+      .start()
+    try {
+      import spark.implicits._
+      def lookup(keys: Seq[String]) = HttpLookup
+        .join(
+          keys.zipWithIndex.map { case (k, i) => (i.toLong, k) }
+            .toDF("event", "id").coalesce(1),
+          Seq("id"),
+          userSchema,
+          Map(
+            "url" -> srv.url("/in-window"),
+            "asyncPolling" -> "true",
+            "http.source.lookup.request.thread-pool.size" -> "8",
+            "lookup.cache" -> "PARTIAL"))
+        .collect()
+      val hits = (1 to 10).map("h" + _)
+      lookup(hits) should have length 10 // warms the cache
+      val keys = "K" +: hits :+ "K"
+      val out = lookup(keys)
+      out.map(_.getLong(0)).toSeq shouldBe keys.indices.map(_.toLong)
+      out.map(_.getAs[String]("name")).toSeq shouldBe keys.map("n" + _)
+      srv.requests.count(_.query == "id=K") shouldBe 1
     } finally srv.stop()
   }
 
