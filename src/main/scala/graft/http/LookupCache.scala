@@ -50,8 +50,24 @@ final class LookupCache[V](
 }
 
 object LookupCache {
+
+  /** How many configs keep their cache. One `graft.Bench` run builds 15
+    * distinct `PARTIAL` configs, all in the `h_*` lookup gates (counted at
+    * each new registry entry over a `graft.Verify` run of those gates), so
+    * no gate loses its cache between round-robin iterations. A process
+    * that keeps building new configs (a fresh option per call) holds at
+    * most this many caches.
+    */
+  private[http] val MaxConfigs = 64
+
+  // access-ordered: past MaxConfigs the least recently opened config's
+  // cache is dropped; a task keeps the instance it opened
   private val instances =
-    new java.util.concurrent.ConcurrentHashMap[String, LookupCache[HttpOutcome]]()
+    new java.util.LinkedHashMap[String, LookupCache[HttpOutcome]](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, LookupCache[HttpOutcome]]): Boolean =
+        this.size() > MaxConfigs
+    }
 
   /** A parsed `PARTIAL` cache; `id` (the whole lookup configuration) names
     * its JVM-wide instance.
@@ -79,11 +95,12 @@ object LookupCache {
     }
 
   /** JVM-wide (per-executor) cache instance for a config. */
-  def shared(c: Config): LookupCache[HttpOutcome] =
+  def shared(c: Config): LookupCache[HttpOutcome] = instances.synchronized {
     instances.computeIfAbsent(
       c.id,
       _ => new LookupCache[HttpOutcome](c.maxRows, c.expireAfterWriteMs, c.expireAfterAccessMs))
+  }
 
   /** Test hook. */
-  private[graft] def clearAll(): Unit = instances.clear()
+  private[graft] def clearAll(): Unit = instances.synchronized(instances.clear())
 }

@@ -2,7 +2,7 @@ package graft.queries
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryProgress
 import org.apache.spark.sql.types._
@@ -31,14 +31,26 @@ object HttpQueries {
   private val cachedRouteHits = new java.util.concurrent.atomic.AtomicLong()
   private val cacheAsserted =
     ConcurrentHashMap.newKeySet[String]()
-  // stub-side concurrency trackers: each instrumented route increments a
-  // live counter on entry, folds it into the observed max, and decrements
-  // on exit — the driver-run proof that bounded-async machinery is both
-  // CONCURRENT (max >= 2) and BOUNDED (max <= the configured in-flight cap)
-  private val sinkInflightCur = new java.util.concurrent.atomic.AtomicInteger()
-  private val sinkInflightMax = new java.util.concurrent.atomic.AtomicInteger()
-  private val lookupInflightCur = new java.util.concurrent.atomic.AtomicInteger()
-  private val lookupInflightMax = new java.util.concurrent.atomic.AtomicInteger()
+  /** Stub-side concurrency tracker: an instrumented route counts itself
+    * live while it serves and folds that count into the observed max — the
+    * driver-run proof that bounded-async machinery is both CONCURRENT
+    * (max >= 2) and BOUNDED (max <= the configured in-flight cap).
+    */
+  private final class InflightTracker {
+    private val live = new java.util.concurrent.atomic.AtomicInteger()
+    private val peak = new java.util.concurrent.atomic.AtomicInteger()
+    def reset(): Unit = { live.set(0); peak.set(0) }
+    def max: Int = peak.get()
+
+    /** `answer`, after a `sleepMs` sleep that sustains the overlap. */
+    def serve(sleepMs: Long)(answer: => (Int, String)): (Int, String) = {
+      peak.accumulateAndGet(live.incrementAndGet(), Math.max(_, _))
+      try { Thread.sleep(sleepMs); answer }
+      finally live.decrementAndGet()
+    }
+  }
+  private val lookupInflight = new InflightTracker
+  private val sinkInflight = new InflightTracker
   private val asyncAsserted =
     ConcurrentHashMap.newKeySet[String]()
   // wire-call counter for the /customer-state route (L27 gate): the
@@ -234,12 +246,7 @@ object HttpQueries {
           // sleep sustains overlap so the async lookup's in-flight window
           // is observable (thread-per-connection — sleeps don't serialize)
           .route("/customer-async") { req =>
-            val c = lookupInflightCur.incrementAndGet()
-            lookupInflightMax.accumulateAndGet(c, Math.max(_, _))
-            try {
-              Thread.sleep(3)
-              answer(custkey(req))
-            } finally lookupInflightCur.decrementAndGet()
+            lookupInflight.serve(3)(answer(custkey(req)))
           }
           // flaky twin: the FIRST attempt for every key fails 503; the
           // retry policy must recover (per-JVM counters — later bench
@@ -302,12 +309,7 @@ object HttpQueries {
           // bounded-in-flight twin (K3): tracks concurrent handlers; the
           // sleep makes the client's in-flight window observable
           .route("/ingest-slow") { _ =>
-            val c = sinkInflightCur.incrementAndGet()
-            sinkInflightMax.accumulateAndGet(c, Math.max(_, _))
-            try {
-              Thread.sleep(50)
-              (200, """{"ok":true}""")
-            } finally sinkInflightCur.decrementAndGet()
+            sinkInflight.serve(50)((200, """{"ok":true}"""))
           }
           // time-based-flush twin (K14): plain 200s — the gate counts how
           // many separate partial-batch requests landed
@@ -363,6 +365,79 @@ object HttpQueries {
   private def extensionsSession(s: SparkSession): SparkSession =
     extSessions.computeIfAbsent("x", _ => graft.GraftSession.withExtensions(s))
 
+  /** Every `every`-th order with its customer key: the lookup gates' probe. */
+  private def ordersProbe(s: SparkSession, dir: String, every: Int): DataFrame =
+    s.read
+      .parquet(s"$dir/orders.parquet")
+      .filter(col("o_orderkey") % every === 0)
+      .select(col("o_orderkey"), col("o_custkey").as("c_custkey"))
+
+  /** `probe` enriched from a customer route on `c_custkey`, projected to
+    * `cols`.
+    */
+  private def customerLookup(
+      probe: DataFrame,
+      options: Map[String, String],
+      includeMetadata: Boolean = false)(cols: Column*): DataFrame =
+    HttpLookup
+      .join(
+        probe,
+        keyCols = Seq("c_custkey"),
+        responseSchema = customerResponseSchema,
+        options = options,
+        includeMetadata = includeMetadata)
+      .select(cols: _*)
+
+  /** Customers and their exact balance sum per nation: what the sink gates
+    * post. Decimal sum rounded at decimal precision, then cast to double.
+    */
+  private def nationAgg(s: SparkSession, dir: String): DataFrame =
+    s.read
+      .parquet(s"$dir/customer.parquet")
+      .groupBy(col("c_nationkey"))
+      .agg(
+        count(lit(1)).as("n_customers"),
+        round(sum(col("c_acctbal").cast(DecimalType(18, 2))), 2)
+          .cast(DoubleType).as("sum_acctbal"))
+
+  /** [[nationAgg]] in DuckDB: the oracle of every gate that posts it. */
+  private val nationAggOracle =
+    """SELECT c_nationkey, count(*) AS n_customers,
+      |  CAST(round(sum(CAST(c_acctbal AS DECIMAL(18,2))), 2) AS DOUBLE) AS sum_acctbal
+      |FROM customer GROUP BY c_nationkey""".stripMargin
+
+  /** How a sink frames the records of the bodies it posts. */
+  private sealed trait Framing
+  private case object JsonArray extends Framing // batch mode, json
+  private case object JsonObject extends Framing // single mode, one per request
+  private case object CsvLines extends Framing // batch mode, csv
+
+  private val nationRecord = StructType(Seq(
+    StructField("c_nationkey", IntegerType),
+    StructField("n_customers", LongType),
+    StructField("sum_acctbal", DoubleType)))
+
+  /** The [[nationAgg]] records a stub captured in `bodies`, decoded back. */
+  private def postedRecords(
+      s: SparkSession,
+      bodies: Seq[String],
+      framing: Framing): DataFrame = {
+    import s.implicits._
+    val body = s.createDataset(bodies).toDF("body")
+    val recs = framing match {
+      case JsonArray =>
+        body.select(explode(from_json(col("body"), ArrayType(nationRecord))).as("rec"))
+      case JsonObject =>
+        body.select(from_json(col("body"), nationRecord).as("rec"))
+      case CsvLines =>
+        body
+          .select(explode(split(col("body"), "\n")).as("line"))
+          .filter(col("line") =!= "")
+          .select(from_csv(col("line"), nationRecord, Map.empty[String, String]).as("rec"))
+    }
+    recs.select(col("rec.c_nationkey"), col("rec.n_customers"), col("rec.sum_acctbal"))
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ----- HTTP lookup join: orders enriched from the customer service -----
     "h_lookup_join" -> { (s, dir) =>
@@ -372,22 +447,19 @@ object HttpQueries {
           col("o_orderkey"),
           col("o_custkey").as("c_custkey"),
           col("o_totalprice"))
-      HttpLookup.join(
+      customerLookup(
         probe,
-        keyCols = Seq("c_custkey"),
-        responseSchema = customerResponseSchema,
-        options = cachedLookup ++ Map(
+        cachedLookup ++ Map(
           "url" -> customerServiceUrl(s, dir),
-          "asyncPolling" -> "true"))
-        .select(
-          col("o_orderkey"),
-          col("c_custkey"),
-          col("o_totalprice").cast(DecimalType(18, 2)).cast(DoubleType)
-            .as("o_totalprice_r"),
-          col("c_name"),
-          col("c_nationkey"),
-          col("c_acctbal"),
-          col("c_mktsegment"))
+          "asyncPolling" -> "true"))(
+        col("o_orderkey"),
+        col("c_custkey"),
+        col("o_totalprice").cast(DecimalType(18, 2)).cast(DoubleType)
+          .as("o_totalprice_r"),
+        col("c_name"),
+        col("c_nationkey"),
+        col("c_acctbal"),
+        col("c_mktsegment"))
     },
 
     // ----- strict decode (L23, NEW r13): json.fail-on-missing-field.
@@ -398,23 +470,21 @@ object HttpQueries {
     // Pass 2 runs strict against the complete endpoint: same writes
     // succeed, result hash-gated vs the relational join. -----
     "h_strict_lookup" -> { (s, dir) =>
-      val probe = s.read
-        .parquet(s"$dir/orders.parquet")
-        .filter(col("o_orderkey") % 31 === 0)
-        .select(col("o_orderkey"), col("o_custkey").as("c_custkey"))
-      def opts(url: String) = lookupBase ++ Map(
-        "url" -> url,
-        "json.fail-on-missing-field" -> "true")
+      val probe = ordersProbe(s, dir, 31)
+      def strict(url: String) = customerLookup(
+        probe,
+        lookupBase ++ Map(
+          "url" -> url,
+          "json.fail-on-missing-field" -> "true"))(
+        col("o_orderkey"),
+        col("c_custkey"),
+        col("c_name"),
+        col("c_mktsegment"))
       val failed =
         try {
           // noop write: count() would prune the projection and the
           // raise_error column under test would never evaluate
-          HttpLookup
-            .join(
-              probe,
-              keyCols = Seq("c_custkey"),
-              responseSchema = customerResponseSchema,
-              options = opts(lookupStub(s, dir).url("/customer-drift")))
+          strict(lookupStub(s, dir).url("/customer-drift"))
             .write.format("noop").mode("overwrite").save()
           false
         } catch {
@@ -434,113 +504,66 @@ object HttpQueries {
         "h_strict_lookup: a drifted endpoint (c_mktsegment removed) did " +
           "NOT fail the job under json.fail-on-missing-field — strict " +
           "decode is silently tolerating schema drift")
-      HttpLookup
-        .join(
-          probe,
-          keyCols = Seq("c_custkey"),
-          responseSchema = customerResponseSchema,
-          options = opts(customerServiceUrl(s, dir)))
-        .select(
-          col("o_orderkey"),
-          col("c_custkey"),
-          col("c_name"),
-          col("c_mktsegment"))
+      strict(customerServiceUrl(s, dir))
     },
 
     // ----- POST lookup: key rendered into a JSON body template (L3/L4) ---
     "h_post_lookup" -> { (s, dir) =>
-      val probe = s.read
-        .parquet(s"$dir/orders.parquet")
-        .filter(col("o_orderkey") % 5 === 0)
-        .select(col("o_orderkey"), col("o_custkey").as("c_custkey"))
-      HttpLookup
-        .join(
-          probe,
-          keyCols = Seq("c_custkey"),
-          responseSchema = customerResponseSchema,
-          options = cachedLookup ++ Map(
-            "url" -> lookupStub(s, dir).url("/customer-post"),
-            "lookup-method" -> "POST",
-            "http.request.body-template" -> """{"c_custkey": {{c_custkey}}}"""))
-        .select(
-          col("o_orderkey"),
-          col("c_custkey"),
-          col("c_name"),
-          col("c_acctbal"))
+      customerLookup(
+        ordersProbe(s, dir, 5),
+        cachedLookup ++ Map(
+          "url" -> lookupStub(s, dir).url("/customer-post"),
+          "lookup-method" -> "POST",
+          "http.request.body-template" -> """{"c_custkey": {{c_custkey}}}"""))(
+        col("o_orderkey"),
+        col("c_custkey"),
+        col("c_name"),
+        col("c_acctbal"))
     },
 
     // ----- Elasticsearch-lite creator: Lucene q= query string (L5) -----
     "h_es_lookup" -> { (s, dir) =>
-      val probe = s.read
-        .parquet(s"$dir/orders.parquet")
-        .filter(col("o_orderkey") % 7 === 0)
-        .select(col("o_orderkey"), col("o_custkey").as("c_custkey"))
-      HttpLookup
-        .join(
-          probe,
-          keyCols = Seq("c_custkey"),
-          responseSchema = customerResponseSchema,
-          options = cachedLookup ++ Map(
-            "url" -> lookupStub(s, dir).url("/customer-es"),
-            "lookup-query-creator" -> "elasticsearch-lite"))
-        .select(
-          col("o_orderkey"),
-          col("c_custkey"),
-          col("c_name"),
-          col("c_mktsegment"))
+      customerLookup(
+        ordersProbe(s, dir, 7),
+        cachedLookup ++ Map(
+          "url" -> lookupStub(s, dir).url("/customer-es"),
+          "lookup-query-creator" -> "elasticsearch-lite"))(
+        col("o_orderkey"),
+        col("c_custkey"),
+        col("c_name"),
+        col("c_mktsegment"))
     },
 
     // ----- query-param rename (L21), basic auth (L13), retries (L7) -----
     "h_param_rename" -> { (s, dir) =>
-      val probe = s.read
-        .parquet(s"$dir/orders.parquet")
-        .filter(col("o_orderkey") % 11 === 0)
-        .select(col("o_orderkey"), col("o_custkey").as("c_custkey"))
-      HttpLookup
-        .join(
-          probe,
-          keyCols = Seq("c_custkey"),
-          responseSchema = customerResponseSchema,
-          options = cachedLookup ++ Map(
-            "url" -> lookupStub(s, dir).url("/customer-renamed"),
-            "http.request.query-param-fields-with-key" -> "c_custkey:cust"))
-        .select(col("o_orderkey"), col("c_custkey"), col("c_name"))
+      customerLookup(
+        ordersProbe(s, dir, 11),
+        cachedLookup ++ Map(
+          "url" -> lookupStub(s, dir).url("/customer-renamed"),
+          "http.request.query-param-fields-with-key" -> "c_custkey:cust"))(
+        col("o_orderkey"), col("c_custkey"), col("c_name"))
     },
     "h_auth_lookup" -> { (s, dir) =>
-      val probe = s.read
-        .parquet(s"$dir/orders.parquet")
-        .filter(col("o_orderkey") % 13 === 0)
-        .select(col("o_orderkey"), col("o_custkey").as("c_custkey"))
-      HttpLookup
-        .join(
-          probe,
-          keyCols = Seq("c_custkey"),
-          responseSchema = customerResponseSchema,
-          options = cachedLookup ++ Map(
-            "url" -> lookupStub(s, dir).url("/customer-auth"),
-            // raw user:pass — the Basic preprocessor base64s it
-            "http.source.lookup.header.Authorization" -> "svc:secret"))
-        .select(col("o_orderkey"), col("c_custkey"), col("c_acctbal"))
+      customerLookup(
+        ordersProbe(s, dir, 13),
+        cachedLookup ++ Map(
+          "url" -> lookupStub(s, dir).url("/customer-auth"),
+          // raw user:pass — the Basic preprocessor base64s it
+          "http.source.lookup.header.Authorization" -> "svc:secret"))(
+        col("o_orderkey"), col("c_custkey"), col("c_acctbal"))
     },
     "h_retry_lookup" -> { (s, dir) =>
-      val probe = s.read
-        .parquet(s"$dir/orders.parquet")
-        .filter(col("o_orderkey") % 17 === 0)
-        .select(col("o_orderkey"), col("o_custkey").as("c_custkey"))
-      HttpLookup
-        .join(
-          probe,
-          keyCols = Seq("c_custkey"),
-          responseSchema = customerResponseSchema,
-          options = cachedLookup ++ Map(
-            "url" -> lookupStub(s, dir).url("/customer-flaky"),
-            "lookup.max-retries" -> "3",
-            "http.source.lookup.retry-codes" -> "503",
-            // 1ms delay: the gate exercises the retry PATH, not the wait
-            // (default fixed-delay 1s x one-retry-per-key would serialize
-            // ~900 seconds of sleep through a 2-thread pool)
-            "http.source.lookup.retry-strategy.fixed-delay.delay" -> "1ms"))
-        .select(col("o_orderkey"), col("c_custkey"), col("c_nationkey"))
+      customerLookup(
+        ordersProbe(s, dir, 17),
+        cachedLookup ++ Map(
+          "url" -> lookupStub(s, dir).url("/customer-flaky"),
+          "lookup.max-retries" -> "3",
+          "http.source.lookup.retry-codes" -> "503",
+          // 1ms delay: the gate exercises the retry PATH, not the wait
+          // (default fixed-delay 1s x one-retry-per-key would serialize
+          // ~900 seconds of sleep through a 2-thread pool)
+          "http.source.lookup.retry-strategy.fixed-delay.delay" -> "1ms"))(
+        col("o_orderkey"), col("c_custkey"), col("c_nationkey"))
     },
 
     // ----- exponential-delay retry strategy e2e (L7 exponential path,
@@ -550,64 +573,44 @@ object HttpQueries {
     // it and the gate's relational result goes empty/fails. Tiny
     // backoffs: the gate exercises the SCHEDULE, not the wait. -----
     "h_retry_exp" -> { (s, dir) =>
-      val probe = s.read
-        .parquet(s"$dir/orders.parquet")
-        .filter(col("o_orderkey") % 47 === 0)
-        .select(col("o_orderkey"), col("o_custkey").as("c_custkey"))
-      HttpLookup
-        .join(
-          probe,
-          keyCols = Seq("c_custkey"),
-          responseSchema = customerResponseSchema,
-          options = cachedLookup ++ Map(
-            "url" -> lookupStub(s, dir).url("/customer-flaky2"),
-            "lookup.max-retries" -> "3",
-            "http.source.lookup.retry-codes" -> "503",
-            "http.source.lookup.retry-strategy.type" -> "exponential-delay",
-            "http.source.lookup.retry-strategy.exponential-delay.initial-backoff" -> "1ms",
-            "http.source.lookup.retry-strategy.exponential-delay.max-backoff" -> "8ms",
-            "http.source.lookup.retry-strategy.exponential-delay.backoff-multiplier" -> "2.0"))
-        .select(col("o_orderkey"), col("c_custkey"), col("c_acctbal"))
+      customerLookup(
+        ordersProbe(s, dir, 47),
+        cachedLookup ++ Map(
+          "url" -> lookupStub(s, dir).url("/customer-flaky2"),
+          "lookup.max-retries" -> "3",
+          "http.source.lookup.retry-codes" -> "503",
+          "http.source.lookup.retry-strategy.type" -> "exponential-delay",
+          "http.source.lookup.retry-strategy.exponential-delay.initial-backoff" -> "1ms",
+          "http.source.lookup.retry-strategy.exponential-delay.max-backoff" -> "8ms",
+          "http.source.lookup.retry-strategy.exponential-delay.backoff-multiplier" -> "2.0"))(
+        col("o_orderkey"), col("c_custkey"), col("c_acctbal"))
     },
 
     // ----- OIDC bearer lookup (L14): token endpoint + Bearer gate -----
     "h_oidc_lookup" -> { (s, dir) =>
       val stub = lookupStub(s, dir)
-      val probe = s.read
-        .parquet(s"$dir/orders.parquet")
-        .filter(col("o_orderkey") % 19 === 0)
-        .select(col("o_orderkey"), col("o_custkey").as("c_custkey"))
-      HttpLookup
-        .join(
-          probe,
-          keyCols = Seq("c_custkey"),
-          responseSchema = customerResponseSchema,
-          options = cachedLookup ++ Map(
-            "url" -> stub.url("/customer-oidc"),
-            "http.security.oidc.token.request" ->
-              "grant_type=client_credentials&client_id=graft",
-            "http.security.oidc.token.endpoint.url" -> stub.url("/token")))
-        .select(col("o_orderkey"), col("c_custkey"), col("c_name"))
+      customerLookup(
+        ordersProbe(s, dir, 19),
+        cachedLookup ++ Map(
+          "url" -> stub.url("/customer-oidc"),
+          "http.security.oidc.token.request" ->
+            "grant_type=client_credentials&client_id=graft",
+          "http.security.oidc.token.endpoint.url" -> stub.url("/token")))(
+        col("o_orderkey"), col("c_custkey"), col("c_name"))
     },
 
     // ----- lookup through an authenticated-capable forward proxy (L16) --
     "h_proxy_lookup" -> { (s, dir) =>
       val proxy = proxyFor(dir)
-      val probe = s.read
-        .parquet(s"$dir/orders.parquet")
-        .filter(col("o_orderkey") % 23 === 0)
-        .select(col("o_orderkey"), col("o_custkey").as("c_custkey"))
+      val probe = ordersProbe(s, dir, 23)
       val before = proxy.requestCount
-      val out = HttpLookup
-        .join(
-          probe,
-          keyCols = Seq("c_custkey"),
-          responseSchema = customerResponseSchema,
-          options = cachedLookup ++ Map(
-            "url" -> customerServiceUrl(s, dir),
-            "http.source.lookup.proxy.host" -> proxy.host,
-            "http.source.lookup.proxy.port" -> proxy.port.toString))
-        .select(col("o_orderkey"), col("c_custkey"), col("c_mktsegment"))
+      val out = customerLookup(
+        probe,
+        cachedLookup ++ Map(
+          "url" -> customerServiceUrl(s, dir),
+          "http.source.lookup.proxy.host" -> proxy.host,
+          "http.source.lookup.proxy.port" -> proxy.port.toString))(
+        col("o_orderkey"), col("c_custkey"), col("c_mktsegment"))
       // a correct RESULT is not enough for this gate: a silently dropped
       // proxy config would connect straight to the stub and still match
       // the oracle. On the FIRST invocation in this JVM (cold partial
@@ -630,72 +633,48 @@ object HttpQueries {
     // carrying a keystore works unchanged -----
     "h_tls_keystore" -> { (s, dir) =>
       val (base, _, ksPath) = tlsStub(s, dir)
-      val probe = s.read
-        .parquet(s"$dir/orders.parquet")
-        .filter(col("o_orderkey") % 53 === 0)
-        .select(col("o_orderkey"), col("o_custkey").as("c_custkey"))
-      HttpLookup
-        .join(
-          probe,
-          keyCols = Seq("c_custkey"),
-          responseSchema = customerResponseSchema,
-          options = cachedLookup ++ Map(
-            "url" -> s"$base/customer",
-            "http.security.keystore.path" -> ksPath,
-            "http.security.keystore.password" -> SelfSignedCert.Password))
-        .select(
-          col("o_orderkey"),
-          col("c_custkey"),
-          col("c_name"),
-          col("c_nationkey"))
+      customerLookup(
+        ordersProbe(s, dir, 53),
+        cachedLookup ++ Map(
+          "url" -> s"$base/customer",
+          "http.security.keystore.path" -> ksPath,
+          "http.security.keystore.password" -> SelfSignedCert.Password))(
+        col("o_orderkey"),
+        col("c_custkey"),
+        col("c_name"),
+        col("c_nationkey"))
     },
 
     // ----- TLS lookup (L17): HTTPS + explicit server-cert trust store -----
     "h_tls_lookup" -> { (s, dir) =>
       val (base, certPem, _) = tlsStub(s, dir)
-      val probe = s.read
-        .parquet(s"$dir/orders.parquet")
-        .filter(col("o_orderkey") % 29 === 0)
-        .select(col("o_orderkey"), col("o_custkey").as("c_custkey"))
-      HttpLookup
-        .join(
-          probe,
-          keyCols = Seq("c_custkey"),
-          responseSchema = customerResponseSchema,
-          options = cachedLookup ++ Map(
-            "url" -> s"$base/customer",
-            // trust ONLY the stub's self-signed cert — not allowSelfSigned;
-            // the handshake fails unless the PEM trust store is honored
-            "http.security.cert.server" -> certPem))
-        .select(
-          col("o_orderkey"),
-          col("c_custkey"),
-          col("c_name"),
-          col("c_acctbal"))
+      customerLookup(
+        ordersProbe(s, dir, 29),
+        cachedLookup ++ Map(
+          "url" -> s"$base/customer",
+          // trust ONLY the stub's self-signed cert — not allowSelfSigned;
+          // the handshake fails unless the PEM trust store is honored
+          "http.security.cert.server" -> certPem))(
+        col("o_orderkey"),
+        col("c_custkey"),
+        col("c_name"),
+        col("c_acctbal"))
     },
 
     // ----- custom static headers (L12): the stub answers ONLY requests
     // carrying both configured `http.source.lookup.header.*` headers —
     // a dropped or renamed header 403s every row and fails the hash -----
     "h_header_lookup" -> { (s, dir) =>
-      val probe = s.read
-        .parquet(s"$dir/orders.parquet")
-        .filter(col("o_orderkey") % 43 === 0)
-        .select(col("o_orderkey"), col("o_custkey").as("c_custkey"))
-      HttpLookup
-        .join(
-          probe,
-          keyCols = Seq("c_custkey"),
-          responseSchema = customerResponseSchema,
-          options = lookupBase ++ Map(
-            "url" -> lookupStub(s, dir).url("/customer-headers"),
-            "http.source.lookup.header.X-Api-Key" -> "graft-k1",
-            "http.source.lookup.header.X-Tenant" -> "acme"))
-        .select(
-          col("o_orderkey"),
-          col("c_custkey"),
-          col("c_name"),
-          col("c_nationkey"))
+      customerLookup(
+        ordersProbe(s, dir, 43),
+        lookupBase ++ Map(
+          "url" -> lookupStub(s, dir).url("/customer-headers"),
+          "http.source.lookup.header.X-Api-Key" -> "graft-k1",
+          "http.source.lookup.header.X-Tenant" -> "acme"))(
+        col("o_orderkey"),
+        col("c_custkey"),
+        col("c_name"),
+        col("c_nationkey"))
     },
 
     // ----- metadata columns (L9): every probe row emits one output row
@@ -711,19 +690,15 @@ object HttpQueries {
           col("o_orderkey"),
           when(col("o_orderkey") % 3 === 0, -col("o_custkey"))
             .otherwise(col("o_custkey")).as("c_custkey"))
-      HttpLookup
-        .join(
-          probe,
-          keyCols = Seq("c_custkey"),
-          responseSchema = customerResponseSchema,
-          options = lookupBase + ("url" -> customerServiceUrl(s, dir)),
-          includeMetadata = true)
-        .select(
-          col("o_orderkey"),
-          col("c_custkey"),
-          col("c_name"),
-          col(HttpLookup.MetaStatusCode),
-          col(HttpLookup.MetaCompletionState))
+      customerLookup(
+        probe,
+        lookupBase + ("url" -> customerServiceUrl(s, dir)),
+        includeMetadata = true)(
+        col("o_orderkey"),
+        col("c_custkey"),
+        col("c_name"),
+        col(HttpLookup.MetaStatusCode),
+        col(HttpLookup.MetaCompletionState))
     },
 
     // ----- partial LRU cache (L6): 5000 probe rows over 100 distinct keys
@@ -739,18 +714,14 @@ object HttpQueries {
           col("o_orderkey"),
           (col("o_custkey") % 100 + 1).as("c_custkey"))
       val before = cachedRouteHits.get()
-      val out = HttpLookup
-        .join(
-          probe,
-          keyCols = Seq("c_custkey"),
-          responseSchema = customerResponseSchema,
-          options = lookupBase ++ Map(
-            "url" -> lookupStub(s, dir).url("/customer-cached"),
-            "http.source.lookup.dedup-keys" -> "false",
-            "lookup.cache" -> "PARTIAL",
-            "lookup.partial-cache.max-rows" -> "1000"))
-        .select(col("o_orderkey"), col("c_custkey"), col("c_name"),
-          col("c_mktsegment"))
+      val out = customerLookup(
+        probe,
+        lookupBase ++ Map(
+          "url" -> lookupStub(s, dir).url("/customer-cached"),
+          "http.source.lookup.dedup-keys" -> "false",
+          "lookup.cache" -> "PARTIAL",
+          "lookup.partial-cache.max-rows" -> "1000"))(
+        col("o_orderkey"), col("c_custkey"), col("c_name"), col("c_mktsegment"))
       if (cacheAsserted.add(dir)) {
         val rows = out.count()
         val distinctKeys = probe
@@ -787,28 +758,20 @@ object HttpQueries {
     // EXCEPTION (null status, null enrichment) while the rest stay
     // SUCCESS/200 — metadata columns gate the classification -----
     "h_timeout_lookup" -> { (s, dir) =>
-      val probe = s.read
-        .parquet(s"$dir/orders.parquet")
-        .filter(col("o_orderkey") % 41 === 0)
-        .select(col("o_orderkey"), col("o_custkey").as("c_custkey"))
-      HttpLookup
-        .join(
-          probe,
-          keyCols = Seq("c_custkey"),
-          responseSchema = customerResponseSchema,
-          options = lookupBase ++ Map(
-            "url" -> lookupStub(s, dir).url("/customer-slow"),
-            "http.source.lookup.request.timeout" -> "250",
-            "lookup.max-retries" -> "0",
-            "http.source.lookup.continue-on-error" -> "true",
-            "http.source.lookup.request.thread-pool.size" -> "4"),
-          includeMetadata = true)
-        .select(
-          col("o_orderkey"),
-          col("c_custkey"),
-          col("c_name"),
-          col(HttpLookup.MetaStatusCode),
-          col(HttpLookup.MetaCompletionState))
+      customerLookup(
+        ordersProbe(s, dir, 41),
+        lookupBase ++ Map(
+          "url" -> lookupStub(s, dir).url("/customer-slow"),
+          "http.source.lookup.request.timeout" -> "250",
+          "lookup.max-retries" -> "0",
+          "http.source.lookup.continue-on-error" -> "true",
+          "http.source.lookup.request.thread-pool.size" -> "4"),
+        includeMetadata = true)(
+        col("o_orderkey"),
+        col("c_custkey"),
+        col("c_name"),
+        col(HttpLookup.MetaStatusCode),
+        col(HttpLookup.MetaCompletionState))
     },
 
     // ----- state-store-backed streaming lookup cache across RESTART
@@ -822,10 +785,7 @@ object HttpQueries {
     // keys. Output gated hash-exact vs the batch relational join. -----
     "h_state_lookup" -> { (s, dir) =>
       graft.ops.Par.withShufflePartitions(s, 8) {
-        val probe = s.read
-          .parquet(s"$dir/orders.parquet")
-          .filter(col("o_orderkey") % 61 === 0)
-          .select(col("o_orderkey"), col("o_custkey").as("c_custkey"))
+        val probe = ordersProbe(s, dir, 61)
         val root = GateTemp.dir("graft-state-lookup-gate").toString
         val (inDir, outDir, ckptDir) = (s"$root/in", s"$root/out", s"$root/ckpt")
         val half = probe.filter(col("o_orderkey") % 2 === 0)
@@ -929,11 +889,7 @@ object HttpQueries {
     "h_tvf_lookup" -> { (s, dir) =>
       val url = customerServiceUrl(s, dir)
       val x = extensionsSession(s)
-      x.read
-        .parquet(s"$dir/orders.parquet")
-        .filter(col("o_orderkey") % 59 === 0)
-        .select(col("o_orderkey"), col("o_custkey").as("c_custkey"))
-        .createOrReplaceTempView("orders_probe_tvf")
+      ordersProbe(x, dir, 59).createOrReplaceTempView("orders_probe_tvf")
       x.sql(
         s"""SELECT o_orderkey, c_custkey, c_name, c_mktsegment
            |FROM http_lookup(
@@ -996,68 +952,31 @@ object HttpQueries {
 
     // ----- HTTP sink round-trip: aggregate → POST batches → reassemble -----
     "h_sink_roundtrip" -> { (s, dir) =>
-      val agg = s.read
-        .parquet(s"$dir/customer.parquet")
-        .groupBy(col("c_nationkey"))
-        .agg(
-          count(lit(1)).as("n_customers"),
-          round(sum(col("c_acctbal").cast(DecimalType(18, 2))), 2)
-            .cast(DoubleType).as("sum_acctbal"))
       val server = sinkServer(dir)
       server.clear()
       HttpSink.write(
-        agg.repartition(2),
+        nationAgg(s, dir).repartition(2),
         Map(
           "url" -> server.url("/ingest"),
           "insert-method" -> "POST",
           "http.sink.writer.request.mode" -> "batch",
           "http.sink.request.batch.size" -> "10"))
-      val bodies = server.requests.map(_.body)
-      val bodySchema = ArrayType(StructType(Seq(
-        StructField("c_nationkey", IntegerType),
-        StructField("n_customers", LongType),
-        StructField("sum_acctbal", DoubleType))))
-      import s.implicits._
-      s.createDataset(bodies)
-        .toDF("body")
-        .select(explode(from_json(col("body"), bodySchema)).as("rec"))
-        .select(col("rec.c_nationkey"), col("rec.n_customers"), col("rec.sum_acctbal"))
+      postedRecords(s, server.requests.map(_.body), JsonArray)
     },
 
     // ----- csv sink framing: to_csv rows joined by newline (K11) -----
     "h_sink_csv" -> { (s, dir) =>
-      val agg = s.read
-        .parquet(s"$dir/customer.parquet")
-        .groupBy(col("c_nationkey"))
-        .agg(
-          count(lit(1)).as("n_customers"),
-          round(sum(col("c_acctbal").cast(DecimalType(18, 2))), 2)
-            .cast(DoubleType).as("sum_acctbal"))
       val server = sinkServer(dir)
       server.clear()
       HttpSink.write(
-        agg.repartition(2),
+        nationAgg(s, dir).repartition(2),
         Map(
           "url" -> server.url("/ingest"),
           "insert-method" -> "POST",
           "http.sink.writer.request.mode" -> "batch",
           "http.sink.request.batch.size" -> "10",
           "format" -> "csv"))
-      val bodies = server.requests.map(_.body)
-      val recSchema = StructType(Seq(
-        StructField("c_nationkey", IntegerType),
-        StructField("n_customers", LongType),
-        StructField("sum_acctbal", DoubleType)))
-      import s.implicits._
-      s.createDataset(bodies)
-        .toDF("body")
-        .select(explode(split(col("body"), "\n")).as("line"))
-        .filter(col("line") =!= "")
-        .select(from_csv(col("line"), recSchema, Map.empty[String, String]).as("rec"))
-        .select(
-          col("rec.c_nationkey"),
-          col("rec.n_customers"),
-          col("rec.sum_acctbal"))
+      postedRecords(s, server.requests.map(_.body), CsvLines)
     },
 
     // ----- DSv2 sink TABLE (K12): pure-SQL DDL + INSERT INTO through the
@@ -1086,22 +1005,10 @@ object HttpQueries {
         val bodies = server.requests
           .filter(_.path == "/ingest-table")
           .map(_.body)
-        val bodySchema = ArrayType(StructType(Seq(
-          StructField("c_nationkey", IntegerType),
-          StructField("n_customers", LongType),
-          StructField("sum_acctbal", DoubleType))))
-        import s.implicits._
-        s.createDataset(bodies)
-          .toDF("body")
-          .select(explode(from_json(col("body"), bodySchema)).as("rec"))
-          .select(
-            col("rec.c_nationkey"),
-            col("rec.n_customers"),
-            col("rec.sum_acctbal"))
+        postedRecords(s, bodies, JsonArray)
       } finally s.sql("DROP TABLE IF EXISTS h_sink_table_out")
     },
 
-    // ----- single-mode sink: one request per row (K2), PUT method -----
     // ----- DSv2 streaming HTTP polling source, end-to-end (L22) -----
     // The one HTTP surface that had no [S] gate: poll the paginated stub
     // across N micro-batches (one poll per batch), accumulate the emitted
@@ -1136,35 +1043,17 @@ object HttpQueries {
         .distinct()
     },
 
+    // ----- single-mode sink: one request per row (K2), PUT method -----
     "h_sink_single" -> { (s, dir) =>
-      val agg = s.read
-        .parquet(s"$dir/customer.parquet")
-        .groupBy(col("c_nationkey"))
-        .agg(
-          count(lit(1)).as("n_customers"),
-          round(sum(col("c_acctbal").cast(DecimalType(18, 2))), 2)
-            .cast(DoubleType).as("sum_acctbal"))
       val server = sinkServer(dir)
       server.clear()
       HttpSink.write(
-        agg.repartition(2),
+        nationAgg(s, dir).repartition(2),
         Map(
           "url" -> server.url("/ingest"),
           "insert-method" -> "PUT",
           "http.sink.writer.request.mode" -> "single"))
-      val bodies = server.requests.map(_.body)
-      val recSchema = StructType(Seq(
-        StructField("c_nationkey", IntegerType),
-        StructField("n_customers", LongType),
-        StructField("sum_acctbal", DoubleType)))
-      import s.implicits._
-      s.createDataset(bodies)
-        .toDF("body")
-        .select(from_json(col("body"), recSchema).as("rec"))
-        .select(
-          col("rec.c_nationkey"),
-          col("rec.n_customers"),
-          col("rec.sum_acctbal"))
+      postedRecords(s, server.requests.map(_.body), JsonObject)
     },
 
     // ----- STREAMING HTTP lookup join (L20, NEW r12): the reference's
@@ -1180,17 +1069,13 @@ object HttpQueries {
         .parquet(s"$dir/events*.parquet")
         .filter(col("event_id") % 7 === 0)
         .select(col("event_id"), col("user_id").as("c_custkey"))
-      val enriched = HttpLookup
-        .join(
-          probe,
-          keyCols = Seq("c_custkey"),
-          responseSchema = customerResponseSchema,
-          options = cachedLookup + ("url" -> customerServiceUrl(s, dir)))
-        .select(
-          col("event_id"),
-          col("c_custkey"),
-          col("c_name"),
-          col("c_mktsegment"))
+      val enriched = customerLookup(
+        probe,
+        cachedLookup + ("url" -> customerServiceUrl(s, dir)))(
+        col("event_id"),
+        col("c_custkey"),
+        col("c_name"),
+        col("c_mktsegment"))
       Streams.drain(enriched, "h_stream_lookup_out", "append")
     },
 
@@ -1200,27 +1085,18 @@ object HttpQueries {
     // (<= partitions x pool = 8 — a runaway unbounded pool fails that).
     // Result stays the relational join, hash-gated. -----
     "h_async_lookup" -> { (s, dir) =>
-      val probe = s.read
-        .parquet(s"$dir/orders.parquet")
-        .filter(col("o_orderkey") % 97 === 0)
-        .select(col("o_orderkey"), col("o_custkey").as("c_custkey"))
-        .repartition(4)
-      val out = HttpLookup
-        .join(
-          probe,
-          keyCols = Seq("c_custkey"),
-          responseSchema = customerResponseSchema,
-          options = lookupBase ++ Map(
-            "url" -> lookupStub(s, dir).url("/customer-async"),
-            "asyncPolling" -> "true",
-            // cache and key-dedup OFF: every probe row must hit the wire,
-            // so the concurrency window is sustained and measurable
-            "http.source.lookup.dedup-keys" -> "false"))
-        .select(
-          col("o_orderkey"),
-          col("c_custkey"),
-          col("c_name"),
-          col("c_acctbal"))
+      val out = customerLookup(
+        ordersProbe(s, dir, 97).repartition(4),
+        lookupBase ++ Map(
+          "url" -> lookupStub(s, dir).url("/customer-async"),
+          "asyncPolling" -> "true",
+          // cache and key-dedup OFF: every probe row must hit the wire,
+          // so the concurrency window is sustained and measurable
+          "http.source.lookup.dedup-keys" -> "false"))(
+        col("o_orderkey"),
+        col("c_custkey"),
+        col("c_name"),
+        col("c_acctbal"))
       // quiet-window methodology (SURVEY par.5): assert on the FIRST
       // evaluation in this JVM only — later bench iterations measure
       // timing, and the physics (4 partitions x 2-deep pipelines over a
@@ -1231,10 +1107,9 @@ object HttpQueries {
         // single time before failing — the <= 8 bound is checked on every
         // observation (an unbounded pool must never pass)
         def observe(): Int = {
-          lookupInflightCur.set(0)
-          lookupInflightMax.set(0)
+          lookupInflight.reset()
           out.count()
-          val maxSeen = lookupInflightMax.get()
+          val maxSeen = lookupInflight.max
           require(
             maxSeen <= 8,
             s"h_async_lookup: max $maxSeen concurrent requests observed — " +
@@ -1305,13 +1180,7 @@ object HttpQueries {
     // exactly-bounded concurrency. A dropped semaphore exceeds the bound;
     // a synchronous submitter never reaches 2. -----
     "h_sink_inflight" -> { (s, dir) =>
-      val agg = s.read
-        .parquet(s"$dir/customer.parquet")
-        .groupBy(col("c_nationkey"))
-        .agg(
-          count(lit(1)).as("n_customers"),
-          round(sum(col("c_acctbal").cast(DecimalType(18, 2))), 2)
-            .cast(DoubleType).as("sum_acctbal"))
+      val agg = nationAgg(s, dir)
       val server = sinkServer(dir)
       // the >= 2 lower bound is wall-clock-sensitive (50 ms handlers on a
       // possibly CPU-starved runner): re-run the write once before failing
@@ -1319,8 +1188,7 @@ object HttpQueries {
       // must never pass)
       def observe(): Int = {
         server.clear()
-        sinkInflightCur.set(0)
-        sinkInflightMax.set(0)
+        sinkInflight.reset()
         HttpSink.write(
           agg.repartition(1),
           Map(
@@ -1329,7 +1197,7 @@ object HttpQueries {
             "http.sink.writer.request.mode" -> "single",
             "sink.requests.max-inflight" -> "2",
             "http.sink.writer.thread-pool.size" -> "4"))
-        val maxSeen = sinkInflightMax.get()
+        val maxSeen = sinkInflight.max
         require(
           maxSeen <= 2,
           s"h_sink_inflight: $maxSeen concurrent requests observed — the " +
@@ -1342,18 +1210,7 @@ object HttpQueries {
         s"h_sink_inflight: max $maxSeen concurrent request(s) — the " +
           "bounded submitter is not actually asynchronous")
       val bodies = server.requests.filter(_.path == "/ingest-slow").map(_.body)
-      val recSchema = StructType(Seq(
-        StructField("c_nationkey", IntegerType),
-        StructField("n_customers", LongType),
-        StructField("sum_acctbal", DoubleType)))
-      import s.implicits._
-      s.createDataset(bodies)
-        .toDF("body")
-        .select(from_json(col("body"), recSchema).as("rec"))
-        .select(
-          col("rec.c_nationkey"),
-          col("rec.n_customers"),
-          col("rec.sum_acctbal"))
+      postedRecords(s, bodies, JsonObject)
     },
 
     // ----- sink error-code classification (K4, NEW r12): the stub always
@@ -1363,13 +1220,7 @@ object HttpQueries {
     // .exclude`), so the same writes succeed; the bodies the stub captured
     // in pass 2 decode back to the aggregate, hash-gated. -----
     "h_sink_errcode" -> { (s, dir) =>
-      val agg = s.read
-        .parquet(s"$dir/customer.parquet")
-        .groupBy(col("c_nationkey"))
-        .agg(
-          count(lit(1)).as("n_customers"),
-          round(sum(col("c_acctbal").cast(DecimalType(18, 2))), 2)
-            .cast(DoubleType).as("sum_acctbal"))
+      val agg = nationAgg(s, dir)
       val server = sinkServer(dir)
       // the failure must be the CLASSIFIER's (HttpStatusCodeValidation-
       // FailedException naming the 500 somewhere in the Spark-wrapped
@@ -1417,18 +1268,7 @@ object HttpQueries {
           "http.sink.writer.request.mode" -> "single",
           "http.sink.error.code.exclude" -> "500"))
       val bodies = server.requests.filter(_.path == "/ingest-err").map(_.body)
-      val recSchema = StructType(Seq(
-        StructField("c_nationkey", IntegerType),
-        StructField("n_customers", LongType),
-        StructField("sum_acctbal", DoubleType)))
-      import s.implicits._
-      s.createDataset(bodies)
-        .toDF("body")
-        .select(from_json(col("body"), recSchema).as("rec"))
-        .select(
-          col("rec.c_nationkey"),
-          col("rec.n_customers"),
-          col("rec.sum_acctbal"))
+      postedRecords(s, bodies, JsonObject)
     },
 
     // ----- sink time-based flush (K14): batch size 1000 never fills, the
@@ -1445,13 +1285,7 @@ object HttpQueries {
       // SAME task as the sink's partition iterator so each row pull
       // really takes 60 ms at the buffer
       val slowId = udf((k: Int) => { Thread.sleep(60L); k }).asNondeterministic()
-      val agg = s.read
-        .parquet(s"$dir/customer.parquet")
-        .groupBy(col("c_nationkey"))
-        .agg(
-          count(lit(1)).as("n_customers"),
-          round(sum(col("c_acctbal").cast(DecimalType(18, 2))), 2)
-            .cast(DoubleType).as("sum_acctbal"))
+      val agg = nationAgg(s, dir)
         .repartition(1)
         .select(
           slowId(col("c_nationkey")).as("c_nationkey"),
@@ -1473,18 +1307,7 @@ object HttpQueries {
         s"h_sink_flush: ${reqs.size} request(s) for a ~1.5 s partition " +
           "with a 150 ms flush-buffer.timeout — the time-based flush " +
           "did not keep firing (2 = one flush then a dead timer)")
-      val bodySchema = ArrayType(StructType(Seq(
-        StructField("c_nationkey", IntegerType),
-        StructField("n_customers", LongType),
-        StructField("sum_acctbal", DoubleType))))
-      import s.implicits._
-      s.createDataset(reqs.map(_.body))
-        .toDF("body")
-        .select(explode(from_json(col("body"), bodySchema)).as("rec"))
-        .select(
-          col("rec.c_nationkey"),
-          col("rec.n_customers"),
-          col("rec.sum_acctbal"))
+      postedRecords(s, reqs.map(_.body), JsonArray)
     })
 
   val oracles: Map[String, String] = Map(
@@ -1568,10 +1391,7 @@ object HttpQueries {
         |       ELSE 'SUCCESS' END AS http_completion_state
         |FROM orders JOIN customer ON o_custkey = c_custkey
         |WHERE o_orderkey % 41 = 0""".stripMargin,
-    "h_sink_table" ->
-      """SELECT c_nationkey, count(*) AS n_customers,
-        |  CAST(round(sum(CAST(c_acctbal AS DECIMAL(18,2))), 2) AS DOUBLE) AS sum_acctbal
-        |FROM customer GROUP BY c_nationkey""".stripMargin,
+    "h_sink_table" -> nationAggOracle,
     "h_table_lookup_join" ->
       """SELECT o_orderkey, c_name, c_nationkey, c_acctbal
         |FROM orders JOIN customer ON o_custkey = c_custkey
@@ -1584,18 +1404,9 @@ object HttpQueries {
         |FROM orders LEFT JOIN customer
         |  ON (CASE WHEN o_orderkey % 3 = 0 THEN -o_custkey
         |      ELSE o_custkey END) = c_custkey""".stripMargin,
-    "h_sink_csv" ->
-      """SELECT c_nationkey, count(*) AS n_customers,
-        |  CAST(round(sum(CAST(c_acctbal AS DECIMAL(18,2))), 2) AS DOUBLE) AS sum_acctbal
-        |FROM customer GROUP BY c_nationkey""".stripMargin,
-    "h_sink_single" ->
-      """SELECT c_nationkey, count(*) AS n_customers,
-        |  CAST(round(sum(CAST(c_acctbal AS DECIMAL(18,2))), 2) AS DOUBLE) AS sum_acctbal
-        |FROM customer GROUP BY c_nationkey""".stripMargin,
-    "h_sink_roundtrip" ->
-      """SELECT c_nationkey, count(*) AS n_customers,
-        |  CAST(round(sum(CAST(c_acctbal AS DECIMAL(18,2))), 2) AS DOUBLE) AS sum_acctbal
-        |FROM customer GROUP BY c_nationkey""".stripMargin,
+    "h_sink_csv" -> nationAggOracle,
+    "h_sink_single" -> nationAggOracle,
+    "h_sink_roundtrip" -> nationAggOracle,
     "h_poll_source" ->
       "SELECT n_nationkey, n_name, n_regionkey FROM nation",
     "h_async_lookup" ->
@@ -1631,17 +1442,8 @@ object HttpQueries {
         |      ',"cents":' || cents || '}'), 1, 16) ||
         |    '-' || occ AS idem_key
         |FROM agg CROSS JOIN (SELECT 0 AS occ UNION ALL SELECT 1) occs""".stripMargin,
-    "h_sink_inflight" ->
-      """SELECT c_nationkey, count(*) AS n_customers,
-        |  CAST(round(sum(CAST(c_acctbal AS DECIMAL(18,2))), 2) AS DOUBLE) AS sum_acctbal
-        |FROM customer GROUP BY c_nationkey""".stripMargin,
-    "h_sink_errcode" ->
-      """SELECT c_nationkey, count(*) AS n_customers,
-        |  CAST(round(sum(CAST(c_acctbal AS DECIMAL(18,2))), 2) AS DOUBLE) AS sum_acctbal
-        |FROM customer GROUP BY c_nationkey""".stripMargin,
-    "h_sink_flush" ->
-      """SELECT c_nationkey, count(*) AS n_customers,
-        |  CAST(round(sum(CAST(c_acctbal AS DECIMAL(18,2))), 2) AS DOUBLE) AS sum_acctbal
-        |FROM customer GROUP BY c_nationkey""".stripMargin
+    "h_sink_inflight" -> nationAggOracle,
+    "h_sink_errcode" -> nationAggOracle,
+    "h_sink_flush" -> nationAggOracle
   )
 }

@@ -8,10 +8,9 @@ import graft.http.HttpClientFactory
 import graft.http.testkit.StubServer
 
 /** Pure-JDK microbenchmark: request throughput vs in-flight bound against the
-  * stub server, no Spark involved. Isolates connection-ramp cost.
-  * `STORM_CLIENTS` (default 1, the one client per config graft runs) sets
-  * how many clients share the requests, `STORM_INFLIGHT` (default 512) the
-  * in-flight bound.
+  * stub server, no Spark involved. Isolates connection-ramp cost. Each
+  * storm goes through one client, as graft runs one per config;
+  * `STORM_INFLIGHT` (default 512) sets the in-flight bound.
   */
 object ConnStorm {
   def main(args: Array[String]): Unit = {
@@ -21,9 +20,7 @@ object ConnStorm {
     val url = server.url("/ping")
 
     def storm(label: String, inflight: Int, total: Int): Unit = {
-      val nClients = sys.env.getOrElse("STORM_CLIENTS", "1").toInt
-      val clients = (0 until nClients)
-        .map(_ => HttpClientFactory.build(HttpClientFactory.ClientConfig()))
+      val client = HttpClientFactory.build(HttpClientFactory.ClientConfig())
       val pool = Executors.newFixedThreadPool(inflight)
       val sem = new Semaphore(inflight)
       val done = new CountDownLatch(total)
@@ -32,7 +29,6 @@ object ConnStorm {
       var i = 0
       while (i < total) {
         sem.acquire()
-        val client = clients(i % clients.size)
         pool.submit(new Runnable {
           def run(): Unit = {
             val r0 = System.nanoTime()

@@ -13,8 +13,9 @@ import org.scalatest.matchers.should.Matchers
   * [[GraftSession]], every listener in the main sources is [[RunStats]],
   * every hashed shingle set is `Dedup.hashedShingleSet`, every HTTP fixture
   * runs on `testkit.StubServer`, every exchange option is parsed by the
-  * `HttpEndpoint` factories, and every streaming gate runs through
-  * `queries.Streams`.
+  * `HttpEndpoint` factories, every streaming gate runs through
+  * `queries.Streams`, and the `h_*` gates' customer lookup, nation
+  * aggregate and aggregate oracle are written once.
   */
 class SourceGuardSpec extends AnyFunSuite with Matchers {
 
@@ -39,6 +40,14 @@ class SourceGuardSpec extends AnyFunSuite with Matchers {
 
   private val streamRun =
     """format\(\s*"memory"\s*\)|awaitTermination|Trigger\s*\.\s*AvailableNow""".r
+
+  /** The `h_*` gates' shared plumbing: the customer lookup join, the
+    * nation aggregate and the aggregate's DuckDB oracle.
+    */
+  private val gatePlumbing = Seq(
+    """HttpLookup\s*\.\s*join\s*\(""".r,
+    """round\(sum\(col\("c_acctbal"\)""".r,
+    """CAST\(round\(sum\(CAST\(c_acctbal AS DECIMAL\(18,2\)\)\), 2\) AS DOUBLE\) AS sum_acctbal""".r)
 
   /** (file name, match count) of the Scala files under `root` (this spec
     * excluded) that `pattern` matches.
@@ -99,5 +108,13 @@ class SourceGuardSpec extends AnyFunSuite with Matchers {
   test("the streaming gates start, await and sink through Streams") {
     // scoped to the gates: the polling source names AvailableNow in its docs
     matching("src/main/scala/graft/queries", streamRun) shouldBe Seq("Streams.scala")
+  }
+
+  test("the h_* gates share one customer lookup, nation aggregate and oracle") {
+    // each gate body keeps only its route, options, assertions and columns
+    val gates = Files.readString(Paths.get("src/main/scala/graft/queries/HttpQueries.scala"))
+    withClue(gatePlumbing.mkString("matches of ", ", ", ": ")) {
+      gatePlumbing.map(_.findAllIn(gates).size) shouldBe Seq(1, 1, 1)
+    }
   }
 }

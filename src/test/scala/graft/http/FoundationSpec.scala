@@ -115,6 +115,24 @@ class LookupCacheSpec extends AnyFunSuite with Matchers {
     an[HttpConfigException] should be thrownBy
       LookupCache.config(HttpOptions("lookup.cache" -> "WAT"))
   }
+
+  test("the shared registry drops the least recently opened config past its bound") {
+    LookupCache.clearAll()
+    def open(i: Int) = LookupCache.shared(
+      LookupCache.config(HttpOptions("lookup.cache" -> "PARTIAL", "tag" -> s"$i")).get)
+    val first = open(0)
+    first.put("k", HttpOutcome(200, "{}", Map.empty, "SUCCESS", null))
+    val second = open(1)
+    (2 until LookupCache.MaxConfigs).foreach(open)
+    open(1) // reopened: config 0 is now the least recently opened
+    val latest = open(LookupCache.MaxConfigs) // bound + 1 distinct configs
+    open(1) should be theSameInstanceAs second
+    open(LookupCache.MaxConfigs) should be theSameInstanceAs latest
+    val reopened = open(0)
+    reopened should not be theSameInstanceAs(first)
+    reopened.size shouldBe 0
+    LookupCache.clearAll()
+  }
 }
 
 class QueryCreatorTokenizeSpec extends AnyFunSuite with Matchers {

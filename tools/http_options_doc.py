@@ -134,20 +134,26 @@ def spec_map():
 
 def specs_for(specs, const, key):
     # generic short keys ("url", "format") would hit unrelated string
-    # literals — only distinctive keys match by literal
+    # literals — only distinctive keys match by any literal, generic ones
+    # only as an option pair's key (`"url" -> ...`)
     distinctive = "." in key or len(key) > 12
+    option_pair = re.compile(re.escape(f'"{key}"') + r"\s*->")
     # prefix-map keys end with "." and appear in specs with a concrete
     # header name appended ("http.sink.header.Content-Type")
     literal = f'"{key}' if key.endswith(".") else f'"{key}"'
     # specs may exercise the option through the mechanism's named
     # parameter rather than the key (FoundationSpec's
-    # `useRawAuthHeader = true`): match the const in lowerCamelCase too
+    # `useRawAuthHeader = true`): match the const in lowerCamelCase, but
+    # only as a named argument, so prose and calls such as
+    # `.format("noop")` pin nothing
     camel = const[0].lower() + const[1:]
+    named_arg = re.compile(r"\b" + re.escape(camel) + r"\s*=(?![=>])")
     hits = [
         name for name, text in specs.items()
         if (distinctive and literal in text)
+        or option_pair.search(text)
         or (f"HttpOptions.{const}" in text)
-        or re.search(r"\b" + re.escape(camel) + r"\b", text)
+        or named_arg.search(text)
     ]
     return sorted(hits)
 
